@@ -1,6 +1,7 @@
 """The traced run: alternate untraced and traced blocks of the op
 list, then turn the traced ops' spans and Spark counters into the
-per-layer metrics (means per op unless the name says otherwise)."""
+per-layer metrics (means per op unless the name says otherwise; the
+set-up spans are medians over the run's set-ups)."""
 
 from __future__ import annotations
 
@@ -21,11 +22,15 @@ SETUP_SPAN_METRICS = {
     "sources.ingest.write_postings": "sources.ingest.write_postings_ms",
     "sources.ingest.tsv_load": "sources.ingest.tsv_load_ms",
 }
+# Spark scheduler counts -> per-op metric, over one pass of the op list
+# (each op's first traced run), so that they repeat exactly for a seed
+COUNT_METRICS = {
+    "jobs": "spark.jobs_per_op",
+    "stages": "spark.stages_per_op",
+    "numTasks": "spark.tasks_per_op",
+}
 # Spark counter (summed over the op's job group) -> per-op metric
 SPARK_METRICS = {
-    "jobs": ("spark.jobs_per_op", 1),
-    "stages": ("spark.stages_per_op", 1),
-    "numTasks": ("spark.tasks_per_op", 1),
     "job_wall_ms": ("spark.job_wall_ms", 1),
     "executorRunTime": ("spark.executor_run_ms", 1),
     "executorCpuTime": ("spark.executor_cpu_ms", 1e-6),
@@ -54,22 +59,23 @@ def _mean(xs) -> float:
 def layer_metrics(ctx, wl, runner, seconds: float) -> dict:
     tr = ctx.tracer
     setup_ops = [r for r in tr.ops if r["op"] in ("build_index", "tsv_load")]
-    block = wl.block() or len(runner.ops)
     untraced, traced, ops = [], [], []
-    i, t0 = 0, time.monotonic()
-    while not traced or time.monotonic() - t0 < seconds:
+    for i in runner.schedule(seconds):
         # the same block of ops untraced, then traced
         for enabled, walls in ((False, untraced), (True, traced)):
             tr.enabled = enabled
             mark = len(tr.ops)
-            p0 = time.perf_counter()
-            for j in range(block):
-                runner.execute(runner.ops[(i + j) % len(runner.ops)])
-            walls.append(time.perf_counter() - p0)
+            t0 = time.perf_counter()
+            runner.run_block(i)
+            walls.append(time.perf_counter() - t0)
             if enabled:
-                ops.extend(tr.ops[mark:])
-        i += block
+                for k, rec in enumerate(tr.ops[mark:]):
+                    rec["i"] = (i + k) % len(runner.ops)
+                    ops.append(rec)
     tr.enabled = True
+    one_pass = {}
+    for r in ops:
+        one_pass.setdefault(r["i"], r)
 
     out = {}
     for span, name in SPAN_METRICS.items():
@@ -78,6 +84,8 @@ def layer_metrics(ctx, wl, runner, seconds: float) -> dict:
     out["engine.driver_self_ms"] = _mean(
         r["spans"]["engine.execute"] - r["spark"]["job_wall_ms"]
         for r in ops if "engine.execute" in r["spans"])
+    for key, name in COUNT_METRICS.items():
+        out[name] = _mean(r["spark"][key] for r in one_pass.values())
     for key, (name, scale) in SPARK_METRICS.items():
         out[name] = _mean(r["spark"][key] * scale for r in ops)
     out["spark.spill_bytes"] = _mean(
@@ -90,8 +98,8 @@ def layer_metrics(ctx, wl, runner, seconds: float) -> dict:
         r["spark"]["cached_blocks_left"] for r in ops)
 
     for span, name in SETUP_SPAN_METRICS.items():
-        out[name] = _mean(r["spans"][span] for r in setup_ops
-                          if span in r["spans"])
+        xs = [r["spans"][span] for r in setup_ops if span in r["spans"]]
+        out[name] = statistics.median(xs) if xs else 0.0
     out["sources.ingest.files_written"] = wl.build_stats["files_written"]
     out["sources.ingest.output_bytes"] = wl.build_stats["output_bytes"]
 
@@ -99,6 +107,5 @@ def layer_metrics(ctx, wl, runner, seconds: float) -> dict:
     out["functions.dedup.candidate_pairs"] = cands
     out["functions.dedup.verified_pairs"] = verified
     out["functions.dedup.pair_yield"] = verified / cands if cands else 0.0
-    out["tracing.overhead_ratio"] = (statistics.median(traced)
-                                     / statistics.median(untraced))
+    out["tracing.overhead_ratio"] = sum(traced) / sum(untraced)
     return {name: (float(v), unit_of(name)) for name, v in sorted(out.items())}

@@ -65,6 +65,24 @@ def tree_peak_rss_mb() -> float:
     return total_kb / 1024.0
 
 
+def per_op(blocks: list[list[dict]], key: str) -> dict[str, list[float]]:
+    """``key`` of the successful timed runs of each op kind (op name)."""
+    out: dict = {}
+    for b in blocks:
+        for r in b:
+            if r["ok"]:
+                out.setdefault(r["op"], []).append(r[key])
+    return out
+
+
+def steal_ticks() -> tuple[int, int]:
+    """(stolen, total) CPU ticks of the machine so far: time the
+    hypervisor ran something else while this machine's CPUs waited."""
+    with open("/proc/stat") as f:
+        ticks = [int(x) for x in f.readline().split()[1:]]
+    return ticks[7], sum(ticks)
+
+
 # StageData getters summed per op; bytes and counts as Spark reports
 # them (executorCpuTime is in nanoseconds).
 _STAGE_FIELDS = (

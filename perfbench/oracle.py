@@ -1,5 +1,12 @@
-"""Expected outputs, computed with DuckDB straight from the generated
-``documents.parquet`` — never from the tables the engine wrote.
+"""Inputs and expected outputs, made in a child process of their own.
+
+    python3 perfbench/oracle.py <workload> <seed> <sf> <input dir> <out.pickle>
+
+``prepare`` generates the run's input files from the seed and computes
+every expected output with DuckDB straight from the generated
+``documents.parquet`` — never from the tables the engine wrote.  It
+runs in a short-lived process so that neither the generator's rows nor
+DuckDB count toward the peak memory of the measured process tree.
 
 The index, class and pair derivations reuse the DuckDB oracle SQL the
 correctness gates already pin (``gate.ORACLE_POSTINGS`` and the
@@ -11,14 +18,18 @@ from __future__ import annotations
 
 import json
 import math
+import os
+import pickle
+import sys
 
-import duckdb
-
+import data
 from data import THRESHOLDS, MineOp, ServeOp, doc_key
 
 
 class Oracle:
     def __init__(self, sf_dir: str, threads: int):
+        import duckdb
+
         from cantera_table_spark import gate
         self.gate = gate
         self.con = duckdb.connect()
@@ -152,6 +163,35 @@ class Oracle:
             "n_chars || '}')) FROM documents").fetchone())
 
 
+def prepare(workload: str, seed: int, sf: float, sf_dir: str) -> dict:
+    """Write the inputs under ``sf_dir``; return what the run needs of
+    them: the input size, the TSV paths and every expected output, the
+    op outputs in the order of ``data.*_statements(seed)``."""
+    rows = data.documents(seed, sf)
+    out = {"input_bytes": data.write_documents(rows, sf_dir),
+           "tsv_paths": [], "tsv_checksum": None}
+    if workload == "serve":
+        sums: dict = {}
+        for i in range(2):
+            path = os.path.join(sf_dir, f"tags{i}.tsv")
+            out["tsv_paths"].append(path)
+            for tag, doc_id, score in data.postings_tsv(seed, i, rows, path):
+                sums[(tag, doc_id)] = sums.get((tag, doc_id), 0.0) + score
+        out["tsv_checksum"] = (len(sums), sum(sums.values()))
+    # half the CPUs: the JVM is starting alongside
+    oracle = Oracle(sf_dir, max(1, len(os.sched_getaffinity(0)) // 2))
+    out["index_checksum"] = oracle.index_checksum()
+    out["summary_checksum"] = oracle.summary_checksum()
+    if workload == "serve":
+        out["ops"] = [oracle.envelope(op)
+                      for op in data.serve_statements(seed)]
+    else:
+        out["ops"] = [oracle.mine(op) for op in data.mine_statements(seed)]
+        out["lsh_jaccard"] = oracle.lsh_jaccard()
+    oracle.close()
+    return out
+
+
 def canonical(rows) -> list[tuple]:
     """Order-insensitive, float-stable form of a result: floats rounded
     to 6 places (NaN kept comparable), rows sorted."""
@@ -165,3 +205,12 @@ def canonical(rows) -> list[tuple]:
 def same_json(got, want) -> bool:
     return json.dumps(got, sort_keys=True) == json.dumps(want,
                                                          sort_keys=True)
+
+
+if __name__ == "__main__":
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    workload, seed, sf, sf_dir, dest = sys.argv[1:]
+    result = prepare(workload, int(seed), float(sf), sf_dir)
+    with open(dest, "wb") as f:
+        pickle.dump(result, f)

@@ -3,11 +3,13 @@
 
     python3 perfbench/run.py --workload serve --seed 1 --seconds 8 --trace 0
 
-Run from the repository root.  Each run starts a fresh Spark JVM,
-generates its inputs from ``--seed`` under ``.perfbench_work/``, builds
-the workload's tables, computes every expected output with DuckDB,
-warms up, then measures for ``--seconds`` seconds.  Every op's output
-is checked; a wrong output, an exception or a timeout counts as failed.
+Run from the repository root.  Each run starts a fresh Spark JVM while
+a child process generates the inputs from ``--seed`` under
+``.perfbench_work/`` and computes every expected output with DuckDB.
+It then sets up the workload's tables several times (``setup_s`` is
+the median), warms up, and measures for ``--seconds`` seconds.  Every
+op's output is checked; a wrong output, an exception or a timeout
+counts as failed.
 
 The last line of stdout is one JSON object: ``--trace 0`` reports the
 end-to-end metrics, ``--trace 1`` the per-layer metrics (spans around
@@ -20,8 +22,10 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import pickle
 import shutil
 import statistics
+import subprocess
 import sys
 import threading
 import time
@@ -34,6 +38,7 @@ ROOT = os.path.dirname(HERE)
 # Pinned session settings (perfbench/README.md lists them all).
 DRIVER_MEMORY = "2g"       # session.py defaults to 32g, above a 15 GB host
 OP_TIMEOUT_S = 60          # an op still running then is cancelled: failed
+SETUP_REPS = 3             # setup_s is the median of this many set-ups
 
 
 def parse_args(argv):
@@ -112,6 +117,13 @@ class Runner:
         self.ctx, self.wl, self.ops = ctx, wl, ops
         self.attempted = self.failed = 0
 
+    def record(self, name: str, ok: bool) -> None:
+        """Count a check made outside an op (a set-up read-back)."""
+        self.attempted += 1
+        if not ok:
+            self.failed += 1
+            print(f"perfbench: {name}: wrong output", file=sys.stderr)
+
     def execute(self, op) -> dict:
         """Run ``op`` once: hygiene first, then the timed call (wall and
         process-tree CPU), then the output check."""
@@ -145,21 +157,27 @@ class Runner:
             return {"op": op.name, "ok": False}
         return {"op": op.name, "ok": True, "wall": wall, "cpu": cpu}
 
-    def blocks(self, block: int, min_seconds: float) -> list[list[dict]]:
-        """Timed ops, cycling through the op list in blocks of ``block``
-        ops, until ``min_seconds`` have passed."""
-        out, i, t0 = [], 0, time.monotonic()
-        while not out or time.monotonic() - t0 < min_seconds:
-            out.append([self.execute(self.ops[(i + j) % len(self.ops)])
-                        for j in range(block)])
-            i += block
-        return out
+    def schedule(self, seconds: float):
+        """Start indices of the timed blocks: the op list is cycled
+        through in blocks of ``wl.block()`` ops until ``seconds`` have
+        passed and every op has run (timing stops on a block edge)."""
+        i, t0 = 0, time.monotonic()
+        while i < len(self.ops) or time.monotonic() - t0 < seconds:
+            yield i
+            i += self.wl.block()
+
+    def run_block(self, i: int) -> list[dict]:
+        return [self.execute(self.ops[j % len(self.ops)])
+                for j in range(i, i + self.wl.block())]
 
     def pass_seconds(self, blocks: list[list[dict]], key: str) -> float:
-        """One pass over the op list: the median block's ``key`` total,
-        scaled from block to pass length."""
-        totals = [sum(r.get(key, 0.0) for r in b) for b in blocks]
-        return statistics.median(totals) * len(self.ops) / len(blocks[0])
+        """One pass over the op list: the sum over its ops of the median
+        ``key`` of the op's kind (a ``serve`` template, a ``mine`` op)
+        over the timed runs."""
+        from measure import per_op
+        runs = per_op(blocks, key)
+        return sum(statistics.median(runs[op.name]) for op in self.ops
+                   if op.name in runs)
 
 
 def percentile(xs: list[float], q: int) -> float:
@@ -187,81 +205,91 @@ def main(argv=None) -> int:
     cpus = len(os.sched_getaffinity(0))
     pin_environment(work, cpus)
 
-    import data
-    from measure import Tracer, tree_peak_rss_mb
+    from measure import Tracer, steal_ticks, tree_peak_rss_mb
 
     # what a workload needs from the run: the session, inputs, tracer
     ctx = types.SimpleNamespace(workload=args.workload, seed=args.seed,
                                 cpus=cpus, work=work,
                                 sf_dir=os.path.join(work, "input"))
-    rows = data.documents(args.seed, args.sf)
-    ctx.input_bytes = data.write_documents(rows, ctx.sf_dir)
-    ctx.tsv_paths = [os.path.join(ctx.sf_dir, f"tags{i}.tsv")
-                     for i in range(2)]
-    ctx.tsv_rows = [r for i, p in enumerate(ctx.tsv_paths)
-                    for r in data.postings_tsv(args.seed, i, rows, p)]
-
-    from cantera_table_spark.session import get_spark
-    t_gen = time.monotonic() - t_start
-    t0 = time.monotonic()
-    spark = get_spark(f"perfbench-{args.workload}")
-    t_session = time.monotonic() - t0
+    # inputs and expected outputs come from a child process, which
+    # runs while the JVM starts and exits before anything is measured
+    expected = os.path.join(work, "expected.pickle")
+    child = subprocess.Popen([
+        sys.executable, os.path.join(HERE, "oracle.py"), args.workload,
+        str(args.seed), str(args.sf), ctx.sf_dir, expected])
+    spark = None
     try:
+        from cantera_table_spark.session import get_spark
+        t0 = time.monotonic()
+        spark = get_spark(f"perfbench-{args.workload}")
+        t_session = time.monotonic() - t0
         spark.sparkContext.setLogLevel("ERROR")
+        if child.wait() != 0:
+            raise RuntimeError("making the inputs and expected outputs "
+                               f"failed (exit code {child.returncode})")
+        t_prepare = time.monotonic() - t_start
+        with open(expected, "rb") as f:
+            ctx.expected = pickle.load(f)
         ctx.spark = spark
         ctx.tracer = Tracer(spark, enabled=bool(args.trace))
         wl = WORKLOADS[args.workload](ctx)
-        t0 = time.monotonic()
-        wl.setup()
-        t_build = time.monotonic() - t0
-        t0 = time.monotonic()
+        setups = []
+        for _ in range(SETUP_REPS):
+            t0 = time.monotonic()
+            wl.setup()
+            setups.append(time.monotonic() - t0)
         runner = Runner(ctx, wl, wl.ops())
-        t_oracle = time.monotonic() - t0
+        for name, ok in wl.read_back():
+            runner.record(name, ok)
         t0 = time.monotonic()
-        for op in runner.ops:          # warm-up pass, checked too
-            runner.execute(op)
+        warm = [runner.execute(op)                # checked too
+                for op in wl.warm_up_ops(runner.ops)]
         t_warm = time.monotonic() - t0
-        setup_s = time.monotonic() - t_start
-        print(f"perfbench: {args.workload}: gen {t_gen:.1f} s, "
-              f"session {t_session:.1f} s, "
-              f"build {t_build:.1f} s, "
-              f"oracle {t_oracle:.1f} s, warm-up {t_warm:.1f} s",
-              file=sys.stderr)
+        print(f"perfbench: {args.workload}: session {t_session:.1f} s, "
+              f"inputs and oracle ready at {t_prepare:.1f} s, set-ups "
+              + " ".join(f"{t:.1f}" for t in setups)
+              + f" s, warm-up {t_warm:.1f} s", file=sys.stderr)
 
         if args.trace:
             from layers import layer_metrics
             metrics = layer_metrics(ctx, wl, runner, args.seconds)
             ctx.tracer.dump(os.path.join(work, "trace.json"))
         else:
-            blocks = runner.blocks(wl.block() or len(runner.ops),
-                                   args.seconds)
-            walls = [r["wall"] * 1e3 for b in blocks for r in b if r["ok"]]
+            s0 = steal_ticks()
+            blocks = [runner.run_block(i)
+                      for i in runner.schedule(args.seconds)]
+            stolen, total = (b - a for a, b in zip(s0, steal_ticks()))
+            lat = [x * 1e3 for x in wl.latencies(blocks)]
             metrics = {
-                "setup_s": (setup_s, "s"),
+                "setup_s": (statistics.median(setups), "s"),
                 "pass_s": (runner.pass_seconds(blocks, "wall"), "s"),
                 "pass_cpu_s": (runner.pass_seconds(blocks, "cpu"), "s"),
-                "op_p50_ms": (percentile(walls, 50), "ms"),
-                "op_p90_ms": (percentile(walls, 90), "ms"),
+                "op_p50_ms": (percentile(lat, 50), "ms"),
+                "op_p90_ms": (percentile(lat, 90), "ms"),
                 "peak_rss_mb": (tree_peak_rss_mb(), "MB"),
                 "index_bytes_per_input_byte": (
                     wl.index_bytes_per_input_byte(), "ratio"),
             }
-            per_op: dict = {}
-            for b in blocks:
-                for r in b:
-                    if r["ok"]:
-                        per_op.setdefault(r["op"], []).append(r["wall"])
-            print(f"perfbench: {args.workload}: {len(walls)} timed ops, "
-                  f"{len(runner.ops)} per pass; median ms: "
-                  + ", ".join(f"{k} {statistics.median(v) * 1e3:.0f}"
-                              for k, v in per_op.items()), file=sys.stderr)
-        wl.oracle.close()
+            ms = {}
+            for r in warm + [r for b in blocks for r in b]:
+                ms.setdefault(r["op"], []).append(
+                    f"{r['wall'] * 1e3:.0f}" if r["ok"] else "failed")
+            print(f"perfbench: {args.workload}: "
+                  f"{sum(map(len, blocks))} timed ops after {len(warm)} "
+                  "warm-up ops; ms per op kind, in order: "
+                  + "; ".join(f"{k} {' '.join(v)}" for k, v in ms.items())
+                  + f"; host steal while timed {stolen / total:.1%}",
+                  file=sys.stderr)
     finally:
-        t0 = time.monotonic()
-        shutdown(spark)
-        print(f"perfbench: {args.workload}: shutdown "
-              f"{time.monotonic() - t0:.1f} s, run "
-              f"{time.monotonic() - t_start:.1f} s", file=sys.stderr)
+        if child.poll() is None:
+            child.kill()
+        child.wait()
+        if spark is not None:
+            t0 = time.monotonic()
+            shutdown(spark)
+            print(f"perfbench: {args.workload}: shutdown "
+                  f"{time.monotonic() - t0:.1f} s, run "
+                  f"{time.monotonic() - t_start:.1f} s", file=sys.stderr)
 
     ratio = runner.failed / runner.attempted
     for name, (value, unit) in metrics.items():

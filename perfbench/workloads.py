@@ -1,19 +1,21 @@
 """The workloads: what set-up builds, and the fixed op list one pass runs.
 
 Every op calls the program's public API, returns its collected output
-and the number of result rows, and is checked against the DuckDB oracle
-outside the timed region.
+and the number of result rows, and is checked against the DuckDB oracle's
+expected output outside the timed region.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import statistics
 
 from pyspark.sql import functions as F
 
 import data
-from oracle import Oracle, canonical, same_json
+from measure import per_op
+from oracle import canonical, same_json
 
 
 class Op:
@@ -35,18 +37,27 @@ def dir_bytes(path: str) -> int:
 class CatalogWorkload:
     """Set-up shared by ``serve`` and ``mine``: the ca-load path builds
     the bucketed Parquet index and the summary table from the generated
-    documents (as ``bench.py`` does), each write checked by read-back."""
+    documents (as ``bench.py`` does) and opens a catalog over them.
+
+    ``ctx.expected`` holds every expected output (``oracle.prepare``)."""
+
+    # warm-up before the timed ops: passes over the op list, then one
+    # more run of each op named in ``warm_extra``
+    warm_passes = 2
+    warm_extra: tuple = ()
 
     def __init__(self, ctx):
         self.ctx = ctx
         self.spark = ctx.spark
         self.tr = ctx.tracer
         self.w = ctx.work
-        self.oracle = Oracle(ctx.sf_dir, ctx.cpus)
+        self.want = ctx.expected
         self.build_stats: dict = {}
 
     def setup(self) -> None:
-        """Build the index and the summary table, then read them back."""
+        """One set-up: build the index and the summary table, open the
+        catalog and the engine over them.  Run several times; each run
+        overwrites the tables."""
         from cantera_table_spark.model import (
             derive_documents, derive_label_postings, derive_postings)
         from cantera_table_spark.sources.ingest import write_postings
@@ -60,51 +71,32 @@ class CatalogWorkload:
             with tr.span("model.derive_documents"):
                 derive_documents(spark, sf_dir).write.mode(
                     "overwrite").parquet(f"{self.w}/documents")
-        outputs = [f"{self.w}/postings", f"{self.w}/documents"]
-        self.index_bytes = sum(dir_bytes(p) for p in outputs)
-        self.build_stats = {
-            "files_written": sum(len(parquet_files(p)) for p in outputs),
-            "output_bytes": self.index_bytes,
-        }
-        self._read_back_index()
+        self.eng = self.engine()
 
-    def _read_back_index(self) -> None:
+    def outputs(self) -> list[str]:
+        return [f"{self.w}/postings", f"{self.w}/documents"]
+
+    def read_back(self) -> list[tuple[str, bool]]:
+        """Check the tables the last set-up wrote against the oracle's
+        checksums; returns ``(check, ok)`` pairs."""
         spark = self.spark
-        got = spark.read.parquet(f"{self.w}/postings").agg(
+        idx = spark.read.parquet(f"{self.w}/postings").agg(
             F.count("*"), F.countDistinct("keyword"), F.sum("score"),
             F.sum("doc_id")).collect()[0]
-        want = self.oracle.index_checksum()
-        if tuple(got) != want:
-            raise RuntimeError(f"index read-back {tuple(got)} != {want}")
-        got = spark.read.parquet(f"{self.w}/documents").agg(
+        summary = spark.read.parquet(f"{self.w}/documents").agg(
             F.count("*"), F.sum("doc_id"),
             F.sum(F.length("doc"))).collect()[0]
-        want = self.oracle.summary_checksum()
-        if tuple(got) != want:
-            raise RuntimeError(f"summary read-back {tuple(got)} != {want}")
-
-    def _tsv_load(self) -> None:
-        """ca-load's TSV path: two postings files resolved against the
-        summary table, combined with the ``sum`` merge mode and written
-        as Parquet, then read back."""
-        from cantera_table_spark.sources.ingest import (
-            merge_tables, read_tsv_postings)
-        spark = self.spark
-        docs = spark.read.parquet(f"{self.w}/documents")
-        parts = [read_tsv_postings(spark, p, docs, score_col=True)
-                 for p in self.ctx.tsv_paths]
-        merged = merge_tables(parts, mode="sum",
-                              key_cols=("keyword", "doc_id"),
-                              value_col="score")
-        merged.write.mode("overwrite").parquet(f"{self.w}/tag_index")
-        got = spark.read.parquet(f"{self.w}/tag_index").agg(
-            F.count("*"), F.sum("score")).collect()[0]
-        sums: dict = {}
-        for tag, doc_id, score in self.ctx.tsv_rows:
-            sums[(tag, doc_id)] = sums.get((tag, doc_id), 0.0) + score
-        want = (len(sums), sum(sums.values()))
-        if tuple(got) != want:
-            raise RuntimeError(f"TSV merge read-back {tuple(got)} != {want}")
+        self.index_bytes = sum(dir_bytes(p)
+                               for p in CatalogWorkload.outputs(self))
+        self.build_stats = {
+            "files_written": sum(len(parquet_files(p))
+                                 for p in self.outputs()),
+            "output_bytes": sum(dir_bytes(p) for p in self.outputs()),
+        }
+        return [("index read-back",
+                 tuple(idx) == self.want["index_checksum"]),
+                ("summary read-back",
+                 tuple(summary) == self.want["summary_checksum"])]
 
     def engine(self):
         from cantera_table_spark.engine import Engine
@@ -115,8 +107,17 @@ class CatalogWorkload:
             postings_buckets=self.ctx.cpus)
         return Engine(self.catalog, unique_postings=True)
 
+    def warm_up_ops(self, ops: list[Op]) -> list[Op]:
+        return ops * self.warm_passes + [
+            op for op in ops if op.name in self.warm_extra]
+
+    def latencies(self, blocks: list[list[dict]]) -> list[float]:
+        """Op latencies (s) the percentiles are taken over: every timed
+        op."""
+        return [r["wall"] for b in blocks for r in b if r["ok"]]
+
     def index_bytes_per_input_byte(self) -> float:
-        return self.index_bytes / self.ctx.input_bytes
+        return self.index_bytes / self.want["input_bytes"]
 
     def pair_counts(self) -> tuple[int, int]:
         """(LSH candidate pairs, verified pairs); only ``mine`` has any."""
@@ -125,29 +126,47 @@ class CatalogWorkload:
     def between_ops(self) -> None:
         pass
 
-    def block(self) -> int | None:
-        """Ops per timed block (timing stops on a block edge); None is
-        the whole op list."""
-        return None
+    def block(self) -> int:
+        """Ops per timed block (timing stops on a block edge)."""
+        return 1
 
 
 class Serve(CatalogWorkload):
     """Warm ca-shell session: ``QUERY … LIMIT k`` statements parsed and
-    executed one at a time with the default exact result count."""
+    executed one at a time with the default exact result count.  Its
+    set-up also runs ca-load's TSV path: two postings files resolved
+    against the summary table, combined with the ``sum`` merge mode
+    and written as Parquet."""
 
     def setup(self) -> None:
+        from cantera_table_spark.sources.ingest import (
+            merge_tables, read_tsv_postings)
         super().setup()
+        spark = self.spark
         with self.tr.op("setup", "tsv_load"):
             with self.tr.span("sources.ingest.tsv_load"):
-                self._tsv_load()
-        out = f"{self.w}/tag_index"
-        self.build_stats["files_written"] += len(parquet_files(out))
-        self.build_stats["output_bytes"] += dir_bytes(out)
+                docs = spark.read.parquet(f"{self.w}/documents")
+                parts = [read_tsv_postings(spark, p, docs, score_col=True)
+                         for p in self.want["tsv_paths"]]
+                merge_tables(parts, mode="sum",
+                             key_cols=("keyword", "doc_id"),
+                             value_col="score").write.mode(
+                    "overwrite").parquet(f"{self.w}/tag_index")
+
+    def outputs(self) -> list[str]:
+        return super().outputs() + [f"{self.w}/tag_index"]
+
+    def read_back(self) -> list[tuple[str, bool]]:
+        got = self.spark.read.parquet(f"{self.w}/tag_index").agg(
+            F.count("*"), F.sum("score")).collect()[0]
+        return super().read_back() + [
+            ("TSV merge read-back",
+             tuple(got) == self.want["tsv_checksum"])]
 
     def ops(self) -> list[Op]:
         from cantera_table_spark.dsl.compiler import QueryCompiler
         from cantera_table_spark.dsl.parser import parse_script
-        eng = self.engine()
+        eng = self.eng
         tr = self.tr
 
         def make(text):
@@ -167,11 +186,12 @@ class Serve(CatalogWorkload):
                 return out, len(rows)
             return run
 
-        return [Op(op.template, make(op.text), self.oracle.envelope(op),
-                   same_json)
-                for op in data.serve_statements(self.ctx.seed)]
+        return [Op(op.template, make(op.text), want, same_json)
+                for op, want in zip(data.serve_statements(self.ctx.seed),
+                                    self.want["ops"])]
 
     def block(self) -> int:
+        # every block runs each template once
         return len(data.SERVE_TEMPLATES)
 
 
@@ -180,11 +200,15 @@ class Mine(CatalogWorkload):
     SELECT feature matrix and near-duplicate pairs (MinHash/LSH
     candidates, then exact Jaccard verification)."""
 
+    # SELECT and dd07 settle after one run; CORRELATE needs two
+    warm_passes = 1
+    warm_extra = ("correlate",)
+
     def ops(self) -> list[Op]:
         from cantera_table_spark.dsl.parser import parse_script
         from cantera_table_spark.functions import dedup
         from cantera_table_spark.model import load_table
-        eng = self.engine()
+        eng = self.eng
         tr, spark, sf_dir = self.tr, self.spark, self.ctx.sf_dir
 
         def statement(op):
@@ -217,11 +241,19 @@ class Mine(CatalogWorkload):
         def rows_equal(got, want):
             return canonical(got) == want
 
-        ops = [Op(op.kind, statement(op), self.oracle.mine(op), rows_equal)
-               for op in data.mine_statements(self.ctx.seed)]
+        ops = [Op(op.kind, statement(op), want, rows_equal)
+               for op, want in zip(data.mine_statements(self.ctx.seed),
+                                   self.want["ops"])]
         ops.append(Op("lsh_jaccard", lsh_jaccard,
-                      self.oracle.lsh_jaccard(), rows_equal))
+                      self.want["lsh_jaccard"], rows_equal))
         return ops
+
+    def latencies(self, blocks: list[list[dict]]) -> list[float]:
+        """Each op's median latency over the run: a pass holds three
+        unlike ops, so percentiles over single runs of them would jump
+        between op kinds."""
+        return [statistics.median(v)
+                for v in per_op(blocks, "wall").values()]
 
     def pair_counts(self) -> tuple[int, int]:
         """(LSH candidate pairs, Jaccard-verified pairs) of the last
