@@ -135,7 +135,14 @@ def _serve_text(t: str, a: str, b: str, limit: int, offset: int) -> str:
     return f"QUERY {body} {page};"
 
 
-def serve_statements(seed: int, per_template: int = 2) -> list[ServeOp]:
+# blocks of the serving mix a run uses: the first SERVE_WARM_BLOCKS
+# warm up, the rest are the timed pass
+SERVE_BLOCKS = 3
+SERVE_WARM_BLOCKS = 1
+
+
+def serve_statements(seed: int,
+                     per_template: int = SERVE_BLOCKS) -> list[ServeOp]:
     """The serving mix: ``per_template`` statements of each template,
     keywords drawn from the vocabulary (labels from the four equally
     sized non-``en`` languages), interleaved so that every block of
@@ -173,22 +180,33 @@ class MineOp:
     args: tuple
 
 
+# CORRELATE statements of a mine run: the first MINE_WARM warm up, the
+# rest are the timed pass
+MINE_CORRELATES = 3
+MINE_WARM = 1
+
+
 def mine_statements(seed: int) -> list[MineOp]:
-    """One CORRELATE statement between two label classes (a language,
-    or-ed with a source, against another language) and one SELECT
-    feature matrix, drawn from the seed.  The languages exclude ``en``
-    and the words are equally frequent, so every seed does about the
-    same amount of work."""
+    """``MINE_CORRELATES`` different CORRELATE statements between two
+    label classes (a language, or-ed with a source, against another
+    language), then one SELECT feature matrix, drawn from the seed.  The languages exclude ``en`` and the words are equally
+    frequent, so every seed does about the same amount of work."""
     rng = random.Random(f"mine:{seed}")
-    l0, l1 = rng.sample(LANGS[1:], 2)
-    src = f"src{rng.randrange(N_SOURCES)}"
+    ops = []
+    while len(ops) < MINE_CORRELATES:
+        l0, l1 = rng.sample(LANGS[1:], 2)
+        src = f"src{rng.randrange(N_SOURCES)}"
+        op = MineOp("correlate",
+                    f"CORRELATE QUERY (lang:{l0} OR src:{src}), "
+                    f"(lang:{l1});",
+                    (f"(lang = '{l0}' OR source = '{src}')",
+                     f"lang = '{l1}'"))
+        if op not in ops:
+            ops.append(op)
+    lang = rng.choice(LANGS[1:])
     w0, w1, w2 = rng.sample(WORDS[1:], 3)
-    return [
-        MineOp("correlate",
-               f"CORRELATE QUERY (lang:{l0} OR src:{src}), (lang:{l1});",
-               (f"(lang = '{l0}' OR source = '{src}')", f"lang = '{l1}'")),
-        MineOp("select",
-               f"SELECT {quote(w0)}, lang:{l0}, len:chars FROM "
-               f"({quote(w1)} OR {quote(w2)});",
-               (w0, l0, w1, w2)),
-    ]
+    ops.append(MineOp("select",
+                      f"SELECT {quote(w0)}, lang:{lang}, len:chars FROM "
+                      f"({quote(w1)} OR {quote(w2)});",
+                      (w0, lang, w1, w2)))
+    return ops

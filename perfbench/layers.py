@@ -60,9 +60,11 @@ def layer_metrics(ctx, wl, runner, seconds: float) -> dict:
     tr = ctx.tracer
     setup_ops = [r for r in tr.ops if r["op"] in ("build_index", "tsv_load")]
     untraced, traced, ops = [], [], []
-    for i in runner.schedule(seconds):
-        # the same block of ops untraced, then traced
-        for enabled, walls in ((False, untraced), (True, traced)):
+    order = ((False, untraced), (True, traced))
+    for n, i in enumerate(runner.schedule(seconds)):
+        # the same block of ops untraced and traced, alternating which
+        # runs first so that neither is always the earlier, less warm one
+        for enabled, walls in order[::-1] if n % 2 else order:
             tr.enabled = enabled
             mark = len(tr.ops)
             t0 = time.perf_counter()

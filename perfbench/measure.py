@@ -49,20 +49,25 @@ def tree_cpu_s() -> float:
     return total / _TICK
 
 
-def tree_peak_rss_mb() -> float:
-    """Sum over the live tree of each process's peak resident set
-    (``VmHWM``)."""
-    total_kb = 0
+def peak_rss_mb_by_process() -> dict[str, float]:
+    """Peak resident set (``VmHWM``) of each live process of the tree,
+    keyed by ``<pid>:<command name>``."""
+    out = {}
     for pid in process_tree():
         try:
             with open(f"/proc/{pid}/status") as f:
-                for line in f:
-                    if line.startswith("VmHWM:"):
-                        total_kb += int(line.split()[1])
-                        break
+                fields = dict(line.split(":", 1) for line in f)
         except OSError:
             continue
-    return total_kb / 1024.0
+        if "VmHWM" in fields:
+            name = f"{pid}:{fields['Name'].strip()}"
+            out[name] = int(fields["VmHWM"].split()[0]) / 1024.0
+    return out
+
+
+def tree_peak_rss_mb() -> float:
+    """Sum over the live tree of each process's peak resident set."""
+    return sum(peak_rss_mb_by_process().values())
 
 
 def per_op(blocks: list[list[dict]], key: str) -> dict[str, list[float]]:

@@ -1,12 +1,14 @@
 """Inputs and expected outputs, made in a child process of their own.
 
-    python3 perfbench/oracle.py <workload> <seed> <sf> <input dir> <out.pickle>
+    python3 perfbench/oracle.py <workload> <seed> <sf> <traced 0|1> \
+        <input dir> <out.pickle>
 
-``prepare`` generates the run's input files from the seed and computes
-every expected output with DuckDB straight from the generated
-``documents.parquet`` — never from the tables the engine wrote.  It
-runs in a short-lived process so that neither the generator's rows nor
-DuckDB count toward the peak memory of the measured process tree.
+``make_inputs`` generates the run's input files from the seed;
+``expected_outputs`` then computes every expected output with DuckDB
+straight from the generated ``documents.parquet`` — never from the
+tables the engine wrote.  It runs in a short-lived process so that
+neither the generator's rows nor DuckDB count toward the peak memory of
+the measured process tree.
 
 The index, class and pair derivations reuse the DuckDB oracle SQL the
 correctness gates already pin (``gate.ORACLE_POSTINGS`` and the
@@ -163,10 +165,9 @@ class Oracle:
             "n_chars || '}')) FROM documents").fetchone())
 
 
-def prepare(workload: str, seed: int, sf: float, sf_dir: str) -> dict:
-    """Write the inputs under ``sf_dir``; return what the run needs of
-    them: the input size, the TSV paths and every expected output, the
-    op outputs in the order of ``data.*_statements(seed)``."""
+def make_inputs(workload: str, seed: int, sf: float, sf_dir: str) -> dict:
+    """Write the inputs under ``sf_dir``; return what the set-up needs
+    of them: the input size, the TSV paths and the TSV merge checksum."""
     rows = data.documents(seed, sf)
     out = {"input_bytes": data.write_documents(rows, sf_dir),
            "tsv_paths": [], "tsv_checksum": None}
@@ -178,16 +179,26 @@ def prepare(workload: str, seed: int, sf: float, sf_dir: str) -> dict:
             for tag, doc_id, score in data.postings_tsv(seed, i, rows, path):
                 sums[(tag, doc_id)] = sums.get((tag, doc_id), 0.0) + score
         out["tsv_checksum"] = (len(sums), sum(sums.values()))
+    return out
+
+
+def expected_outputs(workload: str, seed: int, sf_dir: str,
+                     traced: bool) -> dict:
+    """Every expected output: the read-back checksums and the op
+    outputs, in the order of ``data.*_statements(seed)``.  The ops only
+    a traced ``mine`` run times (SELECT, near-duplicate pairs) get
+    ``None`` in an untraced one."""
     # half the CPUs: the JVM is starting alongside
     oracle = Oracle(sf_dir, max(1, len(os.sched_getaffinity(0)) // 2))
-    out["index_checksum"] = oracle.index_checksum()
-    out["summary_checksum"] = oracle.summary_checksum()
+    out = {"index_checksum": oracle.index_checksum(),
+           "summary_checksum": oracle.summary_checksum()}
     if workload == "serve":
         out["ops"] = [oracle.envelope(op)
                       for op in data.serve_statements(seed)]
     else:
-        out["ops"] = [oracle.mine(op) for op in data.mine_statements(seed)]
-        out["lsh_jaccard"] = oracle.lsh_jaccard()
+        out["ops"] = [oracle.mine(op) if traced or op.kind == "correlate"
+                      else None for op in data.mine_statements(seed)]
+        out["lsh_jaccard"] = oracle.lsh_jaccard() if traced else None
     oracle.close()
     return out
 
@@ -210,7 +221,11 @@ def same_json(got, want) -> bool:
 if __name__ == "__main__":
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
-    workload, seed, sf, sf_dir, dest = sys.argv[1:]
-    result = prepare(workload, int(seed), float(sf), sf_dir)
+    workload, seed, sf, traced, sf_dir, dest = sys.argv[1:]
+    # the inputs first, announced as one JSON line on stdout, so that
+    # the first set-up can start while the expected outputs are made
+    print(json.dumps(make_inputs(workload, int(seed), float(sf), sf_dir)),
+          flush=True)
+    result = expected_outputs(workload, int(seed), sf_dir, traced == "1")
     with open(dest, "wb") as f:
         pickle.dump(result, f)

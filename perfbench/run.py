@@ -205,18 +205,22 @@ def main(argv=None) -> int:
     cpus = len(os.sched_getaffinity(0))
     pin_environment(work, cpus)
 
-    from measure import Tracer, steal_ticks, tree_peak_rss_mb
+    from measure import (Tracer, peak_rss_mb_by_process, steal_ticks,
+                         tree_peak_rss_mb)
 
     # what a workload needs from the run: the session, inputs, tracer
     ctx = types.SimpleNamespace(workload=args.workload, seed=args.seed,
                                 cpus=cpus, work=work,
                                 sf_dir=os.path.join(work, "input"))
     # inputs and expected outputs come from a child process, which
-    # runs while the JVM starts and exits before anything is measured
+    # runs while the JVM starts and the first set-up runs, and exits
+    # before anything is measured
     expected = os.path.join(work, "expected.pickle")
     child = subprocess.Popen([
         sys.executable, os.path.join(HERE, "oracle.py"), args.workload,
-        str(args.seed), str(args.sf), ctx.sf_dir, expected])
+        str(args.seed), str(args.sf), str(args.trace), ctx.sf_dir,
+        expected],
+        stdout=subprocess.PIPE, text=True)
     spark = None
     try:
         from cantera_table_spark.session import get_spark
@@ -224,29 +228,38 @@ def main(argv=None) -> int:
         spark = get_spark(f"perfbench-{args.workload}")
         t_session = time.monotonic() - t0
         spark.sparkContext.setLogLevel("ERROR")
-        if child.wait() != 0:
-            raise RuntimeError("making the inputs and expected outputs "
-                               f"failed (exit code {child.returncode})")
-        t_prepare = time.monotonic() - t_start
-        with open(expected, "rb") as f:
-            ctx.expected = pickle.load(f)
+        line = child.stdout.readline()
+        if not line:
+            raise RuntimeError("making the inputs failed "
+                               f"(exit code {child.wait()})")
+        ctx.expected = json.loads(line)
         ctx.spark = spark
         ctx.tracer = Tracer(spark, enabled=bool(args.trace))
         wl = WORKLOADS[args.workload](ctx)
         setups = []
-        for _ in range(SETUP_REPS):
+        for rep in range(SETUP_REPS):
+            if rep == 1:
+                # the first, cold set-up is never the median; the
+                # oracle is done before any set-up that can be
+                if child.wait() != 0:
+                    raise RuntimeError("making the expected outputs "
+                                       f"failed (exit code "
+                                       f"{child.returncode})")
+                t_prepare = time.monotonic() - t_start
+                with open(expected, "rb") as f:
+                    ctx.expected.update(pickle.load(f))
             t0 = time.monotonic()
             wl.setup()
             setups.append(time.monotonic() - t0)
-        runner = Runner(ctx, wl, wl.ops())
+        runner = Runner(ctx, wl, wl.ops(bool(args.trace)))
         for name, ok in wl.read_back():
             runner.record(name, ok)
         t0 = time.monotonic()
         warm = [runner.execute(op)                # checked too
-                for op in wl.warm_up_ops(runner.ops)]
+                for op in wl.warm_up_ops(bool(args.trace))]
         t_warm = time.monotonic() - t0
         print(f"perfbench: {args.workload}: session {t_session:.1f} s, "
-              f"inputs and oracle ready at {t_prepare:.1f} s, set-ups "
+              f"oracle ready at {t_prepare:.1f} s, set-ups "
               + " ".join(f"{t:.1f}" for t in setups)
               + f" s, warm-up {t_warm:.1f} s", file=sys.stderr)
 
@@ -278,12 +291,16 @@ def main(argv=None) -> int:
                   f"{sum(map(len, blocks))} timed ops after {len(warm)} "
                   "warm-up ops; ms per op kind, in order: "
                   + "; ".join(f"{k} {' '.join(v)}" for k, v in ms.items())
-                  + f"; host steal while timed {stolen / total:.1%}",
+                  + f"; host steal while timed {stolen / total:.1%}; "
+                  "peak RSS MB by process: " + ", ".join(
+                      f"{k} {v:.0f}"
+                      for k, v in peak_rss_mb_by_process().items()),
                   file=sys.stderr)
     finally:
         if child.poll() is None:
             child.kill()
         child.wait()
+        child.stdout.close()
         if spark is not None:
             t0 = time.monotonic()
             shutdown(spark)

@@ -7,14 +7,13 @@ expected output outside the timed region.
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
-import statistics
 
 from pyspark.sql import functions as F
 
 import data
-from measure import per_op
 from oracle import canonical, same_json
 
 
@@ -39,12 +38,12 @@ class CatalogWorkload:
     the bucketed Parquet index and the summary table from the generated
     documents (as ``bench.py`` does) and opens a catalog over them.
 
-    ``ctx.expected`` holds every expected output (``oracle.prepare``)."""
-
-    # warm-up before the timed ops: passes over the op list, then one
-    # more run of each op named in ``warm_extra``
-    warm_passes = 2
-    warm_extra: tuple = ()
+    ``ctx.expected`` holds the inputs' description and, from the second
+    set-up on, every expected output (``oracle.make_inputs``,
+    ``oracle.expected_outputs``).
+    A workload's ops come in three lists (``op_lists``): ``warm_up``
+    runs once before timing, ``timed`` is the timed pass, and
+    ``traced`` is the pass the traced run times."""
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -107,9 +106,14 @@ class CatalogWorkload:
             postings_buckets=self.ctx.cpus)
         return Engine(self.catalog, unique_postings=True)
 
-    def warm_up_ops(self, ops: list[Op]) -> list[Op]:
-        return ops * self.warm_passes + [
-            op for op in ops if op.name in self.warm_extra]
+    def ops(self, traced: bool) -> list[Op]:
+        return self.op_lists["traced" if traced else "timed"]
+
+    def warm_up_ops(self, traced: bool) -> list[Op]:
+        """The warm-up ops, then (traced) one run of each op only the
+        traced pass has."""
+        return self.op_lists["warm_up"] + [
+            op for op in self.ops(traced) if op not in self.ops(False)]
 
     def latencies(self, blocks: list[list[dict]]) -> list[float]:
         """Op latencies (s) the percentiles are taken over: every timed
@@ -161,9 +165,12 @@ class Serve(CatalogWorkload):
             F.count("*"), F.sum("score")).collect()[0]
         return super().read_back() + [
             ("TSV merge read-back",
-             tuple(got) == self.want["tsv_checksum"])]
+             tuple(got) == tuple(self.want["tsv_checksum"]))]
 
-    def ops(self) -> list[Op]:
+    @functools.cached_property
+    def op_lists(self) -> dict[str, list[Op]]:
+        """The first blocks of statements warm up; the other blocks,
+        different statements of the same templates, are timed."""
         from cantera_table_spark.dsl.compiler import QueryCompiler
         from cantera_table_spark.dsl.parser import parse_script
         eng = self.eng
@@ -186,9 +193,12 @@ class Serve(CatalogWorkload):
                 return out, len(rows)
             return run
 
-        return [Op(op.template, make(op.text), want, same_json)
-                for op, want in zip(data.serve_statements(self.ctx.seed),
-                                    self.want["ops"])]
+        ops = [Op(op.template, make(op.text), want, same_json)
+               for op, want in zip(data.serve_statements(self.ctx.seed),
+                                   self.want["ops"])]
+        warm = data.SERVE_WARM_BLOCKS * self.block()
+        return {"warm_up": ops[:warm], "timed": ops[warm:],
+                "traced": ops[warm:]}
 
     def block(self) -> int:
         # every block runs each template once
@@ -196,15 +206,16 @@ class Serve(CatalogWorkload):
 
 
 class Mine(CatalogWorkload):
-    """Corpus mining over the whole index: CORRELATE feature mining, a
-    SELECT feature matrix and near-duplicate pairs (MinHash/LSH
-    candidates, then exact Jaccard verification)."""
+    """Corpus mining over the whole index: CORRELATE feature mining,
+    and in the traced run also a SELECT feature matrix and
+    near-duplicate pairs (MinHash/LSH candidates, then exact Jaccard
+    verification)."""
 
-    # SELECT and dd07 settle after one run; CORRELATE needs two
-    warm_passes = 1
-    warm_extra = ("correlate",)
-
-    def ops(self) -> list[Op]:
+    @functools.cached_property
+    def op_lists(self) -> dict[str, list[Op]]:
+        """The first CORRELATEs warm up and the others are timed.  The
+        traced pass is one CORRELATE, the near-duplicate pairs and the
+        SELECT matrix; only the traced run times the last two."""
         from cantera_table_spark.dsl.parser import parse_script
         from cantera_table_spark.functions import dedup
         from cantera_table_spark.model import load_table
@@ -241,19 +252,16 @@ class Mine(CatalogWorkload):
         def rows_equal(got, want):
             return canonical(got) == want
 
-        ops = [Op(op.kind, statement(op), want, rows_equal)
-               for op, want in zip(data.mine_statements(self.ctx.seed),
-                                   self.want["ops"])]
-        ops.append(Op("lsh_jaccard", lsh_jaccard,
-                      self.want["lsh_jaccard"], rows_equal))
-        return ops
-
-    def latencies(self, blocks: list[list[dict]]) -> list[float]:
-        """Each op's median latency over the run: a pass holds three
-        unlike ops, so percentiles over single runs of them would jump
-        between op kinds."""
-        return [statistics.median(v)
-                for v in per_op(blocks, "wall").values()]
+        *correlates, select = [
+            Op(op.kind, statement(op), want, rows_equal)
+            for op, want in zip(data.mine_statements(self.ctx.seed),
+                                self.want["ops"])]
+        warm, timed = (correlates[:data.MINE_WARM],
+                       correlates[data.MINE_WARM:])
+        pairs = Op("lsh_jaccard", lsh_jaccard, self.want["lsh_jaccard"],
+                   rows_equal)
+        return {"warm_up": warm, "timed": timed,
+                "traced": [timed[0], pairs, select]}
 
     def pair_counts(self) -> tuple[int, int]:
         """(LSH candidate pairs, Jaccard-verified pairs) of the last
