@@ -10,9 +10,10 @@ from __future__ import annotations
 
 import bisect
 import json
+from collections import defaultdict
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Row
 from pyspark.sql import functions as F
 
 from cantera_table_spark.dsl import ast
@@ -37,11 +38,12 @@ class Engine:
             raise ValueError(f"count_mode must be exact|approx|none, "
                              f"got {count_mode!r}")
         # result-count policy for QUERY envelopes (SURVEY §4): "exact"
-        # (reference-faithful, query.cc:933 — materializes the full
-        # result once to count it), "approx" (Bernoulli-sample estimate
-        # — one sampled count job instead of a full materialization), or
-        # "none" (omit result-count; the page is the only job, the
-        # at-100 TB interactive default).
+        # (reference-faithful, query.cc:933 — an observer counts the
+        # result inside the top-k page job, no extra job), "approx"
+        # (Bernoulli-sample estimate — one sampled count job besides
+        # the page), or "none" (omit result-count; at 100 TB the top-k
+        # reads the whole result either way, so "none" saves only the
+        # count itself).
         self.count_mode = count_mode
         self.approx_count_fraction = 0.05
         # session parameters (reference SET statement, statement.cc:35-48;
@@ -138,23 +140,22 @@ class Engine:
         (``{"result-count": N, "result": [...]}`` — query.cc:933-941) or,
         for KEYS FOR, a list of keys.
 
+        A statement collects the top-k page in one action, then fetches
+        the page's summaries by doc_id in a second, small one (the
+        reference seeks each result's summary, query.cc:813-890).
         ``count_mode`` (default: the engine's) picks the result-count
-        policy: "exact" caches and counts the full result (reference
-        behavior); "approx" estimates it from a Bernoulli sample
-        (documented divergence — the count job reads the result once at
-        ``approx_count_fraction`` instead of materializing it); "none"
-        omits ``result-count`` and runs the page as the only job."""
+        policy: "exact" counts the result inside the page action
+        (reference behavior; LIMIT 0 counts instead of paging);
+        "approx" estimates it from a Bernoulli sample in a job of its
+        own (documented divergence); "none" omits ``result-count``."""
         mode = count_mode or self.count_mode
         if mode not in ("exact", "approx", "none"):
             raise ValueError(f"count_mode must be exact|approx|none, "
                              f"got {mode!r}")
         if stmt.keys_only:
-            # KEYS FOR output carries no result-count, so exact mode's
-            # cache+count (a full extra materialization per query) and
-            # approx's sample job buy nothing (r11 review finding);
-            # the one behavioral use of the count — offset beyond the
-            # result returning a bare [] — falls out of the empty page
-            # identically on the countless path below.
+            # KEYS FOR output carries no result-count, so counting buys
+            # nothing (r11 review finding); offset beyond the result
+            # still returns the bare [] through the empty page
             mode = "none"
         comp = self._compiler()
         result = comp.process_query(stmt.query, use_max=True)
@@ -171,78 +172,104 @@ class Engine:
             kp = comp._lookup_leaf(key)
             result = sa.threshold_filter(result, kp, thr_values)
 
-        total = None
-        if mode == "exact":
-            result = result.cache()
-        try:
-            if mode == "exact":
-                total = result.count()
-                if stmt.offset >= total:
-                    # Reference prints a bare "[]" here (query.cc:796-799)
-                    return []
-            elif mode == "approx":
-                frac = self.approx_count_fraction
-                total = int(round(
-                    result.sample(False, frac, seed=0).count() / frac))
-            page_df = sa.top_k(result, stmt.limit, stmt.offset)
-            docs = self.catalog.summary()
-            page = page_df.join(docs, "doc_id", "left")
-            ov = self.catalog.override()
-            if ov is not None:
-                ov = ov.withColumnRenamed("doc", "__ov_doc")
-                page = page.join(ov, "key", "left")
-            extra = comp.extra
-            if extra is not None:
-                page = page.join(extra, "doc_id", "left")
-            # ONE sort, after the last join: joins don't preserve
-            # order, so sorting earlier is dead weight (r11 review —
-            # the previous per-join orderBy chain declared three
-            # identical Sort nodes of which only the last mattered)
-            rows = (page.orderBy(F.col("score").desc(),
-                                 F.col("doc_id").asc()).collect())
-        finally:
-            if mode == "exact":
-                result.unpersist()
-        if mode != "exact" and not rows and stmt.limit != 0:
-            # approx/none learn "offset beyond the result" from the
-            # empty page itself (an empty offset-0 page means the
-            # result set is empty, i.e. offset >= total); same bare-[]
-            # form as exact (query.cc:796-799).  A LIMIT 0 page is empty
-            # by construction and proves nothing about the total, so it
-            # keeps the envelope form exact mode would produce.
+        total = obs = None
+        if mode == "exact" and stmt.limit == 0:
+            # the optimizer drops an empty page together with any
+            # observer on it, so LIMIT 0 counts in a job of its own
+            total = result.count()
+            if stmt.offset >= total:
+                # Reference prints a bare "[]" here (query.cc:796-799)
+                return []
+        elif mode == "exact" and stmt.limit > 0:
+            # count every result row as the top-k reads it: the
+            # observer sits directly under TakeOrderedAndProject, in the
+            # job's result stage, where Spark applies each partition's
+            # accumulator update once even if its task is retried.  No
+            # compiled result arrives sorted by the page order, so the
+            # top-k reads every row rather than a per-partition prefix.
+            obs = Observation()
+            result = result.observe(obs, F.count(F.lit(1)).alias("n"))
+        elif mode == "approx" and stmt.limit >= 0:
+            frac = self.approx_count_fraction
+            total = int(round(
+                result.sample(False, frac, seed=0).count() / frac))
+        page = (sa.top_k(result, stmt.limit, stmt.offset).collect()
+                if stmt.limit != 0 else [])
+        if not page and stmt.limit != 0:
+            # offset beyond the result (an empty offset-0 page means an
+            # empty result): the reference's bare [] (query.cc:796-799).
+            # A LIMIT 0 page is empty by construction and proves
+            # nothing about the total, so it keeps the envelope form.
             return []
-        if mode == "approx":
-            # reconcile the sample estimate with what the page proved:
-            # an under-full page (or a dump-all page) means the result
-            # ENDED inside it, so the exact total is known and beats
-            # the estimate in both directions (r9 review finding — a
-            # 3-doc result with frac 0.05 could otherwise report
-            # result-count 20); a full page only proves a lower bound
-            if stmt.limit < 0 or len(rows) < stmt.limit:
-                total = stmt.offset + len(rows)
-            else:
-                total = max(total, stmt.offset + len(rows))
+        if obs is not None:
+            total = obs.get["n"]
+        elif mode != "none" and (stmt.limit < 0 or len(page) < stmt.limit):
+            # an under-full (or dump-all) page means the result ENDED
+            # inside it, so it proves the exact total — in approx mode
+            # that beats the estimate in both directions (r9 review
+            # finding: a 3-doc result with frac 0.05 could otherwise
+            # report result-count 20)
+            total = stmt.offset + len(page)
+        elif mode == "approx":
+            # a full page only proves a lower bound
+            total = max(total, stmt.offset + len(page))
 
+        summaries, headers = self._page_lookup(comp, page, stmt.keys_only)
         if stmt.keys_only:
-            return [r["key"] for r in rows]
+            return [s["key"] for r in page for s in summaries[r["doc_id"]]]
 
         results = []
-        for r in rows:
-            obj: dict = {"_key": r["key"]}
-            if r["doc"]:
-                obj.update(json.loads(r["doc"]))
-            if "__ov_doc" in r.__fields__ and r["__ov_doc"]:
-                obj.update(json.loads(r["__ov_doc"]))
-            if "_header" in r.__fields__ and r["_header"] is not None:
-                obj["_header"] = r["_header"]
-                obj["_header_key"] = r["_header_key"]
-            if thr_values is not None:
-                obj.update(self._threshold_header(
-                    r["score"], thr_values, use_date_headers, reverse))
-            results.append(obj)
+        for r in page:
+            h = headers.get(r["doc_id"])
+            for s in summaries[r["doc_id"]]:
+                obj: dict = {"_key": s["key"]}
+                if s["doc"]:
+                    obj.update(json.loads(s["doc"]))
+                if s["__ov_doc"]:
+                    obj.update(json.loads(s["__ov_doc"]))
+                if h is not None:
+                    obj["_header"] = h["_header"]
+                    obj["_header_key"] = h["_header_key"]
+                if thr_values is not None:
+                    obj.update(self._threshold_header(
+                        r["score"], thr_values, use_date_headers, reverse))
+                results.append(obj)
         if total is None:
             return {"result": results}
         return {"result-count": total, "result": results}
+
+    def _page_lookup(self, comp: QueryCompiler, page: list,
+                     keys_only: bool) -> tuple[dict, dict]:
+        """Fetch the page's summaries (override bodies merged in) and
+        FIELD-in headers by doc_id, reading only the page's ids from
+        the summary table instead of joining the page against all of it.
+
+        Returns ({doc_id: [summary rows]}, {doc_id: header row}).  A doc
+        with no summary gets one empty row (a NULL ``_key``), one with
+        several gets one result object per row, as a left join would."""
+        ids = sorted({r["doc_id"] for r in page if r["doc_id"] is not None})
+        empty = Row(key=None, doc=None, __ov_doc=None)
+        summaries = defaultdict(lambda: [empty])
+        if not ids:
+            return summaries, {}
+        in_page = F.expr(f"doc_id IN ({','.join(map(str, ids))})")
+        docs = self.catalog.summary().filter(in_page)
+        ov = None if keys_only else self.catalog.override()
+        if keys_only:
+            docs = docs.select("doc_id", "key")
+        elif ov is None:
+            docs = docs.select("doc_id", "key", "doc",
+                               F.lit(None).alias("__ov_doc"))
+        else:
+            docs = docs.select("doc_id", "key", "doc").join(
+                ov.withColumnRenamed("doc", "__ov_doc"), "key", "left")
+        for s in docs.collect():
+            summaries.setdefault(s["doc_id"], []).append(s)
+        headers = {}
+        if comp.extra is not None and not keys_only:
+            headers = {h["doc_id"]: h
+                       for h in comp.extra.filter(in_page).collect()}
+        return summaries, headers
 
     @staticmethod
     def _threshold_header(score: float, thresholds: list[float],

@@ -470,8 +470,8 @@ def _magnitude(v: int) -> tuple[int, int]:
 def encode_jpeg(pixels_rgb: bytes, width: int, height: int,
                 quality: int = 90) -> bytes:
     """Baseline sequential JFIF encoder, stdlib + numpy only: YCbCr
-    4:4:4, one vectorized DCT einsum per component, Annex K quantization
-    (IJG quality scaling) and Huffman tables.  No subsampling and no
+    4:4:4, one stacked DCT matmul pair over all three components, Annex
+    K quantization (IJG quality scaling) and Huffman tables.  No subsampling and no
     restart intervals — every block carries full chroma, which keeps
     the constant-block reconstruction exact (the mm08 oracle contract).
     """
@@ -685,7 +685,7 @@ def _extend(vbits: int, s: int) -> int:
 def decode_jpeg(data: bytes) -> dict:
     """Baseline sequential JFIF decoder, stdlib + numpy only: marker
     walk, canonical Huffman decode, dequant + inverse zigzag, one
-    vectorized IDCT einsum per component, YCbCr -> RGB.  Supports 3
+    stacked IDCT matmul pair over all components, YCbCr -> RGB.  Supports 3
     components (4:4:4 color) or 1 (grayscale), 1x1 sampling —
     progressive scans, subsampled chroma, restart intervals, and other
     component counts (2-channel, Adobe CMYK/YCCK) raise ValueError

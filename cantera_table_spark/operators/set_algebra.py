@@ -204,7 +204,8 @@ def threshold_filter(result: DataFrame, key_postings: DataFrame,
     lo, hi = min(values), max(values)
     kp = key_postings.filter(
         (F.col(_SCORE) >= lo) & (F.col(_SCORE) < hi))
-    return result.select(_DOC).distinct().join(kp.select(_DOC, _SCORE), _DOC)
+    return kp.select(_DOC, _SCORE).join(result.select(_DOC), _DOC,
+                                        "left_semi")
 
 
 def top_k(df: DataFrame, limit: int, offset: int = 0) -> DataFrame:
@@ -212,9 +213,9 @@ def top_k(df: DataFrame, limit: int, offset: int = 0) -> DataFrame:
 
     limit < 0 means "all" (reference fetchClause default -1).  Ties are
     broken by doc_id ascending for determinism (the reference's
-    partial_sort is unstable — documented divergence).  Compiles to
-    TakeOrderedAndProject for finite limits; the OFFSET slice runs on the
-    already-limited page.
+    partial_sort is unstable — documented divergence).  A finite limit
+    compiles to one TakeOrderedAndProject(limit, offset) that drops the
+    OFFSET rows from the already-limited page.
     """
     ordered = df.orderBy(F.col(_SCORE).desc(), F.col(_DOC).asc())
     if limit is None or limit < 0:
@@ -223,11 +224,7 @@ def top_k(df: DataFrame, limit: int, offset: int = 0) -> DataFrame:
         return ordered
     page = ordered.limit(offset + limit)
     if offset:
-        # bounded by the page size (offset+limit rows post-
-        # TakeOrderedAndProject), so a global window is fine here
-        w = Window.orderBy(F.col(_SCORE).desc(), F.col(_DOC).asc())
-        page = (page.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") > offset))
+        page = page.offset(offset)
     return page.select(_DOC, _SCORE)
 
 

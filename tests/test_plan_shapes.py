@@ -82,6 +82,59 @@ def test_general_mode_dedup_costs_one_shuffle(spark, parquet_catalog):
     assert facts.n_shuffles == 1  # the ProcessQuery dedup groupBy
 
 
+def _statement_plans(monkeypatch, catalog, text, unique=True):
+    """Run one statement; return its result and the PlanFacts of every
+    DataFrame it collected, in order (taken before each action runs)."""
+    DataFrame = type(catalog.summary())
+    plans, collect = [], DataFrame.collect
+
+    def recording(self):
+        plans.append(plan_facts(self))
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", recording)
+    out = Engine(catalog, unique_postings=unique).execute_script(text)[0]
+    monkeypatch.undo()
+    return out, plans
+
+
+def _operators(facts):
+    """Physical operator lines from the root down, without the AQE
+    wrapper."""
+    ops = [ln.lstrip(" +-:") for ln in facts.text.splitlines()[1:]]
+    return [op for op in ops
+            if op and not op.startswith("AdaptiveSparkPlan")]
+
+
+@pytest.mark.parametrize("text,unique", [
+    ("QUERY (kw7 OR kw9) LIMIT 10 OFFSET 2;", True),
+    ("QUERY (kw7) LIMIT 10;", False),
+    ("QUERY (kw7) THRESHOLDS 1,3,6 FOR KEY 'kw7' LIMIT 10;", True)])
+def test_exact_count_rides_the_topk_page(spark, parquet_catalog,
+                                         monkeypatch, text, unique):
+    """Exact mode takes the result-count from an observer directly
+    under the top-k page — the job's result stage, no cache, no count
+    job — then fetches the page's summaries by id, the ids pushed into
+    the Parquet scan."""
+    env, plans = _statement_plans(monkeypatch, parquet_catalog, text,
+                                  unique)
+    assert env["result-count"] > len(env["result"]) > 1
+    assert len(plans) == 2, [p.text for p in plans]
+    page, lookup = plans
+    ops = _operators(page)
+    assert ops[0].startswith("TakeOrderedAndProject(limit="), page.text
+    assert "offset=2" in ops[0] or "OFFSET" not in text
+    assert ops[1].startswith("CollectMetrics"), page.text
+    # the top-k reads every row only if nothing below it is already
+    # sorted in page order
+    assert not ops[2].startswith("Sort"), page.text
+    assert "InMemoryRelation" not in page.text
+    assert lookup.pushed("In(doc_id"), lookup.text
+    # a set reference, not inlined literals: one compiled class serves
+    # every page (session.get_spark's InSet threshold)
+    assert " INSET " in lookup.text, lookup.text
+
+
 def test_select_matrix_has_no_python_eval(spark, parquet_catalog):
     from cantera_table_spark.dsl.parser import parse_query
     eng = Engine(parquet_catalog, unique_postings=True)

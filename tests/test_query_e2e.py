@@ -7,6 +7,13 @@ from cantera_table_spark.engine import Engine
 from cantera_table_spark.model import Catalog
 
 
+def dataframe_class(spark):
+    """The class whose methods actions run through: pyspark's
+    ``DataFrame`` is an API base that the classic DataFrame subclass
+    overrides, so a test patching the base would patch nothing."""
+    return type(spark.range(0))
+
+
 @pytest.fixture()
 def catalog(spark):
     postings = spark.createDataFrame(
@@ -54,7 +61,7 @@ def test_count_mode_envelopes(spark, catalog, monkeypatch):
     reference-faithful; approx returns an integer estimate; none omits
     result-count AND never runs a count job (pinned by poisoning
     DataFrame.count)."""
-    from pyspark.sql import DataFrame
+    DataFrame = dataframe_class(spark)
 
     exact = Engine(catalog, unique_postings=True).execute_script(
         "QUERY (alpha) LIMIT 2;")[0]
@@ -107,6 +114,95 @@ def test_limit_zero_keeps_envelope_in_all_modes(spark, catalog):
                   count_mode="none").execute_script(
         "QUERY (alpha) LIMIT 0;")[0]
     assert none == {"result": []}
+
+
+def test_exact_count_edge_cases(spark, catalog):
+    """Exact mode counts inside the page job; every way a page can be
+    empty, partial or unbounded keeps the reference's envelope."""
+    eng = Engine(catalog, unique_postings=True)
+
+    def run(text):
+        return eng.execute_script(text)[0]
+
+    def keys(env):
+        return [r["_key"] for r in env["result"]]
+
+    assert run("QUERY (alpha) LIMIT 0 OFFSET 3;") == []
+    # empty results: absent keyword, AND with an empty rhs
+    assert run("QUERY (nosuchword) LIMIT 5;") == []
+    assert run("QUERY (alpha AND nosuchword) LIMIT 5;") == []
+    assert run("QUERY (alpha) LIMIT 5 OFFSET 3;") == []
+    # an under-full page still reports the whole result
+    env = run("QUERY (alpha) LIMIT 2 OFFSET 1;")
+    assert env["result-count"] == 3 and keys(env) == ["d0", "d1"]
+    # no LIMIT (-1): the page holds the rest of the result
+    env = run("QUERY (alpha);")
+    assert env["result-count"] == 3 and keys(env) == ["d2", "d0", "d1"]
+    env = run("QUERY (alpha) OFFSET 1;")
+    assert env["result-count"] == 3 and keys(env) == ["d0", "d1"]
+    assert run("QUERY (alpha) OFFSET 3;") == []
+
+
+def test_exact_page_overrides_and_field_in_headers(spark, catalog):
+    """Summaries fetched by doc_id still merge override bodies and the
+    FIELD-in headers of the same page."""
+    blob = "{Section One} www.example.com"
+    eng = Engine(catalog, unique_postings=True,
+                 blob_fetcher=lambda key: blob)
+    env = eng.execute_script("QUERY (name-in:someblob OR beta) LIMIT 10;")[0]
+    assert env["result-count"] == 3
+    by_key = {r["_key"]: r for r in env["result"]}
+    assert by_key["d0"]["_header"] == "Section One"
+    assert by_key["d0"]["_header_key"] == "000000"
+    assert by_key["d1"]["title"] == "ONE-PATCHED" and by_key["d1"]["extra"]
+    assert "_header" not in by_key["d1"] and "_header" not in by_key["d2"]
+
+
+def test_duplicate_summary_rows_keep_one_object_each(spark, catalog):
+    """A doc_id with two summary rows gives two result objects at its
+    page position, as a left join of the page to the summaries would."""
+    extra = spark.createDataFrame([(1, "d1b", '{"title":"uno"}')],
+                                  "doc_id long, key string, doc string")
+    cat = Catalog(summaries=catalog.summaries + [extra],
+                  indexes=catalog.indexes, overrides=catalog.overrides)
+    env = Engine(cat, unique_postings=True).execute_script(
+        "QUERY (alpha) LIMIT 3;")[0]
+    assert env["result-count"] == 3
+    got = env["result"]
+    assert [r["_key"] for r in got[:2]] == ["d2", "d0"]
+    assert sorted((r["_key"], r["title"]) for r in got[2:]) == [
+        ("d1", "ONE-PATCHED"), ("d1b", "uno")]
+    assert Engine(cat, unique_postings=True).execute_script(
+        "QUERY KEYS FOR (beta) LIMIT 1;")[0] in (["d1", "d1b"],
+                                                ["d1b", "d1"])
+    # a dump-all page proves the total from result rows, not from
+    # result objects: approx agrees with exact
+    env = Engine(cat, unique_postings=True, count_mode="approx"
+                 ).execute_script("QUERY (alpha);")[0]
+    assert env["result-count"] == 3 and len(env["result"]) == 4
+
+
+def test_exact_mode_never_caches_or_counts(spark, catalog, monkeypatch):
+    """With LIMIT > 0 (or no LIMIT) exact mode takes its result-count
+    from the page job: no DataFrame.cache, no separate count job."""
+    DataFrame = dataframe_class(spark)
+
+    def poison(name):
+        def fail(self, *a, **k):
+            raise AssertionError(f"exact mode must not call {name}")
+        return fail
+
+    eng = Engine(catalog, unique_postings=True)
+    monkeypatch.setattr(DataFrame, "cache", poison("cache"))
+    monkeypatch.setattr(DataFrame, "persist", poison("persist"))
+    monkeypatch.setattr(DataFrame, "count", poison("count"))
+    env = eng.execute_script("QUERY (alpha) LIMIT 2;")[0]
+    assert env["result-count"] == 3
+    assert eng.execute_script("QUERY (alpha) OFFSET 2;")[0][
+        "result-count"] == 3
+    assert eng.execute_script(
+        "QUERY (alpha) THRESHOLDS 0,3,6 FOR KEY 'alpha' LIMIT 1;")[0][
+        "result-count"] == 3
 
 
 def test_threshold_headers_numeric_and_date(spark, catalog):
@@ -414,7 +510,7 @@ def test_r11_core_review_engine_pins(spark, catalog, monkeypatch):
     tables returns postings from both on a plain lookup (the bucket
     prune filter is null-safe — a bare equality silently dropped every
     NULL-bucket row of the unbucketed table)."""
-    from pyspark.sql import DataFrame
+    DataFrame = dataframe_class(spark)
     from pyspark.sql import functions as F
 
     from cantera_table_spark.model import bucket_expr
@@ -444,3 +540,75 @@ def test_r11_core_review_engine_pins(spark, catalog, monkeypatch):
                  count_mode="none").query_df(parse_query("alpha"))
     assert {(r.doc_id, r.score) for r in res.collect()} == \
         {(10, 9.0), (20, 7.0)}
+
+
+# Run in its own process: task retries need a ``local[threads,
+# maxFailures]`` master, which a session cannot change once started.
+_RETRY_SCRIPT = r'''
+import json
+from pyspark import TaskContext
+from pyspark.sql import SparkSession, functions as F
+from cantera_table_spark.engine import Engine
+from cantera_table_spark.model import Catalog
+
+spark = (SparkSession.builder.master("local[2,2]")
+         .config("spark.driver.memory", "1g")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.ui.enabled", "false").getOrCreate())
+postings = spark.range(0, 4000, 1, 4).select(
+    F.lit("alpha").alias("keyword"), F.col("id").alias("doc_id"),
+    (F.col("id") % 97).cast("double").alias("score"))
+docs = spark.range(4000).select(
+    F.col("id").alias("doc_id"), F.format_string("d%d", "id").alias("key"),
+    F.lit("{}").alias("doc"))
+
+
+@F.udf("double")
+def first_attempt_fails(score, doc_id):
+    # late in each 1000-row partition, so a failed attempt has already
+    # passed most of its rows through the observer
+    if TaskContext.get().attemptNumber() == 0 and doc_id % 1000 == 950:
+        raise RuntimeError("injected first-attempt failure")
+    return score
+
+
+flaky = postings.withColumn(
+    "score", first_attempt_fails("score", "doc_id"))
+sc = spark.sparkContext
+out = {}
+for name, index in (("clean", postings), ("flaky", flaky)):
+    sc.setJobGroup(name, name)
+    eng = Engine(Catalog(summaries=[docs], indexes=[index]),
+                 unique_postings=True)
+    out[name] = eng.execute_script("QUERY (alpha) LIMIT 5;")[0]
+sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+tracker = sc.statusTracker()
+out["failed_tasks"] = sum(
+    tracker.getStageInfo(sid).numFailedTasks
+    for jid in tracker.getJobIdsForGroup("flaky")
+    for sid in tracker.getJobInfo(jid).stageIds)
+print(json.dumps(out))
+spark.stop()
+'''
+
+
+@pytest.mark.slow
+def test_exact_count_survives_task_retries():
+    """The exact count comes from an observer in the page job's result
+    stage, where Spark applies each partition's accumulator update once:
+    when every task fails its first attempt part-way and is retried,
+    result-count and page equal those of a run without failures."""
+    import json
+    import os
+    import subprocess
+    import sys
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT], cwd=root,
+        env={**os.environ, "PYTHONPATH": root},
+        capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["failed_tasks"] >= 4      # every page-job task retried
+    assert out["clean"]["result-count"] == 4000
+    assert out["flaky"] == out["clean"]
