@@ -43,47 +43,29 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
                  F.count("*").alias("n_copies")))
 
 
-def shingles(df: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id", n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle)."""
-    toks = tokens(F.col(text_col))
-    # sequence(1, 0) would count DOWN ([1, 0]) and slice(_, 0, n) is a
-    # runtime error, so documents with < n tokens are filtered before
-    # the shingle positions are generated.
-    return (df.select(F.col(id_col).alias("doc_id"),
-                      toks.alias("__toks"))
-            .filter(F.size("__toks") >= n)
-            .select("doc_id",
-                    F.explode(F.array_distinct(F.transform(
-                        F.sequence(F.lit(1),
-                                   F.size("__toks") - (n - 1)),
-                        lambda i: F.concat_ws(" ", F.slice(F.col("__toks"),
-                                                           i, n)))))
-                    .alias("shingle")))
-
-
 def shingle_arrays(df: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id", n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document as ONE array row:
-    (doc_id, __shingles).  The per-row twin of :func:`shingles` —
-    ``explode`` of the array equals the long form exactly (pinned by
-    tests/test_rowwise_rewrites.py).  Keeping shingles in-row lets the
-    MinHash signature and LSH band hashes compute as pure map
-    expressions with ZERO shuffles (guide §2.4): the per-document
-    reductions never need rows to leave the document.
+    (doc_id, __shingles) — the module's only tokenize -> n-gram
+    transform (:func:`shingles` is its explode).  Keeping shingles
+    in-row lets the MinHash signature and LSH band hashes compute as
+    pure map expressions with ZERO shuffles (guide §2.4): the
+    per-document reductions never need rows to leave the document.
 
     The token array is materialized behind an explode(array(...))
     Generate barrier so the size() filter cannot re-inline the
     tokenize (the CollapseProject/pushdown re-evaluation class).
+    Documents with < n tokens are dropped: ``sequence(1, size - (n-1))``
+    would count DOWN through 0 and ``slice(toks, 0, n)`` is a runtime
+    error.
 
     The shingle transform is guarded by the same ``size() >= n`` test
     inside a ``when()`` branch even though the row filter already
     enforces it: a downstream predicate referencing ``__shingles``
     can be pushed down and merged into the filter, where codegen's
     subexpression elimination evaluates the transform BEFORE the
-    short-circuiting size conjunct — and on a short document
-    ``sequence(1, size - (n-1))`` counts DOWN through 0, so
-    ``slice(toks, 0, n)`` throws under ANSI (caught in-round by
+    short-circuiting size conjunct — and on a short document the
+    count-down ``slice`` throws under ANSI (caught in-round by
     test_near_dup_clusters_clone_invariant; conditional branches are
     exempt from eager subexpression hoisting, which is the same
     reason text.with_repetition_stats guards its gram arrays)."""
@@ -104,33 +86,37 @@ def shingle_arrays(df: DataFrame, text_col: str = "text",
 
 
 def exploded_shingles(arrs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) long form from :func:`shingle_arrays` output —
-    bit-identical to :func:`shingles` (law-tested).  Lets one pipeline
-    feed both the map-only LSH path (arrays) and the co-shingle
-    Jaccard join (long form) without re-tokenizing twice."""
+    """(doc_id, shingle) long form from :func:`shingle_arrays` output.
+    Lets one pipeline feed both the map-only LSH path (arrays) and the
+    co-shingle Jaccard join (long form) without re-tokenizing twice."""
     return arrs.select("doc_id", F.explode("__shingles").alias("shingle"))
+
+
+def shingles(df: DataFrame, text_col: str = "text",
+             id_col: str = "doc_id", n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles per document: (doc_id, shingle)."""
+    return exploded_shingles(shingle_arrays(df, text_col, id_col, n))
 
 
 def _sig_array(shingles_arr: Column, k: int = 16) -> Column:
     """k-element MinHash signature array from a shingle array — pure
-    map expressions, no shuffle.  Same hash family as
-    :func:`minhash_signatures`: h_i(x) = ((2i+1) * x + 12345*i + 1)
-    mod p over the portable md5 base hash; sig_i = min over the array.
+    map expressions, no shuffle.  h_i(x) = ((2i+1) * x + 12345*i + 1)
+    mod p over the portable md5 base hash x; sig_i = min over the
+    array (a min over the shingle SET, so element order and repeats
+    never change it).
 
     Shape (r13): transposed to k passes of ``array_min`` over the
     md5-hashed array instead of one fold carrying a k-array
-    accumulator — bit-identical mins (law-tested vs the frozen grouped
-    pipelines), but the fold allocated a fresh k-element zip_with
+    accumulator — bit-identical mins (law-tested vs the frozen r11
+    groupBy form), but the fold allocated a fresh k-element zip_with
     array PER SHINGLE where this allocates k arrays PER DOCUMENT
     (~10% off the interpreted higher-order evaluation; HOF lambdas do
     not enter whole-stage codegen, which is the remaining honest cost
     of the zero-shuffle shape).  The hashed array binds through a
     one-element ``transform`` so md5 evaluates ONCE per shingle, not
     once per hash function (the FoldRecompute class); callers must
-    guarantee a non-empty array (shingle_arrays filters docs with
-    < n tokens), matching the grouped form's drop of shingle-less
-    docs — array_min of the (impossible) empty array would be NULL
-    where the fold's identity was the prime."""
+    guarantee a non-empty array (shingle_arrays drops docs with < n
+    tokens) — array_min of an empty array would be NULL."""
     xs = F.transform(shingles_arr, md5_int)
     return F.get(F.transform(F.array(xs), lambda xv: F.transform(
         F.sequence(F.lit(0), F.lit(k - 1)),
@@ -141,11 +127,10 @@ def _sig_array(shingles_arr: Column, k: int = 16) -> Column:
 
 
 def minhash_signature_rows(arrs: DataFrame, k: int = 16) -> DataFrame:
-    """(doc_id, h_idx, sig) from :func:`shingle_arrays` output —
-    bit-identical to minhash_signatures(shingles(df), k) but computed
-    as a pure map + posexplode: the per-doc groupBy shuffle is gone
-    (guide §2.4; the min over a document's shingles never needed rows
-    to cross partitions)."""
+    """MinHash signature, long form: (doc_id, h_idx, sig) from
+    :func:`shingle_arrays` output, computed as a pure map + posexplode
+    with no per-doc groupBy shuffle (guide §2.4; the min over a
+    document's shingles never needed rows to cross partitions)."""
     return arrs.select(
         "doc_id",
         F.posexplode(_sig_array(F.col("__shingles"), k))
@@ -154,15 +139,17 @@ def minhash_signature_rows(arrs: DataFrame, k: int = 16) -> DataFrame:
 
 def lsh_band_hashes(arrs: DataFrame, k: int = 16,
                     bands: int = 4) -> DataFrame:
-    """(doc_id, band, band_hash) from :func:`shingle_arrays` output —
-    bit-identical to the groupBy(doc_id, band) banding inside
-    :func:`lsh_candidate_pairs` (same "h_idx:sig" string elements,
-    same lexicographic sort, same md5), with ZERO shuffles.
+    """(doc_id, band, band_hash) from :func:`shingle_arrays` output,
+    with ZERO shuffles: the k-element signature splits into ``bands``
+    contiguous groups of k/bands rows, and each band hashes as md5 of
+    the sorted, comma-joined "h_idx:sig" strings of its rows.
 
     The signature array is materialized behind its own Generate
     barrier before the per-band transform: the band lambda indexes it
     ``rows`` times per band, and an un-materialized fold expression
     would re-run the whole O(|shingles| * k) fold once per band."""
+    if k <= 0 or bands <= 0:
+        raise ValueError(f"k={k} and bands={bands} must both be positive")
     if k % bands:
         raise ValueError(f"k={k} must divide evenly into bands={bands}")
     rows = k // bands
@@ -185,85 +172,26 @@ def lsh_band_hashes(arrs: DataFrame, k: int = 16,
 def lsh_candidate_pairs_arrays(arrs: DataFrame, k: int = 16,
                                bands: int = 4,
                                max_bucket: int | None = None) -> DataFrame:
-    """Candidate pairs from :func:`shingle_arrays` output — the same
-    bucket semantics (including the ``max_bucket`` star fallback) as
-    :func:`lsh_candidate_pairs`, but candidate generation reaches the
-    bucket join with ZERO upstream shuffles: the signature groupBy and
-    the banding groupBy are per-row folds.  The only exchange left is
-    the (band, band_hash) one the pair join fundamentally requires."""
-    return _bucketed_pairs(lsh_band_hashes(arrs, k=k, bands=bands),
-                           ["band", "band_hash"], "doc_id", max_bucket)
-
-
-def minhash_signatures(sh: DataFrame, k: int = 16) -> DataFrame:
-    """MinHash signature, long form: (doc_id, h_idx, sig).
-
-    h_i(x) = ((2i+1) * x + 12345*i + 1) mod p over the portable shingle
-    hash x; sig_i = min over the doc's shingles.
-
-    One pass: the base hash is materialized once per shingle, the k mins
-    aggregate in a single groupBy (map-side combined), and the wide row
-    unpivots with ``stack`` — no k-fold row explosion, no per-element
-    md5 recomputation.
-    """
-    hashed = sh.withColumn("__x", md5_int(F.col("shingle")))
-    aggs = [F.min(((2 * i + 1) * F.col("__x") + 12345 * i + 1)
-                  % MINHASH_PRIME).alias(f"s{i}") for i in range(k)]
-    wide = hashed.groupBy("doc_id").agg(*aggs)
-    stack = ", ".join(f"{i}, s{i}" for i in range(k))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({k}, {stack}) AS (h_idx, sig)"))
-
-
-def lsh_candidate_pairs(sigs: DataFrame, bands: int = 4,
-                        k: int | None = None,
-                        max_bucket: int | None = None) -> DataFrame:
-    """Band the signature into ``bands`` contiguous groups of k/bands
-    rows and join on (band, band-hash): docs sharing any full band
-    become candidate pairs (a < b).  Only colliding keys shuffle.
-
-    Pass the same ``k`` given to minhash_signatures to keep plan
-    construction lazy; with k=None it is derived from the signatures
-    (max h_idx + 1), which costs one eager aggregation pass over the
-    signature pipeline — correct but avoid it on large inputs.
+    """Candidate pairs (doc_a < doc_b) from :func:`shingle_arrays`
+    output: docs sharing any full (band, band_hash) bucket of
+    :func:`lsh_band_hashes`.  Candidate generation reaches the bucket
+    join with ZERO upstream shuffles; the only exchange is the
+    (band, band_hash) one the pair join fundamentally requires.
 
     ``max_bucket`` bounds the per-bucket pair blow-up: a degenerate
-    (band, band_hash) bucket — e.g. thousands of boilerplate-identical
-    pages, the typical pretraining-corpus shape — would otherwise pair
-    quadratically inside the bucket.  Buckets larger than ``max_bucket``
-    emit a linear STAR instead (every member paired with the bucket's
-    minimum doc_id): connectivity through the hub is preserved, so
-    downstream clustering (duplicate_clusters) still merges the whole
-    bucket when verification passes, and for the all-identical case the
-    final clusters are exactly the quadratic ones.  The documented
-    recall trade: direct pairs between non-hub members of a MIXED
-    oversized bucket are not emitted.  None (default) keeps the exact
-    quadratic semantics."""
-    if k is None:
-        first = sigs.agg(F.max("h_idx").alias("m")).first()
-        if first is None or first["m"] is None:
-            return _empty_result(sigs, [("doc_a", "doc_id"),
-                                        ("doc_b", "doc_id")])
-        k = int(first["m"]) + 1
-    return _bucketed_pairs(_banded_from_sigs(sigs, bands, k),
+    bucket — e.g. thousands of boilerplate-identical pages, the typical
+    pretraining-corpus shape — would otherwise pair quadratically
+    inside the bucket.  Buckets larger than ``max_bucket`` emit a
+    linear STAR instead (every member paired with the bucket's minimum
+    doc_id): connectivity through the hub is preserved, so downstream
+    clustering (duplicate_clusters) still merges the whole bucket when
+    verification passes, and for the all-identical case the final
+    clusters are exactly the quadratic ones.  The documented recall
+    trade: direct pairs between non-hub members of a MIXED oversized
+    bucket are not emitted.  None (default) keeps the exact quadratic
+    semantics."""
+    return _bucketed_pairs(lsh_band_hashes(arrs, k=k, bands=bands),
                            ["band", "band_hash"], "doc_id", max_bucket)
-
-
-def _banded_from_sigs(sigs: DataFrame, bands: int, k: int) -> DataFrame:
-    """(doc_id, band, band_hash) from LONG-FORM signatures — the
-    grouped banding, kept for callers that hold a stored long-form
-    signature/shingle table (incremental_dedup's ``corpus_sh``
-    contract).  Fresh pipelines use :func:`lsh_band_hashes`, which
-    computes the identical hashes with zero shuffles."""
-    if k % bands:
-        raise ValueError(f"k={k} must divide evenly into bands={bands}")
-    rows = k // bands
-    return (sigs.withColumn("band", (F.col("h_idx") / rows).cast("int"))
-            .groupBy("doc_id", "band")
-            .agg(F.md5(F.concat_ws(",", F.sort_array(
-                F.collect_list(F.concat_ws(":", "h_idx", "sig")))))
-                .alias("band_hash")))
 
 
 def _empty_result(df: DataFrame, fields) -> DataFrame:
@@ -287,7 +215,8 @@ def _bucketed_pairs(banded: DataFrame, bucket_cols: list[str],
     """Shared LSH bucket -> pair expansion with the hot-bucket bound.
 
     Small buckets pair quadratically; buckets over ``max_bucket`` emit
-    the linear star around the minimum id (see lsh_candidate_pairs).
+    the linear star around the minimum id (see
+    lsh_candidate_pairs_arrays).
     ``carry`` columns (e.g. the vectors for cosine verification) are
     propagated to pair columns ``<c>_a`` / ``<c>_b``."""
     carry = carry or []
@@ -311,12 +240,10 @@ def _bucketed_pairs(banded: DataFrame, bucket_cols: list[str],
         # candidate generation 4.40 s vs the grouped form's 1.76 s at
         # sf0.1).  Repartitioning by the join keys inserts the exchange
         # the join requires anyway — no net shuffle added on ANY input
-        # shape, grouped inputs included (their aggregate partitioning
-        # is (doc_id, band), so the join re-shuffled them too) — and
-        # ReuseExchange then feeds both sides from ONE banding pass
-        # (guide §2.4: two operations keyed the same way share one
-        # exchange).  The max_bucket branch already shares its window's
-        # (bucket_cols) exchange the same way.
+        # shape — and ReuseExchange then feeds both sides from ONE
+        # banding pass (guide §2.4: two operations keyed the same way
+        # share one exchange).  The max_bucket branch already shares
+        # its window's (bucket_cols) exchange the same way.
         banded = banded.repartition(*bucket_cols)
         return pair_select(banded.alias("a"), banded.alias("b")) \
             .dropDuplicates(["doc_a", "doc_b"])
@@ -869,14 +796,16 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
        :func:`near_dup_clusters`' job for the full-corpus pass).
 
     Scale posture: the corpus side never re-tokenizes when
-    ``corpus_sh`` (its stored shingle table, the thing a production
-    index persists) is passed — only the batch is shingled, and the
-    LSH band join + candidate-restricted verification touch corpus
-    rows only where buckets collide.  Requires disjoint id spaces
-    between batch and corpus: ids are the only pair labels, and since
-    the r12 per-row banding each side folds its own signature — an id
-    on BOTH sides would band as two independent documents while the
-    Jaccard verify merged its shingles, so candidate generation and
+    ``corpus_sh`` (its stored (doc_id, shingle) table, the thing a
+    production index persists) is passed — only the batch is shingled,
+    the stored rows group into one shingle array per doc (one shuffle),
+    and both sides then band in the same map-only pass.  The LSH band
+    join + candidate-restricted verification touch corpus rows only
+    where buckets collide.  Requires disjoint id spaces between batch
+    and corpus: ids are the only pair labels, and since the r12
+    per-row banding each side folds its own signature — an id on BOTH
+    sides would band as two independent documents while the Jaccard
+    verify merged its shingles, so candidate generation and
     verification would disagree on that (out-of-contract) id.
 
     Returns admitted batch representatives: (doc_id, n_copies) where
@@ -916,24 +845,19 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
                  .agg(F.min(F.struct("doc_id", "__text")).alias("__r"))
                  .select(F.col("__r.doc_id").alias("doc_id"),
                          F.col("__r.__text").alias("__text")))
-        # fresh corpus text: the map-only LSH path end to end
         corpus_arrs = shingle_arrays(creps, text_col="__text", n=n)
-        banded = lsh_band_hashes(
-            corpus_arrs.unionByName(batch_arrs), k=k, bands=bands)
-        corpus_long = exploded_shingles(corpus_arrs)
     else:
         # stored long-form shingle table (the production index shape):
-        # only the corpus side pays the grouped banding; the fresh
-        # batch side folds per row and unions at the banded level —
-        # the hashes are bit-identical by construction (law-tested)
-        corpus_long = corpus_sh.select("doc_id", "shingle")
-        banded = _banded_from_sigs(
-            minhash_signatures(corpus_long, k=k), bands, k).unionByName(
-            lsh_band_hashes(batch_arrs, k=k, bands=bands))
-    cands = _bucketed_pairs(banded, ["band", "band_hash"], "doc_id",
-                            max_bucket)
-    sh = corpus_long.unionByName(exploded_shingles(batch_arrs))
-    pairs = (jaccard_pairs(sh, min_jaccard=min_jaccard,
+        # one groupBy turns it into arrays at the boundary.  A MinHash
+        # signature is a min over the shingle SET, so collect_set's
+        # order and de-duplication leave every band hash bit-identical,
+        # and duplicate stored rows cannot inflate the Jaccard counts.
+        corpus_arrs = (corpus_sh.groupBy("doc_id")
+                       .agg(F.collect_set("shingle").alias("__shingles")))
+    arrs = corpus_arrs.unionByName(batch_arrs)
+    cands = lsh_candidate_pairs_arrays(arrs, k=k, bands=bands,
+                                       max_bucket=max_bucket)
+    pairs = (jaccard_pairs(exploded_shingles(arrs), min_jaccard=min_jaccard,
                            candidates=cands, max_df=max_df)
              .select("doc_a", "doc_b"))
     batch_ids = surv0.select("doc_id")
@@ -985,9 +909,10 @@ def cut_repeated_spans(df: DataFrame, text_col: str = "text",
     joined = base.join(spansd, "doc_id", "left").withColumn(
         "__spans", F.coalesce(
             "__spans", F.array().cast("array<struct<s:long,e:long>>")))
-    # sequence(1, 0) counts DOWN for zero-token docs (the shingles()
-    # hazard, dedup.py:50-52) and element_at(toks, 0) then throws —
-    # letters-free documents keep an explicitly empty token list
+    # sequence(1, 0) counts DOWN for zero-token docs (the hazard
+    # shingle_arrays filters short docs for) and element_at(toks, 0)
+    # then throws — letters-free documents keep an explicitly empty
+    # token list
     kept = F.when(F.size("__toks") < 1, F.array().cast(
         "array<struct<i:int,t:string>>")).otherwise(F.filter(
             F.transform(F.sequence(F.lit(1), F.size("__toks")),

@@ -307,10 +307,11 @@ def lsh_near_dup_pairs(emb: DataFrame, threshold: float = 0.8,
 
     ``max_bucket`` caps degenerate buckets (e.g. a corpus with
     thousands of identical embeddings collapsing into one band bucket)
-    with the same linear-star fallback as dedup.lsh_candidate_pairs —
-    every emitted pair is still exact-cosine verified, so precision is
-    unaffected; only direct pairs between non-hub members of an
-    oversized MIXED bucket can be missed."""
+    with the same linear-star fallback as
+    dedup.lsh_candidate_pairs_arrays — every emitted pair is still
+    exact-cosine verified, so precision is unaffected; only direct
+    pairs between non-hub members of an oversized MIXED bucket can be
+    missed."""
     from cantera_table_spark.functions.dedup import _bucketed_pairs
     if n_bits % bands:
         raise ValueError(

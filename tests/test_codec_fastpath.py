@@ -120,3 +120,12 @@ def test_bmp_top_down_decode_and_resize_orientation():
     t_td = mm.decode_bmp(mm.resize_bmp_nearest(bytes(td), 2, 2))
     for key in ("mean_b", "mean_g", "mean_r"):
         assert t_bu[key] == pytest.approx(t_td[key])
+
+
+@pytest.mark.slow
+def test_jpeg_matmul_bytes_match_einsum_reference():
+    """Gate-quality JPEG bytes must not depend on the installed BLAS:
+    re-run tools/verify_jpeg_matmul.py's exhaustive einsum-vs-matmul
+    proof (it asserts byte identity at every gate and law quality)."""
+    from tools import verify_jpeg_matmul
+    verify_jpeg_matmul.main()

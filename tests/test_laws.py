@@ -6,7 +6,7 @@ so score equality is only asserted where the semantics pin it down).
 """
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from cantera_table_spark.operators import set_algebra as sa
 
@@ -89,25 +89,47 @@ def test_sample_is_deterministic_subset(spark, a):
     assert {d for d, _ in s1} <= {d for d, _ in a}
 
 
+def _components(pairs):
+    """doc -> min doc reachable through ``pairs`` (union-find)."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 @settings(max_examples=6, deadline=None)
-@given(docs_=st.lists(st.tuples(st.integers(0, 30), st.integers(0, 5)),
-                      min_size=0, max_size=25))
-def test_lsh_bucket_bound_is_identity_when_unreached(spark, docs_):
-    """With max_bucket >= every bucket size, the bounded pair expansion
-    must equal the unbounded one for ANY signature multiset (the star
-    fallback only engages on oversized buckets)."""
-    from cantera_table_spark.functions.dedup import lsh_candidate_pairs
-    rows = [(doc, h, (sig * 7919 + h) % 13)
-            for doc, sig in dict(docs_).items() for h in range(8)]
-    if not rows:
-        return
-    sigs = spark.createDataFrame(rows, "doc_id long, h_idx int, sig long")
-    unbounded = sorted((r.doc_a, r.doc_b) for r in
-                       lsh_candidate_pairs(sigs, bands=4, k=8).collect())
-    bounded = sorted((r.doc_a, r.doc_b) for r in
-                     lsh_candidate_pairs(sigs, bands=4, k=8,
-                                         max_bucket=10_000).collect())
-    assert bounded == unbounded
+@given(banded_=st.lists(st.tuples(st.integers(0, 30), st.integers(0, 1),
+                                  st.integers(0, 2)),
+                        min_size=1, max_size=40),
+       max_bucket=st.integers(1, 6))
+@example(banded_=[(3, 0, 0), (1, 0, 0), (2, 0, 0), (4, 1, 0)], max_bucket=1)
+def test_lsh_bucket_bound_is_identity_when_unreached(spark, banded_,
+                                                     max_bucket):
+    """_bucketed_pairs over ANY (doc_id, band, band_hash) multiset: with
+    max_bucket >= every bucket size the bounded pair expansion equals
+    the unbounded one (the star fallback only engages on oversized
+    buckets), and for every max_bucket >= 1 the bounded pairs have the
+    same connected components as the unbounded ones (the star keeps
+    each bucket connected through its hub)."""
+    from cantera_table_spark.functions.dedup import _bucketed_pairs
+    banded = spark.createDataFrame(
+        [(d, b, f"h{h}") for d, b, h in banded_],
+        "doc_id long, band int, band_hash string")
+
+    def pairs(mb):
+        return sorted((r.doc_a, r.doc_b) for r in _bucketed_pairs(
+            banded, ["band", "band_hash"], "doc_id", mb).collect())
+
+    unbounded = pairs(None)
+    assert pairs(len(banded_)) == unbounded
+    assert _components(pairs(max_bucket)) == _components(unbounded)
 
 
 # ---------------------------------------------------------------------------

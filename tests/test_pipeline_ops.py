@@ -40,15 +40,15 @@ def test_shingles_and_jaccard(spark):
 
 def test_minhash_lsh_candidates_contain_near_dups(spark):
     from cantera_table_spark.functions.dedup import (
-        lsh_candidate_pairs, minhash_signatures, shingles)
+        lsh_candidate_pairs_arrays, minhash_signature_rows, shingle_arrays)
     rows = [(1, "the quick brown fox jumps over the lazy dog today"),
             (2, "the quick brown fox jumps over the lazy dog tomorrow"),
             (3, "completely different words about spark engines here")]
     d = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(shingles(d, n=2), k=16)
-    assert sigs.count() == 3 * 16
-    cands = {(r.doc_a, r.doc_b)
-             for r in lsh_candidate_pairs(sigs, bands=4).collect()}
+    arrs = shingle_arrays(d, n=2)
+    assert minhash_signature_rows(arrs, k=16).count() == 3 * 16
+    cands = {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs_arrays(
+        arrs, k=16, bands=4).collect()}
     assert (1, 2) in cands
     assert (1, 3) not in cands and (2, 3) not in cands
 
@@ -324,7 +324,7 @@ def test_empty_input_schemas_preserve_id_types(spark):
     long — an empty int-id shard must union cleanly with a non-empty
     one."""
     from cantera_table_spark.functions.dedup import (
-        lsh_candidate_pairs, minhash_signatures, shingles)
+        lsh_candidate_pairs_arrays, shingle_arrays)
     from cantera_table_spark.functions.similarity import (
         brute_force_topk_pandas, hyperplane_signature)
     from pyspark.sql import types as T
@@ -337,8 +337,7 @@ def test_empty_input_schemas_preserve_id_types(spark):
     assert hs.count() == 0
 
     empty_docs = spark.createDataFrame([], "doc_id int, text string")
-    sigs = minhash_signatures(shingles(empty_docs), k=16)
-    pairs = lsh_candidate_pairs(sigs)       # k=None -> empty fallback
+    pairs = lsh_candidate_pairs_arrays(shingle_arrays(empty_docs))
     assert pairs.schema["doc_a"].dataType == T.IntegerType()
     assert pairs.schema["doc_b"].dataType == T.IntegerType()
     assert pairs.count() == 0
@@ -417,17 +416,15 @@ def test_lsh_hot_bucket_bound(spark):
     quadratically when max_bucket is set, and clustering over the
     bounded pairs must still merge the whole duplicate group."""
     from cantera_table_spark.functions.dedup import (
-        duplicate_clusters, lsh_candidate_pairs, minhash_signatures,
-        shingles)
+        duplicate_clusters, lsh_candidate_pairs_arrays, shingle_arrays)
     n_dup = 200
     rows = [(i, "the same boilerplate page content repeated verbatim "
                 "across the corpus many times over") for i in range(n_dup)]
     rows += [(1000, "a genuinely different document about spark plans"),
              (1001, "another unrelated text with other words entirely")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(shingles(docs), k=16)
-
-    bounded = lsh_candidate_pairs(sigs, bands=4, k=16, max_bucket=20)
+    bounded = lsh_candidate_pairs_arrays(shingle_arrays(docs), k=16,
+                                         bands=4, max_bucket=20)
     pairs = bounded.collect()
     # linear star, not ~n^2/2 quadratic: one hub pair per duplicate
     assert len(pairs) <= 4 * n_dup
@@ -1614,18 +1611,32 @@ def test_incremental_dedup_laws(spark):
              "with compost and careful irrigation schedules"),
          (7, "entirely novel text about gardening tomatoes in clay soil "
              "with compost and careful irrigation schedules"),  # exact dup of 5
-         (9, None)],                                  # NULL text: novel
+         (9, None),                                   # NULL text: novel
+         # an LSH candidate of corpus doc 0 just under the threshold
+         # (base's 19 shingles plus 20 new ones, jaccard 19/39); counting
+         # doc 0's duplicated stored shingles would push it over
+         (11, base + " fern yarrow reef island fjord dune valley amber "
+                     "kelp quarry orchard thicket cedar canyon inlet "
+                     "juniper birch meadow glacier zephyr")],
         "doc_id long, text string")
     got = {r["doc_id"]: r["n_copies"]
            for r in incremental_dedup(batch, corpus,
                                       min_jaccard=0.5).collect()}
-    assert got == {5: 2, 9: 1}
-    # precomputed corpus shingles give the identical result
+    assert got == {5: 2, 9: 1, 11: 1}
+    # precomputed corpus shingles give the identical result, also when
+    # the stored table repeats (doc_id, shingle) rows in shuffled order
     pre = shingles(corpus)
     got2 = {r["doc_id"]: r["n_copies"]
             for r in incremental_dedup(batch, corpus, min_jaccard=0.5,
                                        corpus_sh=pre).collect()}
     assert got2 == got
+    messy = (pre.unionByName(pre.filter(F.col("doc_id") == 0))
+             .unionByName(pre).orderBy(F.md5("shingle")))
+    assert messy.count() > 2 * pre.count()
+    got2b = {r["doc_id"]: r["n_copies"]
+             for r in incremental_dedup(batch, corpus, min_jaccard=0.5,
+                                        corpus_sh=messy).collect()}
+    assert got2b == got
     # greedy rule: a batch doc matching only an EARLIER batch doc is
     # rejected even though the corpus never saw either
     batch2 = spark.createDataFrame(

@@ -114,8 +114,22 @@ def test_simhash_matches_grouped_form(spark, docs):
     assert facts.n_shuffles == 0, facts.text
 
 
+def _frozen_shingles(df, n=3):
+    """r11 shingles: one explode of the distinct n-gram array."""
+    from cantera_table_spark.functions.text import tokens
+    return (df.select("doc_id", tokens(F.col("text")).alias("__toks"))
+            .filter(F.size("__toks") >= n)
+            .select("doc_id",
+                    F.explode(F.array_distinct(F.transform(
+                        F.sequence(F.lit(1),
+                                   F.size("__toks") - (n - 1)),
+                        lambda i: F.concat_ws(" ", F.slice(F.col("__toks"),
+                                                           i, n)))))
+                    .alias("shingle")))
+
+
 def _frozen_signatures(sh, k=16):
-    """r11 minhash_signatures: one groupBy over exploded shingles."""
+    """r11 MinHash signatures: one groupBy over exploded shingles."""
     from cantera_table_spark.functions.dedup import MINHASH_PRIME, md5_int
     hashed = sh.withColumn("__x", md5_int(F.col("shingle")))
     aggs = [F.min(((2 * i + 1) * F.col("__x") + 12345 * i + 1)
@@ -128,7 +142,6 @@ def _frozen_signatures(sh, k=16):
 
 def _frozen_banded(sigs, k=16, bands=4):
     """r11 banding: groupBy(doc_id, band) over long-form signatures."""
-    from pyspark.sql import Window  # noqa: F401
     rows = k // bands
     return (sigs.withColumn("band", (F.col("h_idx") / rows).cast("int"))
             .groupBy("doc_id", "band")
@@ -139,8 +152,8 @@ def _frozen_banded(sigs, k=16, bands=4):
 
 def test_minhash_rows_and_band_hashes_match_grouped_form(spark, docs):
     from cantera_table_spark.functions.dedup import (
-        lsh_band_hashes, minhash_signature_rows, shingle_arrays, shingles)
-    sh = shingles(docs)
+        lsh_band_hashes, minhash_signature_rows, shingle_arrays)
+    sh = _frozen_shingles(docs)
     exp_sigs = {(r["doc_id"], r["h_idx"]): r["sig"]
                 for r in _frozen_signatures(sh).collect()}
     exp_bands = {(r["doc_id"], r["band"]): r["band_hash"]
@@ -162,28 +175,37 @@ def test_minhash_rows_and_band_hashes_match_grouped_form(spark, docs):
 
 def test_shingle_arrays_explode_equals_shingles(spark, docs):
     from cantera_table_spark.functions.dedup import shingle_arrays, shingles
-    exp = {(r["doc_id"], r["shingle"]) for r in shingles(docs).collect()}
-    got = {(r["doc_id"], s)
-           for r in shingle_arrays(docs).collect()
-           for s in r["__shingles"]}
+    exp = sorted((r["doc_id"], r["shingle"])
+                 for r in _frozen_shingles(docs).collect())
+    assert sorted((r["doc_id"], r["shingle"])
+                  for r in shingles(docs).collect()) == exp
+    got = sorted((r["doc_id"], s)
+                 for r in shingle_arrays(docs).collect()
+                 for s in r["__shingles"])
     assert got == exp
 
 
 def test_array_lsh_candidate_pairs_match_sig_path(spark, docs):
+    """The pair expansion over the frozen r11 signature banding must
+    equal the array pipeline's candidates, with and without the
+    max_bucket=1 hot-bucket star fallback."""
     from cantera_table_spark.functions.dedup import (
-        lsh_candidate_pairs, lsh_candidate_pairs_arrays,
-        minhash_signatures, shingle_arrays, shingles)
-    sh = shingles(docs)
-    exp = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(
-        minhash_signatures(sh, k=16), bands=4, k=16).collect()}
-    got = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs_arrays(
-        shingle_arrays(docs), k=16, bands=4).collect()}
-    assert got == exp
-    assert len(exp) > 0  # the clone pair (0, 8) at minimum
-    # the hot-bucket star fallback must behave identically too
-    exp_b = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(
-        minhash_signatures(sh, k=16), bands=4, k=16,
-        max_bucket=1).collect()}
-    got_b = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs_arrays(
-        shingle_arrays(docs), k=16, bands=4, max_bucket=1).collect()}
-    assert got_b == exp_b
+        _bucketed_pairs, lsh_candidate_pairs_arrays, shingle_arrays)
+    frozen = _frozen_banded(_frozen_signatures(_frozen_shingles(docs)))
+    for max_bucket in (None, 1):
+        exp = {(r["doc_a"], r["doc_b"]) for r in _bucketed_pairs(
+            frozen, ["band", "band_hash"], "doc_id", max_bucket).collect()}
+        got = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs_arrays(
+            shingle_arrays(docs), k=16, bands=4,
+            max_bucket=max_bucket).collect()}
+        assert got == exp, max_bucket
+        assert len(exp) > 0  # the clone pair (0, 8) at minimum
+
+
+@pytest.mark.parametrize("k,bands", [(16, 0), (16, -4), (0, 4)])
+def test_lsh_band_hashes_rejects_non_positive_k_and_bands(spark, docs, k,
+                                                           bands):
+    from cantera_table_spark.functions.dedup import (lsh_band_hashes,
+                                                     shingle_arrays)
+    with pytest.raises(ValueError, match="positive"):
+        lsh_band_hashes(shingle_arrays(docs), k=k, bands=bands)

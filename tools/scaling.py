@@ -104,8 +104,8 @@ def main():
 
     def minhash(d):
         from cantera_table_spark.functions.dedup import (
-            minhash_signatures, shingles)
-        minhash_signatures(shingles(d)).write.format("noop") \
+            minhash_signature_rows, shingle_arrays)
+        minhash_signature_rows(shingle_arrays(d)).write.format("noop") \
             .mode("overwrite").save()
 
     def tpch_q1(l):

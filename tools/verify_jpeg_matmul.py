@@ -30,6 +30,8 @@ space and beyond:
 
 The einsum reference is inlined below (the exact r12 expressions), so
 the proof runs against the CURRENT tree without a checkout dance.
+Run it directly (``python tools/verify_jpeg_matmul.py``) or through the
+slow test tier (tests/test_codec_fastpath.py), which calls ``main()``.
 """
 
 from __future__ import annotations
