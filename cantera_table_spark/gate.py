@@ -1793,14 +1793,14 @@ def corr02_event_prediction(spark, sf_dir):
     # disjoint by construction — the score predicate partitions one
     # grouped table, so the b-disjointing anti-join the generic path
     # needs removes nothing here and is dropped outright (presplit
-    # skips the two distincts + anti-join inside correlate_sets too);
-    # with unique rows the plain-count contingency path skips
-    # countDistinct's expand + second shuffle (same counts; the
-    # oracle's count(DISTINCT ...) degenerates to count on unique rows)
+    # skips the class table's groupBy inside correlate_sets too); with
+    # unique rows the range counts are read off the split search's
+    # prefix sums (same counts; the oracle's count(DISTINCT ...)
+    # degenerates to count on unique rows)
     filtered = filter_by_timestamp_sets(keys, set_a, set_b,
                                         unique_rows=True)
-    return correlate_sets(filtered, set_a, set_b, unique_docs=True,
-                          presplit=True)
+    return correlate_sets(filtered, set_a, set_b, caches=_GATE_CACHES,
+                          unique_docs=True, presplit=True)
 
 
 # Shared LSH -> verify -> connected-components oracle body (dd06, dd12)

@@ -16,11 +16,13 @@ membership in set A vs set B:
    match_A >= limit_A or match_B >= limit_B and |log_odds| >= log(.55/.45)
    (ProcessRange, correlate.cc:84-147).
 
-Spark-first: the reference loops keywords over a thread pool; here every
-stage is a single DataFrame pipeline partitioned by keyword — the
-per-keyword cumulative scan is a Window.partitionBy(keyword)
-.orderBy(score) with rangeBetween (ties collapse exactly like the
-reference's ``agg`` array), and the split argmax is one row_number.
+Spark-first: the reference loops keywords over a thread pool; here the
+whole mining step is one pass over a per-(keyword, score) class
+histogram (ties collapse there exactly like the reference's ``agg``
+array), partitioned by keyword once.  Every per-keyword value — the
+feature kind, the support counts, the cumulative split scan and the
+split argmax — is a Window over that one partitioning, and the re-count
+of the chosen range(s) is read off the winning row's prefix sums.
 """
 
 from __future__ import annotations
@@ -49,39 +51,27 @@ LOGIT_CUTOFF = math.log(0.55 / 0.45)   # correlate.cc:141-142
 LOGIT_CUTOFF_R3 = math.floor(LOGIT_CUTOFF * 1000.0 + 0.5) / 1000.0  # 0.201
 MIN_GAIN = math.log(1.05)              # correlate.cc:346
 
-# Broadcast the qualifying-keyword list into the split-search join
-# (local default): AQE cannot re-plan the cached-histogram side, so
-# without the hint the join executes sort-merge even when the keyword
-# list is tiny.  Set =0 when the vocabulary itself is too large to
-# broadcast (web-scale corpora) — the planner then keeps its
-# size-based fallback.  Read per call (not at import) so a long-lived
-# session can toggle it (r12 ADVICE).
-def _broadcast_kw() -> bool:
-    return os.environ.get(
-        "SPARK_GRAFT_CORRELATE_BROADCAST_KW", "1") != "0"
-
 
 def _persist(df: DataFrame) -> DataFrame:
-    """Persist policy for the class-joined postings (SCALE.md).
+    """Persist policy for the raw class-joined postings of the exact-doc
+    path (SCALE.md).
 
     ``CANTERA_CORRELATE_PERSIST`` picks the StorageLevel by name
-    (MEMORY_AND_DISK default — the table is read by four downstream
-    branches; recomputing it means four full postings scans), or NONE
-    to skip persisting entirely (the at-100 TB choice when the postings
-    working set exceeds cluster cache and recompute-from-columnar-scan
-    is cheaper than disk-spilled cache blocks)."""
+    (MEMORY_AND_DISK default — the rows feed both the histogram and the
+    per-doc contingency count; recomputing them means a second postings
+    scan and class join), or NONE to skip persisting entirely (the
+    at-100 TB choice when the postings working set exceeds cluster
+    cache and recompute-from-columnar-scan is cheaper than disk-spilled
+    cache blocks)."""
     level = os.environ.get("CANTERA_CORRELATE_PERSIST", "MEMORY_AND_DISK")
     if level.upper() == "NONE":
         return df
     from pyspark import StorageLevel
     return df.persist(getattr(StorageLevel, level.upper()))
 
-_POS_INF = float("inf")
-_NEG_INF = float("-inf")
-
 
 def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
-                   caches: list | None = None,
+                   *, caches: list,
                    unique_docs: bool = False,
                    presplit: bool = False) -> DataFrame:
     """Core pipeline given resolved doc sets.
@@ -89,52 +79,51 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
     postings: (keyword, doc_id, score) — the feature space.
     set_a / set_b: (doc_id, score) — deduped result sets; B is made
     disjoint from A here.
+    caches: list that receives every DataFrame cached here; the caller
+    ``unpersist()``s them after consuming the result
+    (Engine.release_caches does this).  Required: the class table is
+    cached before the empty-class check, so even an empty result
+    leaves a cache to release.
     unique_docs: promise that ``postings`` has at most one row per
     (keyword, doc_id) — true for an Engine with ``unique_postings``
     (and preserved by the timestamp filters, which group per doc).
-    The contingency count then uses a plain conditional count instead
-    of countDistinct, skipping Spark's expand + second shuffle.
+    Matching docs then equal matching rows, so the contingency counts
+    are read off the split search's prefix sums.
     presplit: promise that set_a / set_b are each already one row per
     doc_id AND mutually disjoint (corr02 builds them by splitting one
-    grouped table on a score predicate) — skips the two distinct
-    shuffles and the disjointing anti-join.
+    grouped table on a score predicate) — skips the class-table
+    groupBy.
 
     Returns (log_odds, match_count_a, match_count_b, keyword, min_score,
     max_score) with null min/max for unbounded ends.
 
-    Scale shape (r12, guide §2.3-2.4): the postings cross the network
-    ONCE — into the per-(keyword, score) histogram ``h`` — and every
-    downstream stage (feature-kind detection, the min-support
-    prefilter, the cumulative split search, and the unique-docs
-    contingency count) consumes the histogram, whose size is the
-    number of DISTINCT score values per keyword, not the posting
-    count.  The r11 shape shuffled the postings four times (kw_ok
-    groupBy + join, kind groupBy, per_score groupBy, counted groupBy).
-    The reference's min-support keyword prefilter (correlate.cc:
-    541-543) is applied on the histogram rollup: output-identical,
-    because a keyword with fewer postings than min(limit_a, limit_b)
-    can never reach either limit in the final match-count filter.
-    Only the exact-doc contingency count without the ``unique_docs``
-    promise still needs the raw class-joined rows (countDistinct over
-    doc_id).
-
-    Intermediates (the histogram and the tiny per-keyword kind/split
-    tables) are Spark-cached because several downstream branches reuse
-    them; pass ``caches`` (a list) to receive the cached DataFrames so
-    a long-lived session can ``unpersist()`` them after consuming the
-    result (Engine.release_caches does this).
+    Shape: the class table (doc_id, cls) — A tagged 1, B tagged -1,
+    ``max`` per doc so A wins — is cached and counted in one action.
+    The postings join it once and cross the network ONCE, into the
+    per-(keyword, score) histogram, whose size is the number of
+    DISTINCT score values per keyword.  One keyword partitioning of
+    the histogram then carries every per-keyword step as a Window: the
+    kind and support sums, the reference's min-support keyword
+    prefilter (correlate.cc:541-543; output-identical, because a
+    keyword with fewer postings than min(limit_a, limit_b) can never
+    reach either limit in the final filter), the cumulative split
+    search and its argmax.  With ``unique_docs`` ProcessRange's
+    re-count needs no second pass: the winning row's cumulative sums
+    are the left range (-inf, mid], its totals minus them the right
+    range [next, +inf), and its totals the whole range.  Only the
+    exact-doc count without that promise re-reads the (persisted) raw
+    class rows, collapsed to one row per (keyword, doc).
     """
-    if caches is None:
-        caches = []
-    if presplit:
-        a = set_a.select("doc_id")
-        b = set_b.select("doc_id")
-    else:
-        a = set_a.select("doc_id").distinct()
-        b = set_b.select("doc_id").distinct().join(a, "doc_id", "left_anti")
-
-    n_a = a.count()
-    n_b = b.count()
+    tagged = (set_a.select("doc_id", F.lit(1).alias("cls"))
+              .unionByName(set_b.select("doc_id", F.lit(-1).alias("cls"))))
+    if not presplit:
+        # one row per doc; a doc in both sets counts for A only
+        # (correlate.cc:498-500: B minus A)
+        tagged = tagged.groupBy("doc_id").agg(F.max("cls").alias("cls"))
+    classes = tagged.cache()
+    caches.append(classes)
+    n_a, n_b = classes.agg(F.count(F.when(F.col("cls") == 1, 1)),
+                           F.count(F.when(F.col("cls") == -1, 1))).first()
     if n_a == 0 or n_b == 0:
         # Reference short-circuit (correlate.cc:501: ``if
         # (offsets_A.empty() || offsets_B.empty()) return;`` — B
@@ -156,17 +145,13 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
     min_limit = min(limit_a, limit_b)
 
     # Class membership per posting row: +1 in A, -1 in B, null otherwise
-    # (disjoint after subtraction, correlate.cc:246-265).
-    k = (postings
-         .join(a.withColumn("__in_a", F.lit(1)), "doc_id", "left")
-         .join(b.withColumn("__in_b", F.lit(1)), "doc_id", "left")
-         .withColumn("cls", F.when(F.col("__in_a") == 1, F.lit(1))
-                     .when(F.col("__in_b") == 1, F.lit(-1)))
+    # (disjoint, correlate.cc:246-265).
+    k = (postings.join(classes, "doc_id", "left")
          .select("keyword", "doc_id", "score", "cls"))
     if not unique_docs:
         # the exact-doc contingency count below re-consumes the raw
         # class-joined rows; without the persist that branch re-runs
-        # the postings scan + class joins
+        # the postings scan + class join
         k = _persist(k)
         caches.append(k)
 
@@ -177,60 +162,39 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
     h = (k.groupBy("keyword", "score")
          .agg(F.count(F.when(F.col("cls") == 1, 1)).alias("__n_a"),
               F.count(F.when(F.col("cls") == -1, 1)).alias("__n_b"),
-              F.count(F.col("cls")).alias("__n_cls"),
+              F.count(F.col("cls")).alias("__n_ab"),
               F.count("*").alias("__n_all")))
-    h = _persist(h)
-    caches.append(h)
 
-    # --- split search on continuous keywords --------------------------
-    # boolean feature <=> every score is zero (correlate.cc:211-217).
-    # kind / split are tiny (one row per keyword) but feed four task
-    # branches each — cache them so the histogram rollup runs once, not
-    # once per branch.  __n_rows carries the reference's min-support
-    # keyword prefilter (correlate.cc:541-543), now a histogram rollup
-    # instead of a postings-scale groupBy + join.
-    kind = h.groupBy("keyword").agg(
-        (F.max(F.abs(F.col("score"))) > 0.0).alias("__continuous"),
-        F.sum("__n_cls").alias("__n_classes"),
-        F.sum("__n_all").alias("__n_rows")).cache()
-    caches.append(kind)
-
-    # per-(keyword, score) rows restricted to CLASS rows of qualifying
-    # continuous keywords — the r11 per_score table, read straight off
-    # the histogram (__n_cls >= 1 drops score values seen only on
-    # class-less postings, which the r11 groupBy over class rows never
-    # produced; n_classes >= min_limit implies n_rows >= min_limit, so
-    # the keyword prefilter is subsumed here)
-    # broadcast hint on the per-keyword metadata (one short row per
-    # qualifying keyword — the same relation the r11 planner already
-    # broadcast by size estimate): without it the histogram side is a
-    # cached relation AQE cannot re-plan around, and the initial
-    # SortMergeJoin survives to execution.  Env-gated, NOT forced: the
-    # qualifying set is vocabulary-scale, and a web-scale vocabulary
-    # must keep the planner's sort-merge fallback — set
-    # SPARK_GRAFT_CORRELATE_BROADCAST_KW=0 there (the hint removes the
-    # size-based safety net a plain join keeps).
-    kw_q = (kind.filter(F.col("__continuous") &
-                        (F.col("__n_classes") >= min_limit))
-            .select("keyword"))
-    if _broadcast_kw():
-        kw_q = F.broadcast(kw_q)
-    per_score = (h.filter(F.col("__n_cls") >= 1)
-                 .join(kw_q, "keyword")
-                 .select("keyword", "score", "__n_a", "__n_b",
-                         F.col("__n_cls").alias("__n_ab")))
-    w_cum = (Window.partitionBy("keyword").orderBy("score")
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    w_tot = Window.partitionBy("keyword")
-    cum = (per_score
-           .withColumn("cum_a", F.sum("__n_a").over(w_cum))
-           .withColumn("cum_b", F.sum("__n_b").over(w_cum))
-           .withColumn("cum_ab", F.sum("__n_ab").over(w_cum))
-           .withColumn("tot_a", F.sum("__n_a").over(w_tot))
-           .withColumn("tot_b", F.sum("__n_b").over(w_tot))
-           .withColumn("tot_ab", F.sum("__n_ab").over(w_tot))
-           .select("keyword", "score", "cum_a", "cum_b", "cum_ab",
-                   "tot_a", "tot_b", "tot_ab"))
+    # --- one pass by keyword ------------------------------------------
+    # boolean feature <=> every score is zero (correlate.cc:211-217);
+    # __n_rows is the min-support keyword prefilter.  Boolean keywords
+    # keep their single (zero-score) row; continuous ones keep only
+    # their CLASS score values, and only with enough class rows
+    # (correlate.cc:271: classes.empty() || < min_limit -> return),
+    # which implies n_rows >= min_limit.
+    w_kw = Window.partitionBy("keyword")
+    w_ord = w_kw.orderBy("score")
+    w_cum = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    per_score = (h
+                 .withColumn("__continuous",
+                             F.max(F.abs(F.col("score"))).over(w_kw) > 0.0)
+                 .withColumn("__n_classes", F.sum("__n_ab").over(w_kw))
+                 .withColumn("__n_rows", F.sum("__n_all").over(w_kw))
+                 .filter(F.when(F.col("__continuous"),
+                                (F.col("__n_classes") >= min_limit) &
+                                (F.col("__n_ab") >= 1))
+                         .otherwise(F.col("__n_rows") >= min_limit)))
+    cum = per_score.select(
+        "keyword", "score",
+        *[F.sum(f"__n_{c}").over(w).alias(f"{p}_{c}")
+          for c in ("a", "b", "ab") for p, w in (("cum", w_cum),
+                                                  ("tot", w_kw))],
+        *[F.sum(F.when(F.col("score").isNull(), F.col(f"__n_{c}"))
+                .otherwise(0)).over(w_kw).alias(f"__null_{c}")
+          for c in ("a", "b")],
+        F.lead("score").over(w_ord).alias("__next"),
+        F.row_number().over(w_ord).alias("__pos"),
+        F.count("*").over(w_kw).alias("__npos"))
 
     def abs_logit(ca, cab):
         # log(P/(1-P)) with P=(ca+1)/(cab+2) simplifies to the form below;
@@ -241,89 +205,52 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
     left_ok = (F.col("cum_a") >= limit_a) | (F.col("cum_b") >= limit_b)
     right_ok = ((F.col("tot_a") - F.col("cum_a") >= limit_a) |
                 (F.col("tot_b") - F.col("cum_b") >= limit_b))
-    cand = (cum
-            .withColumn("__left", F.when(left_ok, abs_logit(
-                F.col("cum_a"), F.col("cum_ab"))).otherwise(F.lit(0.0)))
-            .withColumn("__right", F.when(right_ok, abs_logit(
-                F.col("tot_a") - F.col("cum_a"),
-                F.col("tot_ab") - F.col("cum_ab"))).otherwise(F.lit(0.0)))
-            .withColumn("__gain", F.greatest("__left", "__right")))
-
-    # first/last distinct score per keyword + the next distinct score
-    # (the split emits ranges (-inf, mid] and [next, inf),
-    # correlate.cc:344-356)
-    w_ord = Window.partitionBy("keyword").orderBy("score")
-    w_all = Window.partitionBy("keyword")
-    cand = (cand
-            .withColumn("__next", F.lead("score").over(w_ord))
-            .withColumn("__pos", F.row_number().over(w_ord))
-            .withColumn("__npos", F.count("*").over(w_all)))
-    best = (cand
+    gain = F.greatest(
+        F.when(left_ok, abs_logit(F.col("cum_a"), F.col("cum_ab")))
+        .otherwise(F.lit(0.0)),
+        F.when(right_ok, abs_logit(F.col("tot_a") - F.col("cum_a"),
+                                   F.col("tot_ab") - F.col("cum_ab")))
+        .otherwise(F.lit(0.0)))
+    best = (cum.withColumn("__gain", gain)
             .withColumn("__rk", F.row_number().over(
-                Window.partitionBy("keyword")
-                .orderBy(F.col("__gain").desc(), F.col("score").asc())))
+                w_kw.orderBy(F.col("__gain").desc(), F.col("score").asc())))
             .filter(F.col("__rk") == 1))
 
-    split = (best
-             .withColumn("__use_split",
-                         (F.col("__pos") > 1) &
-                         (F.col("__pos") < F.col("__npos")) &
-                         (F.col("__gain") >= MIN_GAIN))
-             .select("keyword", "__use_split",
-                     F.col("score").alias("__mid"),
-                     F.col("__next").alias("__next_score"))).cache()
-    caches.append(split)
-
-    # --- assemble range tasks -----------------------------------------
-    # whole-range: boolean keywords + continuous without a useful split;
-    # continuous keywords with too few class rows are dropped entirely
-    # (correlate.cc:271: classes.empty() || < min_limit -> return).
-    # Boolean keywords additionally carry the min-support prefilter
-    # (the continuous branches inherit it through __n_classes).
-    bool_tasks = (kind.filter(~F.col("__continuous") &
-                              (F.col("__n_rows") >= min_limit))
-                  .select("keyword", F.lit(None).cast("double").alias("lo"),
-                          F.lit(None).cast("double").alias("hi")))
-    nosplit_tasks = (split.filter(~F.col("__use_split"))
-                     .select("keyword", F.lit(None).cast("double").alias("lo"),
-                             F.lit(None).cast("double").alias("hi")))
-    left_tasks = (split.filter(F.col("__use_split"))
-                  .select("keyword", F.lit(None).cast("double").alias("lo"),
-                          F.col("__mid").alias("hi")))
-    right_tasks = (split.filter(F.col("__use_split"))
-                   .select("keyword", F.col("__next_score").alias("lo"),
-                           F.lit(None).cast("double").alias("hi")))
-    tasks = (bool_tasks.unionByName(nosplit_tasks)
-             .unionByName(left_tasks).unionByName(right_tasks))
-
     # --- ProcessRange: contingency counts per (keyword, range) --------
-    # with unique postings, counting matching docs = counting matching
-    # rows = summing the histogram's per-score class counts, so the
-    # count consumes the (cached) histogram instead of the raw
-    # postings; only exact doc dedup (countDistinct) needs the rows
-    in_range = ((F.col("lo").isNull() | (F.col("score") >= F.col("lo"))) &
-                (F.col("hi").isNull() | (F.col("score") <= F.col("hi"))))
-    if unique_docs:
-        counted = (h.join(tasks, "keyword")
-                   .filter(in_range)
-                   .groupBy("keyword", "lo", "hi")
-                   .agg(F.sum("__n_a").alias("match_count_a"),
-                        F.sum("__n_b").alias("match_count_b")))
-    else:
+    # a useful split emits (-inf, mid] and [next, +inf)
+    # (correlate.cc:344-356); a boolean keyword (one row) or a
+    # continuous one without a useful split emits the whole range.
+    # Counts are the prefix sums at mid and their complements: every
+    # class score above mid is >= next, and class-less score values
+    # add nothing to either side.  A null score sorts first but lies in
+    # no bounded range (``score <= mid`` is null), so the left range
+    # drops the null row's counts.
+    use_split = ((F.col("__pos") > 1) & (F.col("__pos") < F.col("__npos")) &
+                 (F.col("__gain") >= MIN_GAIN))
+    null = F.lit(None).cast("double")
+
+    def rng(lo, hi, a, b):
+        return F.struct(lo.alias("lo"), hi.alias("hi"),
+                        a.alias("match_count_a"), b.alias("match_count_b"))
+
+    whole = rng(null, null, F.col("tot_a"), F.col("tot_b"))
+    split = [rng(null, F.col("score"), F.col("cum_a") - F.col("__null_a"),
+                 F.col("cum_b") - F.col("__null_b")),
+             rng(F.col("__next"), null, F.col("tot_a") - F.col("cum_a"),
+                 F.col("tot_b") - F.col("cum_b"))]
+    counted = (best.select("keyword", F.explode(
+        F.when(use_split, F.array(*split)).otherwise(F.array(whole))))
+        .select("keyword", "col.*"))
+    if not unique_docs:
         # exact doc dedup without unique postings: collapse the raw
         # class rows to ONE row per (keyword, doc_id) carrying the
         # doc's class (cls joins on doc_id alone, so it is constant
         # within the group) and its score envelope — a map-side
         # combinable aggregate, so ties collapse before the shuffle.
-        # A doc then has a posting inside a task's range iff the range
-        # overlaps [min_s, max_s]: exact because every task assembled
-        # above is one-sided or unbounded (bool/nosplit: whole range;
-        # left: (-inf, mid]; right: [next, +inf)) — a two-sided task
-        # would need per-score data and must not reuse this test.
-        # Replaces the r12 countDistinct over raw class rows, whose
-        # two-distinct-aggregate Expand doubled the postings-scale
-        # shuffle and re-shuffled every posting occurrence per
-        # matching task (guide §2.3: shuffle fewer bytes; §2.4).
+        # A doc then has a posting inside a range iff the range
+        # overlaps [min_s, max_s]: exact because every range above is
+        # one-sided or unbounded — a two-sided range would need
+        # per-score data and must not reuse this test.
         kd = (k.filter(F.col("cls").isNotNull())
               .groupBy("keyword", "doc_id")
               .agg(F.first("cls").alias("cls"),
@@ -333,7 +260,7 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
                      (F.col("__max_s") >= F.col("lo"))) &
                     (F.col("hi").isNull() |
                      (F.col("__min_s") <= F.col("hi"))))
-        counted = (kd.join(tasks, "keyword")
+        counted = (kd.join(counted.select("keyword", "lo", "hi"), "keyword")
                    .filter(overlaps)
                    .groupBy("keyword", "lo", "hi")
                    .agg(F.count(F.when(F.col("cls") == 1, 1))

@@ -18,6 +18,17 @@ def rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def correlate_rows(postings, a, b, **kw):
+    """correlate_sets' collected rows, its cached intermediates
+    released."""
+    caches = []
+    try:
+        return correlate_sets(postings, a, b, caches=caches, **kw).collect()
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
 @pytest.mark.slow
 def test_boolean_feature_counts_and_logodds(spark):
     # A = {0..9}, B = {10..14}; feature 'f' present on 8 A docs, 1 B doc.
@@ -25,7 +36,7 @@ def test_boolean_feature_counts_and_logodds(spark):
     b = spark.createDataFrame([(i, 0.0) for i in range(10, 15)], S_SCHEMA)
     postings = spark.createDataFrame(
         [("f", i, 0.0) for i in range(8)] + [("f", 10, 0.0)], P_SCHEMA)
-    out = correlate_sets(postings, a, b).collect()
+    out = correlate_rows(postings, a, b)
     assert len(out) == 1
     r = out[0]
     prior = math.log(11.0 / 6.0)
@@ -41,7 +52,7 @@ def test_min_support_filters_rare_features(spark):
     a = spark.createDataFrame([(i, 0.0) for i in range(40)], S_SCHEMA)
     b = spark.createDataFrame([(i, 0.0) for i in range(40, 80)], S_SCHEMA)
     postings = spark.createDataFrame([("rare", 0, 0.0)], P_SCHEMA)
-    assert correlate_sets(postings, a, b).count() == 0
+    assert correlate_rows(postings, a, b) == []
 
 
 @pytest.mark.slow
@@ -51,7 +62,7 @@ def test_b_made_disjoint_from_a(spark):
     b = spark.createDataFrame([(0, 0.0), (2, 0.0), (3, 0.0)], S_SCHEMA)
     postings = spark.createDataFrame(
         [("f", 0, 0.0), ("f", 1, 0.0), ("f", 2, 0.0)], P_SCHEMA)
-    out = correlate_sets(postings, a, b).collect()
+    out = correlate_rows(postings, a, b)
     assert len(out) == 1
     # had doc 0 counted for B too, match counts would be symmetric and the
     # log-odds (0) filtered out; the row existing proves the subtraction
@@ -68,7 +79,7 @@ def test_continuous_feature_split(spark):
     postings = spark.createDataFrame(
         [("cont", i, 10.0 + i * 0.1) for i in range(10)] +
         [("cont", i, 1.0 + i * 0.01) for i in range(10, 20)], P_SCHEMA)
-    out = correlate_sets(postings, a, b).collect()
+    out = correlate_rows(postings, a, b)
     # Two range rows: low range favours B, high range favours A.
     assert len(out) == 2
     by_sign = {r.log_odds > 0: r for r in out}
@@ -190,6 +201,81 @@ def test_statement_path_timestamped_with_ephemeral_skip(spark):
     assert eng._correlate_caches            # intermediates registered
     eng.release_caches()
     assert not eng._correlate_caches
+
+
+def _small_engine(spark, unique):
+    from cantera_table_spark.engine import Engine
+    from cantera_table_spark.model import Catalog
+    postings = spark.range(2000).select(
+        F.concat(F.lit("kw"), (F.col("id") % 20).cast("string"))
+        .alias("keyword"),
+        (F.col("id") % 300).alias("doc_id"),
+        (F.col("id") % 7).cast("double").alias("score"))
+    docs = spark.range(300).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("d"), F.col("id").cast("string")).alias("key"),
+        F.lit("{}").alias("doc"))
+    return Engine(Catalog(summaries=[docs], indexes=[postings]),
+                  unique_postings=unique)
+
+
+@pytest.mark.parametrize("unique", [True, False])
+def test_correlate_statement_releases_every_cache(spark, unique):
+    """Every block a CORRELATE statement persists is registered, so
+    release_caches() leaves the session's persistent RDDs as it found
+    them — including the empty-class early return, which caches the
+    class table before counting it."""
+    from cantera_table_spark.dsl.parser import parse_script
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    eng = _small_engine(spark, unique)
+    rows_ = eng.execute(parse_script(
+        "CORRELATE QUERY (kw1 OR kw3), (kw2);")[0]).collect()
+    assert rows_ and eng._correlate_caches
+    eng.release_caches()
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+
+    a = spark.createDataFrame([(i, 0.0) for i in range(10)], S_SCHEMA)
+    postings = spark.createDataFrame([("f", i, 0.0) for i in range(8)],
+                                     P_SCHEMA)
+    caches = []
+    try:
+        out = correlate_sets(postings, a, a, caches=caches,
+                             unique_docs=unique)
+        assert out.collect() == [] and len(caches) == 1
+        assert set(jsc.getPersistentRDDs().keySet()) != before
+    finally:
+        for c in caches:
+            c.unpersist()
+    assert set(jsc.getPersistentRDDs().keySet()) == before
+
+
+# Spark jobs one CORRELATE statement runs on _small_engine's catalog,
+# measured when the pipeline became one class table plus one keyword
+# pass (the four-branch shape before it ran 29 and 37)
+_CORRELATE_JOBS = {True: 9, False: 16}
+
+
+@pytest.mark.parametrize("unique", [True, False])
+def test_correlate_statement_job_count(spark, unique):
+    """Scheduler-level regression pin: the statement's jobs (the class
+    table count, its broadcast, one job per shuffle stage of the
+    histogram pass and the result) stay at or below the measured
+    count."""
+    from cantera_table_spark.dsl.parser import parse_script
+    sc = spark.sparkContext
+    eng = _small_engine(spark, unique)
+    stmt = parse_script("CORRELATE QUERY (kw1 OR kw3), (kw2);")[0]
+    group = f"test-correlate-jobs-{unique}"
+    sc.setJobGroup(group, group)
+    try:
+        rows_ = eng.execute(stmt).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+        eng.release_caches()
+    assert rows_
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= _CORRELATE_JOBS[unique], len(jobs)
 
 
 # --- randomized model-based law: full pipeline vs pure-Python model ---
@@ -336,6 +422,80 @@ def test_correlate_unique_docs_path_matches_model(spark, postings,
     assert got == want
 
 
+# Edge cases of reading range counts off the split's prefix sums:
+# A = docs 0-9, B = docs 10-19, docs 20+ are in neither class.
+_SPLIT = ([("c", d, 1.0 + d % 2) for d in range(8)] +
+          [("c", 8, 9.0), ("c", 9, 9.0)] +
+          [("c", d, 1.0) for d in range(10, 13)] +
+          [("c", d, 8.0 + d % 2) for d in range(13, 20)])
+# best gain at the FIRST class score: no split, whole range
+_FIRST = ([("c", d, 1.0) for d in range(8)] +
+          [("c", 8, 3.0), ("c", 9, 3.0)] +
+          [("c", d, 2.0) for d in range(10, 15)] +
+          [("c", 15, 3.0), ("c", 16, 3.0)])
+# A-only keyword: best gain at the LAST class score, no split
+_LAST = ([("c", d, 1.0) for d in range(6)] +
+         [("c", d, 2.0) for d in range(6, 10)])
+_NAN = float("nan")
+_A, _B = list(range(10)), list(range(10, 20))
+
+
+def _edge_rows(spark, postings, unique):
+    caches = []
+    try:
+        return _spark_rows(correlate_sets(
+            spark.createDataFrame(postings, P_SCHEMA),
+            spark.createDataFrame([(d, 0.0) for d in _A], S_SCHEMA),
+            spark.createDataFrame([(d, 0.0) for d in _B], S_SCHEMA),
+            caches=caches, unique_docs=unique))
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
+@pytest.mark.parametrize("postings, want", [
+    # class-less values between mid=2.0 and next=8.0 must not become
+    # the right range's lower end
+    (_SPLIT + [("c", 20, 5.0), ("c", 21, 5.0), ("c", 22, 6.5)],
+     [(-0.981, 2, 7, "c", 8.0, None), (0.811, 8, 3, "c", None, 2.0)]),
+    # class-less values below the first class score must not move the
+    # argmax off position 1
+    (_FIRST + [("c", 20, -1.0), ("c", 21, 0.5), ("c", 22, 0.5)],
+     [(0.318, 10, 7, "c", None, None)]),
+    # class-less NaN scores sort last and must not make the last class
+    # score an inner split point (not first: the model's max() would
+    # then see NaN)
+    (_LAST + [("c", 20, _NAN), ("c", 21, _NAN)],
+     [(2.398, 10, 0, "c", None, None)]),
+], ids=["classless_between_mid_and_next", "classless_below_first",
+        "nan_score"])
+@pytest.mark.parametrize("unique", [True, False])
+def test_correlate_prefix_sum_edge_cases(spark, postings, want, unique):
+    assert ref_model.correlate(postings, _A, _B) == want
+    assert _edge_rows(spark, postings, unique) == want
+
+
+@pytest.mark.parametrize("postings, want", [
+    ([("n", d, 1.0 + d % 2) for d in range(8)] +
+     [("n", d, 8.0 + d % 2) for d in range(10, 18)] +
+     [("n", d, None) for d in (8, 9, 18, 19)],
+     [(-2.197, 0, 8, "n", 8.0, None), (2.197, 8, 0, "n", None, 2.0)]),
+    ([("n", d, 1.0) for d in range(6)] +
+     [("n", d, None) for d in range(6, 10)] + [("n", 10, 2.0)],
+     [(-0.693, 0, 1, "n", 2.0, None), (1.946, 6, 0, "n", None, 1.0)]),
+], ids=["split_between_values", "split_after_first_value"])
+@pytest.mark.parametrize("unique", [True, False])
+def test_correlate_null_scores_stay_out_of_bounded_ranges(spark, postings,
+                                                          want, unique):
+    """A null score (a TSV row whose score does not parse) joins the
+    split search as the first histogram row but lies in no bounded
+    range: ``score <= mid`` is null.  The left range's prefix-sum count
+    must therefore leave it out, as the per-doc count does.  The model
+    takes no null scores; ``want`` is the output of the earlier
+    per-range re-count, which filtered each range by score."""
+    assert _edge_rows(spark, postings, unique) == want
+
+
 _keys_st = st.lists(
     st.tuples(st.sampled_from(["k0", "k1"]),
               st.integers(0, 12),
@@ -397,10 +557,10 @@ def test_r11_empty_class_short_circuit_and_primary_keyword(spark):
     b_subset = spark.createDataFrame([(0, 0.0), (1, 0.0)], S_SCHEMA)
     postings = spark.createDataFrame(
         [("f", i, 0.0) for i in range(8)], P_SCHEMA)
-    assert correlate_sets(postings, a, b_empty).count() == 0
+    assert correlate_rows(postings, a, b_empty) == []
     # B ⊆ A -> disjoint subtraction empties B -> no output either
-    assert correlate_sets(postings, a, b_subset).count() == 0
-    assert correlate_sets(postings, b_empty, a).count() == 0
+    assert correlate_rows(postings, a, b_subset) == []
+    assert correlate_rows(postings, b_empty, a) == []
     assert ref_model.correlate(
         [("f", i, 0.0) for i in range(8)], list(range(10)), []) == []
     assert ref_model.correlate(

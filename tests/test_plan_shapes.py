@@ -152,8 +152,9 @@ def test_correlate_pipeline_shuffle_budget(spark, parquet_catalog):
     stmt = parse_script("CORRELATE QUERY (kw1), (kw2);")[0]
     df = eng.execute(stmt)
     facts = plan_facts(df)
+    eng.release_caches()
     # distinct partitionings, not raw Exchange nodes: cached subtrees
-    # (kind/split/k) print their plans inline once per consumer
+    # (the class table) print their plans inline once per consumer
     assert len(facts.distinct_shuffle_keys()) <= 8, \
         facts.distinct_shuffle_keys()
 
@@ -407,17 +408,20 @@ def test_incremental_dedup_single_pairs_consumption(spark):
 
 
 def test_correlate_histogram_cached_once(spark):
-    """The r12 correlate shape: the postings shuffle ONCE into the
-    per-(keyword, score) histogram, which is cached (with the tiny
-    per-keyword kind/split tables) and feeds every downstream branch —
-    split search, task assembly, and (without the unique_docs promise)
-    only the countDistinct contingency pass still consumes the raw
-    class-joined rows, which are persisted for exactly that reason.
-    Pin both sides: enough cache hits to cover the branches, AND a
-    source-leaf count that stays small (a dropped persist re-expands
-    the class-join subtree under every branch, multiplying Range
-    leaves)."""
+    """The correlate shape: one cached class table (doc_id, cls) joined
+    once; the postings shuffle ONCE into the per-(keyword, score)
+    histogram, which is not cached — a single keyword partitioning of
+    it carries every per-keyword Window (kind, support, split search,
+    argmax), so no keyword list is broadcast back into it.  Without
+    the unique_docs promise the raw class rows are persisted too,
+    because the per-doc contingency count re-reads them.  Pins: the
+    cache count, exactly one (keyword, score) exchange, no broadcast
+    keyed by a string (the keyword list), every Window partitioned by
+    keyword alone, and a small source-leaf count (a dropped persist
+    re-expands the class-join subtree, multiplying Range leaves)."""
+    import re
     from cantera_table_spark.operators.correlate import correlate_sets
+    from cantera_table_spark.plans.inspect import explain_str
     postings = spark.range(20_000).select(
         F.concat(F.lit("kw"), (F.col("id") % 50).cast("string"))
         .alias("keyword"),
@@ -427,34 +431,34 @@ def test_correlate_histogram_cached_once(spark):
                                                           "score")
     b = postings.filter(F.col("keyword") == "kw2").select("doc_id",
                                                           "score")
-    caches = []
-    try:
-        out = correlate_sets(postings, a, b, caches=caches)
-        c = _formatted_node_counts(out)
-        # k (raw class join, countDistinct path) + h + kind + split
-        assert len(caches) == 4, len(caches)
-        assert c["InMemoryTableScan"] >= 6, c["InMemoryTableScan"]
-        # the postings source leaf appears only under the cached
-        # subtrees + the set A/B class builds
-        assert c["Range"] <= 8, c["Range"]
-        assert c["Window"] <= 5, c["Window"]
-    finally:
-        for cdf in caches:
-            cdf.unpersist()
-
-    # with the unique_docs promise the raw class-joined rows have no
-    # consumer outside the histogram build: one postings-scale shuffle
-    # total, and only three cached frames
-    caches = []
-    try:
-        out = correlate_sets(postings, a, b, caches=caches,
-                             unique_docs=True)
-        assert len(caches) == 3, len(caches)
-        c = _formatted_node_counts(out)
-        assert c["Range"] <= 8, c["Range"]
-    finally:
-        for cdf in caches:
-            cdf.unpersist()
+    # class table + raw class rows; class table only
+    for unique_docs, n_caches in ((False, 2), (True, 1)):
+        caches = []
+        try:
+            out = correlate_sets(postings, a, b, caches=caches,
+                                 unique_docs=unique_docs)
+            assert len(caches) == n_caches, (unique_docs, len(caches))
+            text = explain_str(out, "simple")
+            assert len(re.findall(
+                r"Exchange hashpartitioning\(keyword#\d+, score#\d+,",
+                text)) == 1, text
+            bcast = re.findall(
+                r"BroadcastExchange HashedRelationBroadcastMode"
+                r"\(List\((.*?)\),", text)
+            assert bcast and not [k for k in bcast if "string" in k], bcast
+            specs = re.findall(
+                r"windowspecdefinition\((.*?)specifiedwindowframe", text)
+            assert specs, text
+            for spec in specs:
+                part = [x for x in spec.rstrip(", ").split(", ")
+                        if " ASC " not in x and " DESC " not in x]
+                assert len(part) == 1 and re.fullmatch(
+                    r"keyword#\d+", part[0]), spec
+            c = _formatted_node_counts(out)
+            assert c["Range"] <= 3, c["Range"]
+        finally:
+            for cdf in caches:
+                cdf.unpersist()
 
 
 def test_with_bands_is_single_shuffle_window(spark):
