@@ -182,9 +182,10 @@ def main() -> None:
         # cross-phase caching — the catalog is parquet-backed — so
         # clear between phases (and between repeat runs); cleanup time
         # is excluded from the phase's own measurement on purpose.
-        # clearCache drops EVERY cached block, including the per-phase
-        # engines' CORRELATE intermediates and gate-registry frames;
-        # release_gate_caches also empties the registry bookkeeping.
+        # Cache lifetimes belong to the gate scope (release_gate_caches);
+        # clearCache is measurement hygiene on top: it also drops the
+        # CORRELATE intermediates of the per-phase engines below, whose
+        # own scopes nothing here releases.
         gate.release_gate_caches()
         spark.catalog.clearCache()
         # ContextCleaner's periodic GC defaults to 30 min — longer than

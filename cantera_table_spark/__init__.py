@@ -17,10 +17,10 @@ miner.  This package re-expresses those capabilities Spark-first:
   operators (dedup, similarity search, text analysis, multimodal columns).
 """
 
-from cantera_table_spark.session import get_spark
+from cantera_table_spark.session import CacheScope, get_spark
 from cantera_table_spark.model import Catalog
 from cantera_table_spark.engine import Engine
 
-__all__ = ["get_spark", "Catalog", "Engine"]
+__all__ = ["get_spark", "CacheScope", "Catalog", "Engine"]
 
 __version__ = "0.1.0"

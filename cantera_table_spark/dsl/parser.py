@@ -10,8 +10,8 @@ Grammar transcribed from the reference bison/flex grammar
     PARSE q
     SET OUTPUT FORMAT CSV|JSON
     SET TIME FORMAT 'fmt'
-    SET COUNT MODE EXACT|APPROX|NONE   (engine extension; COUNT/MODE
-                                        are contextual, not reserved)
+    SET COUNT MODE EXACT|NONE   (engine extension; COUNT/MODE are
+                                 contextual, not reserved)
 
 Expression operators (all left-associative, one precedence level, matching
 the reference's single ``%left`` declaration; comparisons bind tighter by
@@ -295,7 +295,7 @@ class Parser:
         self.expect_kw("SET")
         if self._at_ident_word("COUNT"):
             # engine extension (not in the reference grammar): SET COUNT
-            # MODE EXACT|APPROX|NONE picks the result-count policy
+            # MODE EXACT|NONE picks the result-count policy
             # (engine.query_stmt count_mode)
             self.next()
             if not self._at_ident_word("MODE"):
@@ -304,8 +304,8 @@ class Parser:
             t = self.next()
             val = str(t.value).lower() if t.kind in ("IDENT", "STRING") \
                 else None
-            if val not in ("exact", "approx", "none"):
-                raise ParseError("SET COUNT MODE takes EXACT|APPROX|NONE")
+            if val not in ("exact", "none"):
+                raise ParseError("SET COUNT MODE takes EXACT|NONE")
             return SetStmt("count_mode", val)
         if self.at_kw("OUTPUT"):
             self.next()

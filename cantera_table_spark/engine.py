@@ -24,6 +24,7 @@ from cantera_table_spark.functions.dates import (
 )
 from cantera_table_spark.model import Catalog
 from cantera_table_spark.operators import set_algebra as sa
+from cantera_table_spark.session import CacheScope
 
 
 class Engine:
@@ -34,24 +35,21 @@ class Engine:
         self.unique_postings = unique_postings
         self.blob_fetcher = blob_fetcher
         self.f32_scores = f32_scores
-        if count_mode not in ("exact", "approx", "none"):
-            raise ValueError(f"count_mode must be exact|approx|none, "
+        if count_mode not in ("exact", "none"):
+            raise ValueError(f"count_mode must be exact|none, "
                              f"got {count_mode!r}")
         # result-count policy for QUERY envelopes (SURVEY §4): "exact"
         # (reference-faithful, query.cc:933 — an observer counts the
-        # result inside the top-k page job, no extra job), "approx"
-        # (Bernoulli-sample estimate — one sampled count job besides
-        # the page), or "none" (omit result-count; at 100 TB the top-k
-        # reads the whole result either way, so "none" saves only the
-        # count itself).
+        # result inside the top-k page job, no extra job) or "none"
+        # (omit result-count; the top-k reads the whole result either
+        # way, so "none" saves only the count itself).
         self.count_mode = count_mode
-        self.approx_count_fraction = 0.05
         # session parameters (reference SET statement, statement.cc:35-48;
         # default CSV per output.cc:32)
         self.output_format = "csv"
-        # cached intermediates registered by CORRELATE runs; release
-        # with release_caches() after consuming their results
-        self._correlate_caches: list = []
+        # intermediates cached by CORRELATE statements; release_caches()
+        # frees them once their results are consumed
+        self.caches = CacheScope()
         self.time_format = "%Y-%m-%d %H:%M:%S"
 
     def register_views(self, prefix: str = "") -> None:
@@ -70,9 +68,7 @@ class Engine:
         """Unpersist intermediates cached by CORRELATE statements (call
         after consuming their result DataFrames in long-lived
         sessions)."""
-        for df in self._correlate_caches:
-            df.unpersist()
-        self._correlate_caches.clear()
+        self.caches.release()
 
     def _compiler(self) -> QueryCompiler:
         return QueryCompiler(self.catalog,
@@ -145,12 +141,12 @@ class Engine:
         reference seeks each result's summary, query.cc:813-890).
         ``count_mode`` (default: the engine's) picks the result-count
         policy: "exact" counts the result inside the page action
-        (reference behavior; LIMIT 0 counts instead of paging);
-        "approx" estimates it from a Bernoulli sample in a job of its
-        own (documented divergence); "none" omits ``result-count``."""
+        (reference behavior; LIMIT 0 counts instead of paging, and a
+        dump-all page counts its own rows); "none" omits
+        ``result-count``."""
         mode = count_mode or self.count_mode
-        if mode not in ("exact", "approx", "none"):
-            raise ValueError(f"count_mode must be exact|approx|none, "
+        if mode not in ("exact", "none"):
+            raise ValueError(f"count_mode must be exact|none, "
                              f"got {mode!r}")
         if stmt.keys_only:
             # KEYS FOR output carries no result-count, so counting buys
@@ -189,10 +185,6 @@ class Engine:
             # top-k reads every row rather than a per-partition prefix.
             obs = Observation()
             result = result.observe(obs, F.count(F.lit(1)).alias("n"))
-        elif mode == "approx" and stmt.limit >= 0:
-            frac = self.approx_count_fraction
-            total = int(round(
-                result.sample(False, frac, seed=0).count() / frac))
         page = (sa.top_k(result, stmt.limit, stmt.offset).collect()
                 if stmt.limit != 0 else [])
         if not page and stmt.limit != 0:
@@ -203,16 +195,9 @@ class Engine:
             return []
         if obs is not None:
             total = obs.get["n"]
-        elif mode != "none" and (stmt.limit < 0 or len(page) < stmt.limit):
-            # an under-full (or dump-all) page means the result ENDED
-            # inside it, so it proves the exact total — in approx mode
-            # that beats the estimate in both directions (r9 review
-            # finding: a 3-doc result with frac 0.05 could otherwise
-            # report result-count 20)
+        elif mode == "exact" and stmt.limit < 0:
+            # a dump-all page holds the whole result past the offset
             total = stmt.offset + len(page)
-        elif mode == "approx":
-            # a full page only proves a lower bound
-            total = max(total, stmt.offset + len(page))
 
         summaries, headers = self._page_lookup(comp, page, stmt.keys_only)
         if stmt.keys_only:

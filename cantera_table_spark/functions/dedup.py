@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cantera_table_spark.functions.text import tokens
+from cantera_table_spark.session import CacheScope
 
 MINHASH_PRIME = 4_294_967_311          # smallest prime > 2^32
 
@@ -392,8 +393,8 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
 
 
 def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
-                       max_iters: int = 20,
-                       caches: list | None = None,
+                       max_iters: int = 20, *,
+                       caches: CacheScope,
                        small_graph_edges: int = 100_000) -> DataFrame:
     """Connected components over verified duplicate pairs: every doc
     gets the minimum doc_id reachable through the pair graph as its
@@ -411,10 +412,11 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
     max_iters) raises instead of silently returning partial labels.
     The subgraph labels backing the returned DataFrame are
     Spark-cached, and the returned frame is an (uncached) join over
-    them — unpersisting the RESULT would free nothing.  Pass ``caches``
-    (a list) to receive the cached label frame so a long-lived session
-    can ``unpersist()`` it after consuming the result (the same
-    contract as operators.correlate.correlate_sets).
+    them — unpersisting the RESULT would free nothing.  ``caches`` is
+    the CacheScope the label rounds are persisted in (only the last
+    stays cached, converged or not); the caller releases it after
+    consuming the result (the same contract as
+    operators.correlate.correlate_sets).
 
     Graphs with at most ``small_graph_edges`` edges skip the
     distributed rounds entirely: one bounded collect + driver-side
@@ -426,8 +428,6 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
     uses for its k x dim centroid matrix.  Pass 0 to force the
     distributed path.
     """
-    if caches is None:
-        caches = []
     # Cache the symmetrized edge list: its lineage is the whole
     # candidate-generation + verification pipeline (LSH -> jaccard),
     # and every propagation round joins it — without the cache each
@@ -441,56 +441,73 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
     # differently-projected selects defeats ReuseExchange, so the whole
     # upstream LSH -> jaccard pipeline would execute twice (measured 2x
     # on the dd06 bench phase); the explode reads it once
-    edges = (pairs.select(F.explode(F.array(
-        F.struct(F.col("doc_a").alias("src"),
-                 F.col("doc_b").alias("dst")),
-        F.struct(F.col("doc_b").alias("src"),
-                 F.col("doc_a").alias("dst")))).alias("e"))
-        .select("e.src", "e.dst")
-        .distinct()).cache()
-    # Materialize the edge cache NOW: both the node set below and every
-    # iteration read it, and without this the first job would compute
-    # the whole upstream candidate pipeline once per branch.
-    n_edges = edges.count()
-    if n_edges == 0:
-        edges.unpersist()
-        return ids.select("doc_id",
-                          F.col("doc_id").alias("canonical_id"))
-    if n_edges <= small_graph_edges:
-        rows = edges.collect()
-        edges.unpersist()
-        parent: dict = {}
+    with CacheScope() as scratch:
+        edges = scratch.persist(pairs.select(F.explode(F.array(
+            F.struct(F.col("doc_a").alias("src"),
+                     F.col("doc_b").alias("dst")),
+            F.struct(F.col("doc_b").alias("src"),
+                     F.col("doc_a").alias("dst")))).alias("e"))
+            .select("e.src", "e.dst")
+            .distinct())
+        # Materialize the edge cache NOW: both the node set below and
+        # every iteration read it, and without this the first job would
+        # compute the whole upstream candidate pipeline once per branch.
+        n_edges = edges.count()
+        if n_edges == 0:
+            return ids.select("doc_id",
+                              F.col("doc_id").alias("canonical_id"))
+        if n_edges > small_graph_edges:
+            # the labels are materialized when this returns, so the
+            # edge cache can go
+            labels = _propagate_labels(edges, max_iters, caches)
+        else:
+            labels = F.broadcast(_union_find_labels(ids, edges.collect()))
+    # map every corpus doc: subgraph label if present, else itself —
+    # the ONLY corpus-sized operation in the routine
+    return (ids.select("doc_id")
+            .join(labels, "doc_id", "left")
+            .select("doc_id",
+                    F.coalesce("canonical_id", "doc_id")
+                    .alias("canonical_id")))
 
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
 
-        for r in rows:
-            a, b = r["src"], r["dst"]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # attach the larger root under the smaller: every
-                # tree's root stays the component minimum, so find()
-                # returns exactly the min reachable id
-                parent[max(ra, rb)] = min(ra, rb)
-        idt = ids.schema["doc_id"].dataType.simpleString()
-        labels = ids.sparkSession.createDataFrame(
-            [(n, find(n)) for n in parent],
-            f"doc_id {idt}, canonical_id {idt}")
-        return (ids.select("doc_id")
-                .join(F.broadcast(labels), "doc_id", "left")
-                .select("doc_id",
-                        F.coalesce("canonical_id", "doc_id")
-                        .alias("canonical_id")))
+def _union_find_labels(ids: DataFrame, rows: list) -> DataFrame:
+    """Driver-side union-find over collected (src, dst) edge rows:
+    (doc_id, canonical_id) for every edge endpoint."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in rows:
+        a, b = r["src"], r["dst"]
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # attach the larger root under the smaller: every tree's
+            # root stays the component minimum, so find() returns
+            # exactly the min reachable id
+            parent[max(ra, rb)] = min(ra, rb)
+    idt = ids.schema["doc_id"].dataType.simpleString()
+    return ids.sparkSession.createDataFrame(
+        [(n, find(n)) for n in parent],
+        f"doc_id {idt}, canonical_id {idt}")
+
+
+def _propagate_labels(edges: DataFrame, max_iters: int,
+                      caches: CacheScope) -> DataFrame:
+    """Min-label rounds over the cached symmetrized ``edges``.  Each
+    round is persisted in ``caches`` and the one before it released
+    from it; returns the converged (doc_id, canonical_id) round."""
     # symmetrized, so every edge-touching node appears as a src
     labels = (edges.select("src").distinct()
               .select(F.col("src").alias("doc_id"),
                       F.col("src").alias("canonical_id")))
-    prev_cached = None
+    prev = None
     for _ in range(max_iters):
         neighbor_min = (edges.join(
             labels.select(F.col("doc_id").alias("src"),
@@ -499,40 +516,24 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
             .agg(F.min("src_lab").alias("nb_lab")))
         # carry the old label through the update so the convergence
         # check is a filter on the same cached frame, not another join
-        updated = (labels.join(neighbor_min, "doc_id", "left")
-                   .select("doc_id",
-                           F.col("canonical_id").alias("__old"),
-                           F.least(F.col("canonical_id"),
-                                   F.coalesce(F.col("nb_lab"),
-                                              F.col("canonical_id")))
-                           .alias("canonical_id")))
-        updated = updated.cache()
+        updated = caches.persist(
+            labels.join(neighbor_min, "doc_id", "left")
+            .select("doc_id",
+                    F.col("canonical_id").alias("__old"),
+                    F.least(F.col("canonical_id"),
+                            F.coalesce(F.col("nb_lab"),
+                                       F.col("canonical_id")))
+                    .alias("canonical_id")))
+        # the zero-changed check scans every partition of the cached
+        # round, so a converged round is fully materialized
         changed = (updated.filter(F.col("canonical_id") != F.col("__old"))
                    .limit(1).count())
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = updated
+        if prev is not None:
+            caches.release(prev)
+        prev = updated
         labels = updated.drop("__old")
         if changed == 0:
-            # the zero-changed check scanned every partition of the
-            # cached result, so labels is fully materialized and the
-            # edge cache can go
-            edges.unpersist()
-            caches.append(prev_cached)
-            # map every corpus doc: subgraph label if present, else
-            # itself — the ONLY corpus-sized operation in the routine
-            return (ids.select("doc_id")
-                    .join(labels, "doc_id", "left")
-                    .select("doc_id",
-                            F.coalesce("canonical_id", "doc_id")
-                            .alias("canonical_id")))
-    # non-convergence must not strand the loop's cached frames in
-    # executor storage: a caller that catches and retries with higher
-    # max_iters would otherwise accumulate orphaned caches (r9 review
-    # finding)
-    edges.unpersist()
-    if prev_cached is not None:
-        prev_cached.unpersist()
+            return labels
     raise RuntimeError(
         f"duplicate_clusters did not converge in {max_iters} iterations "
         f"(a duplicate chain longer than max_iters); raise max_iters")
@@ -542,8 +543,8 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 16,
                       bands: int = 4, min_jaccard: float = 0.12,
                       max_bucket: int | None = None,
-                      max_df: int | None = None,
-                      caches: list | None = None) -> DataFrame:
+                      max_df: int | None = None, *,
+                      caches: CacheScope) -> DataFrame:
     """The full dedup pipeline a pretraining corpus actually runs:
     exact-collapse identical texts by content hash FIRST, run the
     near-dup stack (shingles -> MinHash -> LSH -> Jaccard verify ->
@@ -570,7 +571,9 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text",
     tokens): the raw stack leaves them singletons, this pipeline
     merges them — identical bytes are duplicates regardless of length.
 
-    Returns (doc_id, canonical_id) over the FULL corpus.
+    Returns (doc_id, canonical_id) over the FULL corpus; the cached
+    label frame behind it is registered in the CacheScope ``caches``
+    (see duplicate_clusters).
     """
     # null-safe content hash: md5(NULL) is NULL and a NULL key never
     # matches itself in the membership join, which would silently drop

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cantera_table_spark.session import CacheScope
+
 
 def _sigmoid(z: Column) -> Column:
     # written exactly as the oracle spells it: 1 / (1 + exp(-z))
@@ -26,7 +28,7 @@ def _sigmoid(z: Column) -> Column:
 def logreg_train_score(df: DataFrame, feature_cols: list[str],
                        label_col: str, steps: int = 3, lr: float = 1.0,
                        out_col: str = "p",
-                       caches: list | None = None
+                       caches: CacheScope | None = None
                        ) -> tuple[DataFrame, list[float]]:
     """Train logistic regression (bias + one weight per feature,
     initialized 0) with ``steps`` full-batch gradient steps at rate
@@ -48,8 +50,8 @@ def logreg_train_score(df: DataFrame, feature_cols: list[str],
     Each step is one aggregation job collecting d+1 doubles to the
     driver — and each step RE-EXECUTES the input lineage (the
     bm25_scores hazard): feed a materialized frame, or pass ``caches``
-    (a list) to have the trainable subset Spark-cached and registered
-    for the caller to unpersist.  Feature columns should be
+    (a CacheScope) to have the trainable subset persisted in it for the
+    caller to release.  Feature columns should be
     deterministic and identically-rounded on both engines for oracle
     parity (e.g. the rounded with_text_stats ratios); the only
     cross-engine divergence is then double-sum order, absorbed by the
@@ -88,8 +90,7 @@ def logreg_train_score(df: DataFrame, feature_cols: list[str],
             trainable = trainable & ~F.isnan(F.col(c))
     train = df.filter(trainable)
     if caches is not None and steps > 1:
-        train = train.cache()
-        caches.append(train)
+        train = caches.persist(train)
 
     n = F.count(F.lit(1))
     for _ in range(steps):

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cantera_table_spark.session import CacheScope
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -772,7 +774,7 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.8,
                    n_clusters: int = 8, id_col: str = "vec_id",
                    vec_col: str = "embedding",
                    centroids: DataFrame | None = None,
-                   caches: list | None = None,
+                   caches: CacheScope | None = None,
                    assign: str = "flat", nprobe: int = 2,
                    coarse_k: int | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster the embedding space, and
@@ -797,6 +799,8 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.8,
 
     Returns (vec_id, cluster, kept): every vector with its cluster and
     the keep/drop decision (kept = no lower-id member at >= threshold).
+    Pass ``caches`` (a CacheScope) to persist the cluster assignment in
+    it for the caller to release; without one it is not cached.
     """
     if assign not in ("flat", "hier"):
         raise ValueError(f"assign must be flat|hier: {assign}")
@@ -813,11 +817,10 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.8,
     if caches is not None:
         # the quantized pair stage, the two exact-verify vector lookups,
         # and the final keep-join all consume the assignment pipeline
-        # (cross join + per-vector argmin); cache it when the caller
-        # manages a cache registry (measured 2x on the dd15 bench phase
-        # uncached)
-        assigned = assigned.cache()
-        caches.append(assigned)
+        # (cross join + per-vector argmin); persist it in the caller's
+        # CacheScope when one is passed (measured 2x on the dd15 bench
+        # phase uncached)
+        assigned = caches.persist(assigned)
     # The within-cluster self-join is the O(N^2/k) stage, so the rows it
     # shuffles and enumerates must be as small as possible: carry
     # int8-quantized UNIT vectors (d bytes vs 8d for the float64

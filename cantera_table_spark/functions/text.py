@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cantera_table_spark.session import CacheScope
+
 FINGERPRINT_MOD = 1_000_000_007
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic
@@ -479,7 +481,7 @@ def chunk_documents(df: DataFrame, chunk_tokens: int = 256,
 
 def ppl_buckets(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id",
-                caches: list | None = None) -> DataFrame:
+                caches: CacheScope | None = None) -> DataFrame:
     """CCNet-style perplexity bucketing: score the corpus with
     :func:`lm_quality_score`, then split into head / middle / tail by
     the corpus's own avg_nll terciles (head = most fluent third, the
@@ -489,7 +491,9 @@ def ppl_buckets(df: DataFrame, text_col: str = "text",
     per-doc score table — not a global ntile window, which would total-
     sort every score through a single partition; bucketing is then a
     map-side CASE.  Documents without bigrams (< 2 tokens) bucket as
-    'empty'.  Returns (doc_id, avg_nll, ppl_bucket).
+    'empty'.  Returns (doc_id, avg_nll, ppl_bucket).  Pass ``caches``
+    (a CacheScope) to persist the per-doc score table in it for the
+    caller to release; without one the table is not cached.
     """
     sc = lm_quality_score(df, text_col=text_col, id_col=id_col)
     if caches is not None:
@@ -498,8 +502,7 @@ def ppl_buckets(df: DataFrame, text_col: str = "text",
         # two aggregation shuffles) executes twice.  The score table
         # is one narrow row per doc — a funnel-narrowed frame, the
         # kind that SHOULD cache (SCALE.md negative-result note)
-        sc = sc.cache()
-        caches.append(sc)
+        sc = caches.persist(sc)
     cut = sc.agg(
         F.percentile(F.col("avg_nll"), F.lit(1.0 / 3.0)).alias("__q1"),
         F.percentile(F.col("avg_nll"), F.lit(2.0 / 3.0)).alias("__q2"))

@@ -12,6 +12,7 @@ sides.
 
 from __future__ import annotations
 
+import functools
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 from cantera_table_spark.engine import Engine
 from cantera_table_spark.dsl.parser import parse_script, parse_query
 from cantera_table_spark.model import load_table, testdata_catalog
+from cantera_table_spark.session import CacheScope
 
 # ---------------------------------------------------------------------------
 # Shared oracle SQL fragments (must mirror model.derive_* exactly)
@@ -147,121 +149,20 @@ _DRIVER_ORDER = [
 
 
 # Frames Spark-cached inside gate bodies (connected-component labels,
-# quantized embedding tables).  Gates return lazy DataFrames, so they
-# cannot unpersist their own caches; they register them here and a sweep
-# runner drains the registry after materializing each gate
-# (tools/check_gate.py) so storage does not accumulate across a
-# 101-gate session.  bench.py's clearCache covers its own runs.
-
-
-class _BoundedCacheList(list):
-    """Defensive cap: a caller that materializes many caching gates
-    WITHOUT ever calling release_gate_caches() must not accumulate
-    unbounded cached frames across a long session.  Growing past
-    ``maxlen`` unpersists and drops the oldest entries — safe at any
-    time (unpersisting a frame a plan still references merely makes
-    Spark recompute it), and far above any single gate's registration
-    count (max observed: 2), so in-gate correctness and the two
-    in-repo draining consumers see no behavior change.  Every
-    LENGTH-GROWING mutation enforces the cap (append/extend/insert/
-    ``+=``/``*=``/slice assignment), not just append — a third-party
-    caller bulk-registering via ``extend`` must not bypass the bound.
-    Trim prefers evicting frames the current mutation did NOT just
-    register (oldest-first among the rest) — but the CAP always wins:
-    a single over-cap bulk registration evicts from the new frames
-    too, oldest-first.  Duplicate registrations of one frame are
-    unpersisted only when the LAST copy leaves.  REPLACED entries
-    (item/slice assignment) are unpersisted as they leave the
-    registry — a displaced frame nothing tracks anymore would
-    otherwise stay cached forever, the exact leak the cap exists to
-    bound (r9 review findings)."""
-
-    maxlen = 8
-
-    def _trim(self, protect=()):
-        # The CAP always wins: a bulk over-cap registration (extend of
-        # maxlen+k frames) evicts oldest-first from the protected set
-        # too — the just-registered guarantee is scoped to mutations
-        # that leave unprotected entries to evict (pinned by the
-        # every-growth-path tests).
-        protect_ids = {id(p) for p in protect}
-        while len(self) > self.maxlen:
-            idx = next((i for i, e in enumerate(self)
-                        if id(e) not in protect_ids), 0)
-            old = super().pop(idx)
-            # unpersist only when no OTHER registry entry still tracks
-            # this frame — the same still-present rule __setitem__
-            # applies; evicting one of a frame's duplicate
-            # registrations must not uncache the copy a consumer gate
-            # is about to materialize (r11 review finding)
-            if not any(e is old for e in self):
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-
-    @staticmethod
-    def _unpersist_all(entries):
-        for e in entries:
-            try:
-                e.unpersist()
-            except Exception:
-                pass
-
-    def append(self, df):
-        super().append(df)
-        self._trim(protect=(df,))
-
-    def extend(self, dfs):
-        dfs = list(dfs)
-        super().extend(dfs)
-        self._trim(protect=dfs)
-
-    def insert(self, idx, df):
-        super().insert(idx, df)
-        self._trim(protect=(df,))
-
-    def __iadd__(self, dfs):
-        self.extend(dfs)
-        return self
-
-    def __imul__(self, n):
-        if n <= 0:
-            self._unpersist_all(list(self))
-            super().clear()
-            return self
-        added = list(self) * (n - 1)
-        super().extend(added)
-        self._trim(protect=added)
-        return self
-
-    def __setitem__(self, idx, val):
-        if isinstance(idx, slice):
-            val = list(val)      # materialize before the base consumes
-        displaced = self[idx]    # a one-shot iterable (protect needs it)
-        super().__setitem__(idx, val)
-        # unpersist what the assignment displaced (slice: the whole
-        # replaced run; scalar: one entry) unless it is still present
-        # elsewhere in the registry (duplicate registrations)
-        gone = (displaced if isinstance(idx, slice) else [displaced])
-        still = {id(e) for e in self}
-        self._unpersist_all([e for e in gone if id(e) not in still])
-        self._trim(protect=(list(val) if isinstance(idx, slice)
-                            else (val,)))
-
-
-_GATE_CACHES: list = _BoundedCacheList()
+# quantized embedding tables, CORRELATE class tables).  Gates return
+# lazy DataFrames, so they cannot unpersist their own caches; they
+# persist them through this scope, and every callable queries() returns
+# releases it before building its frame, so at most one gate's caches
+# are alive at a time even for a caller that never drains.  A sweep
+# runner calls release_gate_caches() after materializing each gate
+# (tools/check_gate.py) to free the last one too.
+_GATE_CACHES = CacheScope()
 
 
 def release_gate_caches() -> None:
     """Unpersist every cache registered by gate bodies since the last
     call.  Safe to call after each gate's collect()."""
-    while _GATE_CACHES:
-        df = _GATE_CACHES.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    _GATE_CACHES.release()
 
 
 def _ordered(names_to_vals: dict) -> dict:
@@ -271,8 +172,16 @@ def _ordered(names_to_vals: dict) -> dict:
     return {n: names_to_vals[n] for n in head + tail}
 
 
+def _released(fn: Callable[[SparkSession, str], DataFrame]):
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_gate_caches()
+        return fn(spark, sf_dir)
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _ordered(_QUERIES)
+    return {n: _released(fn) for n, fn in _ordered(_QUERIES).items()}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -285,7 +194,8 @@ _CATALOG_CACHE: dict[tuple[int, str], object] = {}
 def _engine(spark: SparkSession, sf_dir: str) -> Engine:
     """Engine over the testdata catalog; the derived postings are
     memoized and Spark-cached per (session, sf_dir) so a gate run's ~50
-    queries tokenize the corpus once, not once each."""
+    queries tokenize the corpus once, not once each.  The Engine's
+    CORRELATE intermediates go to the gate scope."""
     # applicationId, not id(spark): a new session can reuse a stopped
     # session's object address and would inherit dead cached plans
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -298,7 +208,9 @@ def _engine(spark: SparkSession, sf_dir: str) -> Engine:
         # cat01_multi_table-shaped catalogs are a supported surface)
         cat.indexes = [i.cache() for i in cat.indexes]
         _CATALOG_CACHE[key] = cat
-    return Engine(cat, unique_postings=True)
+    eng = Engine(cat, unique_postings=True)
+    eng.caches = _GATE_CACHES
+    return eng
 
 
 def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -1771,13 +1683,11 @@ def corr02_event_prediction(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
     # cached: set_a/set_b/keys and the as-of filter all branch off this
     # aggregate — uncached, the events re-aggregate once per branch
-    # (sweep/bench runners drain _GATE_CACHES after materialization)
-    ts_postings = (e.groupBy(
+    ts_postings = _GATE_CACHES.persist(e.groupBy(
         F.concat(F.lit("ts:"), F.col("event_type")).alias("keyword"),
         F.col("user_id").alias("doc_id"))
         .agg(F.min(F.unix_micros("ts") / F.lit(86400000000.0))
-             .alias("score"))).cache()
-    _GATE_CACHES.append(ts_postings)
+             .alias("score")))
     purchase = ts_postings.filter(F.col("keyword") == "ts:purchase")
     set_a = (purchase.filter(F.col("score") < 19723.5)
              .select("doc_id", "score"))
@@ -3078,8 +2988,7 @@ def sim07_quantized_topk(spark, sf_dir):
     # cache: the corpus side and the (broadcast) query side both read
     # the quantized table — without it the stats aggregate + transform
     # subtree executes twice
-    qd = quantize_embeddings(emb).cache()
-    _GATE_CACHES.append(qd)
+    qd = _GATE_CACHES.persist(quantize_embeddings(emb))
     return brute_force_topk(qd, qd.filter(F.col("vec_id") < 10), k=5,
                             vec_col="embedding_q")
 
@@ -3407,8 +3316,7 @@ def ir01_bm25(spark, sf_dir):
     # tokenize->explode->groupBy lineage re-executes per branch (the
     # scaling harness's own bm25 case materializes for the same
     # reason — r11 review)
-    p = derive_postings(spark, sf_dir).cache()
-    _GATE_CACHES.append(p)
+    p = _GATE_CACHES.persist(derive_postings(spark, sf_dir))
     return bm25_scores(p)
 
 
@@ -3566,8 +3474,8 @@ def ml01_logreg_quality(spark, sf_dir):
                   (F.col("lang") == "en").cast("int").alias("y")))
     # register the trainable frame's cache so the with_text_stats
     # lineage runs once, not once per gradient step + scoring (4x the
-    # corpus tokenize at larger SFs — r11 review); _GATE_CACHES
-    # bounds/releases it like every other gate intermediate
+    # corpus tokenize at larger SFs — r11 review); the gate scope
+    # releases it like every other gate intermediate
     scored, _w = logreg_train_score(
         st, ["alpha_ratio", "stopword_ratio", "len_f"], "y",
         steps=3, lr=1.0, out_col="p_en", caches=_GATE_CACHES)
@@ -3674,8 +3582,7 @@ def sim08_quantized_ivf(spark, sf_dir):
     from cantera_table_spark.functions.similarity import (
         ivf_assign, ivf_topk, quantize_embeddings, seed_centroids)
     emb = load_table(spark, sf_dir, "embeddings")
-    qd = quantize_embeddings(emb).cache()
-    _GATE_CACHES.append(qd)
+    qd = _GATE_CACHES.persist(quantize_embeddings(emb))
     base = qd.select("vec_id", F.col("embedding_q").alias("embedding"))
     cents = seed_centroids(base, n=8)
     indexed = ivf_assign(base, cents)

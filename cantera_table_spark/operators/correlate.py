@@ -30,10 +30,12 @@ from __future__ import annotations
 import math
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cantera_table_spark.dsl import ast as _ast
+from cantera_table_spark.session import CacheScope
 
 LOGIT_CUTOFF = math.log(0.55 / 0.45)   # correlate.cc:141-142
 # The output filter compares the ROUNDED 3-decimal log-odds (the output
@@ -52,26 +54,8 @@ LOGIT_CUTOFF_R3 = math.floor(LOGIT_CUTOFF * 1000.0 + 0.5) / 1000.0  # 0.201
 MIN_GAIN = math.log(1.05)              # correlate.cc:346
 
 
-def _persist(df: DataFrame) -> DataFrame:
-    """Persist policy for the raw class-joined postings of the exact-doc
-    path (SCALE.md).
-
-    ``CANTERA_CORRELATE_PERSIST`` picks the StorageLevel by name
-    (MEMORY_AND_DISK default — the rows feed both the histogram and the
-    per-doc contingency count; recomputing them means a second postings
-    scan and class join), or NONE to skip persisting entirely (the
-    at-100 TB choice when the postings working set exceeds cluster
-    cache and recompute-from-columnar-scan is cheaper than disk-spilled
-    cache blocks)."""
-    level = os.environ.get("CANTERA_CORRELATE_PERSIST", "MEMORY_AND_DISK")
-    if level.upper() == "NONE":
-        return df
-    from pyspark import StorageLevel
-    return df.persist(getattr(StorageLevel, level.upper()))
-
-
 def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
-                   *, caches: list,
+                   *, caches: CacheScope,
                    unique_docs: bool = False,
                    presplit: bool = False) -> DataFrame:
     """Core pipeline given resolved doc sets.
@@ -79,8 +63,8 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
     postings: (keyword, doc_id, score) — the feature space.
     set_a / set_b: (doc_id, score) — deduped result sets; B is made
     disjoint from A here.
-    caches: list that receives every DataFrame cached here; the caller
-    ``unpersist()``s them after consuming the result
+    caches: the CacheScope every DataFrame cached here is persisted
+    through; the caller releases it after consuming the result
     (Engine.release_caches does this).  Required: the class table is
     cached before the empty-class check, so even an empty result
     leaves a cache to release.
@@ -120,8 +104,7 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
         # one row per doc; a doc in both sets counts for A only
         # (correlate.cc:498-500: B minus A)
         tagged = tagged.groupBy("doc_id").agg(F.max("cls").alias("cls"))
-    classes = tagged.cache()
-    caches.append(classes)
+    classes = caches.persist(tagged)
     n_a, n_b = classes.agg(F.count(F.when(F.col("cls") == 1, 1)),
                            F.count(F.when(F.col("cls") == -1, 1))).first()
     if n_a == 0 or n_b == 0:
@@ -148,12 +131,16 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
     # (disjoint, correlate.cc:246-265).
     k = (postings.join(classes, "doc_id", "left")
          .select("keyword", "doc_id", "score", "cls"))
-    if not unique_docs:
-        # the exact-doc contingency count below re-consumes the raw
-        # class-joined rows; without the persist that branch re-runs
-        # the postings scan + class join
-        k = _persist(k)
-        caches.append(k)
+    # the exact-doc contingency count below re-consumes the raw
+    # class-joined rows; without the persist that branch re-runs the
+    # postings scan + class join.  CANTERA_CORRELATE_PERSIST names the
+    # StorageLevel, or NONE to recompute instead (the at-100 TB choice
+    # when the postings working set exceeds cluster cache and a
+    # columnar rescan is cheaper than disk-spilled blocks; SCALE.md)
+    level = os.environ.get("CANTERA_CORRELATE_PERSIST",
+                           "MEMORY_AND_DISK").upper()
+    if not unique_docs and level != "NONE":
+        k = caches.persist(k, getattr(StorageLevel, level))
 
     # THE one postings-scale shuffle: per-(keyword, distinct score)
     # class histogram.  Collapses ties exactly like the reference's
@@ -409,5 +396,5 @@ def correlate(engine, query_a, query_b) -> DataFrame:
                 ts_keys, set_a, _time.time() / 86400.0)
         postings = plain.unionByName(ts_filtered)
     return correlate_sets(postings, set_a, set_b,
-                          caches=engine._correlate_caches,
+                          caches=engine.caches,
                           unique_docs=engine.unique_postings)

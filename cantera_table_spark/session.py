@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "cantera-table-spark",
@@ -81,3 +81,38 @@ def is_utc_zone(spark, tz: str | None) -> bool:
         return tz in ("UTC", "Etc/UTC", "Etc/GMT", "Etc/GMT0", "GMT",
                       "GMT0", "UTC+00:00", "GMT+00:00", "+00:00",
                       "+0000", "Z")
+
+
+class CacheScope:
+    """The DataFrames one consumer cached: ``persist`` caches and
+    registers a frame, ``release`` (or leaving a ``with`` block, an
+    exception included) unpersists every registered frame.  Releasing
+    a frame a plan still references only makes Spark recompute it."""
+
+    def __init__(self):
+        self._frames: list = []
+
+    def persist(self, df: DataFrame, level=None) -> DataFrame:
+        df = df.cache() if level is None else df.persist(level)
+        self._frames.append(df)
+        return df
+
+    def release(self, df: DataFrame | None = None) -> None:
+        """Unpersist ``df`` (default: every registered frame) and drop
+        it from the scope, so the scope only ever holds cached frames."""
+        held, self._frames = self._frames, []
+        for f in held:
+            if df is not None and f is not df:
+                self._frames.append(f)
+            # a stopped session's cached blocks went with it
+            elif f.sparkSession.sparkContext._jsc is not None:
+                f.unpersist()
+
+    def __len__(self) -> int:
+        return len(self._frames)
+
+    def __enter__(self) -> CacheScope:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()

@@ -9,6 +9,20 @@ engine's canonical intra-run order (see operators/set_algebra.py).
 from __future__ import annotations
 
 NEG_INF = float("-inf")
+# the one NaN object the CORRELATE model emits: tuples holding the same
+# object compare equal, so callers map the engine's NaNs onto it
+NAN = float("nan")
+
+
+def spark_order(s: float) -> tuple:
+    """Sort key of a double in Spark's order: NaN equals NaN and sorts
+    above every other value, +inf included."""
+    return (1, 0.0) if s != s else (0, s)
+
+
+def spark_value(key: tuple) -> float:
+    """The double behind a spark_order key (NaN as ``NAN``)."""
+    return NAN if key[0] else key[1]
 
 
 def union(lhs, rhs):
@@ -114,7 +128,10 @@ def correlate(postings, set_a, set_b, raw=False):
     output filter.
 
     postings: iterable of (keyword, doc_id, score); duplicate
-    (keyword, doc_id) rows allowed (the countDistinct path).
+    (keyword, doc_id) rows allowed (the countDistinct path).  Scores
+    compare in Spark's order (spark_order): a NaN score makes its
+    keyword continuous, lies in a range [next, +inf) and in no range
+    (-inf, mid] below NaN, and a NaN range end is emitted as ``NAN``.
     set_a / set_b: iterables of doc ids; B is made disjoint from A.
 
     Returns sorted rows (log_odds_rounded3, match_count_a,
@@ -172,9 +189,11 @@ def correlate(postings, set_a, set_b, raw=False):
     for kw, rows in by_kw.items():
         if len(rows) < min_limit:            # kw_ok: raw posting count
             continue
-        krows = [(d, s, 1 if d in a else (-1 if d in b else None))
+        krows = [(d, spark_order(s),
+                  1 if d in a else (-1 if d in b else None))
                  for d, s in rows]
-        continuous = max(abs(s) for _, s, _ in krows) > 0.0
+        # Spark's max(abs(score)) > 0: any nonzero score, or any NaN
+        continuous = any(k != (0, 0.0) for _, k, _ in krows)
         n_classes = sum(1 for _, _, c in krows if c is not None)
 
         tasks = []
@@ -184,11 +203,11 @@ def correlate(postings, set_a, set_b, raw=False):
             continue                         # correlate.cc:271 drop
         else:
             per = {}                         # distinct score -> counts
-            for _, s, c in krows:
+            for _, k, c in krows:
                 if c is None:
                     continue
-                na, nb, nab = per.get(s, (0, 0, 0))
-                per[s] = (na + (c == 1), nb + (c == -1), nab + 1)
+                na, nb, nab = per.get(k, (0, 0, 0))
+                per[k] = (na + (c == 1), nb + (c == -1), nab + 1)
             scores = sorted(per)
             npos = len(scores)
             tot_a = sum(v[0] for v in per.values())
@@ -196,10 +215,10 @@ def correlate(postings, set_a, set_b, raw=False):
             tot_ab = sum(v[2] for v in per.values())
             cum_a = cum_b = cum_ab = 0
             best = None                      # (gain, pos, mid, next)
-            for pos, s in enumerate(scores, start=1):
-                cum_a += per[s][0]
-                cum_b += per[s][1]
-                cum_ab += per[s][2]
+            for pos, k in enumerate(scores, start=1):
+                cum_a += per[k][0]
+                cum_b += per[k][1]
+                cum_ab += per[k][2]
                 left = (abs(math.log((cum_a + 1.0) /
                                      (cum_ab - cum_a + 1.0)) - prior)
                         if (cum_a >= lim_a or cum_b >= lim_b) else 0.0)
@@ -211,7 +230,7 @@ def correlate(postings, set_a, set_b, raw=False):
                 gain = max(left, right)
                 if best is None or gain > best[0]:   # tie -> low score
                     best = (gain, pos,
-                            s, scores[pos] if pos < npos else None)
+                            k, scores[pos] if pos < npos else None)
             gain, pos, mid, nxt = best
             if 1 < pos < npos and gain >= min_gain:
                 tasks.append((None, mid))
@@ -220,19 +239,21 @@ def correlate(postings, set_a, set_b, raw=False):
                 tasks.append((None, None))
 
         for lo, hi in tasks:
-            in_rng = [(d, c) for d, s, c in krows
-                      if (lo is None or s >= lo)
-                      and (hi is None or s <= hi)]
+            in_rng = [(d, c) for d, k, c in krows
+                      if (lo is None or k >= lo)
+                      and (hi is None or k <= hi)]
             ma = len({d for d, c in in_rng if c == 1})
             mb = len({d for d, c in in_rng if c == -1})
             if not (ma >= lim_a or mb >= lim_b):
                 continue
+            ends = tuple(None if e is None else spark_value(e)
+                         for e in (lo, hi))
             lo_odds = math.log((ma + 1.0) / (mb + 1.0)) - prior
             if raw:                      # guard hook: cutoff-unfiltered
-                out.append((lo_odds, ma, mb, kw, lo, hi))
+                out.append((lo_odds, ma, mb, kw) + ends)
                 continue
             r3 = round3_half_up(lo_odds)
             if abs(r3) < cutoff_r3:      # exact 3-decimal comparison
                 continue
-            out.append((r3, ma, mb, kw, lo, hi))
+            out.append((r3, ma, mb, kw) + ends)
     return sorted(out, key=lambda r: (r[3], repr(r[4]), repr(r[5])))

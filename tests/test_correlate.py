@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from cantera_table_spark.operators.correlate import (
     correlate_sets, filter_by_timestamp_now, filter_by_timestamp_sets,
 )
+from cantera_table_spark.session import CacheScope
 
 P_SCHEMA = "keyword string, doc_id long, score double"
 S_SCHEMA = "doc_id long, score double"
@@ -21,12 +22,8 @@ def rows(df):
 def correlate_rows(postings, a, b, **kw):
     """correlate_sets' collected rows, its cached intermediates
     released."""
-    caches = []
-    try:
+    with CacheScope() as caches:
         return correlate_sets(postings, a, b, caches=caches, **kw).collect()
-    finally:
-        for c in caches:
-            c.unpersist()
 
 
 @pytest.mark.slow
@@ -136,16 +133,12 @@ def test_correlate_presplit_fast_path_matches_default(spark):
     postings = spark.createDataFrame(
         [("f", i, 0.0) for i in range(8)] + [("f", 10, 0.0)] +
         [("g", i, float(i % 4)) for i in range(15)], P_SCHEMA)
-    caches = []
-    try:
+    with CacheScope() as caches:
         want = rows(correlate_sets(postings, a, b, caches=caches))
         got = rows(correlate_sets(postings, a, b, caches=caches,
                                   presplit=True))
         got_u = rows(correlate_sets(postings, a, b, caches=caches,
                                     presplit=True, unique_docs=True))
-    finally:
-        for c in caches:
-            c.unpersist()
     assert got == want
     assert got_u == want
     assert len(want) >= 1
@@ -198,9 +191,9 @@ def test_statement_path_timestamped_with_ephemeral_skip(spark):
     assert "alexa:rank" not in got          # ephemeral skipped
     assert got["ts:sig"] == (8, 0)          # as-of: 90 < 100 kept, aged
     assert got["plain"] == (0, 9)
-    assert eng._correlate_caches            # intermediates registered
+    assert eng.caches                       # intermediates registered
     eng.release_caches()
-    assert not eng._correlate_caches
+    assert not eng.caches
 
 
 def _small_engine(spark, unique):
@@ -231,22 +224,18 @@ def test_correlate_statement_releases_every_cache(spark, unique):
     eng = _small_engine(spark, unique)
     rows_ = eng.execute(parse_script(
         "CORRELATE QUERY (kw1 OR kw3), (kw2);")[0]).collect()
-    assert rows_ and eng._correlate_caches
+    assert rows_ and eng.caches
     eng.release_caches()
     assert set(jsc.getPersistentRDDs().keySet()) == before
 
     a = spark.createDataFrame([(i, 0.0) for i in range(10)], S_SCHEMA)
     postings = spark.createDataFrame([("f", i, 0.0) for i in range(8)],
                                      P_SCHEMA)
-    caches = []
-    try:
+    with CacheScope() as caches:
         out = correlate_sets(postings, a, a, caches=caches,
                              unique_docs=unique)
         assert out.collect() == [] and len(caches) == 1
         assert set(jsc.getPersistentRDDs().keySet()) != before
-    finally:
-        for c in caches:
-            c.unpersist()
     assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
@@ -306,8 +295,8 @@ def _boundary_safe(postings, set_a, set_b):
     lim_b = max(len(b) // 20, 1)
     by_kw = defaultdict(list)
     for kw, d, s in postings:
-        by_kw[kw].append((d, float(s), 1 if d in a else
-                          (-1 if d in b else None)))
+        by_kw[kw].append((d, ref_model.spark_order(float(s)),
+                          1 if d in a else (-1 if d in b else None)))
     for kw, krows in by_kw.items():
         per = {}
         for _, s, c in krows:
@@ -358,14 +347,18 @@ def _boundary_safe(postings, set_a, set_b):
 _postings_st = st.lists(
     st.tuples(st.sampled_from(["kw0", "kw1", "kw2"]),
               st.integers(0, 19),
-              st.sampled_from([0.0, 1.0, 2.0, 3.0, 5.0])),
+              st.sampled_from([0.0, 1.0, 2.0, 3.0, 5.0, ref_model.NAN])),
     min_size=1, max_size=50)
 _docs_st = st.lists(st.integers(0, 19), max_size=15)
 
 
 def _spark_rows(df):
+    """Collected rows in ref_model.correlate's order, each NaN range end
+    replaced by ``ref_model.NAN`` so equal rows compare equal."""
+    def end(v):
+        return ref_model.NAN if v is not None and math.isnan(v) else v
     return sorted(((r.log_odds, r.match_count_a, r.match_count_b,
-                    r.keyword, r.min_score, r.max_score)
+                    r.keyword, end(r.min_score), end(r.max_score))
                    for r in df.collect()),
                   key=lambda r: (r[3], repr(r[4]), repr(r[5])))
 
@@ -382,12 +375,8 @@ def test_correlate_matches_model(spark, postings, set_a, set_b):
         [(int(d), 0.0) for d in set_a] or [], S_SCHEMA)
     bdf = spark.createDataFrame(
         [(int(d), 0.0) for d in set_b] or [], S_SCHEMA)
-    caches = []
-    try:
+    with CacheScope() as caches:
         got = _spark_rows(correlate_sets(pdf, adf, bdf, caches=caches))
-    finally:
-        for c in caches:
-            c.unpersist()
     assert got == want
 
 
@@ -412,13 +401,9 @@ def test_correlate_unique_docs_path_matches_model(spark, postings,
         [(int(d), 0.0) for d in set_a] or [], S_SCHEMA)
     bdf = spark.createDataFrame(
         [(int(d), 0.0) for d in set_b] or [], S_SCHEMA)
-    caches = []
-    try:
+    with CacheScope() as caches:
         got = _spark_rows(correlate_sets(pdf, adf, bdf, caches=caches,
                                          unique_docs=True))
-    finally:
-        for c in caches:
-            c.unpersist()
     assert got == want
 
 
@@ -441,16 +426,12 @@ _A, _B = list(range(10)), list(range(10, 20))
 
 
 def _edge_rows(spark, postings, unique):
-    caches = []
-    try:
+    with CacheScope() as caches:
         return _spark_rows(correlate_sets(
             spark.createDataFrame(postings, P_SCHEMA),
             spark.createDataFrame([(d, 0.0) for d in _A], S_SCHEMA),
             spark.createDataFrame([(d, 0.0) for d in _B], S_SCHEMA),
             caches=caches, unique_docs=unique))
-    finally:
-        for c in caches:
-            c.unpersist()
 
 
 @pytest.mark.parametrize("postings, want", [
@@ -463,12 +444,22 @@ def _edge_rows(spark, postings, unique):
     (_FIRST + [("c", 20, -1.0), ("c", 21, 0.5), ("c", 22, 0.5)],
      [(0.318, 10, 7, "c", None, None)]),
     # class-less NaN scores sort last and must not make the last class
-    # score an inner split point (not first: the model's max() would
-    # then see NaN)
+    # score an inner split point
     (_LAST + [("c", 20, _NAN), ("c", 21, _NAN)],
      [(2.398, 10, 0, "c", None, None)]),
+    # one class-less NaN changes nothing, first or last in the input
+    ([("c", 20, _NAN)] + _SPLIT,
+     [(-0.981, 2, 7, "c", 8.0, None), (0.811, 8, 3, "c", None, 2.0)]),
+    (_SPLIT + [("c", 20, _NAN)],
+     [(-0.981, 2, 7, "c", 8.0, None), (0.811, 8, 3, "c", None, 2.0)]),
+    # NaN as the next class score: the right range is [NaN, +inf)
+    ([("c", d, 1.0 + d // 5) for d in range(10)] +
+     [("c", d, _NAN) for d in range(10, 20)],
+     [(2.398, 10, 0, "c", None, 2.0),
+      (-2.398, 0, 10, "c", ref_model.NAN, None)]),
 ], ids=["classless_between_mid_and_next", "classless_below_first",
-        "nan_score"])
+        "nan_score", "classless_nan_first", "classless_nan_last",
+        "nan_next"])
 @pytest.mark.parametrize("unique", [True, False])
 def test_correlate_prefix_sum_edge_cases(spark, postings, want, unique):
     assert ref_model.correlate(postings, _A, _B) == want

@@ -9,6 +9,7 @@ import pytest
 from hypothesis import example, given, settings, strategies as st
 
 from cantera_table_spark.operators import set_algebra as sa
+from cantera_table_spark.session import CacheScope
 
 postings = st.lists(
     st.tuples(st.integers(0, 15), st.floats(-4, 4, width=16)),
@@ -726,9 +727,6 @@ def test_near_dup_clusters_clone_count_invariance_law(spark, mult):
              "completely unrelated words about parquet shuffles here"]
     rows = [(i, t) for i, t in enumerate(texts)]
     base_docs = spark.createDataFrame(rows, "doc_id long, text string")
-    base = {r.doc_id: r.canonical_id
-            for r in near_dup_clusters(base_docs,
-                                       min_jaccard=0.5).collect()}
     cloned = list(rows)
     nxt = 100
     for i, m in enumerate(mult):
@@ -736,8 +734,13 @@ def test_near_dup_clusters_clone_count_invariance_law(spark, mult):
             cloned.append((nxt, texts[i]))
             nxt += 1
     cdf = spark.createDataFrame(cloned, "doc_id long, text string")
-    got = {r.doc_id: r.canonical_id
-           for r in near_dup_clusters(cdf, min_jaccard=0.5).collect()}
+    with CacheScope() as caches:
+        base = {r.doc_id: r.canonical_id
+                for r in near_dup_clusters(base_docs, min_jaccard=0.5,
+                                           caches=caches).collect()}
+        got = {r.doc_id: r.canonical_id
+               for r in near_dup_clusters(cdf, min_jaccard=0.5,
+                                          caches=caches).collect()}
     orig_of = {d: t for d, t in cloned}
     canon_of_text = {texts[i]: base[i] for i in range(3)}
     assert len(got) == len(cloned)

@@ -114,11 +114,12 @@ def test_set_statements():
 
 
 def test_set_count_mode():
-    s = parse_script("SET COUNT MODE NONE; SET COUNT MODE approx;")
+    s = parse_script("SET COUNT MODE NONE; SET COUNT MODE exact;")
     assert s == [SetStmt("count_mode", "none"),
-                 SetStmt("count_mode", "approx")]
-    with pytest.raises(ParseError):
-        parse_script("SET COUNT MODE sometimes;")
+                 SetStmt("count_mode", "exact")]
+    for mode in ("approx", "sometimes"):
+        with pytest.raises(ParseError):
+            parse_script(f"SET COUNT MODE {mode};")
     # COUNT / MODE stay ordinary search terms outside SET
     q = parse_query("count AND mode")
     assert q.lhs.identifier == "count" and q.rhs.identifier == "mode"

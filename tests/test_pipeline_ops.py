@@ -4,6 +4,7 @@ text / multimodal)."""
 import pytest
 from pyspark.sql import functions as F
 
+from cantera_table_spark.session import CacheScope
 from tests.conftest import SF_SMOKE
 
 
@@ -179,19 +180,24 @@ def test_duplicate_clusters_transitivity(spark):
     pairs = spark.createDataFrame(
         [(3, 5), (1, 3), (5, 7), (2, 6)], "doc_a long, doc_b long")
     want = {0: 0, 1: 1, 3: 1, 5: 1, 7: 1, 2: 2, 6: 2, 4: 4}
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     # driver union-find path (default: graph under the size gate)
-    out = {r.doc_id: r.canonical_id
-           for r in duplicate_clusters(ids, pairs).collect()}
-    assert out == want
-    # distributed label-propagation path must produce the identical
-    # labeling (small_graph_edges=0 forces it)
-    caches = []
-    out2 = {r.doc_id: r.canonical_id
-            for r in duplicate_clusters(ids, pairs, caches=caches,
-                                        small_graph_edges=0).collect()}
-    for c in caches:
-        c.unpersist()
+    with CacheScope() as caches:
+        out = {r.doc_id: r.canonical_id
+               for r in duplicate_clusters(ids, pairs,
+                                           caches=caches).collect()}
+        assert out == want
+        # distributed label-propagation path must produce the identical
+        # labeling (small_graph_edges=0 forces it)
+        out2 = {r.doc_id: r.canonical_id
+                for r in duplicate_clusters(ids, pairs, caches=caches,
+                                            small_graph_edges=0).collect()}
+        # the converged round alone is held, still cached
+        assert len(caches) == 1 and caches._frames[0].is_cached
     assert out2 == want
+    # every cached round lived in the scope: nothing outlives it
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 def test_near_dup_clusters_clone_invariant(spark):
@@ -208,8 +214,10 @@ def test_near_dup_clusters_clone_invariant(spark):
     rows += [(10 + i, base) for i in range(5)]
     rows += [(30, "hi there"), (31, "hi there")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r.canonical_id
-           for r in near_dup_clusters(docs, min_jaccard=0.5).collect()}
+    with CacheScope() as caches:
+        out = {r.doc_id: r.canonical_id
+               for r in near_dup_clusters(docs, min_jaccard=0.5,
+                                          caches=caches).collect()}
     # base + its clones + the near-dup all collapse to min id 1
     assert out[1] == 1 and out[2] == 1
     assert all(out[10 + i] == 1 for i in range(5))
@@ -432,24 +440,25 @@ def test_lsh_hot_bucket_bound(spark):
 
     # default path: the star graph is under small_graph_edges, so the
     # driver union-find runs and registers NO caches (nothing to free)
-    held = []
-    clusters = duplicate_clusters(
-        docs.select("doc_id"), bounded, caches=held)
-    labels = {r.doc_id: r.canonical_id for r in clusters.collect()}
-    assert all(labels[i] == 0 for i in range(n_dup))
-    assert labels[1000] == 1000 and labels[1001] == 1001
-    assert not held
+    with CacheScope() as held:
+        clusters = duplicate_clusters(
+            docs.select("doc_id"), bounded, caches=held)
+        labels = {r.doc_id: r.canonical_id for r in clusters.collect()}
+        assert all(labels[i] == 0 for i in range(n_dup))
+        assert labels[1000] == 1000 and labels[1001] == 1001
+        assert not held
 
     # distributed path (small_graph_edges=0): identical labels, and the
     # subgraph-label cache is surfaced through the caches contract
-    held = []
-    clusters_d = duplicate_clusters(
-        docs.select("doc_id"), bounded, caches=held, small_graph_edges=0)
-    labels_d = {r.doc_id: r.canonical_id for r in clusters_d.collect()}
-    assert labels_d == labels
-    assert held and all(c.is_cached for c in held)
-    for c in held:
-        c.unpersist()
+    with CacheScope() as held:
+        clusters_d = duplicate_clusters(
+            docs.select("doc_id"), bounded, caches=held,
+            small_graph_edges=0)
+        labels_d = {r.doc_id: r.canonical_id
+                    for r in clusters_d.collect()}
+        assert labels_d == labels
+        # only the converged round stays in the scope, and it is cached
+        assert len(held) == 1 and held._frames[0].is_cached
 
     # embedding variant: identical vectors flood one bucket the same way
     from cantera_table_spark.functions.similarity import lsh_near_dup_pairs

@@ -9,6 +9,7 @@ from cantera_table_spark.dsl.parser import parse_script
 from cantera_table_spark.engine import Engine
 from cantera_table_spark.model import Catalog
 from cantera_table_spark.plans.inspect import plan_facts
+from cantera_table_spark.session import CacheScope
 
 
 @pytest.fixture(scope="module")
@@ -433,8 +434,7 @@ def test_correlate_histogram_cached_once(spark):
                                                           "score")
     # class table + raw class rows; class table only
     for unique_docs, n_caches in ((False, 2), (True, 1)):
-        caches = []
-        try:
+        with CacheScope() as caches:
             out = correlate_sets(postings, a, b, caches=caches,
                                  unique_docs=unique_docs)
             assert len(caches) == n_caches, (unique_docs, len(caches))
@@ -456,9 +456,6 @@ def test_correlate_histogram_cached_once(spark):
                     r"keyword#\d+", part[0]), spec
             c = _formatted_node_counts(out)
             assert c["Range"] <= 3, c["Range"]
-        finally:
-            for cdf in caches:
-                cdf.unpersist()
 
 
 def test_with_bands_is_single_shuffle_window(spark):

@@ -57,21 +57,14 @@ def test_keys_only_and_offset_beyond(spark, catalog):
 
 
 def test_count_mode_envelopes(spark, catalog, monkeypatch):
-    """count_mode policies (SURVEY §4 sampling short-circuit): exact is
-    reference-faithful; approx returns an integer estimate; none omits
+    """count_mode policies: exact is reference-faithful; none omits
     result-count AND never runs a count job (pinned by poisoning
-    DataFrame.count)."""
+    DataFrame.count); there is no approx mode."""
     DataFrame = dataframe_class(spark)
 
     exact = Engine(catalog, unique_postings=True).execute_script(
         "QUERY (alpha) LIMIT 2;")[0]
     assert exact["result-count"] == 3
-
-    approx = Engine(catalog, unique_postings=True,
-                    count_mode="approx").execute_script(
-        "QUERY (alpha) LIMIT 2;")[0]
-    assert isinstance(approx["result-count"], int)
-    assert [r["_key"] for r in approx["result"]] == ["d2", "d0"]
 
     eng_none = Engine(catalog, unique_postings=True, count_mode="none")
     monkeypatch.setattr(
@@ -92,23 +85,19 @@ def test_count_mode_envelopes(spark, catalog, monkeypatch):
             "QUERY (alpha) LIMIT 2;")[0], count_mode="exact")
     assert env["result-count"] == 3
 
-    with pytest.raises(ValueError):
-        Engine(catalog, count_mode="bogus")
+    for mode in ("approx", "bogus"):
+        with pytest.raises(ValueError):
+            Engine(catalog, unique_postings=True, count_mode=mode)
 
 
 def test_limit_zero_keeps_envelope_in_all_modes(spark, catalog):
     """LIMIT 0 over a non-empty result at offset 0 is an empty PAGE, not
     an empty RESULT: exact mode returns {result-count, result: []} and
-    approx/none must not degrade it to the bare [] (reference prints
-    bare [] only when offset >= result size, query.cc:795-798)."""
+    none must not degrade it to the bare [] (reference prints bare []
+    only when offset >= result size, query.cc:795-798)."""
     exact = Engine(catalog, unique_postings=True).execute_script(
         "QUERY (alpha) LIMIT 0;")[0]
     assert exact == {"result-count": 3, "result": []}
-
-    approx = Engine(catalog, unique_postings=True,
-                    count_mode="approx").execute_script(
-        "QUERY (alpha) LIMIT 0;")[0]
-    assert approx["result"] == [] and "result-count" in approx
 
     none = Engine(catalog, unique_postings=True,
                   count_mode="none").execute_script(
@@ -175,9 +164,8 @@ def test_duplicate_summary_rows_keep_one_object_each(spark, catalog):
     assert Engine(cat, unique_postings=True).execute_script(
         "QUERY KEYS FOR (beta) LIMIT 1;")[0] in (["d1", "d1b"],
                                                 ["d1b", "d1"])
-    # a dump-all page proves the total from result rows, not from
-    # result objects: approx agrees with exact
-    env = Engine(cat, unique_postings=True, count_mode="approx"
+    # a dump-all page counts result rows, not result objects
+    env = Engine(cat, unique_postings=True
                  ).execute_script("QUERY (alpha);")[0]
     assert env["result-count"] == 3 and len(env["result"]) == 4
 
@@ -468,21 +456,6 @@ def test_override_breaks_at_first_missing_table(spark):
     assert by_key["d1"].get("b") == 2
     assert "x" not in by_key["d2"]           # break-at-first-miss
     assert by_key["d3"].get("d") == 4        # empty body keeps the walk
-
-
-def test_approx_count_underfull_page_is_exact(spark, catalog):
-    """r9 review finding: when the page comes back under-full (or
-    LIMIT -1 dumps everything), the result ended inside it — the
-    approx envelope must report the proven exact total, not an
-    inflated Bernoulli estimate."""
-    eng = Engine(catalog, unique_postings=True, count_mode="approx")
-    eng.approx_count_fraction = 0.05
-    # 3 alpha docs, LIMIT 10: page proves total == 3
-    res = eng.execute_script("QUERY (alpha) LIMIT 10;")[0]
-    assert res["result-count"] == 3 and len(res["result"]) == 3
-    # dump-all proves it too
-    res = eng.execute_script("QUERY (alpha);")[0]
-    assert res["result-count"] == 3
 
 
 def test_random_sample_survives_huge_doc_ids(spark):

@@ -1,8 +1,13 @@
 """Smoke tests for the dev tooling that the round workflow depends on
-(the rotation planner feeds gate.py's _DRIVER_ORDER each round)."""
+(the rotation planner feeds gate.py's _DRIVER_ORDER each round) and for
+the gate cache scope that sweep tools drain."""
 
 import importlib.util
 import os
+
+import pytest
+
+from tests.conftest import SF_SMOKE
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -40,88 +45,74 @@ def test_rotate_window_proposal_invariants():
         set(stats["sentinels"]) - head
 
 
-def test_gate_cache_registry_bounded_without_release(spark):
-    """r7 verdict stretch item: a third-party caller that materializes
-    caching gates without ever calling release_gate_caches() must see
-    bounded cache storage — the registry caps itself by unpersisting
-    the oldest entry past maxlen."""
-    from cantera_table_spark import gate as g
-    g.release_gate_caches()          # clean slate
-    n = g._BoundedCacheList.maxlen + 5
-    frames = [spark.range(i + 1).cache() for i in range(n)]
-    for f in frames:
-        f.count()                    # materialize the cache
-        g._GATE_CACHES.append(f)
-    assert len(g._GATE_CACHES) == g._BoundedCacheList.maxlen
-    # the evicted oldest frames are no longer cached; the newest are
-    assert all(f.storageLevel.useMemory is False for f in frames[:5])
-    assert all(f.storageLevel.useMemory for f in frames[5:])
-    g.release_gate_caches()
-    assert len(g._GATE_CACHES) == 0
-    assert all(f.storageLevel.useMemory is False for f in frames)
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-def test_gate_cache_registry_caps_every_mutation_path(spark):
-    """r8 advisory: the cap must hold for extend/insert/+=/slice
-    assignment too, not just append — any growth path a third-party
-    caller uses trims (and unpersists) down to maxlen."""
-    from cantera_table_spark import gate as g
-    g.release_gate_caches()
-    cap = g._BoundedCacheList.maxlen
-    frames = [spark.range(i + 1).cache() for i in range(cap + 4)]
+def test_cache_scope_releases_on_exit_and_on_error(spark):
+    """CacheScope unpersists every frame it persisted: on release(), and
+    when its with block exits by an exception."""
+    from pyspark import StorageLevel
+    from cantera_table_spark.session import CacheScope
+    before = _persistent_rdds(spark)
+    scope = CacheScope()
+    frames = [scope.persist(spark.range(i + 1)) for i in range(3)]
     for f in frames:
         f.count()
-    g._GATE_CACHES.extend(frames)            # bulk registration
-    assert len(g._GATE_CACHES) == cap
-    assert all(f.storageLevel.useMemory is False for f in frames[:4])
-    extra = spark.range(100).cache()
-    extra.count()
-    g._GATE_CACHES += [extra]                 # __iadd__
-    assert len(g._GATE_CACHES) == cap
-    g._GATE_CACHES.insert(0, extra)           # insert
-    assert len(g._GATE_CACHES) == cap
-    g.release_gate_caches()
-    assert len(g._GATE_CACHES) == 0
+    assert len(scope) == 3 and _persistent_rdds(spark) != before
+    # releasing one frame unpersists and drops only that frame
+    scope.release(frames[1])
+    assert len(scope) == 2 and not frames[1].is_cached
+    assert frames[0].is_cached and frames[2].is_cached
+    scope.release()
+    assert len(scope) == 0 and _persistent_rdds(spark) == before
+
+    with pytest.raises(RuntimeError, match="boom"):
+        with CacheScope() as caches:
+            caches.persist(spark.range(5)).count()
+            caches.persist(spark.range(6), StorageLevel.DISK_ONLY).count()
+            assert len(caches) == 2 and _persistent_rdds(spark) != before
+            raise RuntimeError("boom")
+    assert len(caches) == 0 and _persistent_rdds(spark) == before
 
 
-def test_gate_cache_registry_eviction_and_replacement(spark):
-    """r9 review findings: trim must never evict the frame the current
-    mutation just registered (insert at the front included), replaced
-    entries (item/slice assignment) are unpersisted as they leave the
-    registry, and ``*=`` cannot grow past the cap either."""
+def test_queries_release_previous_gate_caches(spark):
+    """A callable from queries() releases the gate scope before building
+    its frame, so a caller that never drains holds at most one gate's
+    caches."""
     from cantera_table_spark import gate as g
+    qs = g.queries()
+    qs["q01_and"](spark, SF_SMOKE).collect()     # warm shared postings
+    before = _persistent_rdds(spark)
+    qs["sim07_quantized_topk"](spark, SF_SMOKE).collect()
+    assert len(g._GATE_CACHES) and _persistent_rdds(spark) != before
+    qs["q01_and"](spark, SF_SMOKE)
+    assert len(g._GATE_CACHES) == 0 and _persistent_rdds(spark) == before
+
+
+# every gate whose body persists a frame (through the gate scope);
+# corr01 (the Engine-held class table) and dd06 (duplicate_clusters)
+# run in the default tier, the rest in the slow one
+CACHING_GATES = ["corr01_feature_mining", "dd06_dedup_clusters"] + [
+    pytest.param(name, marks=pytest.mark.slow) for name in (
+        "corr02_event_prediction", "dd12_dedup_apply",
+        "dd13_dedup_pipeline", "dd15_semantic_dedup", "ir01_bm25",
+        "ml01_logreg_quality", "sim07_quantized_topk",
+        "sim08_quantized_ivf", "tx15_ppl_buckets")]
+
+
+@pytest.mark.parametrize("name", CACHING_GATES)
+def test_gate_caches_released(spark, name):
+    """release_gate_caches() leaves the session's persistent RDDs as the
+    gate found them: CORRELATE's class table included, which corr01's
+    Engine persists."""
+    from cantera_table_spark import gate as g
+    qs = g.queries()
+    qs["q01_and"](spark, SF_SMOKE).collect()     # warm shared postings
+    before = _persistent_rdds(spark)
+    qs[name](spark, SF_SMOKE).collect()
     g.release_gate_caches()
-    cap = g._BoundedCacheList.maxlen
-    frames = [spark.range(i + 1).cache() for i in range(cap)]
-    for f in frames:
-        f.count()
-        g._GATE_CACHES.append(f)
-    fresh = spark.range(200).cache()
-    fresh.count()
-    g._GATE_CACHES.insert(0, fresh)           # at capacity, at front
-    assert len(g._GATE_CACHES) == cap
-    # the just-inserted frame SURVIVES; the oldest other entry went
-    assert fresh.storageLevel.useMemory
-    assert g._GATE_CACHES[0] is fresh
-    assert frames[0].storageLevel.useMemory is False
-    # scalar replacement unpersists the displaced frame
-    repl = spark.range(300).cache()
-    repl.count()
-    displaced = g._GATE_CACHES[1]
-    g._GATE_CACHES[1] = repl
-    assert displaced.storageLevel.useMemory is False
-    assert repl.storageLevel.useMemory
-    # slice replacement unpersists the whole displaced run
-    r2 = spark.range(400).cache()
-    r2.count()
-    displaced_run = list(g._GATE_CACHES[2:4])
-    g._GATE_CACHES[2:4] = [r2]
-    assert all(e.storageLevel.useMemory is False for e in displaced_run)
-    # *= enforces the cap too (docstring's every-growth-path claim)
-    g._GATE_CACHES *= 3
-    assert len(g._GATE_CACHES) == cap
-    g.release_gate_caches()
-    assert len(g._GATE_CACHES) == 0
+    assert _persistent_rdds(spark) == before
 
 
 def test_native_state_store_conflict_raises(spark):
@@ -233,23 +224,3 @@ def test_oracle_shared_fragments_in_lockstep():
     n = min(common_suffix(pq[0], pq[1]), common_suffix(pq[0], pq[2]))
     # the shared ADC-rank suffix (GROUP BY + final approx_d2 select)
     assert n >= 200 and "approx_d2" in pq[0][-n:], (n, pq[0][-50:])
-
-
-def test_gate_cache_trim_keeps_duplicate_registrations_cached(spark):
-    """r11 review: evicting ONE of a frame's duplicate registrations
-    must not unpersist the copy still tracked by the registry."""
-    from cantera_table_spark import gate as g
-    g.release_gate_caches()
-    cap = g._BoundedCacheList.maxlen
-    dup = spark.range(123).cache()
-    dup.count()
-    g._GATE_CACHES.append(dup)
-    g._GATE_CACHES.append(dup)          # duplicate registration
-    for i in range(cap - 1):            # overflow -> trims oldest (dup)
-        f = spark.range(i + 2).cache()
-        f.count()
-        g._GATE_CACHES.append(f)
-    assert g._GATE_CACHES.count(dup) == 1     # one copy evicted
-    assert dup.storageLevel.useMemory         # ...but still cached
-    g.release_gate_caches()
-    assert not dup.storageLevel.useMemory     # final copy unpersists

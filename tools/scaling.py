@@ -21,7 +21,7 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from cantera_table_spark.session import get_spark  # noqa: E402
+from cantera_table_spark.session import CacheScope, get_spark  # noqa: E402
 from cantera_table_spark.model import load_table  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -136,11 +136,9 @@ def main():
             F.count("*").cast("double").alias("score"))
         a = p.filter(F.col("keyword") == "spark").select("doc_id", "score")
         b = p.filter(F.col("keyword") == "slow").select("doc_id", "score")
-        caches = []
-        correlate_sets(p, a, b, caches=caches).write.format("noop") \
-            .mode("overwrite").save()
-        for c in caches:
-            c.unpersist()
+        with CacheScope() as caches:
+            correlate_sets(p, a, b, caches=caches).write.format("noop") \
+                .mode("overwrite").save()
 
     def line_dedup(d):
         from cantera_table_spark.functions.text import dedup_lines
@@ -263,12 +261,10 @@ def main():
         # the factor-dependent work is one hash aggregation + one
         # expand join.
         from cantera_table_spark.functions.dedup import near_dup_clusters
-        caches = []
-        near_dup_clusters(d, min_jaccard=0.12, max_bucket=32,
-                          caches=caches) \
-            .write.format("noop").mode("overwrite").save()
-        for c in caches:
-            c.unpersist()
+        with CacheScope() as caches:
+            near_dup_clusters(d, min_jaccard=0.12, max_bucket=32,
+                              caches=caches) \
+                .write.format("noop").mode("overwrite").save()
 
     def retention(e):
         from cantera_table_spark.functions.timeseries import (
@@ -462,11 +458,10 @@ def main():
         n = _semdedup_n.get(id(em))
         if n is None:
             n = _semdedup_n[id(em)] = max(8, em.count() // 600)
-        caches = []
-        semantic_dedup(em, threshold=0.35, n_clusters=n, caches=caches) \
-            .write.format("noop").mode("overwrite").save()
-        for c in caches:
-            c.unpersist()
+        with CacheScope() as caches:
+            semantic_dedup(em, threshold=0.35, n_clusters=n,
+                           caches=caches) \
+                .write.format("noop").mode("overwrite").save()
 
     def semdedup_hier(em):
         # same contract as semdedup (k grows with N) but on the ANN
@@ -478,13 +473,11 @@ def main():
         n = _semdedup_n.get(id(em))
         if n is None:
             n = _semdedup_n[id(em)] = max(8, em.count() // 600)
-        caches = []
-        semantic_dedup(em, threshold=0.35, n_clusters=n, caches=caches,
-                       assign="hier", nprobe=2,
-                       coarse_k=max(2, int(math.ceil(math.sqrt(n))))) \
-            .write.format("noop").mode("overwrite").save()
-        for c in caches:
-            c.unpersist()
+        with CacheScope() as caches:
+            semantic_dedup(em, threshold=0.35, n_clusters=n,
+                           caches=caches, assign="hier", nprobe=2,
+                           coarse_k=max(2, int(math.ceil(math.sqrt(n))))) \
+                .write.format("noop").mode("overwrite").save()
 
     def assign_flat(em):
         # the assignment stage ALONE, k ∝ N (isolates the N*k cosine
