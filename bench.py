@@ -201,7 +201,7 @@ def main() -> None:
     # Route gate DSL queries through the parquet-backed catalog.  A
     # FRESH Engine per call preserves gate._engine's contract (only the
     # catalog is memoized there): a single shared instance would leak
-    # SET output_format/count_mode state across phases if a
+    # SET output_format/time_format state across phases if a
     # session-state gate ever joins BENCH_QUERIES (r11 review).
     gate._engine = \
         lambda s, d: Engine(catalog, unique_postings=True)  # noqa: SLF001

@@ -10,8 +10,9 @@ Grammar transcribed from the reference bison/flex grammar
     PARSE q
     SET OUTPUT FORMAT CSV|JSON
     SET TIME FORMAT 'fmt'
-    SET COUNT MODE EXACT|NONE   (engine extension; COUNT/MODE are
-                                 contextual, not reserved)
+
+A QUERY envelope always carries ``result-count``, as in the reference;
+no SET statement switches it off.
 
 Expression operators (all left-associative, one precedence level, matching
 the reference's single ``%left`` declaration; comparisons bind tighter by
@@ -285,28 +286,8 @@ class Parser:
         return SelectStmt(fields, q, with_summaries=with_summaries,
                           parallel=parallel)
 
-    def _at_ident_word(self, word: str) -> bool:
-        """Contextual (non-reserved) word match: COUNT/MODE etc. stay
-        ordinary search terms everywhere outside SET."""
-        t = self.peek()
-        return t.kind == "IDENT" and str(t.value).upper() == word
-
     def _parse_set_stmt(self) -> SetStmt:
         self.expect_kw("SET")
-        if self._at_ident_word("COUNT"):
-            # engine extension (not in the reference grammar): SET COUNT
-            # MODE EXACT|NONE picks the result-count policy
-            # (engine.query_stmt count_mode)
-            self.next()
-            if not self._at_ident_word("MODE"):
-                raise ParseError("expected MODE after SET COUNT")
-            self.next()
-            t = self.next()
-            val = str(t.value).lower() if t.kind in ("IDENT", "STRING") \
-                else None
-            if val not in ("exact", "none"):
-                raise ParseError("SET COUNT MODE takes EXACT|NONE")
-            return SetStmt("count_mode", val)
         if self.at_kw("OUTPUT"):
             self.next()
             self.expect_kw("FORMAT")
@@ -325,7 +306,7 @@ class Parser:
                 raise ParseError("SET TIME FORMAT takes a 'string literal'")
             return SetStmt("time_format", t.value)
         raise ParseError(
-            "expected OUTPUT FORMAT, TIME FORMAT or COUNT MODE")
+            "expected OUTPUT FORMAT or TIME FORMAT")
 
     # -- expressions --------------------------------------------------
     def _parse_paren_query(self) -> Node:

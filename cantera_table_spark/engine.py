@@ -30,20 +30,11 @@ from cantera_table_spark.session import CacheScope
 class Engine:
     def __init__(self, catalog: Catalog, unique_postings: bool = False,
                  blob_fetcher: Callable[[str], str] | None = None,
-                 f32_scores: bool = False, count_mode: str = "exact"):
+                 f32_scores: bool = False):
         self.catalog = catalog
         self.unique_postings = unique_postings
         self.blob_fetcher = blob_fetcher
         self.f32_scores = f32_scores
-        if count_mode not in ("exact", "none"):
-            raise ValueError(f"count_mode must be exact|none, "
-                             f"got {count_mode!r}")
-        # result-count policy for QUERY envelopes (SURVEY §4): "exact"
-        # (reference-faithful, query.cc:933 — an observer counts the
-        # result inside the top-k page job, no extra job) or "none"
-        # (omit result-count; the top-k reads the whole result either
-        # way, so "none" saves only the count itself).
-        self.count_mode = count_mode
         # session parameters (reference SET statement, statement.cc:35-48;
         # default CSV per output.cc:32)
         self.output_format = "csv"
@@ -108,8 +99,6 @@ class Engine:
                 # reference tree — SET TIME FORMAT is vestigial there,
                 # so consuming it here would invent behavior
                 self.time_format = stmt.value
-            elif stmt.parameter == "count_mode":
-                self.count_mode = stmt.value
             return None
         raise TypeError(f"unknown statement {stmt!r}")
 
@@ -118,65 +107,50 @@ class Engine:
     # ------------------------------------------------------------------
     def query_df(self, query: ast.Node,
                  thresholds: ast.Thresholds | None = None,
-                 limit: int = -1, offset: int = 0,
-                 compiler: QueryCompiler | None = None) -> DataFrame:
+                 limit: int = -1, offset: int = 0) -> DataFrame:
         """Evaluate to the (doc_id, score) page DataFrame (pre-envelope)."""
-        comp = compiler or self._compiler()
-        result = comp.process_query(query, use_max=True)
-        if thresholds is not None:
-            key = thresholds.key
-            if key.startswith("~"):
-                key = key[1:]
-            kp = comp._lookup_leaf(key)
-            result = sa.threshold_filter(result, kp, thresholds.values)
+        result = self._result(self._compiler(), query, thresholds)
         return sa.top_k(result, limit, offset)
 
-    def query_stmt(self, stmt: ast.QueryStmt, count_mode: str | None = None):
+    @staticmethod
+    def _result(comp: QueryCompiler, query: ast.Node,
+                thresholds: ast.Thresholds | None) -> DataFrame:
+        """The unpaged QUERY result (doc_id, score); THRESHOLDS keeps the
+        docs whose key score is in range and scores them by it (a
+        leading ``~`` on the key only reverses the headers)."""
+        result = comp.process_query(query, use_max=True)
+        if thresholds is None:
+            return result
+        kp = comp._lookup_leaf(thresholds.key.removeprefix("~"))
+        return sa.threshold_filter(result, kp, thresholds.values)
+
+    def query_stmt(self, stmt: ast.QueryStmt):
         """Full QUERY executor: returns the JSON envelope as a dict
         (``{"result-count": N, "result": [...]}`` — query.cc:933-941) or,
         for KEYS FOR, a list of keys.
 
         A statement collects the top-k page in one action, then fetches
         the page's summaries by doc_id in a second, small one (the
-        reference seeks each result's summary, query.cc:813-890).
-        ``count_mode`` (default: the engine's) picks the result-count
-        policy: "exact" counts the result inside the page action
-        (reference behavior; LIMIT 0 counts instead of paging, and a
-        dump-all page counts its own rows); "none" omits
-        ``result-count``."""
-        mode = count_mode or self.count_mode
-        if mode not in ("exact", "none"):
-            raise ValueError(f"count_mode must be exact|none, "
-                             f"got {mode!r}")
-        if stmt.keys_only:
-            # KEYS FOR output carries no result-count, so counting buys
-            # nothing (r11 review finding); offset beyond the result
-            # still returns the bare [] through the empty page
-            mode = "none"
+        reference seeks each result's summary, query.cc:813-890).  Every
+        envelope carries the whole result's count, as the reference's
+        does, taken where it costs least: inside the page action for
+        LIMIT > 0, in a count of its own for LIMIT 0, and as offset plus
+        page length without a LIMIT."""
         comp = self._compiler()
-        result = comp.process_query(stmt.query, use_max=True)
-
-        thr_values = None
-        use_date_headers = reverse = False
-        if stmt.thresholds is not None:
-            key = stmt.thresholds.key
-            if key.startswith("~"):
-                key = key[1:]
-                reverse = True
-            use_date_headers = self.catalog.is_timestamped(key)
-            thr_values = sorted(stmt.thresholds.values)
-            kp = comp._lookup_leaf(key)
-            result = sa.threshold_filter(result, kp, thr_values)
-
+        result = self._result(comp, stmt.query, stmt.thresholds)
+        # KEYS FOR output carries no result-count, so it counts nothing;
+        # offset beyond the result still returns the bare [] through the
+        # empty page
+        counted = not stmt.keys_only
         total = obs = None
-        if mode == "exact" and stmt.limit == 0:
+        if counted and stmt.limit == 0:
             # the optimizer drops an empty page together with any
             # observer on it, so LIMIT 0 counts in a job of its own
             total = result.count()
             if stmt.offset >= total:
                 # Reference prints a bare "[]" here (query.cc:796-799)
                 return []
-        elif mode == "exact" and stmt.limit > 0:
+        elif counted and stmt.limit > 0:
             # count every result row as the top-k reads it: the
             # observer sits directly under TakeOrderedAndProject, in the
             # job's result stage, where Spark applies each partition's
@@ -195,7 +169,7 @@ class Engine:
             return []
         if obs is not None:
             total = obs.get["n"]
-        elif mode == "exact" and stmt.limit < 0:
+        elif counted and stmt.limit < 0:
             # a dump-all page holds the whole result past the offset
             total = stmt.offset + len(page)
 
@@ -203,6 +177,12 @@ class Engine:
         if stmt.keys_only:
             return [s["key"] for r in page for s in summaries[r["doc_id"]]]
 
+        thr = stmt.thresholds
+        if thr is not None:
+            thr_values = sorted(thr.values)
+            reverse = thr.key.startswith("~")
+            use_date_headers = self.catalog.is_timestamped(
+                thr.key.removeprefix("~"))
         results = []
         for r in page:
             h = headers.get(r["doc_id"])
@@ -215,12 +195,10 @@ class Engine:
                 if h is not None:
                     obj["_header"] = h["_header"]
                     obj["_header_key"] = h["_header_key"]
-                if thr_values is not None:
+                if thr is not None:
                     obj.update(self._threshold_header(
                         r["score"], thr_values, use_date_headers, reverse))
                 results.append(obj)
-        if total is None:
-            return {"result": results}
         return {"result-count": total, "result": results}
 
     def _page_lookup(self, comp: QueryCompiler, page: list,

@@ -2152,15 +2152,13 @@ def p01_parse_echo(spark, sf_dir):
 
 @gate("set01_session_state", _values_oracle(
     [(0, "output_format", "csv"), (1, "output_format", "json"),
-     (2, "time_format", "%Y-%m-%d"), (3, "output_format", "json"),
-     (4, "count_mode", "exact"), (5, "count_mode", "none")],
+     (2, "time_format", "%Y-%m-%d"), (3, "output_format", "json")],
     "step, parameter, value"))
 def set01_session_state(spark, sf_dir):
     """stmt SET (statement.cc:35-48): OUTPUT FORMAT / TIME FORMAT are
     session state with no output; each step records the engine state
     after one SET executes (default csv, then two mutations, then a
-    no-op re-set).  Steps 4-5 cover the COUNT MODE engine extension
-    (result-count policy).  Literal oracle."""
+    no-op re-set).  Literal oracle."""
     eng = _engine(spark, sf_dir)
     rows = [(0, "output_format", eng.output_format)]
     eng.execute_script("SET OUTPUT FORMAT JSON;")
@@ -2169,9 +2167,6 @@ def set01_session_state(spark, sf_dir):
     rows.append((2, "time_format", eng.time_format))
     eng.execute_script("SET OUTPUT FORMAT JSON;")
     rows.append((3, "output_format", eng.output_format))
-    rows.append((4, "count_mode", eng.count_mode))
-    eng.execute_script("SET COUNT MODE NONE;")
-    rows.append((5, "count_mode", eng.count_mode))
     return spark.createDataFrame(rows, "step int, parameter string, "
                                        "value string")
 

@@ -12,11 +12,16 @@ NEG_INF = float("-inf")
 # the one NaN object the CORRELATE model emits: tuples holding the same
 # object compare equal, so callers map the engine's NaNs onto it
 NAN = float("nan")
+# spark_order's key for a null score: below every double's key
+NULL = (-1, 0.0)
 
 
-def spark_order(s: float) -> tuple:
-    """Sort key of a double in Spark's order: NaN equals NaN and sorts
-    above every other value, +inf included."""
+def spark_order(s: float | None) -> tuple:
+    """Sort key of a nullable double in Spark's ascending order: null
+    sorts first, and NaN equals NaN and sorts above every other value,
+    +inf included."""
+    if s is None:
+        return NULL
     return (1, 0.0) if s != s else (0, s)
 
 
@@ -132,6 +137,9 @@ def correlate(postings, set_a, set_b, raw=False):
     compare in Spark's order (spark_order): a NaN score makes its
     keyword continuous, lies in a range [next, +inf) and in no range
     (-inf, mid] below NaN, and a NaN range end is emitted as ``NAN``.
+    A null score (None) sorts first in the split scan, lies only in the
+    whole range (a bounded range's comparison with it is null), and
+    does not make its keyword continuous (``max`` skips nulls).
     set_a / set_b: iterables of doc ids; B is made disjoint from A.
 
     Returns sorted rows (log_odds_rounded3, match_count_a,
@@ -183,7 +191,7 @@ def correlate(postings, set_a, set_b, raw=False):
 
     by_kw = defaultdict(list)
     for kw, d, s in postings:
-        by_kw[kw].append((d, float(s)))
+        by_kw[kw].append((d, None if s is None else float(s)))
 
     out = []
     for kw, rows in by_kw.items():
@@ -192,8 +200,9 @@ def correlate(postings, set_a, set_b, raw=False):
         krows = [(d, spark_order(s),
                   1 if d in a else (-1 if d in b else None))
                  for d, s in rows]
-        # Spark's max(abs(score)) > 0: any nonzero score, or any NaN
-        continuous = any(k != (0, 0.0) for _, k, _ in krows)
+        # Spark's max(abs(score)) > 0: any nonzero score, or any NaN;
+        # nulls are skipped
+        continuous = any(k not in ((0, 0.0), NULL) for _, k, _ in krows)
         n_classes = sum(1 for _, _, c in krows if c is not None)
 
         tasks = []
@@ -239,8 +248,10 @@ def correlate(postings, set_a, set_b, raw=False):
                 tasks.append((None, None))
 
         for lo, hi in tasks:
+            bounded = lo is not None or hi is not None
             in_rng = [(d, c) for d, k, c in krows
-                      if (lo is None or k >= lo)
+                      if not (bounded and k == NULL)
+                      and (lo is None or k >= lo)
                       and (hi is None or k <= hi)]
             ma = len({d for d, c in in_rng if c == 1})
             mb = len({d for d, c in in_rng if c == -1})

@@ -295,7 +295,7 @@ def _boundary_safe(postings, set_a, set_b):
     lim_b = max(len(b) // 20, 1)
     by_kw = defaultdict(list)
     for kw, d, s in postings:
-        by_kw[kw].append((d, ref_model.spark_order(float(s)),
+        by_kw[kw].append((d, ref_model.spark_order(s),
                           1 if d in a else (-1 if d in b else None)))
     for kw, krows in by_kw.items():
         per = {}
@@ -347,7 +347,8 @@ def _boundary_safe(postings, set_a, set_b):
 _postings_st = st.lists(
     st.tuples(st.sampled_from(["kw0", "kw1", "kw2"]),
               st.integers(0, 19),
-              st.sampled_from([0.0, 1.0, 2.0, 3.0, 5.0, ref_model.NAN])),
+              st.sampled_from([0.0, 1.0, 2.0, 3.0, 5.0, ref_model.NAN,
+                               None])),
     min_size=1, max_size=50)
 _docs_st = st.lists(st.integers(0, 19), max_size=15)
 
@@ -370,7 +371,7 @@ def test_correlate_matches_model(spark, postings, set_a, set_b):
     assume(_boundary_safe(postings, set_a, set_b))
     want = ref_model.correlate(postings, set_a, set_b)
     pdf = spark.createDataFrame(
-        [(k, int(d), float(s)) for k, d, s in postings], P_SCHEMA)
+        [(k, int(d), s) for k, d, s in postings], P_SCHEMA)
     adf = spark.createDataFrame(
         [(int(d), 0.0) for d in set_a] or [], S_SCHEMA)
     bdf = spark.createDataFrame(
@@ -396,7 +397,7 @@ def test_correlate_unique_docs_path_matches_model(spark, postings,
     assume(_boundary_safe(postings, set_a, set_b))
     want = ref_model.correlate(postings, set_a, set_b)
     pdf = spark.createDataFrame(
-        [(k, int(d), float(s)) for k, d, s in postings], P_SCHEMA)
+        [(k, int(d), s) for k, d, s in postings], P_SCHEMA)
     adf = spark.createDataFrame(
         [(int(d), 0.0) for d in set_a] or [], S_SCHEMA)
     bdf = spark.createDataFrame(
@@ -481,9 +482,10 @@ def test_correlate_null_scores_stay_out_of_bounded_ranges(spark, postings,
     """A null score (a TSV row whose score does not parse) joins the
     split search as the first histogram row but lies in no bounded
     range: ``score <= mid`` is null.  The left range's prefix-sum count
-    must therefore leave it out, as the per-doc count does.  The model
-    takes no null scores; ``want`` is the output of the earlier
-    per-range re-count, which filtered each range by score."""
+    must therefore leave it out, as the per-doc count does.  ``want``
+    is the output of the earlier per-range re-count, which filtered
+    each range by score, and the model's."""
+    assert ref_model.correlate(postings, _A, _B) == want
     assert _edge_rows(spark, postings, unique) == want
 
 

@@ -56,53 +56,35 @@ def test_keys_only_and_offset_beyond(spark, catalog):
     assert eng.execute_script("QUERY (alpha) LIMIT 2 OFFSET 99;")[0] == []
 
 
-def test_count_mode_envelopes(spark, catalog, monkeypatch):
-    """count_mode policies: exact is reference-faithful; none omits
-    result-count AND never runs a count job (pinned by poisoning
-    DataFrame.count); there is no approx mode."""
-    DataFrame = dataframe_class(spark)
+def test_count_mode_envelopes(spark, catalog):
+    """One result-count rule, the reference's: every envelope carries
+    the exact count, and no setting switches it off."""
+    from cantera_table_spark.dsl.parser import parse_query, parse_script
 
-    exact = Engine(catalog, unique_postings=True).execute_script(
-        "QUERY (alpha) LIMIT 2;")[0]
-    assert exact["result-count"] == 3
+    eng = Engine(catalog, unique_postings=True)
+    assert eng.execute_script("QUERY (alpha) LIMIT 2;")[0] == {
+        "result-count": 3,
+        "result": [{"_key": "d2", "title": "two", "rank": 9},
+                   {"_key": "d0", "title": "zero", "rank": 3}]}
 
-    eng_none = Engine(catalog, unique_postings=True, count_mode="none")
-    monkeypatch.setattr(
-        DataFrame, "count",
-        lambda self: (_ for _ in ()).throw(
-            AssertionError("count_mode=none must not run a count job")))
-    none = eng_none.execute_script("QUERY (alpha) LIMIT 2;")[0]
-    assert "result-count" not in none
-    assert [r["_key"] for r in none["result"]] == ["d2", "d0"]
-    # offset beyond the result set still degrades to the bare [] form
-    assert eng_none.execute_script(
-        "QUERY (alpha) LIMIT 2 OFFSET 99;")[0] == []
-    # per-call override beats the engine default
-    monkeypatch.undo()
-    env = eng_none.query_stmt(
-        __import__("cantera_table_spark.dsl.parser",
-                   fromlist=["parse_script"]).parse_script(
-            "QUERY (alpha) LIMIT 2;")[0], count_mode="exact")
-    assert env["result-count"] == 3
-
-    for mode in ("approx", "bogus"):
-        with pytest.raises(ValueError):
+    for mode in ("none", "exact"):
+        with pytest.raises(TypeError):
             Engine(catalog, unique_postings=True, count_mode=mode)
+        with pytest.raises(TypeError):
+            eng.query_stmt(parse_script("QUERY (alpha) LIMIT 2;")[0],
+                           count_mode=mode)
+    with pytest.raises(TypeError):
+        eng.query_df(parse_query("alpha"), compiler=eng._compiler())
 
 
 def test_limit_zero_keeps_envelope_in_all_modes(spark, catalog):
     """LIMIT 0 over a non-empty result at offset 0 is an empty PAGE, not
-    an empty RESULT: exact mode returns {result-count, result: []} and
-    none must not degrade it to the bare [] (reference prints bare []
-    only when offset >= result size, query.cc:795-798)."""
+    an empty RESULT: it returns {result-count, result: []}, not the
+    bare [] the reference prints only when offset >= result size
+    (query.cc:795-798)."""
     exact = Engine(catalog, unique_postings=True).execute_script(
         "QUERY (alpha) LIMIT 0;")[0]
     assert exact == {"result-count": 3, "result": []}
-
-    none = Engine(catalog, unique_postings=True,
-                  count_mode="none").execute_script(
-        "QUERY (alpha) LIMIT 0;")[0]
-    assert none == {"result": []}
 
 
 def test_exact_count_edge_cases(spark, catalog):
@@ -477,9 +459,9 @@ def test_random_sample_survives_huge_doc_ids(spark):
 
 def test_r11_core_review_engine_pins(spark, catalog, monkeypatch):
     """r11 core-path review findings, pinned: (a) KEYS FOR never runs
-    a count job even under count_mode=exact (its output carries no
-    result-count; the offset-beyond-total bare [] falls out of the
-    empty page); (b) a catalog mixing BUCKETED and unbucketed index
+    a count job, though every QUERY envelope is counted (its output
+    carries no result-count; the offset-beyond-total bare [] falls out
+    of the empty page); (b) a catalog mixing BUCKETED and unbucketed index
     tables returns postings from both on a plain lookup (the bucket
     prune filter is null-safe — a bare equality silently dropped every
     NULL-bucket row of the unbucketed table)."""
@@ -488,7 +470,7 @@ def test_r11_core_review_engine_pins(spark, catalog, monkeypatch):
 
     from cantera_table_spark.model import bucket_expr
 
-    eng = Engine(catalog, unique_postings=True)   # default: exact
+    eng = Engine(catalog, unique_postings=True)
     monkeypatch.setattr(
         DataFrame, "count",
         lambda self: (_ for _ in ()).throw(
@@ -509,8 +491,7 @@ def test_r11_core_review_engine_pins(spark, catalog, monkeypatch):
     cat = Catalog(summaries=catalog.summaries,
                   indexes=[bucketed, plain], postings_buckets=16)
     from cantera_table_spark.dsl.parser import parse_query
-    res = Engine(cat, unique_postings=True,
-                 count_mode="none").query_df(parse_query("alpha"))
+    res = Engine(cat, unique_postings=True).query_df(parse_query("alpha"))
     assert {(r.doc_id, r.score) for r in res.collect()} == \
         {(10, 9.0), (20, 7.0)}
 

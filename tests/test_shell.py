@@ -6,6 +6,7 @@ import json
 
 import pytest
 
+from cantera_table_spark.dsl.parser import ParseError
 from cantera_table_spark.engine import Engine
 from cantera_table_spark.model import Catalog
 from cantera_table_spark.shell import run_script
@@ -56,12 +57,14 @@ def test_select_csv_and_json_formats(spark, catalog):
 def test_parse_and_set_count_mode_lines(spark, catalog):
     eng = Engine(catalog, unique_postings=True)
     out = lines_of(eng, "PARSE alpha OR beta; "
-                        "SET COUNT MODE NONE; "
+                        "SET OUTPUT FORMAT JSON; "
                         "QUERY (alpha) LIMIT 1;")
     assert out[0] == "(alpha OR beta)"
-    # SET emits nothing; the following envelope has no result-count
+    # SET emits nothing, and no SET switches the result-count off
     env = json.loads(out[1])
-    assert "result-count" not in env and len(env["result"]) == 1
+    assert env["result-count"] == 3 and len(env["result"]) == 1
+    with pytest.raises(ParseError):
+        lines_of(eng, "SET COUNT MODE NONE;")
 
 
 def test_correlate_tsv_shape(spark, catalog):
