@@ -113,7 +113,7 @@ def _operators(facts):
     ("QUERY (kw7) THRESHOLDS 1,3,6 FOR KEY 'kw7' LIMIT 10;", True)])
 def test_exact_count_rides_the_topk_page(spark, parquet_catalog,
                                          monkeypatch, text, unique):
-    """Exact mode takes the result-count from an observer directly
+    """A QUERY takes its result-count from an observer directly
     under the top-k page — the job's result stage, no cache, no count
     job — then fetches the page's summaries by id, the ids pushed into
     the Parquet scan."""

@@ -88,7 +88,7 @@ def test_limit_zero_keeps_envelope_in_all_modes(spark, catalog):
 
 
 def test_exact_count_edge_cases(spark, catalog):
-    """Exact mode counts inside the page job; every way a page can be
+    """A QUERY counts inside the page job; every way a page can be
     empty, partial or unbounded keeps the reference's envelope."""
     eng = Engine(catalog, unique_postings=True)
 
@@ -153,13 +153,13 @@ def test_duplicate_summary_rows_keep_one_object_each(spark, catalog):
 
 
 def test_exact_mode_never_caches_or_counts(spark, catalog, monkeypatch):
-    """With LIMIT > 0 (or no LIMIT) exact mode takes its result-count
+    """With LIMIT > 0 (or no LIMIT) a QUERY takes its result-count
     from the page job: no DataFrame.cache, no separate count job."""
     DataFrame = dataframe_class(spark)
 
     def poison(name):
         def fail(self, *a, **k):
-            raise AssertionError(f"exact mode must not call {name}")
+            raise AssertionError(f"a counted page must not call {name}")
         return fail
 
     eng = Engine(catalog, unique_postings=True)
