@@ -19,10 +19,8 @@ Two decode tiers:
   per-frame JPEG decode).  These run the full parse-pixels /
   parse-samples path — not byte fakes.
 - ``decode_media``: format-agnostic byte-level features (length,
-  header, checksum) for payloads whose codecs need native libraries
-  not present in this container (inter-frame video: H.264/H.265 —
-  the ``decode_image_real`` plug-point raises NotImplementedError
-  for those, clearly marked).
+  header, checksum).  Formats without a codec here (inter-frame
+  video: H.264/H.265) fall back to these byte features.
 """
 
 from __future__ import annotations
@@ -50,23 +48,6 @@ DECODED_SCHEMA = T.StructType([
     T.StructField("header_hex", T.StringType(), True),
     T.StructField("byte_checksum", T.LongType(), False),
 ])
-
-
-def decode_image_real(data: bytes):  # pragma: no cover - container stub
-    """Plug an inter-frame video codec (ffmpeg) in here.
-
-    BMP (``decode_bmp``), PNG (``decode_png`` — stdlib zlib inflate +
-    numpy unfiltering, all five scanline filters), baseline JPEG
-    (``decode_jpeg`` — from-scratch Huffman + IDCT), and Motion-JPEG
-    AVI video (``decode_avi_mjpeg``) decode for real; this plug-point
-    covers inter-frame compressed video (H.264/H.265), whose codecs
-    are native libraries not present in this container."""
-    raise NotImplementedError(
-        "inter-frame video codecs (H.264/H.265) are not available in "
-        "this container; BMP/PNG/JPEG/WAV/MJPEG-AVI decode for real "
-        "(decode_bmp/decode_png/decode_jpeg/decode_wav/"
-        "decode_avi_mjpeg), other formats fall back to decode_media "
-        "byte features")
 
 
 # ---------------------------------------------------------------------------

@@ -1697,20 +1697,13 @@ def corr02_event_prediction(spark, sf_dir):
     from cantera_table_spark.operators.correlate import (
         correlate_sets, filter_by_timestamp_sets)
     keys = ts_postings.filter(F.col("keyword") != "ts:purchase")
-    # everything branches off the per-(keyword, doc) min-aggregate, so
-    # keys/set rows are provably unique (unique_rows skips the three
-    # redundant min-groupBy shuffles) and set_a/set_b are unique AND
-    # disjoint by construction — the score predicate partitions one
-    # grouped table, so the b-disjointing anti-join the generic path
-    # needs removes nothing here and is dropped outright (presplit
-    # skips the class table's groupBy inside correlate_sets too); with
-    # unique rows the range counts are read off the split search's
-    # prefix sums (same counts; the oracle's count(DISTINCT ...)
-    # degenerates to count on unique rows)
-    filtered = filter_by_timestamp_sets(keys, set_a, set_b,
-                                        unique_rows=True)
+    # the grouped filter emits one row per (keyword, doc_id), so
+    # unique_docs holds and the range counts are read off the split
+    # search's prefix sums (the oracle's count(DISTINCT ...) degenerates
+    # to count on unique rows)
+    filtered = filter_by_timestamp_sets(keys, set_a, set_b)
     return correlate_sets(filtered, set_a, set_b, caches=_GATE_CACHES,
-                          unique_docs=True, presplit=True)
+                          unique_docs=True)
 
 
 # Shared LSH -> verify -> connected-components oracle body (dd06, dd12)

@@ -32,7 +32,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import yaml
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -186,7 +187,6 @@ class Catalog:
     def _match_kind(self, key: str, kind: str) -> bool:
         """reference keywords.h:18-45 — prefix match, or full regex
         match (RE2::FullMatch, keywords.cc:66-92)."""
-        import re
         for pattern, is_regex, k in self.keyword_meta:
             if k != kind:
                 continue
@@ -196,6 +196,19 @@ class Catalog:
             elif key.startswith(pattern):
                 return True
         return False
+
+    def kind_match_col(self, kind: str) -> Column:
+        """``_match_kind`` as a Column over ``keyword``, evaluated in the
+        JVM (a Python UDF would both unpickle-crash on the captured
+        catalog and drop the filter out of codegen).  Regex patterns are
+        anchored to FULL matches, as ``re.fullmatch`` above."""
+        out = F.lit(False)
+        for pattern, is_regex, k in self.keyword_meta:
+            if k == kind:
+                out = out | (F.col("keyword").rlike(f"^(?:{pattern})$")
+                             if is_regex
+                             else F.col("keyword").startswith(pattern))
+        return out
 
     def is_timestamped(self, key: str) -> bool:
         return self._match_kind(key, "timestamped")
@@ -207,101 +220,26 @@ class Catalog:
 
 
 def load_keywords_config(path: str) -> list[tuple[str, bool, str]]:
-    """Parse a keywords.yaml (reference keywords.cc:20-58): top-level
-    ``ephemeral:`` / ``timestamped:`` sequences of scalars; ``/re/``
-    items are full-match regexes, anything else a prefix.
-
-    Uses PyYAML when available, else a minimal parser for exactly this
-    restricted shape (two mapping keys, scalar sequence items).
+    """Parse a keywords.yaml (reference keywords.cc:20-58) with PyYAML:
+    top-level ``ephemeral:`` / ``timestamped:`` sequences of scalars;
+    ``/re/`` items are full-match regexes, anything else a prefix.
     """
-    kinds = ("ephemeral", "timestamped")
-    try:
-        import yaml  # type: ignore
-        with open(path) as f:
-            config = yaml.safe_load(f) or {}
-        items = []
-        for kind in kinds:
-            for v in (config.get(kind) or []):
-                # a bare "- foo:" sequence item parses as {"foo": None};
-                # the intended scalar is the "foo:" prefix
-                if isinstance(v, dict) and len(v) == 1 \
-                        and next(iter(v.values())) is None:
-                    v = f"{next(iter(v))}:"
-                items.append((kind, str(v)))
-    except ImportError:
-        items = []
-        current = None
-
-        def strip_comment(s: str) -> str:
-            # YAML comment rules, minimally: '#' starts a comment only
-            # OUTSIDE quotes and only at line start or after
-            # whitespace — a naive split('#') truncated quoted
-            # patterns containing '#', a valid DSL identifier char
-            # (r11 review finding), so "- '/tag#.*/'" kept only
-            # "- '/tag" under the fallback while PyYAML kept it whole.
-            # Quote tracking honors YAML escapes (r11 advisory): a \"
-            # inside double quotes is a literal quote, not a close —
-            # and '' inside single quotes is an escaped quote — so
-            # "- \"tag\\\"x #y\"" keeps its '#' exactly like PyYAML.
-            # A quote OPENS only at a value start (line start or after
-            # whitespace), like YAML: a mid-scalar apostrophe
-            # ("- don't  # note") is a literal char, not an opener
-            # that would swallow the rest of the line's comment
-            # (r12 review finding).
-            quote = None
-            i, n = 0, len(s)
-            while i < n:
-                ch = s[i]
-                if quote == '"':
-                    if ch == "\\":
-                        i += 2
-                        continue
-                    if ch == '"':
-                        quote = None
-                elif quote == "'":
-                    if ch == "'":
-                        if i + 1 < n and s[i + 1] == "'":
-                            i += 2
-                            continue
-                        quote = None
-                elif ch in "'\"" and (i == 0 or s[i - 1] in " \t"):
-                    quote = ch
-                elif ch == "#" and (i == 0 or s[i - 1] in " \t"):
-                    return s[:i]
-                i += 1
-            return s
-
-        with open(path) as f:
-            for raw in f:
-                line = strip_comment(raw).rstrip()
-                if not line.strip():
-                    continue
-                if not line.startswith((" ", "\t", "-")) and \
-                        line.endswith(":"):
-                    name = line[:-1].strip()
-                    current = name if name in kinds else None
-                elif line.lstrip().startswith("- ") and current:
-                    val = line.lstrip()[2:].strip()
-                    if len(val) >= 2 and val[0] == val[-1] \
-                            and val[0] in "'\"":
-                        # quoted scalar: unescape like PyYAML would —
-                        # \X -> X inside double quotes (covers \" \\;
-                        # the restricted shape never needs \n-class
-                        # escapes), '' -> ' inside single quotes
-                        body = val[1:-1]
-                        if val[0] == '"':
-                            val = re.sub(r"\\(.)", r"\1", body)
-                        else:
-                            val = body.replace("''", "'")
-                    else:
-                        val = val.strip("'\"")
-                    items.append((current, val))
+    with open(path) as f:
+        config = yaml.safe_load(f) or {}
     meta = []
-    for kind, expr in items:
-        if len(expr) > 2 and expr.startswith("/") and expr.endswith("/"):
-            meta.append((expr[1:-1], True, kind))
-        else:
-            meta.append((expr, False, kind))
+    for kind in ("ephemeral", "timestamped"):
+        for expr in (config.get(kind) or []):
+            # a bare "- foo:" sequence item parses as {"foo": None};
+            # the intended scalar is the "foo:" prefix
+            if isinstance(expr, dict) and len(expr) == 1 \
+                    and next(iter(expr.values())) is None:
+                expr = f"{next(iter(expr))}:"
+            expr = str(expr)
+            if len(expr) > 2 and expr.startswith("/") \
+                    and expr.endswith("/"):
+                meta.append((expr[1:-1], True, kind))
+            else:
+                meta.append((expr, False, kind))
     return meta
 
 

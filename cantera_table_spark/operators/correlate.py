@@ -56,8 +56,7 @@ MIN_GAIN = math.log(1.05)              # correlate.cc:346
 
 def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
                    *, caches: CacheScope,
-                   unique_docs: bool = False,
-                   presplit: bool = False) -> DataFrame:
+                   unique_docs: bool = False) -> DataFrame:
     """Core pipeline given resolved doc sets.
 
     postings: (keyword, doc_id, score) — the feature space.
@@ -73,10 +72,6 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
     (and preserved by the timestamp filters, which group per doc).
     Matching docs then equal matching rows, so the contingency counts
     are read off the split search's prefix sums.
-    presplit: promise that set_a / set_b are each already one row per
-    doc_id AND mutually disjoint (corr02 builds them by splitting one
-    grouped table on a score predicate) — skips the class-table
-    groupBy.
 
     Returns (log_odds, match_count_a, match_count_b, keyword, min_score,
     max_score) with null min/max for unbounded ends.
@@ -98,13 +93,12 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
     exact-doc count without that promise re-reads the (persisted) raw
     class rows, collapsed to one row per (keyword, doc).
     """
-    tagged = (set_a.select("doc_id", F.lit(1).alias("cls"))
-              .unionByName(set_b.select("doc_id", F.lit(-1).alias("cls"))))
-    if not presplit:
-        # one row per doc; a doc in both sets counts for A only
-        # (correlate.cc:498-500: B minus A)
-        tagged = tagged.groupBy("doc_id").agg(F.max("cls").alias("cls"))
-    classes = caches.persist(tagged)
+    # one row per doc; a doc in both sets counts for A only
+    # (correlate.cc:498-500: B minus A)
+    classes = caches.persist(
+        set_a.select("doc_id", F.lit(1).alias("cls"))
+        .unionByName(set_b.select("doc_id", F.lit(-1).alias("cls")))
+        .groupBy("doc_id").agg(F.max("cls").alias("cls")))
     n_a, n_b = classes.agg(F.count(F.when(F.col("cls") == 1, 1)),
                            F.count(F.when(F.col("cls") == -1, 1))).first()
     if n_a == 0 or n_b == 0:
@@ -271,29 +265,16 @@ def correlate_sets(postings: DataFrame, set_a: DataFrame, set_b: DataFrame,
 
 
 def filter_by_timestamp_sets(keys: DataFrame, set_a: DataFrame,
-                             set_b: DataFrame,
-                             unique_rows: bool = False) -> DataFrame:
+                             set_b: DataFrame) -> DataFrame:
     """FilterByTimestamp(keys, A, B) (correlate.cc:400-462): for docs in
     A (preferred) or B, keep one row per doc when the doc's earliest key
     timestamp precedes its earliest set timestamp; score becomes the age
-    delta.  Docs in neither set are dropped.
-
-    unique_rows: promise that ``keys`` already has one row per
-    (keyword, doc_id) and each set one row per doc_id (corr02 feeds
-    all three from one per-(keyword, doc) min-aggregate) — the three
-    min-groupBys are then identity maps and their shuffles are skipped
-    (guide §2.4: a distinct/groupBy on data that is already unique is
-    an accidental exchange)."""
-    if unique_rows:
-        kmin = keys.select("keyword", "doc_id",
-                           F.col("score").alias("k_score"))
-        amin = set_a.select("doc_id", F.col("score").alias("a_score"))
-        bmin = set_b.select("doc_id", F.col("score").alias("b_score"))
-    else:
-        kmin = keys.groupBy("keyword", "doc_id").agg(
-            F.min("score").alias("k_score"))
-        amin = set_a.groupBy("doc_id").agg(F.min("score").alias("a_score"))
-        bmin = set_b.groupBy("doc_id").agg(F.min("score").alias("b_score"))
+    delta.  Docs in neither set are dropped.  The output has one row per
+    (keyword, doc_id)."""
+    kmin = keys.groupBy("keyword", "doc_id").agg(
+        F.min("score").alias("k_score"))
+    amin = set_a.groupBy("doc_id").agg(F.min("score").alias("a_score"))
+    bmin = set_b.groupBy("doc_id").agg(F.min("score").alias("b_score"))
     j = (kmin.join(amin, "doc_id", "left").join(bmin, "doc_id", "left")
          .withColumn("ref_score", F.coalesce("a_score", "b_score"))
          .filter(F.col("ref_score").isNotNull())
@@ -354,26 +335,9 @@ def correlate(engine, query_a, query_b) -> DataFrame:
     pipeline over the whole index."""
     import time as _time
 
-
     comp = engine._compiler()
     set_a = comp.process_query(query_a, use_max=False)
     set_b = comp.process_query(query_b, use_max=False)
-
-    def kind_match_col(meta, kind):
-        """Column expression for keyword-kind matching (JVM-side — a
-        Python UDF here would both unpickle-crash on the captured
-        catalog and drop the filter out of codegen).  Regex patterns are
-        anchored to FULL matches, mirroring Catalog._match_kind and the
-        reference's RE2::FullMatch (keywords.cc:66-92)."""
-        conds = [
-            F.col("keyword").rlike(f"^(?:{pat})$") if is_re
-            else F.col("keyword").startswith(pat)
-            for pat, is_re, k in meta if k == kind
-        ]
-        out = F.lit(False)
-        for c in conds:
-            out = out | c
-        return out
 
     cat = engine.catalog
     postings = cat.index().select("keyword", "doc_id", "score")
@@ -382,9 +346,8 @@ def correlate(engine, query_a, query_b) -> DataFrame:
     if a_ts:
         # Event prediction discards ephemeral keywords entirely — their
         # values change daily so they leak the future (correlate.cc:536).
-        postings = postings.filter(
-            ~kind_match_col(cat.keyword_meta, "ephemeral"))
-        ts_match = kind_match_col(cat.keyword_meta, "timestamped")
+        postings = postings.filter(~cat.kind_match_col("ephemeral"))
+        ts_match = cat.kind_match_col("timestamped")
         ts_keys = postings.filter(ts_match)
         # negating the same deterministic predicate splits the index
         # without the distinct + anti-join shuffle an id-set join costs

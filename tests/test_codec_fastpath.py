@@ -129,3 +129,54 @@ def test_jpeg_matmul_bytes_match_einsum_reference():
     proof (it asserts byte identity at every gate and law quality)."""
     from tools import verify_jpeg_matmul
     verify_jpeg_matmul.main()
+
+
+def _jpeg_outcome(data: bytes):
+    """decode_jpeg's result, or the ValueError message it raised; any
+    other exception class propagates and fails the caller."""
+    try:
+        return mm.decode_jpeg(data)
+    except ValueError as e:
+        return str(e)
+
+
+@pytest.mark.slow
+def test_corrupt_jpeg_fuzz_decodes_or_raises_value_error():
+    """Seeded, bounded corrupt-JPEG fuzz: byte flips strictly inside the
+    entropy-coded segment (after the SOS header, before EOI) and
+    truncations past the SOS header.  SOF is never touched, so no case
+    allocates more than its source image.  Each mutant either decodes
+    at the source dimensions or raises ValueError (the module's one
+    quarantine class), and decoding it twice gives the same outcome —
+    the memoized DHT tables and Huffman LUTs carry no state between
+    images."""
+    rng = random.Random(20261019)
+    sources = []
+    for w, h, q in [(16, 16, 75), (16, 16, 90), (24, 8, 75), (24, 8, 90)]:
+        px = bytes(rng.randrange(256) for _ in range(w * h * 3))
+        data = mm.encode_jpeg(px, w, h, q)
+        sos = data.index(b"\xff\xda")
+        (ln,) = struct.unpack_from(">H", data, sos + 2)
+        entropy_start = sos + 2 + ln
+        assert data.endswith(b"\xff\xd9")
+        assert entropy_start < len(data) - 2
+        sources.append((w, h, data, entropy_start))
+    n_raised = 0
+    for i in range(500):
+        w, h, data, start = sources[i % len(sources)]
+        if rng.random() < 0.7:
+            buf = bytearray(data)
+            for _ in range(rng.randint(1, 8)):
+                buf[rng.randrange(start, len(data) - 2)] ^= \
+                    rng.randrange(1, 256)
+            mutant = bytes(buf)
+        else:
+            mutant = data[:rng.randrange(start + 1, len(data))]
+        first = _jpeg_outcome(mutant)
+        if isinstance(first, str):
+            n_raised += 1
+        else:
+            assert (first["width"], first["height"]) == (w, h), i
+        assert _jpeg_outcome(mutant) == first, i
+    # the fuzz reaches both outcomes, so neither branch is vacuous
+    assert 0 < n_raised < 500

@@ -100,50 +100,6 @@ def test_filter_by_timestamp_sets(spark):
     assert out == [("k", 1, 3.0), ("k", 3, 2.0)]
 
 
-def test_filter_by_timestamp_sets_unique_rows_fast_path(spark):
-    """unique_rows=True (skip the three min-groupBys) must be
-    row-identical to the grouped path whenever its promise holds —
-    here the keys/sets are already one row per (keyword, doc) /
-    doc."""
-    keys = spark.createDataFrame(
-        [("k", 1, 5.0), ("k", 2, 9.0), ("j", 1, 2.0), ("k", 4, 1.0)],
-        P_SCHEMA)
-    a = spark.createDataFrame([(1, 8.0), (2, 7.0)], S_SCHEMA)
-    b = spark.createDataFrame([(4, 4.0)], S_SCHEMA)
-    grouped = rows(filter_by_timestamp_sets(keys, a, b))
-    fast = rows(filter_by_timestamp_sets(keys, a, b, unique_rows=True))
-    assert fast == grouped
-    # and the fast path's plan is shuffle-free up to the set joins:
-    # no Exchange introduced by min-aggregates
-    from cantera_table_spark.plans.inspect import plan_facts
-    facts = plan_facts(filter_by_timestamp_sets(keys, a, b,
-                                                unique_rows=True))
-    grouped_facts = plan_facts(filter_by_timestamp_sets(keys, a, b))
-    assert facts.n_shuffles < grouped_facts.n_shuffles, (
-        facts.n_shuffles, grouped_facts.n_shuffles)
-
-
-@pytest.mark.slow
-def test_correlate_presplit_fast_path_matches_default(spark):
-    """presplit=True (skip two distincts + the disjointing anti-join)
-    must be row-identical to the default path whenever its promise
-    holds — unique per-doc rows, mutually disjoint sets."""
-    a = spark.createDataFrame([(i, 0.0) for i in range(10)], S_SCHEMA)
-    b = spark.createDataFrame([(i, 0.0) for i in range(10, 15)], S_SCHEMA)
-    postings = spark.createDataFrame(
-        [("f", i, 0.0) for i in range(8)] + [("f", 10, 0.0)] +
-        [("g", i, float(i % 4)) for i in range(15)], P_SCHEMA)
-    with CacheScope() as caches:
-        want = rows(correlate_sets(postings, a, b, caches=caches))
-        got = rows(correlate_sets(postings, a, b, caches=caches,
-                                  presplit=True))
-        got_u = rows(correlate_sets(postings, a, b, caches=caches,
-                                    presplit=True, unique_docs=True))
-    assert got == want
-    assert got_u == want
-    assert len(want) >= 1
-
-
 def test_filter_by_timestamp_now(spark):
     keys = spark.createDataFrame(
         [("k", 0, 50.0), ("k", 1, 5.0), ("k", 2, 9.0), ("k", 9, 100.0)],
