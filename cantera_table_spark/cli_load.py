@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import argparse
 
-from cantera_table_spark.session import get_spark
+from cantera_table_spark.session import CacheScope, get_spark
 from cantera_table_spark.sources.ingest import (
     merge_tables, read_tsv_postings, read_tsv_summaries,
     read_tsv_timeseries, write_postings,
@@ -80,19 +80,21 @@ def main(argv=None) -> int:
                                  **key_options) for p in args.inputs]
         # merge even for a single input: in-file duplicates must resolve
         # so the unique-postings promise the engine relies on holds
-        merged = merge_tables(dfs, args.merge_mode,
-                              key_cols=("keyword", "doc_id"),
-                              value_col="score")
-        write_postings(merged, args.output, n_buckets=args.buckets,
-                       bloom_filter=args.bloom_filter)
+        with CacheScope() as caches:
+            merged = merge_tables(dfs, args.merge_mode,
+                                  key_cols=("keyword", "doc_id"),
+                                  value_col="score", caches=caches)
+            write_postings(merged, args.output, n_buckets=args.buckets,
+                           bloom_filter=args.bloom_filter)
     else:
         dfs = [read_tsv_timeseries(spark, p, date_format=args.date_format,
                                    threshold=args.threshold, **key_options)
                for p in args.inputs]
-        merged = merge_tables(dfs, args.merge_mode)
-        (merged.repartition(args.buckets, "key")
-         .sortWithinPartitions("key", "ts")
-         .write.mode("overwrite").parquet(args.output))
+        with CacheScope() as caches:
+            merged = merge_tables(dfs, args.merge_mode, caches=caches)
+            (merged.repartition(args.buckets, "key")
+             .sortWithinPartitions("key", "ts")
+             .write.mode("overwrite").parquet(args.output))
     print(f"wrote {args.output}")
     return 0
 

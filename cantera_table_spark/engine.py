@@ -38,8 +38,9 @@ class Engine:
         # session parameters (reference SET statement, statement.cc:35-48;
         # default CSV per output.cc:32)
         self.output_format = "csv"
-        # intermediates cached by CORRELATE statements; release_caches()
-        # frees them once their results are consumed
+        # intermediates cached by CORRELATE statements and query_df's
+        # unlimited OFFSET pages; release_caches() frees them once their
+        # results are consumed
         self.caches = CacheScope()
         self.time_format = "%Y-%m-%d %H:%M:%S"
 
@@ -56,9 +57,9 @@ class Engine:
             ov.createOrReplaceTempView(f"{prefix}overrides")
 
     def release_caches(self) -> None:
-        """Unpersist intermediates cached by CORRELATE statements (call
-        after consuming their result DataFrames in long-lived
-        sessions)."""
+        """Unpersist intermediates cached by CORRELATE statements and
+        ``query_df`` pages (call after consuming their result
+        DataFrames in long-lived sessions)."""
         self.caches.release()
 
     def _compiler(self) -> QueryCompiler:
@@ -110,7 +111,7 @@ class Engine:
                  limit: int = -1, offset: int = 0) -> DataFrame:
         """Evaluate to the (doc_id, score) page DataFrame (pre-envelope)."""
         result = self._result(self._compiler(), query, thresholds)
-        return sa.top_k(result, limit, offset)
+        return sa.top_k(result, limit, offset, caches=self.caches)
 
     @staticmethod
     def _result(comp: QueryCompiler, query: ast.Node,
@@ -159,8 +160,10 @@ class Engine:
             # top-k reads every row rather than a per-partition prefix.
             obs = Observation()
             result = result.observe(obs, F.count(F.lit(1)).alias("n"))
-        page = (sa.top_k(result, stmt.limit, stmt.offset).collect()
-                if stmt.limit != 0 else [])
+        with CacheScope() as page_caches:
+            page = (sa.top_k(result, stmt.limit, stmt.offset,
+                             caches=page_caches).collect()
+                    if stmt.limit != 0 else [])
         if not page and stmt.limit != 0:
             # offset beyond the result (an empty offset-0 page means an
             # empty result): the reference's bare [] (query.cc:796-799).

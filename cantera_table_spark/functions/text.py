@@ -386,7 +386,8 @@ def lm_quality_score(df: DataFrame, text_col: str = "text",
             .withColumn("n_bigrams", F.coalesce("n_bigrams", F.lit(0))))
 
 
-def corpus_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def corpus_token_stats(df: DataFrame, text_col: str = "text", *,
+                       caches: CacheScope) -> DataFrame:
     """Corpus-level vocabulary statistics: per token, document frequency
     and total term frequency with a unique frequency rank (ties broken
     by token; Zipf check / stop-word candidates).
@@ -396,20 +397,21 @@ def corpus_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     the (term_freq, tok) order is total, so the numbering is unique and
     deterministic, and no single task ever sorts the whole vocabulary —
     web-scale vocabularies (shingled / byte-level tokens) exceed
-    single-task memory."""
+    single-task memory.  The numbering input is local-checkpointed in
+    ``caches`` for the caller to release once the result is consumed."""
     tok = df.select(F.col("doc_id"),
                     F.explode(tokens(F.col(text_col))).alias("tok"))
     agg = (tok.groupBy("tok")
            .agg(F.countDistinct("doc_id").alias("doc_freq"),
                 F.count("*").alias("term_freq")))
     from cantera_table_spark.operators.ordering import global_row_number
-    # stable=True: the groupBy output is nondeterministically ordered, so
+    # caches: the groupBy output is nondeterministically ordered, so
     # the numbering must not depend on ReuseExchange (ordering.py module
     # docstring) — the vocabulary table is post-aggregation and small
     # relative to the corpus, so the checkpoint copy is cheap.
     return (global_row_number(agg, F.col("term_freq").desc(),
                               F.col("tok").asc(), col_name="rank",
-                              stable=True))
+                              caches=caches))
 
 
 def bpe_pair_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

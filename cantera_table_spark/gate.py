@@ -1357,7 +1357,7 @@ def ts07_union_merge(spark, sf_dir):
               for i in range(2)]
     # 10% overlap with agreeing values (same source rows)
     shards.append(e.filter(F.pmod(F.xxhash64("key", "ts"), 10) == 0))
-    return merge_tables(shards, "union")
+    return merge_tables(shards, "union", caches=_GATE_CACHES)
 
 
 @gate("q18_override_patch", ORACLE_POSTINGS + """
@@ -1821,7 +1821,7 @@ def tx07_corpus_stats(spark, sf_dir):
     frequency rank per token."""
     from cantera_table_spark.functions.text import corpus_token_stats
     d = load_table(spark, sf_dir, "documents")
-    return corpus_token_stats(d)
+    return corpus_token_stats(d, caches=_GATE_CACHES)
 
 
 # ---------------------------------------------------------------------------

@@ -32,7 +32,6 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-import yaml
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -224,6 +223,7 @@ def load_keywords_config(path: str) -> list[tuple[str, bool, str]]:
     top-level ``ephemeral:`` / ``timestamped:`` sequences of scalars;
     ``/re/`` items are full-match regexes, anything else a prefix.
     """
+    import yaml
     with open(path) as f:
         config = yaml.safe_load(f) or {}
     meta = []

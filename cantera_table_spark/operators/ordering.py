@@ -19,15 +19,16 @@ Spark's ReuseExchange collapses them to one physical shuffle, so both
 see identical partition boundaries (asserted in
 tests/test_set_algebra.py).
 
-HARD INVARIANT: the default (``stable=False``) is only correct while
+HARD INVARIANT: without ``caches`` the numbering is only correct while
 that ReusedExchange holds — if the two branches ever re-executed the
 exchange separately over a nondeterministically-ordered input (e.g.
 the output of an aggregation), range sampling could pick different
 boundaries per branch and the numbering would be silently wrong.  The
 plan-shape test pins the reuse; callers whose input is downstream of
-an aggregation or other nondeterministic op should pass
-``stable=True``, which localCheckpoints the partitioned input so both
-branches read one materialization regardless of plan shape.
+an aggregation or other nondeterministic op pass a ``CacheScope`` as
+``caches``: the partitioned input is local-checkpointed there, so both
+branches read one materialization regardless of plan shape, and the
+caller releases it once the result is consumed.
 """
 
 from __future__ import annotations
@@ -35,16 +36,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cantera_table_spark.session import CacheScope
+
 
 def global_row_number(df: DataFrame, *order: Column,
                       col_name: str = "__rn",
-                      stable: bool = False) -> DataFrame:
+                      caches: CacheScope | None = None) -> DataFrame:
     """Append 1-based global row numbers in ``order`` without a
     single-task sort.  Rows with equal keys number arbitrarily but
     stably within the run (they land in one range partition).
 
-    ``stable=True`` materializes the range-partitioned input
-    (localCheckpoint) before the count/row branches split, trading one
+    With ``caches`` the range-partitioned input is local-checkpointed
+    in that scope before the count/row branches split, trading one
     executor-storage copy for independence from ReuseExchange (see
     module docstring)."""
     reserved = {"__gpid", "__cnt", "__start", col_name}
@@ -56,8 +59,8 @@ def global_row_number(df: DataFrame, *order: Column,
             f"input columns collide with ordering internals: {clash}")
     parts = (df.repartitionByRange(*order)
              .withColumn("__gpid", F.spark_partition_id()))
-    if stable:
-        parts = parts.localCheckpoint(eager=False)
+    if caches is not None:
+        parts = caches.checkpoint(parts)
     counts = parts.groupBy("__gpid").agg(F.count("*").alias("__cnt"))
     wcum = (Window.orderBy("__gpid")
             .rowsBetween(Window.unboundedPreceding, -1))

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cantera_table_spark.session import CacheScope
+
 _DOC = "doc_id"
 _SCORE = "score"
 NEG_INF = float("-inf")
@@ -208,19 +210,26 @@ def threshold_filter(result: DataFrame, key_postings: DataFrame,
                                         "left_semi")
 
 
-def top_k(df: DataFrame, limit: int, offset: int = 0) -> DataFrame:
+def top_k(df: DataFrame, limit: int, offset: int = 0,
+          caches: CacheScope | None = None) -> DataFrame:
     """Top-k page by score desc (query.cc:795-807).
 
     limit < 0 means "all" (reference fetchClause default -1).  Ties are
     broken by doc_id ascending for determinism (the reference's
     partial_sort is unstable — documented divergence).  A finite limit
     compiles to one TakeOrderedAndProject(limit, offset) that drops the
-    OFFSET rows from the already-limited page.
+    OFFSET rows from the already-limited page.  An unlimited page with
+    an OFFSET checkpoints its numbering input in ``caches``, which the
+    caller releases once the page is consumed.
     """
     ordered = df.orderBy(F.col(_SCORE).desc(), F.col(_DOC).asc())
     if limit is None or limit < 0:
         if offset:
-            return _drop_first_n(df, offset)
+            if caches is None:
+                raise ValueError(
+                    "an unlimited page with an OFFSET checkpoints its "
+                    "numbering input: pass a CacheScope as caches")
+            return _drop_first_n(df, offset, caches)
         return ordered
     page = ordered.limit(offset + limit)
     if offset:
@@ -228,18 +237,19 @@ def top_k(df: DataFrame, limit: int, offset: int = 0) -> DataFrame:
     return page.select(_DOC, _SCORE)
 
 
-def _drop_first_n(df: DataFrame, n: int) -> DataFrame:
+def _drop_first_n(df: DataFrame, n: int,
+                  caches: CacheScope) -> DataFrame:
     """Drop the first ``n`` rows in (score desc, doc asc) order without a
     single-task global window (the limit=-1 + OFFSET page) — see
     operators.ordering.global_row_number for the mechanism."""
     from cantera_table_spark.operators.ordering import global_row_number
-    # stable=True: a QUERY result is downstream of the postings groupBy,
+    # caches: a QUERY result is downstream of the postings groupBy,
     # whose output order is nondeterministic — the numbering must not
     # depend on ReuseExchange collapsing the count/row branches (see
-    # ordering.global_row_number's HARD INVARIANT).  The localCheckpoint
+    # ordering.global_row_number's HARD INVARIANT).  The checkpoint
     # cost lands only on the rare unlimited-with-OFFSET page.
     numbered = global_row_number(df, F.col(_SCORE).desc(),
-                                 F.col(_DOC).asc(), stable=True)
+                                 F.col(_DOC).asc(), caches=caches)
     return (numbered.filter(F.col("__rn") > n)
             .orderBy(F.col(_SCORE).desc(), F.col(_DOC).asc())
             .select(_DOC, _SCORE))

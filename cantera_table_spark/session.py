@@ -85,16 +85,28 @@ def is_utc_zone(spark, tz: str | None) -> bool:
 
 class CacheScope:
     """The DataFrames one consumer cached: ``persist`` caches and
-    registers a frame, ``release`` (or leaving a ``with`` block, an
-    exception included) unpersists every registered frame.  Releasing
-    a frame a plan still references only makes Spark recompute it."""
+    ``checkpoint`` local-checkpoints and registers a frame, ``release``
+    (or leaving a ``with`` block, an exception included) unpersists
+    every registered frame.  Releasing a persisted frame a plan still
+    references only makes Spark recompute it; a released checkpoint has
+    no lineage left, so reading it again fails."""
 
     def __init__(self):
         self._frames: list = []
+        self._checkpoints: set = set()      # id()s of checkpoint frames
 
     def persist(self, df: DataFrame, level=None) -> DataFrame:
         df = df.cache() if level is None else df.persist(level)
         self._frames.append(df)
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """``df.localCheckpoint(eager=False)``, registered: every plan
+        over the returned frame reads the one materialization the first
+        job that reads it stores, whatever the plan shape."""
+        df = df.localCheckpoint(eager=False)
+        self._frames.append(df)
+        self._checkpoints.add(id(df))
         return df
 
     def release(self, df: DataFrame | None = None) -> None:
@@ -106,7 +118,13 @@ class CacheScope:
                 self._frames.append(f)
             # a stopped session's cached blocks went with it
             elif f.sparkSession.sparkContext._jsc is not None:
-                f.unpersist()
+                if id(f) in self._checkpoints:
+                    # the checkpointed RDD is the frame's LogicalRDD,
+                    # which DataFrame.unpersist does not reach
+                    f._jdf.logicalPlan().rdd().unpersist(False)
+                else:
+                    f.unpersist()
+        self._checkpoints &= {id(f) for f in self._frames}
 
     def __len__(self) -> int:
         return len(self._frames)

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cantera_table_spark.session import CacheScope
+
 # the reference's prediction-band columns (ca-table.h:102-105) — band
 # handling must key on ANY of these, not just pct5: a table carrying
 # pct25/pct75/pct95 without pct5 is still band-bearing (r10 advisory)
@@ -215,13 +217,16 @@ def read_tsv_summaries(spark: SparkSession, path: str | list[str],
 
 def merge_tables(tables: list[DataFrame], mode: str = "union",
                  key_cols: tuple[str, ...] = ("key", "ts"),
-                 value_col: str = "value") -> DataFrame:
+                 value_col: str = "value",
+                 caches: CacheScope | None = None) -> DataFrame:
     """A3-A5 merge modes over N inputs (ca-load.cc:393-541).
 
     - ``sum``: duplicate (key, offset) values summed.
     - ``union``: duplicates must agree on the value, else MergeError
       (reference KJ_REQUIRE, ca-load.cc:477-481; the reference checks
-      the SCORE only — bands ride along from the first entry).
+      the SCORE only — bands ride along from the first entry).  The
+      merged table is local-checkpointed in ``caches`` (required),
+      which the caller releases once the result is consumed.
     - ``pick-one``: first table wins (table order = priority; the
       reference prefers percentile-bearing entries, ca-load.cc:482-489 —
       here: lowest table index).
@@ -249,6 +254,9 @@ def merge_tables(tables: list[DataFrame], mode: str = "union",
         return (allt.groupBy(*keys)
                 .agg(F.sum(value_col).alias(value_col)))
     if mode == "union":
+        if caches is None:
+            raise ValueError("merge mode 'union' checkpoints the merged "
+                             "table: pass a CacheScope as caches")
         agg = (allt.groupBy(*keys)
                .agg(F.min(value_col).alias("__min"),
                     F.max(value_col).alias("__max"),
@@ -259,7 +267,7 @@ def merge_tables(tables: list[DataFrame], mode: str = "union",
         # the returned frame — without it the full union+aggregation
         # ran twice, once for .first() and once when the caller
         # consumed the result (r10 review finding)
-        agg = agg.localCheckpoint(eager=False)
+        agg = caches.checkpoint(agg)
         # min/max skip NULLs, so a NULL-vs-value mix needs its own
         # check (count(col) < count(*) with any non-null present)
         conflict = (F.col("__min") != F.col("__max")) | \

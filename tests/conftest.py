@@ -34,17 +34,3 @@ def duck():
 def result_rows(df):
     """Order-insensitive multiset of rows for comparisons."""
     return sorted(tuple(r) for r in df.collect())
-
-
-def persistent_rdds(spark) -> set:
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-
-def persisted_since(spark, before: set) -> set:
-    """Ids of the RDDs persisted after ``before`` was read that are still
-    persisted.  RDD ids are never reused, so this is exactly what the
-    code run in between left cached.  Compare this, not the whole set:
-    Spark's ContextCleaner unpersists the RDDs of garbage-collected
-    frames (ones an earlier test left, say) at any moment, so the whole
-    set can shrink between two reads."""
-    return persistent_rdds(spark) - before

@@ -10,7 +10,6 @@ from cantera_table_spark.operators.correlate import (
     correlate_sets, filter_by_timestamp_now, filter_by_timestamp_sets,
 )
 from cantera_table_spark.session import CacheScope
-from tests.conftest import persistent_rdds, persisted_since
 
 P_SCHEMA = "keyword string, doc_id long, score double"
 S_SCHEMA = "doc_id long, score double"
@@ -172,17 +171,18 @@ def _small_engine(spark, unique):
 @pytest.mark.parametrize("unique", [True, False])
 def test_correlate_statement_releases_every_cache(spark, unique):
     """Every block a CORRELATE statement persists is registered, so
-    after release_caches() no RDD it persisted is left — including the
-    empty-class early return, which caches the class table before
-    counting it."""
+    release_caches() leaves the session's persistent RDDs as it found
+    them — including the empty-class early return, which caches the
+    class table before counting it."""
     from cantera_table_spark.dsl.parser import parse_script
-    before = persistent_rdds(spark)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     eng = _small_engine(spark, unique)
     rows_ = eng.execute(parse_script(
         "CORRELATE QUERY (kw1 OR kw3), (kw2);")[0]).collect()
     assert rows_ and eng.caches
     eng.release_caches()
-    assert not persisted_since(spark, before)
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
     a = spark.createDataFrame([(i, 0.0) for i in range(10)], S_SCHEMA)
     postings = spark.createDataFrame([("f", i, 0.0) for i in range(8)],
@@ -191,8 +191,8 @@ def test_correlate_statement_releases_every_cache(spark, unique):
         out = correlate_sets(postings, a, a, caches=caches,
                              unique_docs=unique)
         assert out.collect() == [] and len(caches) == 1
-        assert persisted_since(spark, before)
-    assert not persisted_since(spark, before)
+        assert set(jsc.getPersistentRDDs().keySet()) != before
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 # Spark jobs one CORRELATE statement runs on _small_engine's catalog,

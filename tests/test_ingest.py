@@ -7,6 +7,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from cantera_table_spark.session import CacheScope
+
 
 @pytest.fixture()
 def tmpdir():
@@ -74,12 +76,13 @@ def test_merge_modes(spark):
               for r in merge_tables([t1, t2], "pick-one").collect()}
     assert picked == {("k", 1): 2.0, ("k", 2): 3.0, ("k", 3): 7.0}
 
-    with pytest.raises(MergeError):
-        merge_tables([t1, t2], "union").collect()
+    with pytest.raises(MergeError), CacheScope() as caches:
+        merge_tables([t1, t2], "union", caches=caches).collect()
 
     t3 = spark.createDataFrame([("k", 1, 2.0), ("k", 3, 7.0)], s)
-    unioned = {(r.key, r.ts): r.value
-               for r in merge_tables([t1, t3], "union").collect()}
+    with CacheScope() as caches:
+        unioned = {(r.key, r.ts): r.value for r in merge_tables(
+            [t1, t3], "union", caches=caches).collect()}
     assert unioned == {("k", 1): 2.0, ("k", 2): 3.0, ("k", 3): 7.0}
 
 
@@ -189,16 +192,27 @@ def test_pick_one_prefers_band_bearing_rows(spark):
 
 
 def test_union_merge_null_conflict(spark):
+    """A NULL against a value conflicts; all-NULL duplicates agree.  The
+    merged table is checkpointed in the caller's CacheScope, which
+    releases it on exit, a MergeError included."""
     from cantera_table_spark.sources.ingest import MergeError, merge_tables
     s = "key string, ts long, value double"
     t1 = spark.createDataFrame([("k", 1, None)], s)
     t2 = spark.createDataFrame([("k", 1, 5.0)], s)
-    with pytest.raises(MergeError):
-        merge_tables([t1, t2], "union").collect()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(MergeError), CacheScope() as caches:
+        merge_tables([t1, t2], "union", caches=caches).collect()
+    assert set(jsc.getPersistentRDDs().keySet()) == before
     # all-NULL duplicates agree
     t3 = spark.createDataFrame([("k", 1, None)], s)
-    out = merge_tables([t1, t3], "union").collect()
+    with pytest.raises(ValueError, match="CacheScope"):
+        merge_tables([t1, t3], "union")
+    with CacheScope() as caches:
+        out = merge_tables([t1, t3], "union", caches=caches).collect()
+        assert len(caches) == 1
     assert len(out) == 1 and out[0].value is None
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 def test_summaries_duplicate_keys_keep_one(spark, tmpdir):

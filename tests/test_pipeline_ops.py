@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cantera_table_spark.session import CacheScope
-from tests.conftest import SF_SMOKE, persistent_rdds, persisted_since
+from tests.conftest import SF_SMOKE
 
 
 def docs(spark):
@@ -173,7 +173,8 @@ def test_duplicate_clusters_transitivity(spark):
     pairs = spark.createDataFrame(
         [(3, 5), (1, 3), (5, 7), (2, 6)], "doc_a long, doc_b long")
     want = {0: 0, 1: 1, 3: 1, 5: 1, 7: 1, 2: 2, 6: 2, 4: 4}
-    before = persistent_rdds(spark)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     # driver union-find path (default: graph under the size gate)
     with CacheScope() as caches:
         out = {r.doc_id: r.canonical_id
@@ -189,7 +190,7 @@ def test_duplicate_clusters_transitivity(spark):
         assert len(caches) == 1 and caches._frames[0].is_cached
     assert out2 == want
     # every cached round lived in the scope: nothing outlives it
-    assert not persisted_since(spark, before)
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 def test_near_dup_clusters_clone_invariant(spark):

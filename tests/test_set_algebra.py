@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cantera_table_spark.operators import set_algebra as sa
+from cantera_table_spark.session import CacheScope
 from tests import ref_model as ref
 
 SCHEMA = "doc_id long, score double"
@@ -139,23 +140,31 @@ def test_threshold_filter(spark):
 def test_unlimited_offset_page_distributed(spark):
     """limit=-1 + OFFSET must page correctly WITHOUT a single-task global
     window over the data: the range-partitioned row-cut numbers rows per
-    partition, and (stable=True) both count and row branches read ONE
-    localCheckpoint materialization, so the numbering cannot depend on
-    ReuseExchange collapsing the branches."""
+    partition, and both count and row branches read ONE localCheckpoint
+    materialization, so the numbering cannot depend on ReuseExchange
+    collapsing the branches.  The checkpoint lives in the caller's
+    CacheScope, and releasing it leaves no persistent RDD behind."""
     rng = random.Random(11)
     # duplicate (doc, score) rows included: the cut must be multiset-exact
     rows = [(i % 23, float(rng.randrange(6))) for i in range(2000)]
     df = to_df(spark, rows).repartition(8)
-    page = sa.top_k(df, -1, offset=137)
-    got = [(r.doc_id, r.score) for r in page.collect()]
+    with pytest.raises(ValueError, match="CacheScope"):
+        sa.top_k(df, -1, offset=137)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with CacheScope() as caches:
+        page = sa.top_k(df, -1, offset=137, caches=caches)
+        got = [(r.doc_id, r.score) for r in page.collect()]
+        assert len(caches) == 1
+        plan = page._jdf.queryExecution().executedPlan().toString()
     want = sorted(rows, key=lambda p: (-p[1], p[0]))[137:]
     assert got == want                      # ordered, not just multiset
-    plan = page._jdf.queryExecution().executedPlan().toString()
     # both branches read the checkpointed RDD, not separate range shuffles
     assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
     # the only single-partition window is over the tiny per-partition
     # count table; the data-sized window is hash-partitioned by __gpid
     assert "__gpid" in plan
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 def test_unlimited_offset_page_no_exchange_reuse(spark):
@@ -172,8 +181,9 @@ def test_unlimited_offset_page_no_exchange_reuse(spark):
         # aggregation upstream -> nondeterministic row order feeding top_k
         agg = (to_df(spark, base).repartition(8)
                .groupBy("doc_id").agg(F.sum("score").alias("score")))
-        page = sa.top_k(agg, -1, offset=101)
-        got = [(r.doc_id, r.score) for r in page.collect()]
+        with CacheScope() as caches:
+            page = sa.top_k(agg, -1, offset=101, caches=caches)
+            got = [(r.doc_id, r.score) for r in page.collect()]
         want_all = sorted(
             ((d, float(sum(s for dd, s in base if dd == d)))
              for d in {d for d, _ in base}),

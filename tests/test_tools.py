@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from tests.conftest import SF_SMOKE, persistent_rdds, persisted_since
+from tests.conftest import SF_SMOKE
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -45,31 +45,54 @@ def test_rotate_window_proposal_invariants():
         set(stats["sentinels"]) - head
 
 
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_cache_scope_releases_on_exit_and_on_error(spark):
     """CacheScope unpersists every frame it persisted: on release(), and
     when its with block exits by an exception."""
     from pyspark import StorageLevel
     from cantera_table_spark.session import CacheScope
-    before = persistent_rdds(spark)
+    before = _persistent_rdds(spark)
     scope = CacheScope()
     frames = [scope.persist(spark.range(i + 1)) for i in range(3)]
     for f in frames:
         f.count()
-    assert len(scope) == 3 and persisted_since(spark, before)
+    assert len(scope) == 3 and _persistent_rdds(spark) != before
     # releasing one frame unpersists and drops only that frame
     scope.release(frames[1])
     assert len(scope) == 2 and not frames[1].is_cached
     assert frames[0].is_cached and frames[2].is_cached
     scope.release()
-    assert len(scope) == 0 and not persisted_since(spark, before)
+    assert len(scope) == 0 and _persistent_rdds(spark) == before
 
     with pytest.raises(RuntimeError, match="boom"):
         with CacheScope() as caches:
             caches.persist(spark.range(5)).count()
             caches.persist(spark.range(6), StorageLevel.DISK_ONLY).count()
-            assert len(caches) == 2 and persisted_since(spark, before)
+            assert len(caches) == 2 and _persistent_rdds(spark) != before
             raise RuntimeError("boom")
-    assert len(caches) == 0 and not persisted_since(spark, before)
+    assert len(caches) == 0 and _persistent_rdds(spark) == before
+
+
+def test_cache_scope_releases_checkpoints(spark):
+    """A frame CacheScope.checkpoint registered is freed by release(),
+    beside a persisted one, and only the released checkpoint's RDD
+    goes."""
+    from cantera_table_spark.session import CacheScope
+    before = _persistent_rdds(spark)
+    with CacheScope() as caches:
+        kept = caches.persist(spark.range(3))
+        ck = [caches.checkpoint(spark.range(i + 4)) for i in range(2)]
+        assert [f.count() for f in ck] == [4, 5] and kept.count() == 3
+        held = _persistent_rdds(spark) - before
+        assert len(caches) == 3 and len(held) == 3
+        caches.release(ck[0])
+        assert len(caches) == 2 and kept.is_cached
+        assert len(_persistent_rdds(spark) - before) == 2
+        assert ck[1].count() == 5           # still reads its blocks
+    assert len(caches) == 0 and _persistent_rdds(spark) == before
 
 
 def test_queries_release_previous_gate_caches(spark):
@@ -79,36 +102,37 @@ def test_queries_release_previous_gate_caches(spark):
     from cantera_table_spark import gate as g
     qs = g.queries()
     qs["q01_and"](spark, SF_SMOKE).collect()     # warm shared postings
-    before = persistent_rdds(spark)
+    before = _persistent_rdds(spark)
     qs["sim07_quantized_topk"](spark, SF_SMOKE).collect()
-    assert len(g._GATE_CACHES) and persisted_since(spark, before)
+    assert len(g._GATE_CACHES) and _persistent_rdds(spark) != before
     qs["q01_and"](spark, SF_SMOKE)
-    assert len(g._GATE_CACHES) == 0 and not persisted_since(spark, before)
+    assert len(g._GATE_CACHES) == 0 and _persistent_rdds(spark) == before
 
 
-# every gate whose body persists a frame (through the gate scope);
-# corr01 (the Engine-held class table) and dd06 (duplicate_clusters)
-# run in the default tier, the rest in the slow one
+# every gate whose body persists or checkpoints a frame (through the
+# gate scope); corr01 (the Engine-held class table) and dd06
+# (duplicate_clusters) run in the default tier, the rest in the slow one
 CACHING_GATES = ["corr01_feature_mining", "dd06_dedup_clusters"] + [
     pytest.param(name, marks=pytest.mark.slow) for name in (
         "corr02_event_prediction", "dd12_dedup_apply",
         "dd13_dedup_pipeline", "dd15_semantic_dedup", "ir01_bm25",
         "ml01_logreg_quality", "sim07_quantized_topk",
-        "sim08_quantized_ivf", "tx15_ppl_buckets")]
+        "sim08_quantized_ivf", "ts07_union_merge", "tx07_corpus_stats",
+        "tx15_ppl_buckets")]
 
 
 @pytest.mark.parametrize("name", CACHING_GATES)
 def test_gate_caches_released(spark, name):
-    """After release_gate_caches() no RDD the gate persisted is left:
-    CORRELATE's class table included, which corr01's Engine
-    persists."""
+    """release_gate_caches() leaves the session's persistent RDDs as the
+    gate found them: CORRELATE's class table included, which corr01's
+    Engine persists."""
     from cantera_table_spark import gate as g
     qs = g.queries()
     qs["q01_and"](spark, SF_SMOKE).collect()     # warm shared postings
-    before = persistent_rdds(spark)
+    before = _persistent_rdds(spark)
     qs[name](spark, SF_SMOKE).collect()
     g.release_gate_caches()
-    assert not persisted_since(spark, before)
+    assert _persistent_rdds(spark) == before
 
 
 def test_native_state_store_conflict_raises(spark):
