@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cantera_table_spark.functions.text import tokens
-from cantera_table_spark.session import CacheScope
 
 PACK_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -105,8 +104,7 @@ SHUFFLE_SALT = "shuf:"
 
 
 def shuffle_shards(df: DataFrame, n_shards: int,
-                   id_col: str = "doc_id",
-                   caches: CacheScope | None = None) -> DataFrame:
+                   id_col: str = "doc_id") -> DataFrame:
     """Deterministic global corpus shuffle + round-robin shard
     assignment — the training-order stage that feeds a dataloader:
     every epoch-0 consumer must see the same pseudo-random document
@@ -124,15 +122,8 @@ def shuffle_shards(df: DataFrame, n_shards: int,
     Returns (id_col, shuffle_rank, shard).  Downstream a writer
     would ``.repartition('shard').write.partitionBy('shard')`` — kept
     out of this operator so the assignment stays a pure, testable
-    function.
-
-    Pass ``caches`` (a CacheScope) when ``df`` is downstream of an
-    aggregation or other nondeterministically-ordered source —
-    ordering.py's HARD INVARIANT: without it a re-executed range
-    exchange can sample different boundaries per branch and the global
-    numbering gets duplicates/gaps (non-disjoint shards).  The
-    numbering input is local-checkpointed there for the caller to
-    release.
+    function.  The numbering relies on ReuseExchange (ordering.py's
+    HARD INVARIANT).
     """
     from cantera_table_spark.functions.sampling import sample_hash
     from cantera_table_spark.operators.ordering import global_row_number
@@ -143,7 +134,7 @@ def shuffle_shards(df: DataFrame, n_shards: int,
     ranked = global_row_number(
         df.filter(F.col(id_col).isNotNull()).select(F.col(id_col), h),
         F.col("__h").asc(), F.col(id_col).asc(),
-        col_name="shuffle_rank", caches=caches)
+        col_name="shuffle_rank")
     return (ranked
             .select(id_col, "shuffle_rank",
                     ((F.col("shuffle_rank") - 1) % n_shards)

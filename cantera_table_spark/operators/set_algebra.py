@@ -226,9 +226,7 @@ def top_k(df: DataFrame, limit: int, offset: int = 0,
     if limit is None or limit < 0:
         if offset:
             if caches is None:
-                raise ValueError(
-                    "an unlimited page with an OFFSET checkpoints its "
-                    "numbering input: pass a CacheScope as caches")
+                raise ValueError("an unlimited OFFSET page needs caches")
             return _drop_first_n(df, offset, caches)
         return ordered
     page = ordered.limit(offset + limit)

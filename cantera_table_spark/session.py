@@ -102,8 +102,7 @@ class CacheScope:
 
     def checkpoint(self, df: DataFrame) -> DataFrame:
         """``df.localCheckpoint(eager=False)``, registered: every plan
-        over the returned frame reads the one materialization the first
-        job that reads it stores, whatever the plan shape."""
+        over the result reads one materialization, whatever its shape."""
         df = df.localCheckpoint(eager=False)
         self._frames.append(df)
         self._checkpoints.add(id(df))

@@ -148,7 +148,7 @@ def test_unlimited_offset_page_distributed(spark):
     # duplicate (doc, score) rows included: the cut must be multiset-exact
     rows = [(i % 23, float(rng.randrange(6))) for i in range(2000)]
     df = to_df(spark, rows).repartition(8)
-    with pytest.raises(ValueError, match="CacheScope"):
+    with pytest.raises(ValueError, match="caches"):
         sa.top_k(df, -1, offset=137)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())

@@ -50,8 +50,8 @@ def _persistent_rdds(spark):
 
 
 def test_cache_scope_releases_on_exit_and_on_error(spark):
-    """CacheScope unpersists every frame it persisted: on release(), and
-    when its with block exits by an exception."""
+    """CacheScope unpersists every frame it persisted or checkpointed:
+    on release(), and when its with block exits by an exception."""
     from pyspark import StorageLevel
     from cantera_table_spark.session import CacheScope
     before = _persistent_rdds(spark)
@@ -75,19 +75,14 @@ def test_cache_scope_releases_on_exit_and_on_error(spark):
             raise RuntimeError("boom")
     assert len(caches) == 0 and _persistent_rdds(spark) == before
 
-
-def test_cache_scope_releases_checkpoints(spark):
-    """A frame CacheScope.checkpoint registered is freed by release(),
-    beside a persisted one, and only the released checkpoint's RDD
-    goes."""
-    from cantera_table_spark.session import CacheScope
-    before = _persistent_rdds(spark)
+    # a checkpoint's RDD is freed beside a persisted frame, and
+    # releasing one checkpoint frees only its RDD
     with CacheScope() as caches:
         kept = caches.persist(spark.range(3))
         ck = [caches.checkpoint(spark.range(i + 4)) for i in range(2)]
         assert [f.count() for f in ck] == [4, 5] and kept.count() == 3
-        held = _persistent_rdds(spark) - before
-        assert len(caches) == 3 and len(held) == 3
+        assert len(caches) == 3
+        assert len(_persistent_rdds(spark) - before) == 3
         caches.release(ck[0])
         assert len(caches) == 2 and kept.is_cached
         assert len(_persistent_rdds(spark) - before) == 2
