@@ -424,9 +424,7 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
     result) + one broadcast-sized createDataFrame back.  Each
     distributed round costs whole shuffle rounds of scheduling latency
     (measured 2.4 s/round on a 480-edge graph at bench SF), which
-    dwarfs a sub-MB collect — the same driver-small escape ivf_train
-    uses for its k x dim centroid matrix.  Pass 0 to force the
-    distributed path.
+    dwarfs a sub-MB collect.  Pass 0 to force the distributed path.
     """
     # Cache the symmetrized edge list: its lineage is the whole
     # candidate-generation + verification pipeline (LSH -> jaccard),
@@ -778,8 +776,7 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
                       n: int = 3, k: int = 16, bands: int = 4,
                       min_jaccard: float = 0.5,
                       max_bucket: int | None = None,
-                      max_df: int | None = None,
-                      corpus_sh: DataFrame | None = None) -> DataFrame:
+                      max_df: int | None = None) -> DataFrame:
     """Incremental (cross-batch) dedup: admit the NEW-batch documents
     that duplicate neither the existing corpus nor an earlier batch
     document — the production shape where a crawl lands daily against
@@ -798,14 +795,10 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
        (greedy order-dependence, documented; transitive clustering is
        :func:`near_dup_clusters`' job for the full-corpus pass).
 
-    Scale posture: the corpus side never re-tokenizes when
-    ``corpus_sh`` (its stored (doc_id, shingle) table, the thing a
-    production index persists) is passed — only the batch is shingled,
-    the stored rows group into one shingle array per doc (one shuffle),
-    and both sides then band in the same map-only pass.  The LSH band
-    join + candidate-restricted verification touch corpus rows only
-    where buckets collide.  Requires disjoint id spaces between batch
-    and corpus: ids are the only pair labels, and since the r12
+    Scale posture: both sides band in the same map-only pass, and the
+    LSH band join + candidate-restricted verification touch corpus rows
+    only where buckets collide.  Requires disjoint id spaces between
+    batch and corpus: ids are the only pair labels, and since the r12
     per-row banding each side folds its own signature — an id on BOTH
     sides would band as two independent documents while the Jaccard
     verify merged its shingles, so candidate generation and
@@ -825,38 +818,29 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
     surv0 = reps.join(ch, "__h", "left_anti").select("doc_id", "n_copies")
     surv0_text = surv0.join(bh.select("doc_id", "__text"), "doc_id")
     batch_arrs = shingle_arrays(surv0_text, text_col="__text", n=n)
-    if corpus_sh is None:
-        # exact-collapse the corpus to one representative per content
-        # hash before shingling.  A production corpus is already
-        # deduplicated (no-op); a degenerate corpus with byte-identical
-        # clones would otherwise flood the LSH buckets AND square each
-        # shingle's document frequency in the Jaccard verify (the dd13
-        # failure class).  Decision-invariant: identical texts have
-        # identical signatures and identical jaccard against any batch
-        # doc, so the batch rejection set is unchanged.
-        # groupBy + min(struct), not a window: the collapse exists for
-        # clone-flooded corpora, where map-side partial aggregation
-        # shrinks each partition to its distinct hashes BEFORE the
-        # shuffle — a window would shuffle and sort every clone row.
-        # doc_id is unique, so struct ordering (doc_id first) picks the
-        # same min-id representative.
-        creps = (corpus.select(F.col(id_col).alias("doc_id"),
-                               F.col(text_col).alias("__text"),
-                               F.coalesce(F.md5(F.col(text_col)),
-                                          F.lit("-")).alias("__ch"))
-                 .groupBy("__ch")
-                 .agg(F.min(F.struct("doc_id", "__text")).alias("__r"))
-                 .select(F.col("__r.doc_id").alias("doc_id"),
-                         F.col("__r.__text").alias("__text")))
-        corpus_arrs = shingle_arrays(creps, text_col="__text", n=n)
-    else:
-        # stored long-form shingle table (the production index shape):
-        # one groupBy turns it into arrays at the boundary.  A MinHash
-        # signature is a min over the shingle SET, so collect_set's
-        # order and de-duplication leave every band hash bit-identical,
-        # and duplicate stored rows cannot inflate the Jaccard counts.
-        corpus_arrs = (corpus_sh.groupBy("doc_id")
-                       .agg(F.collect_set("shingle").alias("__shingles")))
+    # exact-collapse the corpus to one representative per content hash
+    # before shingling.  A production corpus is already deduplicated
+    # (no-op); a degenerate corpus with byte-identical clones would
+    # otherwise flood the LSH buckets AND square each shingle's
+    # document frequency in the Jaccard verify (the dd13 failure
+    # class).  Decision-invariant: identical texts have identical
+    # signatures and identical jaccard against any batch doc, so the
+    # batch rejection set is unchanged.
+    # groupBy + min(struct), not a window: the collapse exists for
+    # clone-flooded corpora, where map-side partial aggregation shrinks
+    # each partition to its distinct hashes BEFORE the shuffle — a
+    # window would shuffle and sort every clone row.  doc_id is unique,
+    # so struct ordering (doc_id first) picks the same min-id
+    # representative.
+    creps = (corpus.select(F.col(id_col).alias("doc_id"),
+                           F.col(text_col).alias("__text"),
+                           F.coalesce(F.md5(F.col(text_col)),
+                                      F.lit("-")).alias("__ch"))
+             .groupBy("__ch")
+             .agg(F.min(F.struct("doc_id", "__text")).alias("__r"))
+             .select(F.col("__r.doc_id").alias("doc_id"),
+                     F.col("__r.__text").alias("__text")))
+    corpus_arrs = shingle_arrays(creps, text_col="__text", n=n)
     arrs = corpus_arrs.unionByName(batch_arrs)
     cands = lsh_candidate_pairs_arrays(arrs, k=k, bands=bands,
                                        max_bucket=max_bucket)

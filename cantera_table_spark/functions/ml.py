@@ -5,11 +5,10 @@ linear model over cheap per-doc features, trained on weak labels).
 
 Full-batch gradient descent distributes as ONE map-side-combinable
 aggregation per step (the gradient is a d+1-vector of sums over the
-corpus); the weight vector is driver-side scalars, like ivf_train's
-centroids — bounded, never O(data).  With deterministic features the
-whole training run is replayable in SQL (the gate unrolls the steps
-as chained CTEs), which pins the exact semantics most ML pipelines
-never test.
+corpus); the weight vector is driver-side scalars — bounded, never
+O(data).  With deterministic features the whole training run is
+replayable in SQL (the gate unrolls the steps as chained CTEs), which
+pins the exact semantics most ML pipelines never test.
 """
 
 from __future__ import annotations

@@ -89,17 +89,6 @@ def pack_sequences(df: DataFrame, capacity: int, n_shards: int = 4,
     return (sized.groupBy("shard").applyInPandas(pack, PACK_SCHEMA))
 
 
-def pack_stats(packed: DataFrame, capacity: int) -> DataFrame:
-    """Per-shard packing efficiency: bins used, mean fill fraction.
-    One aggregation over the packing output."""
-    per_bin = (packed.groupBy("shard", "bin")
-               .agg(F.sum("n_tokens").alias("fill")))
-    return (per_bin.groupBy("shard")
-            .agg(F.count("*").alias("n_bins"),
-                 F.round(F.avg(F.col("fill") / F.lit(float(capacity))), 6)
-                 .alias("mean_fill_frac")))
-
-
 SHUFFLE_SALT = "shuf:"
 
 

@@ -27,22 +27,15 @@ def sample_hash(id_col: Column, salt: str = SAMPLE_SALT) -> Column:
     return F.md5(F.concat(F.lit(salt), id_col.cast("string")))
 
 
-def _u_from_hash(h: Column) -> Column:
-    """Uniform double in [0, 1) from an md5 hex key (first 8 hex chars
-    / 2^32) — factored out so callers that already carry the hash
-    column don't recompute the md5 per row."""
-    return (F.conv(F.substring(h, 1, 8), 16, 10)
+def sample_u(id_col: Column) -> Column:
+    """The sample key as a uniform double in [0, 1): the md5 hex key's
+    first 8 hex chars / 2^32."""
+    return (F.conv(F.substring(sample_hash(id_col), 1, 8), 16, 10)
             .cast("double") / F.lit(float(1 << 32)))
 
 
-def sample_u(id_col: Column) -> Column:
-    """The sample key as a uniform double in [0, 1)."""
-    return _u_from_hash(sample_hash(id_col))
-
-
 def stratified_sample(df: DataFrame, strata_col: str, quota: int,
-                      id_col: str = "doc_id",
-                      oversample: float | None = None) -> DataFrame:
+                      id_col: str = "doc_id") -> DataFrame:
     """Per-stratum quota sample: the `quota` rows of each stratum with
     the smallest sample hash, with their 1-based `sample_rank`.
 
@@ -53,31 +46,12 @@ def stratified_sample(df: DataFrame, strata_col: str, quota: int,
     window-group-limit optimization still applies (see below), then
     refines per stratum against the broadcast quota table.
 
-    Scale design.  Even the bare plan is not the naive
+    Scale design.  The plan is not the naive
     whole-stratum-through-one-sort window: because the rank filter is
     `row_number() <= quota`, Spark's InferWindowGroupLimit inserts a
     PARTIAL per-input-partition top-k before the stratum exchange
     (pinned in tests/test_plan_shapes.py), so shuffle volume is
-    O(input_partitions * strata * quota), not O(corpus).  Each mapper
-    still sorts its full partition slice, though; pass `oversample`
-    (e.g. 2.0) to also bound the map-side sort input via the two-phase
-    plan:
-
-      1. count each stratum (one map-side-combined shuffle, rows =
-         #strata), broadcast the counts back;
-      2. pre-filter to rows whose uniform hash u <= oversample * quota
-         / stratum_count, so the window's input shrinks from the corpus
-         to ~oversample * quota rows per stratum regardless of corpus
-         size; then rank exactly as in the one-phase plan.
-
-    With the pre-filter in place the window sort is bounded by
-    O(oversample * quota) per stratum.  Contract: whenever the
-    pre-filter retains at least min(quota, stratum_size) rows of every
-    stratum — overwhelmingly likely for oversample >= 2 and quota >= a
-    few hundred (Chernoff: P[shortfall] <= exp(-quota/8) per stratum) —
-    the two plans return IDENTICAL rows; the equivalence is pinned by
-    tests, and the gate entry runs the exact one-phase plan so the
-    oracle stays a plain window.
+    O(input_partitions * strata * quota), not O(corpus).
     """
     quotas = quota if isinstance(quota, dict) else None
     if quotas is not None and not quotas:
@@ -91,31 +65,16 @@ def stratified_sample(df: DataFrame, strata_col: str, quota: int,
     # reproducible sample key; drop it like funnel/asof drop NULL keys.
     pre = (df.filter(F.col(id_col).isNotNull())
            .select(F.col(strata_col), F.col(id_col), h))
-    spark = df.sparkSession
-    qdf = None
     if quotas is not None:
         from pyspark.sql import types as T
         # schema follows the input's strata type (language strings,
         # int quality buckets, ...) instead of assuming string
-        qdf = spark.createDataFrame(
+        qdf = df.sparkSession.createDataFrame(
             [(k, int(v)) for k, v in quotas.items()],
             T.StructType([df.schema[strata_col],
                           T.StructField("__q", T.IntegerType())]))
         # semi-effect: strata without a quota drop out here
         pre = pre.join(F.broadcast(qdf), strata_col)
-    if oversample is not None:
-        counts = df.groupBy(strata_col).agg(F.count("*").alias("__n"))
-        per_quota = (F.col("__q").cast("double") if quotas is not None
-                     else F.lit(float(quota)))
-        cutoff = F.least(
-            F.lit(1.0), F.lit(float(oversample)) * per_quota / F.col("__n"))
-        pre = (pre.join(F.broadcast(counts), strata_col)
-               # derive u from the already-computed __h column — the
-               # projection and this filter are separate operators, so
-               # subexpression elimination would NOT collapse a second
-               # sample_u(id) md5 on this hot pre-filter path
-               .filter(_u_from_hash(F.col("__h")) <= cutoff)
-               .drop("__n"))
     w = (Window.partitionBy(strata_col)
          .orderBy(F.col("__h").asc(), F.col(id_col).asc()))
     out = (pre.withColumn("sample_rank", F.row_number().over(w))

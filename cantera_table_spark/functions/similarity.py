@@ -46,8 +46,7 @@ def _rankable(vec: Column) -> Column:
     Spark orders NaN LARGEST, so ``nv > 0`` alone would let NaN-element
     vectors through to rank first.  The norm must also be FINITE:
     an Inf-element (or overflow) vector has norm inf and every pair
-    cosine NaN/0 — the pandas kernel masks those (x/inf arithmetic),
-    so the JVM side must drop them too, not rank the NaN first."""
+    cosine NaN/0, so it must be dropped too, not rank the NaN first."""
     nv = norm(F.transform(vec, lambda x: x.cast("double")))
     return (vec.isNotNull() & (nv > 0) & ~F.isnan(nv) &
             (nv < F.lit(float("inf"))))
@@ -65,11 +64,8 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
 
     NULL cosines (zero-norm or NULL vectors on either side) are NOT
     ranked: a query with fewer than k non-degenerate candidates returns
-    fewer than k rows, in lockstep with brute_force_topk_pandas (whose
-    kernel masks NaN scores) and the gate oracles' ``cos IS NOT NULL``
-    — previously the JVM path let NULLs (which desc-sort last) fill the
-    trailing ranks while the pandas path dropped them (r9 deferred
-    divergence (a)).
+    fewer than k rows, in lockstep with the gate oracles'
+    ``cos IS NOT NULL``.
     """
     from pyspark.sql import Window
     q = (queries.select(F.col(id_col).alias("query_id"),
@@ -273,8 +269,7 @@ def hyperplane_signature(emb: DataFrame, n_bits: int = 16,
     # lowest-id row decides the reference dimension — an unordered
     # .first() is plan/partition-order dependent, so WHICH dimension
     # class of a ragged corpus survives could change across AQE plans
-    # or fetch-failure reruns (r11 review; brute_force_topk_pandas
-    # already orders the same pick)
+    # or fetch-failure reruns (r11 review)
     first = (emb.orderBy(id_col)
              .select(F.size(vec_col).alias("n")).first())
     if first is None:
@@ -337,174 +332,6 @@ def lsh_near_dup_pairs(emb: DataFrame, threshold: float = 0.8,
             .filter(F.col("cos") >= threshold)
             .select(F.col("doc_a").alias("id_a"),
                     F.col("doc_b").alias("id_b"), "cos"))
-
-
-def ivf_train(emb: DataFrame, k: int = 8, iters: int = 3,
-              id_col: str = "vec_id", vec_col: str = "embedding"
-              ) -> DataFrame:
-    """Lloyd-refined IVF centroids: seed with the k lowest-id vectors,
-    then alternate assign / recompute-mean for ``iters`` rounds.
-
-    Each round is one distributed assignment pass plus a per-(cluster,
-    dimension) average; only the k x dim centroid matrix (driver-small
-    by definition) is collected between rounds.  Refined centroids give
-    materially better bucket balance than raw seeds, which is what
-    bounds IVF probe cost at scale.
-    """
-    centroids = seed_centroids(emb, n=k, id_col=id_col, vec_col=vec_col)
-    spark = emb.sparkSession
-    from pyspark.sql import types as T
-    # centroid ids inherit the input id type end-to-end — int(c) with a
-    # hardcoded 'centroid_id long' schema crashed string-id corpora
-    # that every other ivf_* path handles (r11 review)
-    schema = T.StructType([
-        T.StructField("centroid_id", emb.schema[id_col].dataType),
-        T.StructField("cv", T.ArrayType(T.DoubleType()))])
-    for _ in range(iters):
-        assigned = ivf_assign(emb, centroids, id_col=id_col,
-                              vec_col=vec_col)
-        dims = (assigned.select(
-            "cluster", F.posexplode(F.col("v")).alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("x").alias("m")))
-        rows = dims.collect()
-        by_cluster: dict = {}
-        for r in rows:
-            by_cluster.setdefault(r["cluster"], {})[r["pos"]] = r["m"]
-        # a cluster that captured zero vectors this round KEEPS its
-        # previous centroid instead of silently vanishing (k shrank
-        # permanently before — pq_train's empty-code rule, r11
-        # review); the k x dim collect is driver-small by contract
-        prev = {r["centroid_id"]: list(r["cv"])
-                for r in centroids.collect()}
-        data = []
-        for c in sorted(prev):
-            vals = by_cluster.get(c)
-            cv = ([float(vals[i]) for i in range(len(vals))]
-                  if vals else prev[c])
-            data.append((c, cv))
-        centroids = spark.createDataFrame(data, schema)
-    return centroids
-
-
-def brute_force_topk_pandas(emb: DataFrame, queries: DataFrame,
-                            k: int = 5, id_col: str = "vec_id",
-                            vec_col: str = "embedding") -> DataFrame:
-    """Arrow-batched exact top-k: the query matrix broadcasts to every
-    executor and each Arrow batch scores against it with one numpy
-    matmul — the throughput path for wide embeddings, where per-element
-    JVM folds (brute_force_topk) pay per-dimension expression overhead.
-
-    Results match brute_force_topk on homogeneous-dimension corpora
-    (the kernel's contract — candidates of any other length are
-    filtered like hyperplane_signature does): scores round to 6
-    decimals with HALF_UP semantics BEFORE the per-batch partial
-    selection (selecting on unrounded sims let 1e-7-scale ties cut a
-    tie group differently than the JVM path's post-round ranking — r9
-    deferred divergence (b)), and the partial selection orders by
-    (rounded cos desc, neighbor_id asc), the same total order as the
-    global window, so a batch can never evict a row the global top-k
-    would keep.  The one remaining float edge is the rounding itself —
-    binary floor(x*1e6+0.5) here vs Spark's decimal HALF_UP on the
-    double's shortest repr — which can differ only within ~1 ulp of a
-    .0000005 boundary (the same noise class the correlate property
-    guard rejects).  Per-batch partial top-k keeps executor->driver
-    traffic at O(batches * queries * k), and the final global top-k is
-    a tiny window over the partials.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
-    # id columns keep their input types (empty and non-empty shards
-    # must agree with the JVM path on int/long ids — r9 finding (c))
-    q_id_t = queries.schema[id_col].dataType
-    n_id_t = emb.schema[id_col].dataType
-    schema = T.StructType([
-        T.StructField("query_id", q_id_t),
-        T.StructField("neighbor_id", n_id_t),
-        T.StructField("cos", T.DoubleType()),
-    ])
-
-    # NULL query vectors drop Spark-side BEFORE the collect, like the
-    # JVM path (where they produce only NULL cosines and vanish) — the
-    # kernel's matrix build would crash on a None row; off-dimension
-    # queries drop by the same homogeneous-dim rule as candidates.
-    # The kernel dimension is the LOWEST-id query's (orderBy makes the
-    # rule deterministic — an unordered collect would pick whichever
-    # partition arrived first and silently flip which ragged queries
-    # survive across plans)
-    q_rows = (queries.filter(F.col(vec_col).isNotNull())
-              .select(F.col(id_col).alias("qid"),
-                      F.col(vec_col).alias("qv"))
-              .orderBy("qid").collect())
-    if q_rows:
-        dim0 = len(q_rows[0].qv)
-        q_rows = [r for r in q_rows if len(r.qv) == dim0]
-    if not q_rows:
-        return emb.sparkSession.createDataFrame(
-            [], schema.add("rank", T.IntegerType()))
-    # ids keep their NATURAL dtype (object for strings, float stays
-    # float): a dtype=np.int64 coercion crashed string-id corpora and
-    # silently truncated float ids, while the JVM path and this
-    # function's own derived output schema carry arbitrary id types
-    # (r11 review).  lexsort/equality below work on object arrays.
-    q_ids = np.array([r.qid for r in q_rows])
-    q_mat = np.array([r.qv for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    q_norm[q_norm == 0] = np.nan       # zero-norm queries -> no matches
-    bc = emb.sparkSession.sparkContext.broadcast(
-        (q_ids, q_mat, q_norm, k))
-
-    def score(batches):
-        ids, mat, norms, kk = bc.value
-        for pdf in batches:
-            c_ids = pdf[id_col].to_numpy()
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            c_norm[c_norm == 0] = np.nan
-            raw = (c_mat @ mat.T) / np.outer(c_norm, norms)
-            # HALF_UP to 6 decimals (np.round is half-to-EVEN, which
-            # rounds exact-half reprs away from Spark's HALF_UP);
-            # NaN propagates through and is masked below
-            sims = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6,
-                               raw)
-            out_q, out_n, out_c = [], [], []
-            for j in range(len(ids)):
-                col = sims[:, j]
-                # drop self-matches AND NaN scores (zero-norm vectors);
-                # Spark would otherwise sort NaN as the LARGEST value
-                # and rank them first — the JVM path's NULL cosines are
-                # filtered before ranking, so NaN rows must never be
-                # emitted
-                mask = (c_ids != ids[j]) & ~np.isnan(col)
-                cand = np.where(mask)[0]
-                if not len(cand):
-                    continue
-                # lexsort: primary -rounded cos, secondary neighbor_id
-                # asc — the JVM window's exact tie order
-                top = cand[np.lexsort((c_ids[cand], -col[cand]))[:kk]]
-                out_q.extend([ids[j]] * len(top))
-                out_n.extend(c_ids[top].tolist())
-                out_c.extend(col[top].tolist())
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n,
-                                "cos": out_c})
-
-    # NULL or wrong-dimension embedding rows would crash np.array's
-    # matrix build (inhomogeneous shape) inside the kernel, where the
-    # JVM path merely NULLs their cosine — filter them Spark-side like
-    # hyperplane_signature/pq_encode/quantize do (r9 review finding);
-    # dim comes from the (non-empty, checked above) query matrix
-    dim = int(q_mat.shape[1])
-    clean = emb.select(id_col, vec_col).filter(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim))
-    partials = clean.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "cos", "rank"))
 
 
 def quantization_stats(emb: DataFrame,
@@ -785,8 +612,8 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.8,
     The pairwise comparison is restricted to WITHIN-cluster pairs —
     the O(N^2/k) SemDeDup economics; the cross-cluster quadratic never
     materializes.  ``centroids`` defaults to the deterministic seeded
-    set (:func:`seed_centroids`); production passes k-means centroids
-    from :func:`ivf_train`.  At 100 TB the within-cluster self-join
+    set (:func:`seed_centroids`); a caller may pass its own trained
+    centroids.  At 100 TB the within-cluster self-join
     shuffles on ``cluster`` — cluster count scales with corpus so the
     per-cluster membership stays bounded (the paper's setting).
 
@@ -932,7 +759,7 @@ def pq_train(emb: DataFrame, m: int = 4, ksub: int = 8, iters: int = 3,
     run k-means per SUBSPACE — assign every subvector to its nearest
     centroid (L2), recompute centroids as assignment means, repeat.
     One aggregation per iteration over the exploded subvector rows
-    (map-side combinable per-dimension sums, the ivf_train shape);
+    (map-side combinable per-dimension sums);
     empty codes keep their previous centroid.  A code's membership is
     O(N/ksub) vectors, so the mean step must never materialize the
     member list in one aggregation buffer — per-dimension
@@ -941,7 +768,7 @@ def pq_train(emb: DataFrame, m: int = 4, ksub: int = 8, iters: int = 3,
     difference, so a SQL oracle replays the refinement (gate sim11).
     The refined codebook drops into pq_encode/pq_topk/ivfpq_topk
     unchanged; the seeded form stays the oracle-deterministic gate
-    path (same split as seed_centroids/ivf_train)."""
+    path."""
     cb = pq_codebook(emb, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col)
     # NULL vectors train nothing, same as the encode path (previously
     # one NULL embedding crashed _pq_sublen's dim assert with a

@@ -25,9 +25,8 @@ def prediction_bands(ts: DataFrame, key_col: str = "key",
 
     ONE array-argument percentile, not four scalar ones: four
     independent percentile aggregates each buffer + sort the group's
-    values, quadrupling exactly the per-group memory the band path's
-    heavy-key guard exists to bound (r11 review); the array form
-    computes all four bands from one buffer, identical values."""
+    values, quadrupling the per-group memory (r11 review); the array
+    form computes all four bands from one buffer, identical values."""
     v = F.col(value_col)
     bands = F.percentile(
         v, F.array(*[F.lit(p) for p in _BAND_PCTS]))
@@ -39,9 +38,7 @@ def prediction_bands(ts: DataFrame, key_col: str = "key",
 
 
 def with_bands(ts: DataFrame, key_col: str = "key",
-               value_col: str = "value",
-               max_rows_per_key: int | None = None,
-               heavy_out: list | None = None) -> DataFrame:
+               value_col: str = "value") -> DataFrame:
     """Attach the series-level bands to every posting — the shape the
     reference stores (nullable band columns per row) and dumps
     (ca-dump.cc:148-216).
@@ -61,26 +58,9 @@ def with_bands(ts: DataFrame, key_col: str = "key",
     Rows with a NULL series key are dropped — they belong to no
     series (the former join formulation dropped them as inner-join
     non-matches, and a window would otherwise lump them into one
-    meaningless NULL group).
-
-    ``max_rows_per_key`` (default off) is the degenerate-key guard: a
-    series whose row count exceeds it is EXCLUDED from the output
-    (operators.skew.quarantine_heavy_keys — one key's rows must land
-    in one window task, no salt can split them, so at 100 TB a
-    constant key is an executor OOM; quarantine it to a report
-    instead).  Pass a list as ``heavy_out`` to receive the lazy
-    (key, n_rows) quarantine report frame (appended, not returned, so
-    the common no-guard signature stays a plain DataFrame) — the
-    report shares the guard's own count aggregation, so triage costs
-    no second scan of the input."""
+    meaningless NULL group)."""
     from pyspark.sql import Window
     ts = ts.filter(F.col(key_col).isNotNull())
-    if max_rows_per_key is not None:
-        from cantera_table_spark.operators.skew import (
-            quarantine_heavy_keys)
-        ts, heavy = quarantine_heavy_keys(ts, key_col, max_rows_per_key)
-        if heavy_out is not None:
-            heavy_out.append(heavy)
     if "__bands" in ts.columns:
         raise ValueError("input columns collide with with_bands "
                          "internals: ['__bands']")
@@ -88,8 +68,8 @@ def with_bands(ts: DataFrame, key_col: str = "key",
     v = F.col(value_col)
     # ONE array-argument percentile window, not four: each scalar
     # percentile buffers + sorts the partition's values independently,
-    # quadrupling the per-group memory this function's own heavy-key
-    # guard exists to bound (r11 review); values are identical
+    # quadrupling the per-group memory (r11 review); values are
+    # identical
     bands = F.percentile(v, F.array(*[F.lit(p) for p in _BAND_PCTS]))
     return (ts.withColumn("__bands", bands.over(w))
             .select("*",
@@ -140,9 +120,7 @@ def asof_prior(events: DataFrame, anchor_filter,
 
 def funnel(events: DataFrame, stages: list[str],
            key_col: str = "user_id", type_col: str = "event_type",
-           ts_col: str = "ts",
-           max_rows_per_key: int | None = None,
-           heavy_out: list | None = None) -> DataFrame:
+           ts_col: str = "ts") -> DataFrame:
     """Ordered funnel analysis: for each key, how far through the
     ``stages`` sequence it progressed, where stage k counts only if it
     happened strictly AFTER the key's qualifying stage k-1 time.
@@ -163,17 +141,6 @@ def funnel(events: DataFrame, stages: list[str],
     and any such event sorts after the event that set t_{k-1}.
 
     Returns (key_col, stage_<k>_ts ..., funnel_depth).
-
-    ``max_rows_per_key`` (default off) quarantines degenerate keys:
-    per-key memory is that key's own FUNNEL-STAGE events (collect_list
-    after the stage filter), bounded by user activity — except for the
-    bot user whose activity is unbounded.  With the guard set, keys
-    whose stage-event count exceeds the budget are excluded from the
-    output (operators.skew.quarantine_heavy_keys) — a data-quality
-    quarantine, not an executor OOM.  Pass a list as ``heavy_out`` to
-    receive the lazy (key, n_rows) quarantine report frame; it shares
-    the guard's count aggregation over the already-stage-filtered
-    events, so triage costs no second scan.
     """
     if not stages:
         raise ValueError("funnel needs at least one stage")
@@ -195,12 +162,6 @@ def funnel(events: DataFrame, stages: list[str],
                   idx.alias("_s"))
           .filter(F.col("_s").isNotNull() & F.col("_ts").isNotNull() &
                   F.col(key_col).isNotNull()))
-    if max_rows_per_key is not None:
-        from cantera_table_spark.operators.skew import (
-            quarantine_heavy_keys)
-        ev, heavy = quarantine_heavy_keys(ev, key_col, max_rows_per_key)
-        if heavy_out is not None:
-            heavy_out.append(heavy)
     grouped = ev.groupBy(key_col).agg(
         F.sort_array(F.collect_list(F.struct("_ts", "_s"))).alias("_evs"))
     init = F.array(*[F.lit(None).cast(ts_type) for _ in range(n)])

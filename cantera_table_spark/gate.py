@@ -1619,7 +1619,7 @@ def ts08_dsl_date_filter(spark, sf_dir):
              .cast("double").alias("score")))
     base = _engine(spark, sf_dir).catalog
     cat = type(base)(summaries=base.summaries, indexes=[ts_postings],
-                     keyword_meta=[("ts:", False, "timestamped")])
+                     keyword_meta=[("ts:", "timestamped")])
     eng = Engine(cat, unique_postings=True)
     stmt = parse_script("QUERY (ts:purchase >= 2024-01-03);")[0]
     return eng.query_df(stmt.query, limit=stmt.limit)
@@ -2683,8 +2683,7 @@ SELECT lang, doc_id, sample_rank FROM r WHERE sample_rank <= 25
 def ds01_stratified_sample(spark, sf_dir):
     """Deterministic stratified quota sampling (25 docs per language,
     smallest salted-md5 hash wins — a stable uniform permutation the
-    oracle replays bit-for-bit).  The oversampled two-phase scale plan
-    is equivalence-pinned in pytest."""
+    oracle replays bit-for-bit)."""
     from cantera_table_spark.functions.sampling import stratified_sample
     d = load_table(spark, sf_dir, "documents")
     return stratified_sample(d, "lang", quota=25)

@@ -29,7 +29,6 @@ stats prune further.  ``documents`` partitions by ``pmod(doc_id, N)``.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -96,9 +95,8 @@ class Catalog:
     indexes: list[DataFrame] = field(default_factory=list)
     overrides: list[DataFrame] = field(default_factory=list)
     # Keyword metadata (reference keywords.yaml, keywords.cc:51-58):
-    # list of (pattern, is_regex, kind) with kind in
-    # {"timestamped", "ephemeral"}.
-    keyword_meta: list[tuple[str, bool, str]] = field(default_factory=list)
+    # list of (prefix, kind) with kind in {"timestamped", "ephemeral"}.
+    keyword_meta: list[tuple[str, str]] = field(default_factory=list)
     # When the index tables were written by sources.ingest.write_postings
     # with a bucket partition column, the bucket count enables partition
     # pruning on leaf lookups (compiler._lookup_plain).  MUST equal the
@@ -184,63 +182,24 @@ class Catalog:
                 .filter(F.col("doc") != "{}"))
 
     def _match_kind(self, key: str, kind: str) -> bool:
-        """reference keywords.h:18-45 — prefix match, or full regex
-        match (RE2::FullMatch, keywords.cc:66-92)."""
-        for pattern, is_regex, k in self.keyword_meta:
-            if k != kind:
-                continue
-            if is_regex:
-                if re.fullmatch(pattern, key):
-                    return True
-            elif key.startswith(pattern):
-                return True
-        return False
+        """reference keywords.h:18-45 — prefix match.  The reference's
+        full-match regex form (keywords.cc:66-92) is not supported: one
+        rule keeps the driver and the JVM side in one dialect."""
+        return any(key.startswith(p)
+                   for p, k in self.keyword_meta if k == kind)
 
     def kind_match_col(self, kind: str) -> Column:
         """``_match_kind`` as a Column over ``keyword``, evaluated in the
         JVM (a Python UDF would both unpickle-crash on the captured
-        catalog and drop the filter out of codegen).  Regex patterns are
-        anchored to FULL matches, as ``re.fullmatch`` above."""
+        catalog and drop the filter out of codegen)."""
         out = F.lit(False)
-        for pattern, is_regex, k in self.keyword_meta:
+        for p, k in self.keyword_meta:
             if k == kind:
-                out = out | (F.col("keyword").rlike(f"^(?:{pattern})$")
-                             if is_regex
-                             else F.col("keyword").startswith(pattern))
+                out = out | F.col("keyword").startswith(p)
         return out
 
     def is_timestamped(self, key: str) -> bool:
         return self._match_kind(key, "timestamped")
-
-    def is_ephemeral(self, key: str) -> bool:
-        """Ephemeral keywords (value changes daily, keywords.cc:51-58);
-        CORRELATE skips them for event prediction (correlate.cc:536)."""
-        return self._match_kind(key, "ephemeral")
-
-
-def load_keywords_config(path: str) -> list[tuple[str, bool, str]]:
-    """Parse a keywords.yaml (reference keywords.cc:20-58) with PyYAML:
-    top-level ``ephemeral:`` / ``timestamped:`` sequences of scalars;
-    ``/re/`` items are full-match regexes, anything else a prefix.
-    """
-    import yaml
-    with open(path) as f:
-        config = yaml.safe_load(f) or {}
-    meta = []
-    for kind in ("ephemeral", "timestamped"):
-        for expr in (config.get(kind) or []):
-            # a bare "- foo:" sequence item parses as {"foo": None};
-            # the intended scalar is the "foo:" prefix
-            if isinstance(expr, dict) and len(expr) == 1 \
-                    and next(iter(expr.values())) is None:
-                expr = f"{next(iter(expr))}:"
-            expr = str(expr)
-            if len(expr) > 2 and expr.startswith("/") \
-                    and expr.endswith("/"):
-                meta.append((expr[1:-1], True, kind))
-            else:
-                meta.append((expr, False, kind))
-    return meta
 
 
 # ---------------------------------------------------------------------------
@@ -368,5 +327,5 @@ def testdata_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
     return Catalog(
         summaries=[derive_documents(spark, sf_dir)],
         indexes=[postings],
-        keyword_meta=[("ts:", False, "timestamped")],
+        keyword_meta=[("ts:", "timestamped")],
     )

@@ -14,7 +14,7 @@ events — overload single reducers.  Three levers, in preference order:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -61,72 +61,3 @@ def salted_count_sum(df: DataFrame, keys: list[str], value_col: str,
     return (partial.groupBy(*keys)
             .agg(F.sum("__n").alias("n"), F.sum("__s").alias("total")))
 
-
-def salted_semi_join(lhs: DataFrame, rhs_docs: DataFrame,
-                     key: str = "doc_id", n_salts: int = 8) -> DataFrame:
-    """Semi join with an exploded-salt build side: each rhs key is
-    replicated n_salts times so a hot probe key spreads over n_salts
-    reducers instead of one.  Use when the rhs is too big to broadcast
-    AND the probe side is skewed; otherwise the plain semi join wins.
-
-    The probe salt hashes ROW CONTENT (all lhs columns), never a row
-    position: a monotonically_increasing_id salt re-evaluates with
-    different values when a shuffle-fetch failure re-runs map tasks,
-    routing the same row to a different reducer than its surviving old
-    output — duplicated and dropped rows with no error (SPARK-23243;
-    the salted_count_sum contract above).  Identical duplicate rows
-    share a salt and gain no spread — same documented degenerate case."""
-    _reject_salt_column(lhs)
-    rhs_salted = rhs_docs.select(key).distinct().withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
-    lhs_salted = lhs.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in lhs.columns]),
-                         F.lit(n_salts)))
-    return (lhs_salted.join(rhs_salted, [key, "__salt"], "left_semi")
-            .drop("__salt"))
-
-
-def top_heavy_keys(df: DataFrame, key: str, threshold_rows: int
-                   ) -> DataFrame:
-    """Diagnostic: keys whose row count exceeds the per-reducer budget
-    (feed this to decide salting / bucket splits at ingest)."""
-    return (df.groupBy(key).agg(F.count("*").alias("n_rows"))
-            .filter(F.col("n_rows") > threshold_rows)
-            .orderBy(F.col("n_rows").desc()))
-
-
-def quarantine_heavy_keys(df: DataFrame, key: str,
-                          max_rows_per_key: int
-                          ) -> tuple[DataFrame, DataFrame]:
-    """Pre-flight for the per-key SEQUENTIAL operators (sessionize,
-    funnel, bands, as-of windows) whose semantics require one key's
-    rows together in one task: no salt can split them (SCALE.md), so a
-    degenerate key — a bot user with 10^8 events, a constant series
-    key — is an executor OOM waiting at 100 TB.  This turns that
-    failure mode into a REPORT: returns ``(kept, heavy)`` where
-    ``kept`` excludes every key whose row count exceeds the budget and
-    ``heavy`` is the (key, n_rows) quarantine report (same shape as
-    :func:`top_heavy_keys`) for data-quality triage.
-
-    Cost: one map-side-combinable count aggregation plus an anti-join
-    on the heavy-key table.  That table has at most rows/budget entries
-    by construction — small for any sane budget, but NOT always
-    driver-small: a tiny budget over a huge input (say 10 rows/key over
-    10^9 rows) admits up to 10^8 heavy keys, so the join carries no
-    forced broadcast hint.  AQE (on by default, session.py) sees the
-    post-aggregation runtime size and converts to a broadcast join
-    exactly when the table is actually small; when it is not, a forced
-    hint would OOM the driver where a shuffled anti-join succeeds.
-    The whole guard stays lazy (no driver action); wire it behind the
-    operators' ``max_rows_per_key`` parameter, default off."""
-    heavy = (df.groupBy(key).agg(F.count("*").alias("n_rows"))
-             .filter(F.col("n_rows") > max_rows_per_key))
-    # eqNullSafe: groupBy counts the NULL-key group, and a degenerate
-    # NULL key is the most likely hot key of all — a name-based join's
-    # NULL = NULL comparison is never true, so the anti-join would
-    # KEEP every NULL-key row while the report claims it quarantined
-    # them (r10 review finding)
-    hk = heavy.select(F.col(key).alias("__hk"))
-    kept = (df.join(hk, F.col(key).eqNullSafe(F.col("__hk")),
-                    "left_anti"))
-    return kept, heavy

@@ -4,7 +4,7 @@ The reference is batch-only (stdin -> write-once tables); its update
 model is "rebuild + override tables" (README.md:37-46).  The streaming
 edge maps that naturally onto Spark:
 
-- file/Kafka source -> the same parse/transform as batch ingest ->
+- file source -> the same parse/transform as batch ingest ->
   Parquet sink in append mode (base table).
 - late corrections land in an ``overrides`` table (the reference's
   summary-override layer) instead of rewriting the base — the override
@@ -30,11 +30,9 @@ from cantera_table_spark.sources.ingest import _unescape_tsv
 
 
 def _timeseries_projection(raw: DataFrame, date_format: str) -> DataFrame:
-    """Shared parse for every timeseries stream source: TSV key
-    unescape, timestamp parse, drop unparseable rows.  ``raw`` has
-    string columns (key, date, value) — the file source gets them from
-    the CSV reader's schema, the Kafka source from splitting the
-    record value; both meet here so the two edges cannot drift."""
+    """Timeseries stream parse: TSV key unescape, timestamp parse, drop
+    unparseable rows.  ``raw`` has string columns (key, date, value)
+    from the CSV reader's schema."""
     return (raw.select(_unescape_tsv(F.col("key")).alias("key"),
                        F.try_to_timestamp(F.col("date"),
                                           F.lit(date_format)).alias("ts"),
@@ -62,58 +60,6 @@ def stream_tsv_timeseries(spark: SparkSession, path: str,
     return _timeseries_projection(raw, date_format)
 
 
-def stream_kafka_timeseries(spark: SparkSession, bootstrap_servers: str,
-                            topic: str,
-                            date_format: str = "yyyy-MM-dd HH:mm:ss",
-                            starting_offsets: str = "earliest",
-                            ) -> DataFrame:
-    """Kafka variant of :func:`stream_tsv_timeseries`: each record
-    value is one TSV line ``key\\tdate\\tvalue`` (exactly what the
-    batch ingest reads from stdin dumps), parsed by the SAME projection
-    as the file source — the other half of the documented "file/Kafka
-    source" edge.
-
-    Requires the ``spark-sql-kafka`` connector package on the session
-    (``--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<ver>``);
-    without it ``.load()`` raises Spark's "Failed to find data source:
-    kafka" at plan-build time, so the failure is immediate and clear
-    rather than at query start.  Partitioning posture: one input
-    partition per Kafka topic-partition (use ``minPartitions`` to fan
-    out hotter topics); everything downstream is the shared projection,
-    so the rollup/sink plans are identical to the file edge's."""
-    raw = (spark.readStream.format("kafka")
-           .option("kafka.bootstrap.servers", bootstrap_servers)
-           .option("subscribe", topic)
-           .option("startingOffsets", starting_offsets)
-           .load())
-    return _split_record_value(raw, date_format)
-
-
-def _split_record_value(raw: DataFrame, date_format: str) -> DataFrame:
-    """Kafka record-value parse, malformed-line-parity-matched to the
-    file edge's CSV reader (the parity test drives THIS function, not a
-    re-implementation, so the two cannot drift):
-
-    - no split limit: the CSV reader DROPS tokens beyond its 3-column
-      schema, so a trailing-extra-field line must parse to the same
-      (key, date, value) here — a limit-3 split would fold the extras
-      into the value string and null it at the double cast (r9 review
-      finding; probed: both edges yield value=2.0 for
-      ``k\\tdate\\t2.0\\textra``).
-    - try_element_at, not parts[n]: a SHORT record (< 3 fields) indexes
-      past the array, which under Spark's default ANSI mode throws
-      INVALID_ARRAY_INDEX and fails the whole streaming query — the CSV
-      reader yields NULL for missing columns instead, so short records
-      must parse to NULL fields and flow through the shared
-      projection's drop the same way (r9 advisory)."""
-    parts = F.split(F.col("value").cast("string"), "\t")
-    return _timeseries_projection(
-        raw.select(F.try_element_at(parts, F.lit(1)).alias("key"),
-                   F.try_element_at(parts, F.lit(2)).alias("date"),
-                   F.try_element_at(parts, F.lit(3)).alias("value")),
-        date_format)
-
-
 def windowed_rollup(stream: DataFrame, window: str = "1 hour",
                     watermark: str = "2 hours") -> DataFrame:
     """Event-time windowed aggregate with a late-data watermark — the
@@ -127,17 +73,16 @@ def windowed_rollup(stream: DataFrame, window: str = "1 hour",
                     "n", "total"))
 
 
-def start_parquet_sink(stream: DataFrame, path: str, checkpoint: str,
-                       trigger_once: bool = True):
+def start_parquet_sink(stream: DataFrame, path: str, checkpoint: str):
     """Append the stream into the Parquet base table (exactly-once via
-    checkpointing; at scale this is the Delta/Iceberg commit point)."""
-    writer = (stream.writeStream.format("parquet")
-              .option("path", path)
-              .option("checkpointLocation", checkpoint)
-              .outputMode("append"))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    checkpointing; at scale this is the Delta/Iceberg commit point),
+    processing what is available now and then stopping."""
+    return (stream.writeStream.format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", checkpoint)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
 
 
 def streaming_exact_dedup(stream: DataFrame, hash_cols=("text",),

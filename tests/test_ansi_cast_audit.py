@@ -59,9 +59,9 @@ AUDITED = {
     "model.py": "NTZ->TZ identity / counts / ->string",
     # lit(None) typed NULL columns for the empty-result frames
     "operators/correlate.py": "typed NULL literals only",
-    # Kafka binary value -> string (safe); NULL-sentinel concat is
-    # ->string; the date/value parses are try_to_timestamp/try_cast
-    "streaming/ingest.py": "binary->string / ->string only",
+    # NULL-sentinel concat is ->string; the date/value parses are
+    # try_to_timestamp/try_cast
+    "streaming/ingest.py": "->string only",
     # boolean session-boundary flag -> int
     "streaming/sessionize.py": "boolean->int only",
 }

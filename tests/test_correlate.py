@@ -137,8 +137,8 @@ def test_statement_path_timestamped_with_ephemeral_skip(spark):
     docs = spark.createDataFrame([(d, f"d{d}", "{}") for d in range(20)],
                                  "doc_id long, key string, doc string")
     cat = Catalog(summaries=[docs], indexes=[postings],
-                  keyword_meta=[("ts:", False, "timestamped"),
-                                ("alexa:", False, "ephemeral")])
+                  keyword_meta=[("ts:", "timestamped"),
+                                ("alexa:", "ephemeral")])
     eng = Engine(cat, unique_postings=True)
     df = eng.execute_script(
         "CORRELATE QUERY (ts:label_a), (ts:label_b);")[0]

@@ -146,26 +146,23 @@ def test_streaming_ingest_availablenow(spark, tmpdir):
     assert rows[("mem", "2024-01-01 01:00:00")] == (1, 4.0)
 
 
-def test_keywords_config_loader(tmpdir):
-    from cantera_table_spark.model import Catalog, load_keywords_config
-    p = os.path.join(tmpdir, "keywords.yaml")
-    with open(p, "w") as f:
-        f.write(
-            "# comment\n"
-            "ephemeral:\n"
-            "  - 'alexa:'\n"
-            "  - /rank:[0-9]+/\n"
-            "timestamped:\n"
-            "  - ts:\n")
-    meta = load_keywords_config(p)
-    assert ("alexa:", False, "ephemeral") in meta
-    assert ("rank:[0-9]+", True, "ephemeral") in meta
-    assert ("ts:", False, "timestamped") in meta
-    cat = Catalog(keyword_meta=meta)
-    assert cat.is_ephemeral("alexa:rank")
-    assert cat.is_ephemeral("rank:42")          # full regex match
-    assert not cat.is_ephemeral("rank:42x")     # FullMatch, not search
-    assert cat.is_timestamped("ts:visits") and not cat.is_timestamped("x")
+def test_keyword_kinds_match_alike_on_driver_and_in_jvm(spark):
+    """Keyword kinds are prefixes: the driver-side check and the JVM
+    Column filter give the same answer, also for prefixes that would
+    be regex syntax."""
+    from cantera_table_spark.model import Catalog
+    cat = Catalog(keyword_meta=[("ts:", "timestamped"),
+                                ("(?P<ns>ts):", "timestamped"),
+                                ("alexa:", "ephemeral")])
+    keys = ["ts:visits", "(?P<ns>ts):x", "ts", "x", "alexa:rank",
+            "xts:visits"]
+    kw = spark.createDataFrame([(k,) for k in keys], "keyword string")
+    jvm = {r.keyword for r in kw.filter(
+        cat.kind_match_col("timestamped")).collect()}
+    assert jvm == {k for k in keys if cat.is_timestamped(k)} == {
+        "ts:visits", "(?P<ns>ts):x"}
+    assert {r.keyword for r in kw.filter(
+        cat.kind_match_col("ephemeral")).collect()} == {"alexa:rank"}
 
 
 def test_tsv_timeseries_with_bands(spark, tmpdir):
@@ -236,60 +233,33 @@ def test_tsv_postings_with_scores(spark, tmpdir):
     assert rows == [("kw", 0, 2.5)]   # threshold drops the 0.1 posting
 
 
-def test_kafka_source_constructor_and_shared_projection(spark, tmpdir):
-    """The Kafka edge (r8 verdict item 4; no broker in the sandbox so
-    this is a plan/parse test, not e2e): (a) the value-line split +
-    shared projection parses exactly like the file edge, escapes and
-    unparseable-date drops included; (b) the constructor fails FAST
-    and clearly when the kafka connector package is absent (or, were
-    it present, builds a streaming plan)."""
-    from cantera_table_spark.streaming.ingest import (
-        _split_record_value, stream_kafka_timeseries,
-        stream_tsv_timeseries)
+def test_stream_tsv_timeseries_parses_ragged_lines(spark, tmpdir):
+    """The file stream edge parses TSV lines like the batch CSV reader:
+    escapes unescaped, unparseable dates dropped, trailing fields
+    dropped, a missing value NULL."""
+    from cantera_table_spark.streaming.ingest import stream_tsv_timeseries
     lines = [
         "a\\tkey\t2024-01-01 00:10:00\t1.5",   # escaped tab in key
         "plain\t2024-01-01 00:20:00\t2.0",
         "bad\tnot-a-date\t3.0",                 # dropped by the parse
         "extra\t2024-01-01 00:30:00\t4.0\ttrailing\tfields",
-        # ^ both edges must DROP the trailing tokens (the CSV reader's
-        # 3-column schema does; a limit-3 split would fold them into
-        # the value and null it at the cast — the r9 review finding)
+        # ^ the CSV reader's 3-column schema drops the trailing tokens
         "short\t2024-01-01 00:40:00",
         # ^ 2 fields: the CSV reader NULLs the missing value column and
-        # keeps the row; parts[2] indexing would ANSI-throw
-        # INVALID_ARRAY_INDEX and fail the whole streaming query (r9
-        # advisory) — try_element_at must parse it to value=NULL
+        # keeps the row
         "lonely",
-        # ^ 1 field: date NULL -> ts unparseable -> dropped on both
+        # ^ 1 field: date NULL -> ts unparseable -> dropped
     ]
-    # the Kafka path's parse: the PRODUCTION record-value split (the
-    # inline re-implementation this test used before is exactly how
-    # the short-record hole survived)
-    vals = spark.createDataFrame([(v,) for v in lines], "value string")
-    got = _split_record_value(vals, "yyyy-MM-dd HH:mm:ss")
-    rows = sorted((r.key, str(r.ts), r.value) for r in got.collect())
-    assert rows == [("a\tkey", "2024-01-01 00:10:00", 1.5),
-                    ("extra", "2024-01-01 00:30:00", 4.0),
-                    ("plain", "2024-01-01 00:20:00", 2.0),
-                    ("short", "2024-01-01 00:40:00", None)]
-    # identical rows through the file edge (same projection by
-    # construction; this pins the no-drift claim end-to-end)
-    src = os.path.join(tmpdir, "kafka_parity")
+    src = os.path.join(tmpdir, "stream_parse")
     os.makedirs(src)
     write_lines(os.path.join(src, "b.tsv"), lines)
     fstream = stream_tsv_timeseries(spark, src)
-    q = (fstream.writeStream.format("memory").queryName("kafka_parity")
+    q = (fstream.writeStream.format("memory").queryName("stream_parse")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(60)
     frows = sorted((r.key, str(r.ts), r.value) for r in
-                   spark.sql("SELECT * FROM kafka_parity").collect())
-    assert frows == rows
-    # constructor: either the connector is present (streaming frame
-    # with the projected schema) or .load() names the missing source
-    try:
-        kstream = stream_kafka_timeseries(spark, "localhost:9092", "t")
-    except Exception as e:
-        assert "kafka" in str(e).lower()
-    else:
-        assert kstream.isStreaming
-        assert [f.name for f in kstream.schema] == ["key", "ts", "value"]
+                   spark.sql("SELECT * FROM stream_parse").collect())
+    assert frows == [("a\tkey", "2024-01-01 00:10:00", 1.5),
+                     ("extra", "2024-01-01 00:30:00", 4.0),
+                     ("plain", "2024-01-01 00:20:00", 2.0),
+                     ("short", "2024-01-01 00:40:00", None)]

@@ -222,52 +222,12 @@ def test_near_dup_clusters_clone_invariant(spark):
 
 
 @pytest.mark.slow
-def test_ivf_trained_centroids_recall_not_worse(spark):
-    from cantera_table_spark.functions.similarity import (
-        brute_force_topk, ivf_assign, ivf_topk, ivf_train, seed_centroids)
-    e = emb(spark)
-    q = e.filter(F.col("vec_id") < 10)
-    exact = {(r.query_id, r.neighbor_id)
-             for r in brute_force_topk(e, q, k=5).collect()}
-
-    def recall(cents):
-        approx = {(r.query_id, r.neighbor_id)
-                  for r in ivf_topk(ivf_assign(e, cents), cents, q,
-                                    k=5, nprobe=2).collect()}
-        return len(approx & exact) / len(exact)
-
-    r_seed = recall(seed_centroids(e, n=8))
-    r_kmeans = recall(ivf_train(e, k=8, iters=2))
-    assert r_kmeans >= r_seed - 0.05, (r_seed, r_kmeans)
-    assert r_kmeans >= 0.4
-
-
-def test_pandas_topk_matches_jvm_topk(spark):
-    from cantera_table_spark.functions.similarity import (
-        brute_force_topk, brute_force_topk_pandas)
-    e = emb(spark)
-    q = e.filter(F.col("vec_id") < 8)
-    jvm = {(r.query_id, r.rank): (r.neighbor_id, r.cos)
-           for r in brute_force_topk(e, q, k=5).collect()}
-    pnd = {(r.query_id, r.rank): (r.neighbor_id, r.cos)
-           for r in brute_force_topk_pandas(e, q, k=5).collect()}
-    assert set(jvm) == set(pnd)
-    for key in jvm:
-        n_j, c_j = jvm[key]
-        n_p, c_p = pnd[key]
-        assert abs(c_j - c_p) < 2e-6
-        # neighbor may differ only on a rounded-cos tie
-        assert n_j == n_p or abs(c_j - c_p) < 2e-6
-
-
-@pytest.mark.slow
-def test_topk_null_cos_alignment_jvm_vs_pandas(spark):
+def test_brute_force_topk_skips_degenerate_vectors(spark):
     """r9 deferred divergence (a), pinned: a query with fewer than k
-    non-degenerate candidates returns fewer than k rows on BOTH paths —
-    the JVM window must not let NULL cosines (zero-norm / NULL vectors)
-    fill trailing ranks while the pandas kernel masks NaN."""
-    from cantera_table_spark.functions.similarity import (
-        brute_force_topk, brute_force_topk_pandas)
+    non-degenerate candidates returns fewer than k rows — the window
+    must not let NULL cosines (zero-norm / NULL vectors) fill trailing
+    ranks."""
+    from cantera_table_spark.functions.similarity import brute_force_topk
     inf = float("inf")
     rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 0.0]),
             (3, None), (4, [0.5, 0.5]), (5, [inf, 1.0])]
@@ -275,31 +235,21 @@ def test_topk_null_cos_alignment_jvm_vs_pandas(spark):
     q = e.filter(F.col("vec_id") == 0)
     jvm = sorted((r.neighbor_id, r.rank)
                  for r in brute_force_topk(e, q, k=5).collect())
-    pnd = sorted((r.neighbor_id, r.rank)
-                 for r in brute_force_topk_pandas(e, q, k=5).collect())
     # only vec 1 and 4 are rankable: 2 rows, not 4 — vec 5's Inf
     # element (norm inf, every pair cosine NaN) must drop too, not
     # rank its NaN first (Spark orders NaN LARGEST)
-    assert jvm == pnd == [(1, 1), (4, 2)]
-    # all-pairs shape: NULL-vector and zero-norm QUERY rows must drop
-    # (Spark-side / NaN-masked) in the pandas path instead of crashing
-    # the kernel's matrix build on a None row
+    assert jvm == [(1, 1), (4, 2)]
+    # all-pairs shape: NULL-vector and zero-norm QUERY rows drop too
     jvm_all = sorted((r.query_id, r.neighbor_id, r.cos, r.rank)
                      for r in brute_force_topk(e, e, k=5).collect())
-    pnd_all = sorted((r.query_id, r.neighbor_id, r.cos, r.rank)
-                     for r in brute_force_topk_pandas(e, e, k=5).collect())
-    assert jvm_all == pnd_all
     assert {q for q, *_ in jvm_all} == {0, 1, 4}   # 2, 3, 5 degenerate
 
 
-def test_pandas_topk_rounded_tie_matches_jvm(spark):
+def test_brute_force_topk_rounded_tie_orders_by_neighbor_id(spark):
     """r9 deferred divergence (b), pinned: sims that differ by ~1e-7
-    (identical after the 6-decimal round) must break ties by
-    neighbor_id ascending on both paths — the pandas kernel rounds
-    BEFORE its per-batch partial selection and lexsorts on
-    (-cos, neighbor_id), so a batch boundary can never flip a tie."""
-    from cantera_table_spark.functions.similarity import (
-        brute_force_topk, brute_force_topk_pandas)
+    (identical after the 6-decimal round) break ties by neighbor_id
+    ascending, whatever the partitioning."""
+    from cantera_table_spark.functions.similarity import brute_force_topk
     # all candidates nearly parallel to the query: unrounded cosines
     # differ at the 1e-8..1e-7 scale, all rounding to the same value
     base = [1.0, 1.0, 1.0, 1.0]
@@ -307,15 +257,11 @@ def test_pandas_topk_rounded_tie_matches_jvm(spark):
         (i, [1.0 + 1e-8 * i, 1.0, 1.0, 1.0]) for i in range(1, 7)]
     e = (spark.createDataFrame(rows,
                                "vec_id long, embedding array<double>")
-         .repartition(4))   # force multiple kernel batches
+         .repartition(4))   # spread the candidates over partitions
     q = spark.createDataFrame([rows[0]],
                               "vec_id long, embedding array<double>")
     jvm = [(r.rank, r.neighbor_id, r.cos)
            for r in brute_force_topk(e, q, k=3).orderBy("rank").collect()]
-    pnd = [(r.rank, r.neighbor_id, r.cos)
-           for r in brute_force_topk_pandas(e, q, k=3)
-           .orderBy("rank").collect()]
-    assert jvm == pnd
     assert [n for _, n, _ in jvm] == [1, 2, 3]   # id-asc on the tie
 
 
@@ -327,7 +273,7 @@ def test_empty_input_schemas_preserve_id_types(spark):
     from cantera_table_spark.functions.dedup import (
         lsh_candidate_pairs_arrays, shingle_arrays)
     from cantera_table_spark.functions.similarity import (
-        brute_force_topk_pandas, hyperplane_signature)
+        hyperplane_signature)
     from pyspark.sql import types as T
 
     empty_int = spark.createDataFrame(
@@ -342,21 +288,6 @@ def test_empty_input_schemas_preserve_id_types(spark):
     assert pairs.schema["doc_a"].dataType == T.IntegerType()
     assert pairs.schema["doc_b"].dataType == T.IntegerType()
     assert pairs.count() == 0
-
-    corpus = spark.createDataFrame([(1, [1.0, 0.0])],
-                                   "vec_id int, embedding array<double>")
-    topk = brute_force_topk_pandas(
-        corpus, corpus.filter(F.col("vec_id") < 0), k=3)
-    assert topk.schema["query_id"].dataType == T.IntegerType()
-    assert topk.schema["neighbor_id"].dataType == T.IntegerType()
-    assert topk.count() == 0
-    # non-empty shards agree: int ids stay int through the kernel
-    topk2 = brute_force_topk_pandas(corpus.unionByName(
-        spark.createDataFrame([(2, [0.9, 0.1])],
-                              "vec_id int, embedding array<double>")),
-        corpus, k=3)
-    assert topk2.schema["neighbor_id"].dataType == T.IntegerType()
-    assert topk2.count() == 1
 
 
 def test_bmp_codec_roundtrip_and_resize(spark):
@@ -973,6 +904,7 @@ def test_decontaminate_counts_and_flags(spark):
 
 
 def test_stratified_sample_quota_and_oversample_equivalence(spark):
+    """Per-stratum quota, dense ranks, and the same rows on a rerun."""
     from cantera_table_spark.functions.sampling import stratified_sample
     d = docs(spark)
     exact = stratified_sample(d, "lang", quota=10)
@@ -985,11 +917,6 @@ def test_stratified_sample_quota_and_oversample_equivalence(spark):
     for lang, ranks in per.items():
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
         assert len(ranks) <= 10
-    # two-phase (oversampled pre-filter) plan returns IDENTICAL rows
-    # when the pre-filter captures enough of each stratum
-    two_phase = stratified_sample(d, "lang", quota=10, oversample=8.0)
-    assert sorted(map(tuple, rows)) == sorted(map(tuple,
-                                                  two_phase.collect()))
     # determinism across invocations
     again = stratified_sample(d, "lang", quota=10)
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again.collect()))
@@ -1012,11 +939,6 @@ def test_weighted_sample_budgets_and_missing_stratum(spark):
     dct = {(r.lang, r.doc_id) for r in
            stratified_sample(d, "lang", {"en": 4, "de": 4}).collect()}
     assert uni == dct
-    # oversampled two-phase dict plan returns the same rows
-    two = {(r.lang, r.doc_id) for r in
-           stratified_sample(d, "lang", {"en": 7, "de": 3},
-                             oversample=8.0).collect()}
-    assert two == {(r.lang, r.doc_id) for r in out}
 
 
 def test_dedup_lines_first_occurrence_and_blanks(spark):
@@ -1118,34 +1040,12 @@ def test_sixth_sweep_ingest_guards(spark, tmpdir):
 
 
 def test_fifth_sweep_skew_ordering_stream_guards(spark):
-    """r10 fifth-sweep findings, pinned: (a) quarantine_heavy_keys
-    removes a heavy NULL key (the name-based anti-join's NULL = NULL
-    never matched, keeping every row while the report claimed
-    otherwise); (b) salted_semi_join's probe salt is row-content-
-    deterministic, so the semi join equals the plain one; (c)
-    global_row_number rejects inputs whose columns collide with its
-    internals; (d) sessionize_stream refuses a non-UTC session
-    timezone instead of silently offsetting its epoch math."""
+    """r10 fifth-sweep findings, pinned: (c) global_row_number
+    rejects inputs whose columns collide with its internals; (d)
+    sessionize_stream refuses a non-UTC session timezone instead of
+    silently offsetting its epoch math."""
     import pytest
     from cantera_table_spark.operators.ordering import global_row_number
-    from cantera_table_spark.operators.skew import (
-        quarantine_heavy_keys, salted_semi_join)
-
-    ev = spark.createDataFrame(
-        [(None, i) for i in range(8)] + [(1, 0), (2, 0)],
-        "user_id int, x int")
-    kept, heavy = quarantine_heavy_keys(ev, "user_id", 3)
-    assert {(r.user_id, r.n_rows) for r in heavy.collect()} == {(None, 8)}
-    assert {r.user_id for r in kept.collect()} == {1, 2}
-
-    lhs = spark.createDataFrame([(i % 3, i) for i in range(30)],
-                                "doc_id int, payload int")
-    rhs = spark.createDataFrame([(0,), (2,)], "doc_id int")
-    got = sorted((r.doc_id, r.payload)
-                 for r in salted_semi_join(lhs, rhs, n_salts=4).collect())
-    want = sorted((r.doc_id, r.payload)
-                  for r in lhs.join(rhs, "doc_id", "left_semi").collect())
-    assert got == want
 
     bad = spark.createDataFrame([(1, 2)], "a long, __gpid int")
     with pytest.raises(ValueError, match="ordering internals"):
@@ -1383,8 +1283,7 @@ def test_pack_assemble_composes_with_custom_id_col(spark):
 
 
 def test_pack_sequences_capacity_and_coverage(spark):
-    from cantera_table_spark.functions.packing import (pack_sequences,
-                                                       pack_stats)
+    from cantera_table_spark.functions.packing import pack_sequences
     rows = [(i, " ".join(["tok"] * (7 + (i * 13) % 90)))
             for i in range(60)]
     rows.append((1000, " ".join(["tok"] * 500)))   # oversize
@@ -1405,9 +1304,6 @@ def test_pack_sequences_capacity_and_coverage(spark):
     for shard in {r.shard for r in packed}:
         bins = sorted({r.bin for r in packed if r.shard == shard})
         assert bins == list(range(len(bins)))
-    st = pack_stats(
-        pack_sequences(d, capacity=120, n_shards=4), 120).collect()
-    assert {r.shard for r in st} == {0, 1, 2, 3}
 
 
 def test_quantize_embeddings_error_bound(spark):
@@ -1598,7 +1494,7 @@ def test_funnel_strict_ordering_and_retention(spark):
 
 @pytest.mark.slow
 def test_incremental_dedup_laws(spark):
-    from cantera_table_spark.functions.dedup import incremental_dedup, shingles
+    from cantera_table_spark.functions.dedup import incremental_dedup
     from pyspark.sql import functions as F
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "for the full length of the document body text")
@@ -1615,8 +1511,7 @@ def test_incremental_dedup_laws(spark):
              "with compost and careful irrigation schedules"),  # exact dup of 5
          (9, None),                                   # NULL text: novel
          # an LSH candidate of corpus doc 0 just under the threshold
-         # (base's 19 shingles plus 20 new ones, jaccard 19/39); counting
-         # doc 0's duplicated stored shingles would push it over
+         # (base's 19 shingles plus 20 new ones, jaccard 19/39)
          (11, base + " fern yarrow reef island fjord dune valley amber "
                      "kelp quarry orchard thicket cedar canyon inlet "
                      "juniper birch meadow glacier zephyr")],
@@ -1625,20 +1520,6 @@ def test_incremental_dedup_laws(spark):
            for r in incremental_dedup(batch, corpus,
                                       min_jaccard=0.5).collect()}
     assert got == {5: 2, 9: 1, 11: 1}
-    # precomputed corpus shingles give the identical result, also when
-    # the stored table repeats (doc_id, shingle) rows in shuffled order
-    pre = shingles(corpus)
-    got2 = {r["doc_id"]: r["n_copies"]
-            for r in incremental_dedup(batch, corpus, min_jaccard=0.5,
-                                       corpus_sh=pre).collect()}
-    assert got2 == got
-    messy = (pre.unionByName(pre.filter(F.col("doc_id") == 0))
-             .unionByName(pre).orderBy(F.md5("shingle")))
-    assert messy.count() > 2 * pre.count()
-    got2b = {r["doc_id"]: r["n_copies"]
-             for r in incremental_dedup(batch, corpus, min_jaccard=0.5,
-                                        corpus_sh=messy).collect()}
-    assert got2b == got
     # greedy rule: a batch doc matching only an EARLIER batch doc is
     # rejected even though the corpus never saw either
     batch2 = spark.createDataFrame(
@@ -2145,73 +2026,16 @@ def test_review_fix_regressions(spark):
                       bin_width_s=0)
 
 
-def test_heavy_key_quarantine_guard(spark):
-    """The degenerate-key pre-flight on the sequential-window family
-    (r7 verdict item 5): a key whose row count exceeds the budget is
-    excluded from bands/funnel output — a quarantine report, not an
-    executor OOM — and the guard is value-invisible for every key
-    under the budget."""
-    import datetime
-    from pyspark.sql import functions as F
-    from cantera_table_spark.functions.timeseries import funnel, with_bands
-    from cantera_table_spark.operators.skew import (quarantine_heavy_keys,
-                                                    top_heavy_keys)
-    # series "hot" floods 50 rows; "cold" has 5
-    rows = ([("hot", float(i)) for i in range(50)] +
-            [("cold", float(i)) for i in range(5)])
-    ts = spark.createDataFrame(rows, "key string, value double")
-    banded = with_bands(ts, max_rows_per_key=10)
-    keys = {r.key for r in banded.select("key").distinct().collect()}
-    assert keys == {"cold"}
-    # guarded output over surviving keys == unguarded output restricted
-    # to them (the guard never changes a kept key's bands)
-    unguarded = with_bands(ts.filter(F.col("key") == "cold"))
-    assert sorted(map(tuple, banded.collect())) == \
-        sorted(map(tuple, unguarded.collect()))
-    # the report names the quarantined key with its count
-    rep = top_heavy_keys(ts, "key", 10).collect()
-    assert [(r.key, r.n_rows) for r in rep] == [("hot", 50)]
-    # funnel: bot user 9 floods stage events, users 1/3 stay intact
-    ev = ([(1, "a", 100), (1, "b", 200), (3, "a", 100)] +
-          [(9, "a", 100 + i) for i in range(40)])
-    e = spark.createDataFrame(
-        [(u, t, datetime.datetime.utcfromtimestamp(s)) for u, t, s in ev],
-        "user_id long, event_type string, ts timestamp")
-    out = {r.user_id: r.funnel_depth
-           for r in funnel(e, ["a", "b"], max_rows_per_key=10).collect()}
-    assert out == {1: 2, 3: 1}
-    # kept/heavy partition the input by key
-    kept, heavy = quarantine_heavy_keys(e, "user_id", 10)
-    assert kept.count() == 3 and heavy.count() == 1
-    # r8 advisory: the heavy_out out-param surfaces the quarantine
-    # report (no silent drop, no second scan) from both operators
-    rep_bands: list = []
-    with_bands(ts, max_rows_per_key=10, heavy_out=rep_bands).collect()
-    assert len(rep_bands) == 1
-    assert [(r.key, r.n_rows) for r in rep_bands[0].collect()] == \
-        [("hot", 50)]
-    rep_funnel: list = []
-    funnel(e, ["a", "b"], max_rows_per_key=10,
-           heavy_out=rep_funnel).collect()
-    assert [(r.user_id, r.n_rows) for r in rep_funnel[0].collect()] == \
-        [(9, 40)]
-    # without the guard the out-param stays untouched
-    untouched: list = []
-    with_bands(ts, heavy_out=untouched).collect()
-    assert untouched == []
-
-
 def test_r9_review_similarity_dedup_guards(spark):
     """r9 review findings, fixed in one sweep: (a) a zero-norm centroid
     must not capture every vector in ivf_assign (NULL cosine loses the
-    min instead of winning it); (b) brute_force_topk_pandas must skip
-    NULL/wrong-dimension embedding rows instead of crashing the Arrow
-    kernel; (c) quantize codes clamp at BOTH ends under external
+    min instead of winning it); (b) brute_force_topk skips
+    NULL/wrong-dimension embedding rows; (c) quantize codes clamp at BOTH ends under external
     stats; (d) apply_dedup works with a non-default id column."""
     from pyspark.sql import functions as F
     from cantera_table_spark.functions.similarity import (
-        brute_force_topk, brute_force_topk_pandas, ivf_assign,
-        quantization_stats, quantize_embeddings)
+        brute_force_topk, ivf_assign, quantization_stats,
+        quantize_embeddings)
     from cantera_table_spark.functions.dedup import apply_dedup
 
     # (a) centroid 0 is all-zero (degenerate), centroid 1 is real
@@ -2226,8 +2050,7 @@ def test_r9_review_similarity_dedup_guards(spark):
     # vec 3 is orthogonal to centroid 1 (cos 0) but 0 > NULL-guarded inf
     assert got[3] == 1
 
-    # (b) NULL + ragged rows skipped, results match the JVM path on
-    # the clean rows
+    # (b) NULL + ragged rows skipped: the result is the clean rows'
     dirty = emb.unionByName(spark.createDataFrame(
         [(9, None), (10, [1.0, 0.0, 0.0])],
         "vec_id long, embedding array<double>"))
@@ -2236,9 +2059,9 @@ def test_r9_review_similarity_dedup_guards(spark):
     jvm = {(r.neighbor_id, r.cos)
            for r in brute_force_topk(dirty.filter("vec_id < 9"), q, k=2)
            .collect()}
-    pd_ = {(r.neighbor_id, r.cos)
-           for r in brute_force_topk_pandas(dirty, q, k=2).collect()}
-    assert pd_ == jvm and len(pd_) == 2
+    got = {(r.neighbor_id, r.cos)
+           for r in brute_force_topk(dirty, q, k=2).collect()}
+    assert got == jvm and len(got) == 2
 
     # (c) external stats narrower than the data: codes clamp to
     # [0, levels], never negative
@@ -2324,39 +2147,16 @@ def test_r10_advisory_fixes(spark):
         wordpiece_vocab_file(docs, p, min_count=1)
 
 
-def test_r11_keywords_fallback_and_tz_warning(spark, tmpdir):
-    """r11 core-path review findings, pinned: (a) keywords.yaml '#'
-    starts a comment only outside quotes and after whitespace ('#' is a
-    valid DSL identifier char, so patterns carry it), quoted scalars
-    unescape, and a bare "- temp:" item is the "temp:" prefix;
-    (b) load_table's session-timezone override warning stays quiet for
-    ANY fixed-zero zone spelling (GMT, +00:00), not just the literal
-    'UTC' family — it resolves through session.is_utc_zone now."""
-    import os
+def test_r11_keywords_fallback_and_tz_warning(spark):
+    """r11 core-path review finding, pinned: (b) load_table's
+    session-timezone override warning stays quiet for ANY fixed-zero
+    zone spelling (GMT, +00:00), not just the literal 'UTC' family — it
+    resolves through session.is_utc_zone now."""
     import warnings
 
     import pytest
 
-    from cantera_table_spark.model import load_keywords_config, load_table
-
-    p = os.path.join(str(tmpdir), "keywords.yaml")
-    with open(p, "w") as f:
-        f.write("# header comment\n"
-                "timestamped:\n"
-                "  - '/tag#.*/'   # trailing comment\n"
-                "  - plain#id\n"
-                "  - \"x\\\"y #z\"   # escaped quote must not close\n"
-                "  - 'a''b #c'   # doubled quote must not close\n"
-                "  - don't   # mid-scalar apostrophe is literal (r12)\n"
-                "ephemeral:\n"
-                "  - temp:\n")
-    assert load_keywords_config(p) == [
-        ("temp:", False, "ephemeral"),
-        ("tag#.*", True, "timestamped"),
-        ("plain#id", False, "timestamped"),
-        ('x"y #z', False, "timestamped"),
-        ("a'b #c", False, "timestamped"),
-        ("don't", False, "timestamped")]
+    from cantera_table_spark.model import load_table
 
     old_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
@@ -2376,17 +2176,13 @@ def test_r11_keywords_fallback_and_tz_warning(spark, tmpdir):
 def test_r11_salt_collision_guard(spark):
     """r11 operators-review finding: a caller __salt column would be
     silently overwritten, change row routing/grouping, and then be
-    dropped — both salted operators now raise like
+    dropped — the salted aggregation now raises like
     ordering.global_row_number's reserved-name guard."""
     import pytest
 
-    from cantera_table_spark.operators.skew import (salted_count_sum,
-                                                    salted_semi_join)
+    from cantera_table_spark.operators.skew import salted_count_sum
     df = spark.createDataFrame([(1, 2.0, 0)],
                                "doc_id int, v double, __salt int")
-    rhs = spark.createDataFrame([(1,)], "doc_id int")
-    with pytest.raises(ValueError, match="__salt"):
-        salted_semi_join(df, rhs)
     with pytest.raises(ValueError, match="__salt"):
         salted_count_sum(df, ["doc_id"], "v")
 
@@ -2404,18 +2200,15 @@ def test_r11_similarity_review_fixes(spark):
         ranking on m-1 subspaces;
     (c) pq_train survives a NULL embedding and keeps NULL-element
         subvectors out of the refined means;
-    (d) the pandas brute-force kernel handles STRING ids identically
-        to the JVM path;
-    (e) ivf_train keeps k centroids when a cluster captures nothing
-        and carries non-integer ids;
+    (d) brute_force_topk ranks STRING ids;
     (f) hyperplane_signature picks the reference dimension from the
         LOWEST id deterministically."""
     from pyspark.sql import functions as F
 
     from cantera_table_spark.functions.similarity import (
-        brute_force_topk, brute_force_topk_pandas, hyperplane_signature,
-        ivf_assign, ivf_assign_hier, ivf_train, pq_codebook, pq_encode,
-        pq_topk, pq_train, seed_centroids)
+        brute_force_topk, hyperplane_signature, ivf_assign,
+        ivf_assign_hier, pq_codebook, pq_encode, pq_topk, pq_train,
+        seed_centroids)
 
     # (a) vec 0 = zero vector -> degenerate seed + coarse centroid
     rows = [(0, [0.0] * 4)] + [
@@ -2454,25 +2247,14 @@ def test_r11_similarity_review_fixes(spark):
     tcb = pq_train(with_null, m=4, ksub=4, iters=1)
     assert tcb.count() == 4 * 4
 
-    # (d) string ids: pandas kernel == JVM path
+    # (d) string ids
     semb = emb.select(F.concat(F.lit("v"),
                                F.format_string("%03d", "vec_id"))
                       .alias("vec_id"), "embedding")
     sq = semb.filter(F.col("vec_id") == "v001")
     jvm = {(r.query_id, r.neighbor_id, r.cos, r.rank)
            for r in brute_force_topk(semb, sq, k=5).collect()}
-    pnd = {(r.query_id, r.neighbor_id, r.cos, r.rank)
-           for r in brute_force_topk_pandas(semb, sq, k=5).collect()}
-    assert jvm == pnd and len(jvm) == 5
-
-    # (e) ivf_train: string ids + empty-cluster retention (two clone
-    # seeds -> one captures nothing but must survive the round)
-    dup = spark.createDataFrame(
-        [("a", [1.0, 0.0]), ("b", [1.0, 0.0])] +
-        [(f"c{i}", [0.0, float(i + 1)]) for i in range(6)],
-        "vec_id string, embedding array<double>")
-    tc = ivf_train(dup, k=4, iters=2)
-    assert tc.count() == 4
+    assert len(jvm) == 5
 
     # (f) ragged corpus: lowest id (dim 4) decides; dim-2 rows drop
     ragged = emb.unionByName(spark.createDataFrame(

@@ -32,7 +32,7 @@ def catalog(spark):
         "key string, doc string")
     return Catalog(summaries=[docs], indexes=[postings],
                    overrides=[overrides],
-                   keyword_meta=[("days", False, "timestamped")])
+                   keyword_meta=[("days", "timestamped")])
 
 
 def test_envelope_and_override_patching(spark, catalog):

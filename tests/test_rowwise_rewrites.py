@@ -15,7 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cantera_table_spark.plans.inspect import plan_facts
+from tests.plan_facts import plan_facts
 
 
 @pytest.fixture(scope="module")

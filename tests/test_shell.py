@@ -99,7 +99,7 @@ def test_r11_shell_review_pins(spark, catalog):
         "log_odds double, match_count_a long, match_count_b long, "
         "keyword string, min_score double, max_score double")
     cat = Cat(summaries=[], indexes=[],
-              keyword_meta=[("ts:", False, "timestamped")])
+              keyword_meta=[("ts:", "timestamped")])
     got = set(format_correlate_rows(rows_df, cat, do_timestamps=False))
     # 19845.25 days = 2024-05-02 06:00 UTC
     assert "0.693\t5\t1\tts:event≥2024-05-02 06:00" in got

@@ -2,6 +2,7 @@
 (the rotation planner feeds gate.py's _DRIVER_ORDER each round) and for
 the gate cache scope that sweep tools drain."""
 
+import ast
 import importlib.util
 import os
 
@@ -239,3 +240,59 @@ def test_oracle_shared_fragments_in_lockstep():
     n = min(common_suffix(pq[0], pq[1]), common_suffix(pq[0], pq[2]))
     # the shared ADC-rank suffix (GROUP BY + final approx_d2 select)
     assert n >= 200 and "approx_d2" in pq[0][-n:], (n, pq[0][-50:])
+
+
+
+def _source_files():
+    """Every .py file of the repo outside tests/."""
+    for dirpath, dirnames, filenames in os.walk(ROOT):
+        top = os.path.relpath(dirpath, ROOT) == "."
+        dirnames[:] = [d for d in dirnames if not d.startswith(".")
+                       and not (top and d == "tests")]
+        for f in filenames:
+            if f.endswith(".py"):
+                yield os.path.join(dirpath, f)
+
+
+def _names_used(node):
+    """Every identifier a node reads, imports or takes as an attribute.
+    Docstrings and comments are not such nodes, so they never count."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name.rsplit(".", 1)[-1]
+
+
+def test_every_package_def_is_reached_outside_tests():
+    """Each top-level def or class in the package (gate.py aside: its
+    registry is the gates' entry point) is reached from non-test code:
+    the package's module-level statements, gate.py, bench.py,
+    perfbench/, tools/ or __spark_entry__.py, directly or through other
+    reached defs, and never only through its own body. A name that only
+    tests reach is dead surface."""
+    pkg = os.path.join(ROOT, "cantera_table_spark") + os.sep
+    used, defs = set(), []
+    for path in _source_files():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        mine = path.startswith(pkg) and not path.endswith(os.sep + "gate.py")
+        for stmt in tree.body:
+            name = getattr(stmt, "name", None)
+            names = {n for n in _names_used(stmt) if n != name}
+            if mine and name:
+                defs.append((os.path.relpath(path, ROOT), name, names))
+            else:
+                used |= names
+    grown = True
+    while grown:
+        grown = False
+        for _, name, names in defs:
+            if name in used and not names <= used:
+                used |= names
+                grown = True
+    unreached = [f"{path}::{name}" for path, name, _ in sorted(defs)
+                 if name not in used]
+    assert not unreached, "\n".join(unreached)
