@@ -278,11 +278,11 @@ def test_every_package_def_is_reached_outside_tests():
     for path in _source_files():
         with open(path) as fh:
             tree = ast.parse(fh.read(), path)
-        mine = path.startswith(pkg) and not path.endswith(os.sep + "gate.py")
+        in_pkg = path.startswith(pkg) and not path.endswith(os.sep + "gate.py")
         for stmt in tree.body:
             name = getattr(stmt, "name", None)
             names = {n for n in _names_used(stmt) if n != name}
-            if mine and name:
+            if in_pkg and name:
                 defs.append((os.path.relpath(path, ROOT), name, names))
             else:
                 used |= names
