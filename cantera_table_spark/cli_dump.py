@@ -23,7 +23,7 @@ from cantera_table_spark.session import get_spark
 from cantera_table_spark.sources import dump
 
 
-def main(argv=None) -> int:
+def main() -> int:
     ap = argparse.ArgumentParser(prog="cantera-table-spark dump")
     ap.add_argument("--format", default="raw",
                     choices=["raw", "index", "summaries", "time-series",
@@ -36,7 +36,7 @@ def main(argv=None) -> int:
     ap.add_argument("--time-format", default="yyyy-MM-dd HH:mm:ss")
     ap.add_argument("--output", default=None,
                     help="write CSV here instead of stdout")
-    args = ap.parse_args(argv)
+    args = ap.parse_args()
 
     # loud misconfiguration before a Spark session spins up: each
     # format's required source flags, checked here so the error is an

@@ -24,7 +24,7 @@ from cantera_table_spark.sources.ingest import (
 )
 
 
-def main(argv=None) -> int:
+def main() -> int:
     ap = argparse.ArgumentParser(prog="cantera-table-spark load")
     ap.add_argument("inputs", nargs="+")
     ap.add_argument("--output", required=True)
@@ -55,7 +55,7 @@ def main(argv=None) -> int:
                     help="write a parquet bloom filter on keyword "
                          "(third pruning tier for point lookups at "
                          "large key cardinality)")
-    args = ap.parse_args(argv)
+    args = ap.parse_args()
 
     spark = get_spark("cantera-load")
     spark.sparkContext.setLogLevel("ERROR")

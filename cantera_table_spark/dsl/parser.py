@@ -152,8 +152,8 @@ class Parser:
         self.i = 0
 
     # -- token helpers ------------------------------------------------
-    def peek(self, ahead: int = 0) -> Tok:
-        return self.toks[min(self.i + ahead, len(self.toks) - 1)]
+    def peek(self) -> Tok:
+        return self.toks[self.i]
 
     def next(self) -> Tok:
         t = self.toks[self.i]
@@ -423,6 +423,10 @@ class Parser:
             inner = self.parse_postfix()
             self.expect_sym(",")
             count = self.expect_number()
+            if count < 0:
+                # a sample size, unsigned in the reference (query.cc:549)
+                raise ParseError(f"RANDOM_SAMPLE count must not be "
+                                 f"negative: {count:g}")
             self.expect_sym(")")
             return Binary("sample", inner, value=count)
         raise ParseError(f"expected sub-query, got {t.kind}:{t.value!r}")

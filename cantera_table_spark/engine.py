@@ -44,18 +44,6 @@ class Engine:
         self.caches = CacheScope()
         self.time_format = "%Y-%m-%d %H:%M:%S"
 
-    def register_views(self, prefix: str = "") -> None:
-        """Expose the catalog tables as Spark SQL temp views
-        (``postings``, ``documents``, ``overrides``) so users can mix
-        the search DSL with plain ``spark.sql`` analytics over the same
-        data — the relational surface the reference never had."""
-        self.catalog.index().createOrReplaceTempView(f"{prefix}postings")
-        self.catalog.summary().createOrReplaceTempView(
-            f"{prefix}documents")
-        ov = self.catalog.override()
-        if ov is not None:
-            ov.createOrReplaceTempView(f"{prefix}overrides")
-
     def release_caches(self) -> None:
         """Unpersist intermediates cached by CORRELATE statements and
         ``query_df`` pages (call after consuming their result

@@ -34,18 +34,17 @@ def md5_int(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact duplicate groups by content hash; canonical = min id."""
-    return (df.select(F.md5(F.col(text_col)).alias("content_hash"),
-                      F.col(id_col))
+    return (df.select(F.md5(F.col("text")).alias("content_hash"),
+                      F.col("doc_id"))
             .groupBy("content_hash")
-            .agg(F.min(id_col).alias("canonical_id"),
+            .agg(F.min("doc_id").alias("canonical_id"),
                  F.count("*").alias("n_copies")))
 
 
 def shingle_arrays(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", n: int = 3) -> DataFrame:
+                   n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document as ONE array row:
     (doc_id, __shingles) — the module's only tokenize -> n-gram
     transform (:func:`shingles` is its explode).  Keeping shingles
@@ -70,7 +69,7 @@ def shingle_arrays(df: DataFrame, text_col: str = "text",
     test_near_dup_clusters_clone_invariant; conditional branches are
     exempt from eager subexpression hoisting, which is the same
     reason text.with_repetition_stats guards its gram arrays)."""
-    return (df.select(F.col(id_col).alias("doc_id"),
+    return (df.select(F.col("doc_id"),
                       F.explode(F.array(tokens(F.col(text_col))))
                       .alias("__toks"))
             .filter(F.size("__toks") >= n)
@@ -93,10 +92,9 @@ def exploded_shingles(arrs: DataFrame) -> DataFrame:
     return arrs.select("doc_id", F.explode("__shingles").alias("shingle"))
 
 
-def shingles(df: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id", n: int = 3) -> DataFrame:
+def shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (doc_id, shingle)."""
-    return exploded_shingles(shingle_arrays(df, text_col, id_col, n))
+    return exploded_shingles(shingle_arrays(df, n=n))
 
 
 def _sig_array(shingles_arr: Column, k: int = 16) -> Column:
@@ -334,8 +332,10 @@ def jaccard_pairs(sh: DataFrame, min_jaccard: float = 0.0,
     return out.filter(F.col("jaccard") >= min_jaccard)
 
 
-def simhash(df: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id", bits: int = 32) -> DataFrame:
+SIMHASH_BITS = 32
+
+
+def simhash(df: DataFrame) -> DataFrame:
     """SimHash signature: per bit, sum +/-1 over distinct token hashes;
     bit set when the sum is positive: (doc_id, simhash).
 
@@ -350,23 +350,23 @@ def simhash(df: DataFrame, text_col: str = "text",
     text) are dropped, matching the grouped form's explode.  The token
     array sits behind a Generate barrier so the size() filter and the
     fold share one tokenize."""
-    base = (df.select(F.col(id_col).alias("doc_id"),
+    base = (df.select(F.col("doc_id"),
                       F.explode(F.array(F.array_distinct(
-                          tokens(F.col(text_col))))).alias("__toks"))
+                          tokens(F.col("text"))))).alias("__toks"))
             .filter(F.size("__toks") >= 1))
     xs = F.transform(F.col("__toks"), md5_int)
     init = F.struct(*[F.lit(0).cast("long").alias(f"c{b}")
-                      for b in range(bits)])
+                      for b in range(SIMHASH_BITS)])
 
     def bump(acc, x):
         return F.struct(*[(acc[f"c{b}"] + F.shiftright(x, b) % 2)
-                          .alias(f"c{b}") for b in range(bits)])
+                          .alias(f"c{b}") for b in range(SIMHASH_BITS)])
 
     n = F.size(F.col("__toks"))
 
     def assemble(acc):
         expr = None
-        for b in range(bits):
+        for b in range(SIMHASH_BITS):
             term = F.when(acc[f"c{b}"] * 2 > n,
                           F.lit(1 << b).cast("long")).otherwise(F.lit(0))
             expr = term if expr is None else expr + term
@@ -376,26 +376,30 @@ def simhash(df: DataFrame, text_col: str = "text",
         "doc_id", F.aggregate(xs, init, bump, assemble).alias("simhash"))
 
 
-def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding") -> DataFrame:
+def embedding_near_dup_pairs(emb: DataFrame,
+                             threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (brute force — the exact
     baseline; LSH-bucketed variant in functions/similarity.py)."""
     from cantera_table_spark.functions.similarity import cosine
-    a = emb.select(F.col(id_col).alias("id_a"),
-                   F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"),
-                   F.col(vec_col).alias("vb"))
+    a = emb.select(F.col("vec_id").alias("id_a"),
+                   F.col("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("id_b"),
+                   F.col("embedding").alias("vb"))
     return (a.join(b, F.col("id_a") < F.col("id_b"))
             .withColumn("cos", F.round(cosine(F.col("va"), F.col("vb")), 6))
             .filter(F.col("cos") >= threshold)
             .select("id_a", "id_b", "cos"))
 
 
-def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
-                       max_iters: int = 20, *,
-                       caches: CacheScope,
-                       small_graph_edges: int = 100_000) -> DataFrame:
+# duplicate_clusters labels a graph of at most SMALL_GRAPH_EDGES edges
+# on the driver; a larger one takes at most MAX_LABEL_ROUNDS
+# distributed rounds
+SMALL_GRAPH_EDGES = 100_000
+MAX_LABEL_ROUNDS = 20
+
+
+def duplicate_clusters(ids: DataFrame, pairs: DataFrame, *,
+                       caches: CacheScope) -> DataFrame:
     """Connected components over verified duplicate pairs: every doc
     gets the minimum doc_id reachable through the pair graph as its
     ``canonical_id`` (singletons map to themselves).
@@ -408,8 +412,8 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
     singletons to themselves).  O(diameter) iterations; duplicate
     clusters are shallow in practice so this converges in a handful of
     rounds.  The driver only sees a changed-row count per iteration.
-    Non-convergence within ``max_iters`` (a component with diameter >
-    max_iters) raises instead of silently returning partial labels.
+    Non-convergence within ``MAX_LABEL_ROUNDS`` (a component with
+    a longer diameter) raises instead of silently returning partial labels.
     The subgraph labels backing the returned DataFrame are
     Spark-cached, and the returned frame is an (uncached) join over
     them — unpersisting the RESULT would free nothing.  ``caches`` is
@@ -418,13 +422,13 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
     consuming the result (the same contract as
     operators.correlate.correlate_sets).
 
-    Graphs with at most ``small_graph_edges`` edges skip the
+    Graphs with at most ``SMALL_GRAPH_EDGES`` edges skip the
     distributed rounds entirely: one bounded collect + driver-side
     union-find (path compression, union-by-min — identical min-label
     result) + one broadcast-sized createDataFrame back.  Each
     distributed round costs whole shuffle rounds of scheduling latency
     (measured 2.4 s/round on a 480-edge graph at bench SF), which
-    dwarfs a sub-MB collect.  Pass 0 to force the distributed path.
+    dwarfs a sub-MB collect.
     """
     # Cache the symmetrized edge list: its lineage is the whole
     # candidate-generation + verification pipeline (LSH -> jaccard),
@@ -454,10 +458,10 @@ def duplicate_clusters(ids: DataFrame, pairs: DataFrame,
         if n_edges == 0:
             return ids.select("doc_id",
                               F.col("doc_id").alias("canonical_id"))
-        if n_edges > small_graph_edges:
+        if n_edges > SMALL_GRAPH_EDGES:
             # the labels are materialized when this returns, so the
             # edge cache can go
-            labels = _propagate_labels(edges, max_iters, caches)
+            labels = _propagate_labels(edges, caches)
         else:
             labels = F.broadcast(_union_find_labels(ids, edges.collect()))
     # map every corpus doc: subgraph label if present, else itself —
@@ -496,8 +500,7 @@ def _union_find_labels(ids: DataFrame, rows: list) -> DataFrame:
         f"doc_id {idt}, canonical_id {idt}")
 
 
-def _propagate_labels(edges: DataFrame, max_iters: int,
-                      caches: CacheScope) -> DataFrame:
+def _propagate_labels(edges: DataFrame, caches: CacheScope) -> DataFrame:
     """Min-label rounds over the cached symmetrized ``edges``.  Each
     round is persisted in ``caches`` and the one before it released
     from it; returns the converged (doc_id, canonical_id) round."""
@@ -506,7 +509,7 @@ def _propagate_labels(edges: DataFrame, max_iters: int,
               .select(F.col("src").alias("doc_id"),
                       F.col("src").alias("canonical_id")))
     prev = None
-    for _ in range(max_iters):
+    for _ in range(MAX_LABEL_ROUNDS):
         neighbor_min = (edges.join(
             labels.select(F.col("doc_id").alias("src"),
                           F.col("canonical_id").alias("src_lab")), "src")
@@ -533,15 +536,12 @@ def _propagate_labels(edges: DataFrame, max_iters: int,
         if changed == 0:
             return labels
     raise RuntimeError(
-        f"duplicate_clusters did not converge in {max_iters} iterations "
-        f"(a duplicate chain longer than max_iters); raise max_iters")
+        f"duplicate_clusters did not converge in {MAX_LABEL_ROUNDS} "
+        "iterations (a duplicate chain longer than MAX_LABEL_ROUNDS)")
 
 
-def near_dup_clusters(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", k: int = 16,
-                      bands: int = 4, min_jaccard: float = 0.12,
-                      max_bucket: int | None = None,
-                      max_df: int | None = None, *,
+def near_dup_clusters(docs: DataFrame, min_jaccard: float = 0.12,
+                      max_bucket: int | None = None, *,
                       caches: CacheScope) -> DataFrame:
     """The full dedup pipeline a pretraining corpus actually runs:
     exact-collapse identical texts by content hash FIRST, run the
@@ -579,23 +579,22 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text",
     # NULL-text docs as one identity class ("-" cannot collide with a
     # 32-hex md5), matching the SQL oracle's PARTITION BY md5(text),
     # which also buckets NULLs together.
-    member = docs.select(F.col(id_col).alias("doc_id"),
-                         F.coalesce(F.md5(F.col(text_col)), F.lit("-"))
+    member = docs.select(F.col("doc_id"),
+                         F.coalesce(F.md5(F.col("text")), F.lit("-"))
                          .alias("__h"))
     groups = member.groupBy("__h").agg(F.min("doc_id").alias("rep_id"))
     membership = member.join(groups, "__h").select("doc_id", "rep_id")
-    reps = (docs.select(F.col(id_col).alias("doc_id"),
-                        F.col(text_col).alias("__text"))
+    reps = (docs.select(F.col("doc_id"),
+                        F.col("text").alias("__text"))
             .join(groups.select(F.col("rep_id").alias("doc_id")),
                   "doc_id", "left_semi"))
     # map-only candidate generation (r12): signatures and band hashes
     # fold per row, so the LSH stage's two pre-join shuffles are gone
     arrs = shingle_arrays(reps, text_col="__text")
-    cands = lsh_candidate_pairs_arrays(arrs, k=k, bands=bands,
-                                       max_bucket=max_bucket)
+    cands = lsh_candidate_pairs_arrays(arrs, max_bucket=max_bucket)
     pairs = (jaccard_pairs(exploded_shingles(arrs),
                            min_jaccard=min_jaccard,
-                           candidates=cands, max_df=max_df)
+                           candidates=cands)
              .select("doc_a", "doc_b"))
     rep_labels = duplicate_clusters(reps.select("doc_id"), pairs,
                                     caches=caches)
@@ -606,7 +605,6 @@ def near_dup_clusters(docs: DataFrame, text_col: str = "text",
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
-                  text_col: str = "text", id_col: str = "doc_id",
                   n: int = 3) -> DataFrame:
     """Benchmark decontamination: per corpus document, how many of its
     word n-gram shingles appear anywhere in a benchmark/eval set, plus
@@ -620,13 +618,13 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     only shuffle is the per-doc overlap count keyed by doc_id.  The
     output keeps every corpus document (left join, zero-filled).
     """
-    corp = shingles(docs, text_col, id_col, n=n)
-    bench = (shingles(benchmark, text_col, id_col, n=n)
+    corp = shingles(docs, n=n)
+    bench = (shingles(benchmark, n=n)
              .select("shingle").distinct())
     hits = (corp.join(F.broadcast(bench), "shingle")
             .groupBy("doc_id")
             .agg(F.count("*").alias("n_contaminated_shingles")))
-    return (docs.select(F.col(id_col).alias("doc_id"))
+    return (docs.select(F.col("doc_id"))
             .join(hits, "doc_id", "left")
             .withColumn("n_contaminated_shingles",
                         F.coalesce("n_contaminated_shingles", F.lit(0)))
@@ -694,8 +692,7 @@ def _merged_spans(base: DataFrame, n: int, min_docs: int) -> DataFrame:
             .select("doc_id", "s", "e", "__nwin"))
 
 
-def repeated_spans(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id", n: int = 8,
+def repeated_spans(df: DataFrame, n: int = 8,
                    min_docs: int = 2) -> DataFrame:
     """Cross-document repeated-substring detection (the exact-substring
     dedup signal of Lee et al. 2021, "Deduplicating Training Data Makes
@@ -721,8 +718,8 @@ def repeated_spans(df: DataFrame, text_col: str = "text",
     (token ranges overlap or touch); span token length =
     last_pos + n - first_pos.
     """
-    toks = tokens(F.col(text_col))
-    base = (df.select(F.col(id_col).alias("doc_id"), toks.alias("__toks"))
+    toks = tokens(F.col("text"))
+    base = (df.select(F.col("doc_id"), toks.alias("__toks"))
             .filter(F.size("__toks") >= n))
     spans = _merged_spans(base, n, min_docs)
     agg = (spans.groupBy("doc_id")
@@ -742,8 +739,7 @@ def repeated_spans(df: DataFrame, text_col: str = "text",
                     .alias("repeated_token_frac")))
 
 
-def apply_dedup(df: DataFrame, clusters: DataFrame,
-                id_col: str = "doc_id") -> DataFrame:
+def apply_dedup(df: DataFrame, clusters: DataFrame) -> DataFrame:
     """Materialize a dedup decision: keep each cluster's canonical
     document, dropping the rest, and report how many duplicates each
     survivor absorbed.  ``clusters`` is duplicate_clusters' output
@@ -753,30 +749,20 @@ def apply_dedup(df: DataFrame, clusters: DataFrame,
     but two-long columns; at 100 TB this is the id-join shape, the
     text never moves until the final survivor join).
     """
-    # clusters always carries (doc_id, canonical_id); align its id
-    # column with the caller's id_col so a non-default name actually
-    # works — previously any id_col other than "doc_id" raised an
-    # unresolved-column error (r9 review finding)
-    if id_col != "doc_id":
-        clusters = clusters.select(F.col("doc_id").alias(id_col),
-                                   "canonical_id")
     absorbed = (clusters.groupBy("canonical_id")
                 .agg((F.count("*") - 1).alias("n_duplicates_removed")))
     survivors = (clusters
-                 .filter(F.col(id_col) == F.col("canonical_id"))
-                 .select(id_col))
-    return (df.join(survivors, id_col)
+                 .filter(F.col("doc_id") == F.col("canonical_id"))
+                 .select("doc_id"))
+    return (df.join(survivors, "doc_id")
             .join(absorbed,
-                  df[id_col] == absorbed["canonical_id"])
+                  df["doc_id"] == absorbed["canonical_id"])
             .drop("canonical_id"))
 
 
 def incremental_dedup(batch: DataFrame, corpus: DataFrame,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      n: int = 3, k: int = 16, bands: int = 4,
                       min_jaccard: float = 0.5,
-                      max_bucket: int | None = None,
-                      max_df: int | None = None) -> DataFrame:
+                      max_bucket: int | None = None) -> DataFrame:
     """Incremental (cross-batch) dedup: admit the NEW-batch documents
     that duplicate neither the existing corpus nor an earlier batch
     document — the production shape where a crawl lands daily against
@@ -807,17 +793,17 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
     Returns admitted batch representatives: (doc_id, n_copies) where
     n_copies counts the batch-internal exact-duplicate group.
     """
-    bh = batch.select(F.col(id_col).alias("doc_id"),
-                      F.col(text_col).alias("__text"),
-                      F.coalesce(F.md5(F.col(text_col)), F.lit("-"))
+    bh = batch.select(F.col("doc_id"),
+                      F.col("text").alias("__text"),
+                      F.coalesce(F.md5(F.col("text")), F.lit("-"))
                       .alias("__h"))
     reps = bh.groupBy("__h").agg(F.min("doc_id").alias("doc_id"),
                                  F.count("*").alias("n_copies"))
-    ch = (corpus.select(F.coalesce(F.md5(F.col(text_col)), F.lit("-"))
+    ch = (corpus.select(F.coalesce(F.md5(F.col("text")), F.lit("-"))
                         .alias("__h")).distinct())
     surv0 = reps.join(ch, "__h", "left_anti").select("doc_id", "n_copies")
     surv0_text = surv0.join(bh.select("doc_id", "__text"), "doc_id")
-    batch_arrs = shingle_arrays(surv0_text, text_col="__text", n=n)
+    batch_arrs = shingle_arrays(surv0_text, text_col="__text")
     # exact-collapse the corpus to one representative per content hash
     # before shingling.  A production corpus is already deduplicated
     # (no-op); a degenerate corpus with byte-identical clones would
@@ -832,20 +818,19 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
     # window would shuffle and sort every clone row.  doc_id is unique,
     # so struct ordering (doc_id first) picks the same min-id
     # representative.
-    creps = (corpus.select(F.col(id_col).alias("doc_id"),
-                           F.col(text_col).alias("__text"),
-                           F.coalesce(F.md5(F.col(text_col)),
+    creps = (corpus.select(F.col("doc_id"),
+                           F.col("text").alias("__text"),
+                           F.coalesce(F.md5(F.col("text")),
                                       F.lit("-")).alias("__ch"))
              .groupBy("__ch")
              .agg(F.min(F.struct("doc_id", "__text")).alias("__r"))
              .select(F.col("__r.doc_id").alias("doc_id"),
                      F.col("__r.__text").alias("__text")))
-    corpus_arrs = shingle_arrays(creps, text_col="__text", n=n)
+    corpus_arrs = shingle_arrays(creps, text_col="__text")
     arrs = corpus_arrs.unionByName(batch_arrs)
-    cands = lsh_candidate_pairs_arrays(arrs, k=k, bands=bands,
-                                       max_bucket=max_bucket)
+    cands = lsh_candidate_pairs_arrays(arrs, max_bucket=max_bucket)
     pairs = (jaccard_pairs(exploded_shingles(arrs), min_jaccard=min_jaccard,
-                           candidates=cands, max_df=max_df)
+                           candidates=cands)
              .select("doc_a", "doc_b"))
     batch_ids = surv0.select("doc_id")
     # pair (a, b) has a < b: b rejected whenever b is a batch doc
@@ -868,8 +853,7 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
     return surv0.join(rejected, "doc_id", "left_anti")
 
 
-def cut_repeated_spans(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n: int = 8,
+def cut_repeated_spans(df: DataFrame, n: int = 8,
                        min_docs: int = 2) -> DataFrame:
     """The APPLY step of exact-substring dedup (Lee et al. 2021):
     rebuild each document's token stream with every cross-document
@@ -886,9 +870,9 @@ def cut_repeated_spans(df: DataFrame, text_col: str = "text",
     non-NULL-text document; documents shorter than ``n`` tokens keep
     everything.
     """
-    toks = tokens(F.col(text_col))
-    base = (df.filter(F.col(text_col).isNotNull())
-            .select(F.col(id_col).alias("doc_id"), toks.alias("__toks")))
+    toks = tokens(F.col("text"))
+    base = (df.filter(F.col("text").isNotNull())
+            .select(F.col("doc_id"), toks.alias("__toks")))
     eligible = base.filter(F.size("__toks") >= n)
     spansd = (_merged_spans(eligible, n, min_docs)
               .groupBy("doc_id")

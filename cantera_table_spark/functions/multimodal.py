@@ -559,18 +559,18 @@ def encode_jpeg(pixels_rgb: bytes, width: int, height: int,
     return bytes(out)
 
 
-def constant_block_frame(vals, block: int = 8) -> bytes:
-    """RGB bytes of a (2*block) x (2*block) image of four constant-gray
+def constant_block_frame(vals) -> bytes:
+    """RGB bytes of a 16 x 16 image of four constant-gray 8 x 8
     quadrants (vals[0..3] row-major).  The fixture shape whose
     baseline-JPEG round-trip is exact at quality >= 80 — the single
     definition the mm08/mm09 gate synths and the scaling harness all
     share, so the oracle contract (block k = source byte k) cannot
     desynchronize across them."""
-    img = np.zeros((2 * block, 2 * block, 3), np.uint8)
-    img[:block, :block] = vals[0]
-    img[:block, block:] = vals[1]
-    img[block:, :block] = vals[2]
-    img[block:, block:] = vals[3]
+    img = np.zeros((16, 16, 3), np.uint8)
+    img[:8, :8] = vals[0]
+    img[:8, 8:] = vals[1]
+    img[8:, :8] = vals[2]
+    img[8:, 8:] = vals[3]
     return img.tobytes()
 
 
@@ -953,10 +953,11 @@ def _gif_subblocks(payload: bytes) -> bytes:
     return bytes(out)
 
 
-def encode_gif(frames, width: int, height: int, delay_cs: int = 4) -> bytes:
+def encode_gif(frames, width: int, height: int) -> bytes:
     """Real animated GIF writer: 256-entry greyscale global palette
     (palette[i] = (i,i,i)), one image block per frame of width*height
-    palette indices, real LZW compression, GCE delay per frame."""
+    palette indices, real LZW compression, a 4 cs GCE delay per
+    frame."""
     out = bytearray()
     out += GIF_SIG
     out += struct.pack("<HH", width, height)
@@ -968,7 +969,7 @@ def encode_gif(frames, width: int, height: int, delay_cs: int = 4) -> bytes:
         fr = bytes(fr)
         if len(fr) != width * height:
             raise ValueError("frame size mismatch")
-        out += b"\x21\xf9\x04\x00" + struct.pack("<H", delay_cs) + b"\x00\x00"
+        out += b"\x21\xf9\x04\x00" + struct.pack("<H", 4) + b"\x00\x00"
         out += b"\x2c" + struct.pack("<HHHH", 0, 0, width, height) + b"\x00"
         out.append(8)                    # min LZW code size
         out += _gif_subblocks(_lzw_encode(fr, 8))
@@ -1119,15 +1120,14 @@ def gif_frame_stats(media: DataFrame, every_n: int = 1) -> DataFrame:
 AVI_SIG = b"RIFF"
 
 
-def encode_avi_mjpeg(frames_rgb, width: int, height: int,
-                     fps: int = 10, quality: int = 90) -> bytes:
+def encode_avi_mjpeg(frames_rgb, width: int, height: int) -> bytes:
     """Minimal real Motion-JPEG AVI writer: a RIFF container (the WAV
     sibling format) with a conformant hdrl (avih + vids/MJPG strh +
     BITMAPINFOHEADER strf), one baseline-JPEG '00dc' chunk per frame
-    (encode_jpeg), and an idx1 index.  Word-aligned chunks per the RIFF
-    spec."""
-    payloads = [encode_jpeg(f, width, height, quality)
-                for f in frames_rgb]
+    (encode_jpeg at its default quality), and an idx1 index, at 10
+    frames per second.  Word-aligned chunks per the RIFF spec."""
+    fps = 10
+    payloads = [encode_jpeg(f, width, height) for f in frames_rgb]
 
     def chunk(fourcc: bytes, body: bytes) -> bytes:
         pad = b"\x00" if len(body) % 2 else b""
@@ -1197,24 +1197,22 @@ def decode_avi_mjpeg(data: bytes) -> dict:
             "frames": [d["pixels"] for d in decoded]}
 
 
-def avi_frame_stats(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """Decode Motion-JPEG AVI payloads and emit one row per sampled
-    frame (frame_idx % every_n == 0) with per-channel means — real
+def avi_frame_stats(media: DataFrame) -> DataFrame:
+    """Decode Motion-JPEG AVI payloads and emit one row per frame
+    with per-channel means — real
     video-container frame sampling, the gif_frame_stats sibling for
     the compressed-frame path.  Arrow-batched; undecodable payloads
     quarantine to a single NULL row."""
     return _frame_stats_map(
         media, decode_avi_mjpeg, T.StructType(_FRAME_STATS_FIELDS),
         lambda mid, fi, d, m: (mid, fi, d["width"], d["height"],
-                               float(m[0]), float(m[1]), float(m[2])),
-        every_n=every_n)
+                               float(m[0]), float(m[1]), float(m[2])))
 
 
 IPV_MAGIC = b"IPV1"
 
 
-def encode_ipv(frames_rgb, width: int, height: int, gop: int = 4,
-               quality: int = 90) -> bytes:
+def encode_ipv(frames_rgb, width: int, height: int, gop: int = 4) -> bytes:
     """Toy MPEG-1-style intra/predicted video codec (reference parity
     target: the inter-frame plug-point decode_avi_mjpeg documents).
     Every ``gop``-th frame is an I-frame carrying a full baseline JPEG
@@ -1253,14 +1251,14 @@ def encode_ipv(frames_rgb, width: int, height: int, gop: int = 4,
         if arr.size != width * height * 3:
             raise ValueError("IPV frame size disagrees with dimensions")
         if i % gop == 0 or recon_prev is None:
-            payload = encode_jpeg(arr.tobytes(), width, height, quality)
+            payload = encode_jpeg(arr.tobytes(), width, height)
             ftype = 0x49
             recon = np.frombuffer(decode_jpeg(payload)["pixels"],
                                   np.uint8)
         else:
             delta = ((arr.astype(np.int16) -
                       recon_prev.astype(np.int16)) % 256).astype(np.uint8)
-            payload = encode_jpeg(delta.tobytes(), width, height, quality)
+            payload = encode_jpeg(delta.tobytes(), width, height)
             ftype = 0x50
             dd = np.frombuffer(decode_jpeg(payload)["pixels"], np.uint8)
             recon = ((recon_prev.astype(np.int16) + dd.astype(np.int16))
@@ -1338,8 +1336,8 @@ def ipv_frame_stats(media: DataFrame) -> DataFrame:
                                float(m[0]), float(m[1]), float(m[2])))
 
 
-def encode_wav(samples_i16, sample_rate: int = 8000) -> bytes:
-    """Mono 16-bit PCM WAV from an int16 sample sequence (stdlib
+def encode_wav(samples_i16) -> bytes:
+    """Mono 16-bit 8 kHz PCM WAV from an int16 sample sequence (stdlib
     ``wave`` writer)."""
     import io
     import wave
@@ -1348,7 +1346,7 @@ def encode_wav(samples_i16, sample_rate: int = 8000) -> bytes:
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
-        w.setframerate(sample_rate)
+        w.setframerate(8000)
         w.writeframes(np.asarray(samples_i16, dtype="<i2").tobytes())
     return buf.getvalue()
 

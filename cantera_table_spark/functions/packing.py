@@ -45,9 +45,8 @@ PACK_SCHEMA = T.StructType([
 ])
 
 
-def pack_sequences(df: DataFrame, capacity: int, n_shards: int = 4,
-                   text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def pack_sequences(df: DataFrame, capacity: int,
+                   n_shards: int = 4) -> DataFrame:
     """Greedy sequential bin packing of documents into token-capacity
     bins, sharded for parallelism.
 
@@ -62,9 +61,9 @@ def pack_sequences(df: DataFrame, capacity: int, n_shards: int = 4,
     # rounding ids >= 2^53 and corrupting the bin sort order (the
     # kmv_distinct Arrow-coercion class, r11 review).
     sized = df.select(
-        F.col(id_col).alias("doc_id"),
-        (F.col(id_col) % n_shards).alias("shard"),
-        F.coalesce(F.size(tokens(F.col(text_col))), F.lit(0))
+        F.col("doc_id"),
+        (F.col("doc_id") % n_shards).alias("shard"),
+        F.coalesce(F.size(tokens(F.col("text"))), F.lit(0))
         .cast("long").alias("n_tokens"))
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -92,8 +91,7 @@ def pack_sequences(df: DataFrame, capacity: int, n_shards: int = 4,
 SHUFFLE_SALT = "shuf:"
 
 
-def shuffle_shards(df: DataFrame, n_shards: int,
-                   id_col: str = "doc_id") -> DataFrame:
+def shuffle_shards(df: DataFrame, n_shards: int) -> DataFrame:
     """Deterministic global corpus shuffle + round-robin shard
     assignment — the training-order stage that feeds a dataloader:
     every epoch-0 consumer must see the same pseudo-random document
@@ -108,7 +106,7 @@ def shuffle_shards(df: DataFrame, n_shards: int,
     (rank - 1) % n_shards, so shards interleave the shuffled order and
     stay equal-size to within one document.
 
-    Returns (id_col, shuffle_rank, shard).  Downstream a writer
+    Returns (doc_id, shuffle_rank, shard).  Downstream a writer
     would ``.repartition('shard').write.partitionBy('shard')`` — kept
     out of this operator so the assignment stays a pure, testable
     function.  The numbering relies on ReuseExchange (ordering.py's
@@ -116,26 +114,25 @@ def shuffle_shards(df: DataFrame, n_shards: int,
     """
     from cantera_table_spark.functions.sampling import sample_hash
     from cantera_table_spark.operators.ordering import global_row_number
-    h = sample_hash(F.col(id_col), salt=SHUFFLE_SALT).alias("__h")
+    h = sample_hash(F.col("doc_id"), salt=SHUFFLE_SALT).alias("__h")
     # NULL ids rank first on their NULL hash and poison the epoch-0
     # determinism contract — drop them like the sampling operators
     # (r11 review)
     ranked = global_row_number(
-        df.filter(F.col(id_col).isNotNull()).select(F.col(id_col), h),
-        F.col("__h").asc(), F.col(id_col).asc(),
+        df.filter(F.col("doc_id").isNotNull()).select(F.col("doc_id"), h),
+        F.col("__h").asc(), F.col("doc_id").asc(),
         col_name="shuffle_rank")
     return (ranked
-            .select(id_col, "shuffle_rank",
+            .select("doc_id", "shuffle_rank",
                     ((F.col("shuffle_rank") - 1) % n_shards)
                     .alias("shard")))
 
 
-def assemble_packed_text(docs: DataFrame, packed: DataFrame,
-                         sep: str = "\n\n", text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
+def assemble_packed_text(docs: DataFrame, packed: DataFrame) -> DataFrame:
     """Materialize training sequences from a packing assignment: per
     (shard, bin), the member documents' text concatenated in doc_id
-    order with ``sep`` between documents (the EOS-separator slot).
+    order with a blank line between documents (the EOS-separator
+    slot).
 
     The text column only moves in the final assembly shuffle, keyed by
     (shard, bin) — bounded by capacity per group.  Returns
@@ -151,18 +148,14 @@ def assemble_packed_text(docs: DataFrame, packed: DataFrame,
       and the SQL oracle's string_agg both skip NULL elements, so the
       two engines agree byte-for-byte.
     """
-    # pack_sequences always emits its id as 'doc_id' (PACK_SCHEMA) no
-    # matter what id_col the caller packed with — align it to the
-    # docs-side name so the documented pairing composes for any id_col
-    joined = (packed.select(F.col("doc_id").alias(id_col),
-                            "shard", "bin", "n_tokens")
-              .join(docs.select(id_col, text_col), id_col))
+    joined = (packed.select("doc_id", "shard", "bin", "n_tokens")
+              .join(docs.select("doc_id", "text"), "doc_id"))
     return (joined.groupBy("shard", "bin")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_tokens").alias("n_tokens"),
                  F.array_join(
                      F.transform(
                          F.array_sort(F.collect_list(
-                             F.struct(id_col, text_col))),
-                         lambda s: s[text_col]),
-                     sep).alias("text")))
+                             F.struct("doc_id", "text"))),
+                         lambda s: s["text"]),
+                     "\n\n").alias("text")))

@@ -12,16 +12,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def bm25_scores(postings: DataFrame, k1: float = 1.2,
-                b: float = 0.75) -> DataFrame:
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def bm25_scores(postings: DataFrame) -> DataFrame:
     """Okapi BM25 weights for a term-frequency postings table
     (keyword, doc_id, score=tf):
 
       idf(t)      = ln((N - df + 0.5) / (df + 0.5) + 1)
       bm25(t, d)  = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
 
-    with dl = document token count (sum of tf over the doc) and avgdl
-    its corpus mean.
+    with k1 = BM25_K1, b = BM25_B, dl = document token count (sum of
+    tf over the doc) and avgdl its corpus mean.
 
     Scale shape: dl is computed IN PLACE by a window sum over doc_id —
     one shuffle of the postings, no join.  The former agg-then-join
@@ -58,21 +61,21 @@ def bm25_scores(postings: DataFrame, k1: float = 1.2,
     tf = F.col("score")
     idf = F.log((F.col("__N") - F.col("__df") + 0.5) /
                 (F.col("__df") + 0.5) + 1)
-    norm = tf + k1 * (1 - b + b * F.col("__dl") / F.col("__avgdl"))
+    norm = tf + BM25_K1 * (1 - BM25_B +
+                           BM25_B * F.col("__dl") / F.col("__avgdl"))
     return (postings
             .withColumn("__dl", F.sum("score").over(w_doc))
             .join(dfreq, "keyword")
             .crossJoin(F.broadcast(corpus))
             .select("keyword", "doc_id",
-                    F.round(idf * tf * (k1 + 1) / norm, 6)
+                    F.round(idf * tf * (BM25_K1 + 1) / norm, 6)
                     .alias("bm25")))
 
 
-def rrf_fuse(ranked: dict[str, DataFrame], k: int = 60,
-             id_col: str = "doc_id") -> DataFrame:
+def rrf_fuse(ranked: dict[str, DataFrame], k: int = 60) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of named ranked
     lists — the standard hybrid-search combiner for keyword + vector
-    retrieval.  Each input DataFrame carries (id_col, rank) with rank
+    retrieval.  Each input DataFrame carries (doc_id, rank) with rank
     1-based; the fused score is sum over lists of 1/(k + rank), and
     the output is re-ranked by (rrf desc, id asc).
 
@@ -86,15 +89,15 @@ def rrf_fuse(ranked: dict[str, DataFrame], k: int = 60,
         # fused group that sorts FIRST under id-asc ties and shifts
         # every real fused_rank (r11 review — the sampling NULL-id
         # poison class); a candidate without identity fuses nothing
-        part = (df.filter(F.col(id_col).isNotNull())
-                .select(F.col(id_col),
+        part = (df.filter(F.col("doc_id").isNotNull())
+                .select(F.col("doc_id"),
                         (1.0 / (F.lit(float(k)) + F.col("rank")))
                         .alias("__contrib")))
         tagged = part if tagged is None else tagged.unionByName(part)
     if tagged is None:
         raise ValueError("rrf_fuse needs at least one ranked list")
-    fused = (tagged.groupBy(id_col)
+    fused = (tagged.groupBy("doc_id")
              .agg(F.round(F.sum("__contrib"), 6).alias("rrf"),
                   F.count("*").alias("n_lists")))
-    w = Window.orderBy(F.col("rrf").desc(), F.col(id_col).asc())
+    w = Window.orderBy(F.col("rrf").desc(), F.col("doc_id").asc())
     return fused.withColumn("fused_rank", F.row_number().over(w))

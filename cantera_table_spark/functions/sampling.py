@@ -34,8 +34,7 @@ def sample_u(id_col: Column) -> Column:
             .cast("double") / F.lit(float(1 << 32)))
 
 
-def stratified_sample(df: DataFrame, strata_col: str, quota: int,
-                      id_col: str = "doc_id") -> DataFrame:
+def stratified_sample(df: DataFrame, strata_col: str, quota: int) -> DataFrame:
     """Per-stratum quota sample: the `quota` rows of each stratum with
     the smallest sample hash, with their 1-based `sample_rank`.
 
@@ -57,14 +56,14 @@ def stratified_sample(df: DataFrame, strata_col: str, quota: int,
     if quotas is not None and not quotas:
         raise ValueError("quota dict is empty: no stratum is budgeted")
     qmax = max(quotas.values()) if quotas else quota
-    h = sample_hash(F.col(id_col)).alias("__h")
+    h = sample_hash(F.col("doc_id")).alias("__h")
     # NULL ids have NULL hashes, which sort FIRST under the asc window
     # order — they deterministically WON sample slots, displacing real
     # documents, with arbitrary ties among themselves (r11 review,
     # empirically confirmed).  A row without identity cannot have a
     # reproducible sample key; drop it like funnel/asof drop NULL keys.
-    pre = (df.filter(F.col(id_col).isNotNull())
-           .select(F.col(strata_col), F.col(id_col), h))
+    pre = (df.filter(F.col("doc_id").isNotNull())
+           .select(F.col(strata_col), F.col("doc_id"), h))
     if quotas is not None:
         from pyspark.sql import types as T
         # schema follows the input's strata type (language strings,
@@ -76,7 +75,7 @@ def stratified_sample(df: DataFrame, strata_col: str, quota: int,
         # semi-effect: strata without a quota drop out here
         pre = pre.join(F.broadcast(qdf), strata_col)
     w = (Window.partitionBy(strata_col)
-         .orderBy(F.col("__h").asc(), F.col(id_col).asc()))
+         .orderBy(F.col("__h").asc(), F.col("doc_id").asc()))
     out = (pre.withColumn("sample_rank", F.row_number().over(w))
            .filter(F.col("sample_rank") <= F.lit(int(qmax))))
     if quotas is not None:
@@ -84,12 +83,10 @@ def stratified_sample(df: DataFrame, strata_col: str, quota: int,
     return out.drop("__h")
 
 
-def mixture_sample(df: DataFrame, weights: dict, total_tokens: int,
-                   strata_col: str = "source", text_col: str = "text",
-                   id_col: str = "doc_id", token_col: str | None = None,
-                   coarse: bool = True) -> DataFrame:
+def mixture_sample(df: DataFrame, weights: dict,
+                   total_tokens: int) -> DataFrame:
     """Domain-mixture resampling to a TOKEN budget: each stratum
-    (source domain, language, quality bucket) gets ``total_tokens *
+    (a ``source`` domain) gets ``total_tokens *
     w/sum(w)`` tokens, filled greedily in the deterministic md5-hash
     order shared with :func:`stratified_sample` — a document is
     admitted iff the tokens of the hash-earlier documents of its
@@ -101,8 +98,8 @@ def mixture_sample(df: DataFrame, weights: dict, total_tokens: int,
 
     Plan shape: the naive formulation is an exclusive running sum over
     each FULL stratum — one sequential window scan per stratum, the
-    classic single-partition bottleneck at 100 TB.  With
-    ``coarse=True`` (default) the cumsum runs at two granularities:
+    classic single-partition bottleneck at 100 TB.  Here the cumsum
+    runs at two granularities:
 
     1. docs bucket by their hash's first byte (256 buckets); per
        (stratum, bucket) token totals are one map-side-combinable
@@ -119,9 +116,9 @@ def mixture_sample(df: DataFrame, weights: dict, total_tokens: int,
        the earlier two-branch union re-scanned it per branch (the
        one-consumption rule, SCALE.md).
 
-    Both paths return IDENTICAL rows (the hash orders by (first-byte
-    bucket, rest) exactly like the flat hash string; equivalence
-    pinned in tests).  Returns (strata_col, doc_id, n_tokens).
+    It returns the naive formulation's rows exactly (the hash orders by
+    (first-byte bucket, rest) exactly like the flat hash string;
+    equivalence pinned in tests).  Returns (source, doc_id, n_tokens).
     """
     from pyspark.sql import types as T
     w_sum = float(sum(weights.values()))
@@ -132,44 +129,32 @@ def mixture_sample(df: DataFrame, weights: dict, total_tokens: int,
     spark = df.sparkSession
     qdf = spark.createDataFrame(
         [(k, int(v)) for k, v in quotas.items()],
-        T.StructType([df.schema[strata_col],
+        T.StructType([df.schema["source"],
                       T.StructField("__q", T.LongType())]))
-    if token_col is None:
-        from cantera_table_spark.functions.text import tokens
-        n_tok = F.coalesce(F.size(tokens(F.col(text_col))), F.lit(0))
-    else:
-        n_tok = F.coalesce(F.col(token_col), F.lit(0))
+    from cantera_table_spark.functions.text import tokens
+    n_tok = F.coalesce(F.size(tokens(F.col("text"))), F.lit(0))
     # NULL ids: no identity -> no reproducible hash position; their
     # NULL hash sorted first and consumed quota ahead of every real
     # document (r11 review; same rule as stratified_sample)
-    base = (df.filter(F.col(id_col).isNotNull())
-            .select(F.col(strata_col), F.col(id_col).alias("doc_id"),
+    base = (df.filter(F.col("doc_id").isNotNull())
+            .select(F.col("source"), F.col("doc_id"),
                     n_tok.cast("long").alias("n_tokens"),
-                    sample_hash(F.col(id_col)).alias("__h"))
-            .join(F.broadcast(qdf), strata_col))
-    out_cols = [strata_col, "doc_id", "n_tokens"]
-    if not coarse:
-        w = (Window.partitionBy(strata_col)
-             .orderBy(F.col("__h").asc(), F.col("doc_id").asc())
-             .rowsBetween(Window.unboundedPreceding, -1))
-        cum = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-        return (base.withColumn("__cum", cum)
-                .filter(F.col("__cum") < F.col("__q"))
-                .select(*out_cols))
+                    sample_hash(F.col("doc_id")).alias("__h"))
+            .join(F.broadcast(qdf), "source"))
     b = base.withColumn("__b", F.substring("__h", 1, 2))
-    coarse_tbl = (b.groupBy(strata_col, "__b")
+    coarse_tbl = (b.groupBy("source", "__b")
                   .agg(F.sum("n_tokens").alias("__bt")))
-    wb = (Window.partitionBy(strata_col).orderBy(F.col("__b").asc())
+    wb = (Window.partitionBy("source").orderBy(F.col("__b").asc())
           .rowsBetween(Window.unboundedPreceding, -1))
     starts = coarse_tbl.withColumn(
         "__bs", F.coalesce(F.sum("__bt").over(wb), F.lit(0)))
-    j = b.join(F.broadcast(starts), [strata_col, "__b"])
+    j = b.join(F.broadcast(starts), ["source", "__b"])
     # full-bucket admission must be STRICT: a zero-token doc sitting
     # at a bucket end that lands exactly on the quota has exclusive
     # cumsum == quota, which the naive rule (cum < quota) rejects —
     # buckets ending exactly at the quota fall to the exact per-row
     # refinement term instead
-    wf = (Window.partitionBy(strata_col, "__b")
+    wf = (Window.partitionBy("source", "__b")
           .orderBy(F.col("__h").asc(), F.col("doc_id").asc())
           .rowsBetween(Window.unboundedPreceding, -1))
     cum = (F.col("__bs") +
@@ -178,11 +163,10 @@ def mixture_sample(df: DataFrame, weights: dict, total_tokens: int,
             .withColumn("__cum", cum)
             .filter((F.col("__bs") + F.col("__bt") < F.col("__q")) |
                     (F.col("__cum") < F.col("__q")))
-            .select(*out_cols))
+            .select("source", "doc_id", "n_tokens"))
 
 
-def hash_split(df: DataFrame, fractions: dict,
-               id_col: str = "doc_id") -> DataFrame:
+def hash_split(df: DataFrame, fractions: dict) -> DataFrame:
     """Deterministic train/val/test assignment: the sample-hash
     uniform u(id) buckets each row into the named fractions (dict of
     name -> weight, normalized; insertion order fixes the cumulative
@@ -199,8 +183,8 @@ def hash_split(df: DataFrame, fractions: dict,
     # row silently lands in the LAST split — for the canonical
     # train/val/test layout that is the eval split, an eval-
     # contamination vector (r11 review).  No identity, no split.
-    df = df.filter(F.col(id_col).isNotNull())
-    u = sample_u(F.col(id_col))
+    df = df.filter(F.col("doc_id").isNotNull())
+    u = sample_u(F.col("doc_id"))
     expr = None
     acc = 0.0
     items = list(fractions.items())

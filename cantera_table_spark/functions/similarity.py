@@ -53,7 +53,6 @@ def _rankable(vec: Column) -> Column:
 
 
 def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
-                     id_col: str = "vec_id",
                      vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbours for each query vector.
 
@@ -68,10 +67,10 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     ``cos IS NOT NULL``.
     """
     from pyspark.sql import Window
-    q = (queries.select(F.col(id_col).alias("query_id"),
+    q = (queries.select(F.col("vec_id").alias("query_id"),
                         F.col(vec_col).alias("qv"))
          .filter(_rankable(F.col("qv"))))
-    c = (emb.select(F.col(id_col).alias("neighbor_id"),
+    c = (emb.select(F.col("vec_id").alias("neighbor_id"),
                     F.col(vec_col).alias("cv"))
          .filter(_rankable(F.col("cv"))))
     # degenerate sides dropped above; the residual per-pair degenerate
@@ -125,9 +124,7 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame,
 
 
 def ivf_assign_hier(emb: DataFrame, centroids: DataFrame,
-                    coarse_k: int | None = None, nprobe: int = 2,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+                    coarse_k: int | None = None, nprobe: int = 2) -> DataFrame:
     """Two-level ANN assignment for the k-proportional-to-N regime:
     :func:`ivf_assign` compares every vector to every centroid — N*k
     cosines, quadratic when cluster count tracks corpus size (exactly
@@ -162,8 +159,8 @@ def ivf_assign_hier(emb: DataFrame, centroids: DataFrame,
     # (zero/NaN) coarse centroid sorting first in every vector's probe
     # list is the r9 one-bucket collapse, re-found on this path in r11
     probed = _probe_clusters(
-        emb.select(F.col(id_col).alias("vec_id"),
-                   F.col(vec_col).alias("v")),
+        emb.select(F.col("vec_id"),
+                   F.col("embedding").alias("v")),
         coarse, nprobe, id_name="vec_id", vec_name="v",
         out_name="__coarse")
     return (probed.join(F.broadcast(fmap), "__coarse")
@@ -187,9 +184,7 @@ def seed_centroids(emb: DataFrame, n: int = 8, id_col: str = "vec_id",
 
 
 def ivf_topk(indexed: DataFrame, centroids: DataFrame, queries: DataFrame,
-             k: int = 5, nprobe: int = 2,
-             id_col: str = "vec_id", vec_col: str = "embedding"
-             ) -> DataFrame:
+             k: int = 5, nprobe: int = 2) -> DataFrame:
     """Approximate top-k: probe the nprobe nearest centroid buckets per
     query, exact cosine within the probed buckets.  Probe selection is
     groupBy + sorted-slice (map-side combinable over the broadcast
@@ -201,8 +196,8 @@ def ivf_topk(indexed: DataFrame, centroids: DataFrame, queries: DataFrame,
     # NULL/NaN cosines); degenerate indexed vectors are filtered in
     # the candidate scan below — per-side _rankable, not a filter on
     # the computed pair cosine (see _rankable)
-    q = (queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("qv"))
+    q = (queries.select(F.col("vec_id").alias("query_id"),
+                        F.col("embedding").alias("qv"))
          .filter(_rankable(F.col("qv"))))
     probed = _probe_clusters(q, centroids, nprobe, id_name="query_id",
                              vec_name="qv", out_name="cluster")
@@ -255,9 +250,7 @@ def _hyperplanes(n_bits: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def hyperplane_signature(emb: DataFrame, n_bits: int = 16,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+def hyperplane_signature(emb: DataFrame, n_bits: int = 16) -> DataFrame:
     """(id, sig): bit j set when dot(v, plane_j) > 0.  Cosine-similar
     vectors agree on most bits (SimHash for dense vectors).
 
@@ -265,68 +258,60 @@ def hyperplane_signature(emb: DataFrame, n_bits: int = 16,
     vectors of any other length are rejected (zip_with would silently
     NULL-pad them into signature 0, colliding every short vector into
     one bucket)."""
-    emb = emb.filter(F.col(vec_col).isNotNull())
+    emb = emb.filter(F.col("embedding").isNotNull())
     # lowest-id row decides the reference dimension — an unordered
     # .first() is plan/partition-order dependent, so WHICH dimension
     # class of a ragged corpus survives could change across AQE plans
     # or fetch-failure reruns (r11 review)
-    first = (emb.orderBy(id_col)
-             .select(F.size(vec_col).alias("n")).first())
+    first = (emb.orderBy("vec_id")
+             .select(F.size("embedding").alias("n")).first())
     if first is None:
         # schema derives from the input (r9 finding (c))
         from pyspark.sql import types as T
         from cantera_table_spark.functions.dedup import _empty_result
-        return _empty_result(emb, [("vec_id", id_col), ("v", vec_col),
+        return _empty_result(emb, [("vec_id", "vec_id"),
+                                   ("v", "embedding"),
                                    ("sig", T.LongType())])
     dim = first["n"]
-    emb = emb.filter(F.size(vec_col) == dim)
+    emb = emb.filter(F.size("embedding") == dim)
     planes = _hyperplanes(n_bits, dim)
     sig = None
     for j, p in enumerate(planes):
         pj = F.array(*[F.lit(x) for x in p])
-        d = dot(F.transform(F.col(vec_col), lambda x: x.cast("double")), pj)
+        d = dot(F.transform(F.col("embedding"),
+                            lambda x: x.cast("double")), pj)
         bit = F.when(d > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0))
         sig = bit if sig is None else sig + bit
-    return emb.select(F.col(id_col).alias("vec_id"),
-                      F.col(vec_col).alias("v"), sig.alias("sig"))
+    return emb.select(F.col("vec_id"),
+                      F.col("embedding").alias("v"), sig.alias("sig"))
 
 
-def lsh_near_dup_pairs(emb: DataFrame, threshold: float = 0.8,
-                       n_bits: int = 16, bands: int = 4,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       max_bucket: int | None = None) -> DataFrame:
+# lsh_near_dup_pairs' signature: LSH_BITS hyperplane bits in LSH_BANDS
+# bands of LSH_BITS // LSH_BANDS bits each
+LSH_BITS = 16
+LSH_BANDS = 4
+
+
+def lsh_near_dup_pairs(emb: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Banded signature join -> candidate pairs -> exact cosine verify.
 
     Only vectors sharing a full signature band pair up, so the join
     shuffles (band, band-bits) keys instead of forming the N^2 cross
-    product; recall vs the exact pairing is tested, not assumed.
-
-    ``max_bucket`` caps degenerate buckets (e.g. a corpus with
-    thousands of identical embeddings collapsing into one band bucket)
-    with the same linear-star fallback as
-    dedup.lsh_candidate_pairs_arrays — every emitted pair is still
-    exact-cosine verified, so precision is unaffected; only direct
-    pairs between non-hub members of an oversized MIXED bucket can be
-    missed."""
+    product; recall vs the exact pairing is tested, not assumed."""
     from cantera_table_spark.functions.dedup import _bucketed_pairs
-    if n_bits % bands:
-        raise ValueError(
-            f"n_bits={n_bits} must divide evenly into bands={bands} "
-            f"(trailing bits would be silently ignored)")
-    rows = n_bits // bands
+    rows = LSH_BITS // LSH_BANDS
     mask = (1 << rows) - 1
-    sigs = hyperplane_signature(emb, n_bits, id_col, vec_col)
+    sigs = hyperplane_signature(emb, LSH_BITS)
     banded = sigs.select(
         "vec_id", "v",
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band"),
                      F.shiftright(F.col("sig"), b * rows)
                      .bitwiseAND(F.lit(mask)).alias("bits"))
-            for b in range(bands)])).alias("e")
+            for b in range(LSH_BANDS)])).alias("e")
     ).select("vec_id", "v", "e.band", "e.bits")
     cand = _bucketed_pairs(banded, ["band", "bits"], "vec_id",
-                           max_bucket, carry=["v"])
+                           None, carry=["v"])
     return (cand.withColumn("cos", F.round(cosine(F.col("v_a"),
                                                   F.col("v_b")), 6))
             .filter(F.col("cos") >= threshold)
@@ -334,15 +319,14 @@ def lsh_near_dup_pairs(emb: DataFrame, threshold: float = 0.8,
                     F.col("doc_b").alias("id_b"), "cos"))
 
 
-def quantization_stats(emb: DataFrame,
-                       vec_col: str = "embedding") -> DataFrame:
+def quantization_stats(emb: DataFrame) -> DataFrame:
     """Global per-dimension (min, max) ranges for scalar quantization,
     packed into one broadcast-able row of aligned arrays.
 
     One explode + one map-side-combinable aggregation over (dim) — the
     stats row is O(dim), independent of corpus size.
     """
-    stats = (emb.select(F.posexplode(F.col(vec_col)).alias("dim", "x"))
+    stats = (emb.select(F.posexplode(F.col("embedding")).alias("dim", "x"))
              .groupBy("dim")
              .agg(F.min(F.col("x").cast("double")).alias("mn"),
                   F.max(F.col("x").cast("double")).alias("mx")))
@@ -353,13 +337,14 @@ def quantization_stats(emb: DataFrame,
                     F.transform("s", lambda s: s["mx"]).alias("maxs")))
 
 
-def quantize_embeddings(emb: DataFrame, stats: DataFrame | None = None,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        levels: int = 255) -> DataFrame:
-    """int8-style scalar quantization of an embedding column: per
-    dimension d, code = min(floor((x - mn_d) * levels / (mx_d - mn_d)),
-    levels), reconstruction x' = mn_d + code * (mx_d - mn_d) / levels.
+QUANT_LEVELS = 255
+
+
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
+    """int8-style scalar quantization of an embedding column over its
+    own :func:`quantization_stats`: per dimension d, code =
+    min(floor((x - mn_d) * L / (mx_d - mn_d)), L), reconstruction
+    x' = mn_d + code * (mx_d - mn_d) / L, with L = QUANT_LEVELS.
     floor (not round) on BOTH engines — Spark round is HALF_UP while
     DuckDB's INT cast rounds half-even, so floor is the portable choice.
 
@@ -376,24 +361,22 @@ def quantize_embeddings(emb: DataFrame, stats: DataFrame | None = None,
     a SQL oracle's unnest(range(1, len+1)) drops them the same way);
     note sequence(1, 0) would count DOWN and fault element_at.
     """
-    emb = emb.filter(F.size(F.col(vec_col)) > 0)
-    if stats is None:
-        stats = quantization_stats(emb, vec_col)
-    lv = F.lit(float(levels))
-    idx = F.sequence(F.lit(1), F.size(F.col(vec_col)))
+    emb = emb.filter(F.size(F.col("embedding")) > 0)
+    stats = quantization_stats(emb)
+    lv = F.lit(float(QUANT_LEVELS))
+    idx = F.sequence(F.lit(1), F.size(F.col("embedding")))
 
     def per_dim(i):
-        x = F.element_at(F.col(vec_col), i).cast("double")
+        x = F.element_at(F.col("embedding"), i).cast("double")
         mn = F.element_at(F.col("mins"), i)
         mx = F.element_at(F.col("maxs"), i)
         return F.when(mx == mn, F.lit(0).cast("long")).otherwise(
-            # clamp BOTH ends: externally supplied stats (computed on a
-            # training sample) can see x outside [mn, mx], and an
-            # unclamped floor would emit negative codes, breaking the
-            # smallint-ranged code contract (r9 review finding)
+            # clamp BOTH ends: the codes stay smallint-ranged whatever
+            # the floating-point rounding at mn and mx (r9 review
+            # finding)
             F.greatest(F.lit(0).cast("long"),
                        F.least(F.floor(((x - mn) * lv) / (mx - mn)),
-                               F.lit(int(levels)).cast("long"))))
+                               F.lit(QUANT_LEVELS).cast("long"))))
 
     def deq(i):
         mn = F.element_at(F.col("mins"), i)
@@ -522,9 +505,7 @@ def _adc_rank(joined: DataFrame, k: int, m: int) -> DataFrame:
             .filter(F.col("rank") <= k))
 
 
-def pq_codebook(emb: DataFrame, m: int = 4, ksub: int = 8,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+def pq_codebook(emb: DataFrame, m: int = 4, ksub: int = 8) -> DataFrame:
     """Product-quantization codebook: the vector space splits into
     ``m`` contiguous subspaces; each subspace gets ``ksub`` centroids.
     Seeding is deterministic like :func:`seed_centroids` — the ksub
@@ -535,17 +516,15 @@ def pq_codebook(emb: DataFrame, m: int = 4, ksub: int = 8,
     m * ksub small rows, always broadcast.
     """
     from pyspark.sql import Window
-    emb = emb.filter(F.col(vec_col).isNotNull())
-    seeds = (emb.orderBy(id_col).limit(ksub)
+    emb = emb.filter(F.col("embedding").isNotNull())
+    seeds = (emb.orderBy("vec_id").limit(ksub)
              .withColumn("code",
-                         F.row_number().over(Window.orderBy(id_col)) - 1))
-    return (_subvectors(seeds, m, "code", vec_col, "code", "cv")
+                         F.row_number().over(Window.orderBy("vec_id")) - 1))
+    return (_subvectors(seeds, m, "code", "embedding", "code", "cv")
             .select("sub_idx", "code", "cv"))
 
 
-def pq_encode(emb: DataFrame, codebook: DataFrame, m: int = 4,
-              id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
+def pq_encode(emb: DataFrame, codebook: DataFrame, m: int = 4) -> DataFrame:
     """Encode every vector to ``m`` one-byte codes: per subspace, the
     code of the L2-nearest codebook centroid (ties -> lowest code).
     m rows per vector of (vec_id, sub_idx, code) — the stored index is
@@ -556,8 +535,8 @@ def pq_encode(emb: DataFrame, codebook: DataFrame, m: int = 4,
     # NULL vectors get NO codes (a NULL subvector distance would win
     # the min(struct) with an arbitrary code and surface the vector as
     # a fake search result)
-    emb = emb.filter(F.col(vec_col).isNotNull())
-    subs = _subvectors(emb, m, id_col, vec_col, "vec_id", "sv")
+    emb = emb.filter(F.col("embedding").isNotNull())
+    subs = _subvectors(emb, m, "vec_id", "embedding", "vec_id", "sv")
     # a NULL/NaN subspace distance (NULL vector element, or a
     # dim-mismatched pair whose zip_with NULL-pads) must not produce a
     # code: NULL sorts FIRST in struct min, so it would WIN with an
@@ -579,8 +558,7 @@ def pq_encode(emb: DataFrame, codebook: DataFrame, m: int = 4,
 
 
 def pq_topk(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
-            k: int = 5, m: int = 4, id_col: str = "vec_id",
-            vec_col: str = "embedding") -> DataFrame:
+            k: int = 5, m: int = 4) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: each query
     precomputes its m * ksub lookup table of subspace distances to the
     codebook (broadcast both ways — LUT rows = |Q| * m * ksub), the
@@ -590,18 +568,15 @@ def pq_topk(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
     at query time.  Returns (query_id, neighbor_id, approx_d2, rank),
     rank 1..k ascending distance (ties -> lowest neighbor id).
     """
-    queries = queries.filter(F.col(vec_col).isNotNull())
-    lut = _adc_lut(queries, codebook, m, id_col, vec_col)
+    queries = queries.filter(F.col("embedding").isNotNull())
+    lut = _adc_lut(queries, codebook, m, "vec_id", "embedding")
     joined = (codes.join(F.broadcast(lut), ["sub_idx", "code"])
               .filter(F.col("vec_id") != F.col("query_id")))
     return _adc_rank(joined, k, m)
 
 
 def semantic_dedup(emb: DataFrame, threshold: float = 0.8,
-                   n_clusters: int = 8, id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   centroids: DataFrame | None = None,
-                   caches: CacheScope | None = None,
+                   n_clusters: int = 8, caches: CacheScope | None = None,
                    assign: str = "flat", nprobe: int = 2,
                    coarse_k: int | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster the embedding space, and
@@ -611,9 +586,8 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.8,
 
     The pairwise comparison is restricted to WITHIN-cluster pairs —
     the O(N^2/k) SemDeDup economics; the cross-cluster quadratic never
-    materializes.  ``centroids`` defaults to the deterministic seeded
-    set (:func:`seed_centroids`); a caller may pass its own trained
-    centroids.  At 100 TB the within-cluster self-join
+    materializes.  The centroids are the deterministic seeded set
+    (:func:`seed_centroids`).  At 100 TB the within-cluster self-join
     shuffles on ``cluster`` — cluster count scales with corpus so the
     per-cluster membership stays bounded (the paper's setting).
 
@@ -631,16 +605,12 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.8,
     """
     if assign not in ("flat", "hier"):
         raise ValueError(f"assign must be flat|hier: {assign}")
-    if centroids is None:
-        centroids = seed_centroids(emb, n=n_clusters, id_col=id_col,
-                                   vec_col=vec_col)
+    centroids = seed_centroids(emb, n=n_clusters)
     if assign == "hier":
         assigned = ivf_assign_hier(emb, centroids, coarse_k=coarse_k,
-                                   nprobe=nprobe, id_col=id_col,
-                                   vec_col=vec_col)
+                                   nprobe=nprobe)
     else:
-        assigned = ivf_assign(emb, centroids, id_col=id_col,
-                              vec_col=vec_col)
+        assigned = ivf_assign(emb, centroids)
     if caches is not None:
         # the quantized pair stage, the two exact-verify vector lookups,
         # and the final keep-join all consume the assignment pipeline
@@ -715,9 +685,7 @@ def semantic_dedup(emb: DataFrame, threshold: float = 0.8,
 
 def ivfpq_topk(indexed: DataFrame, centroids: DataFrame,
                codes: DataFrame, codebook: DataFrame, queries: DataFrame,
-               k: int = 5, nprobe: int = 2, m: int = 4,
-               id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+               k: int = 5, nprobe: int = 2, m: int = 4) -> DataFrame:
     """The composed IVF+PQ index — the FAISS IVFADC search shape
     (non-residual variant): queries probe their ``nprobe`` nearest
     centroid buckets, and ONLY the probed buckets' PQ codes are scored
@@ -737,24 +705,23 @@ def ivfpq_topk(indexed: DataFrame, centroids: DataFrame,
     # NULL-vector queries would probe arbitrary centroids and rank
     # NULL distances first (asc sorts NULLs first) — same guard as
     # pq_topk/pq_encode
-    queries = queries.filter(F.col(vec_col).isNotNull())
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("qv"))
+    queries = queries.filter(F.col("embedding").isNotNull())
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("qv"))
     probed = _probe_clusters(q, centroids, nprobe, id_name="query_id",
                              vec_name="qv", out_name="cluster",
                              carry_vec=False)
     cand = (indexed.select("vec_id", "cluster").join(probed, "cluster")
             .filter(F.col("vec_id") != F.col("query_id"))
             .select("query_id", "vec_id"))
-    lut = _adc_lut(queries, codebook, m, id_col, vec_col)
+    lut = _adc_lut(queries, codebook, m, "vec_id", "embedding")
     joined = codes.join(cand, "vec_id").join(
         F.broadcast(lut), ["query_id", "sub_idx", "code"])
     return _adc_rank(joined, k, m)
 
 
-def pq_train(emb: DataFrame, m: int = 4, ksub: int = 8, iters: int = 3,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+def pq_train(emb: DataFrame, m: int = 4, ksub: int = 8,
+             iters: int = 3) -> DataFrame:
     """Lloyd-refined PQ codebook: start from the seeded codebook and
     run k-means per SUBSPACE — assign every subvector to its nearest
     centroid (L2), recompute centroids as assignment means, repeat.
@@ -769,18 +736,18 @@ def pq_train(emb: DataFrame, m: int = 4, ksub: int = 8, iters: int = 3,
     The refined codebook drops into pq_encode/pq_topk/ivfpq_topk
     unchanged; the seeded form stays the oracle-deterministic gate
     path."""
-    cb = pq_codebook(emb, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col)
+    cb = pq_codebook(emb, m=m, ksub=ksub)
     # NULL vectors train nothing, same as the encode path (previously
     # one NULL embedding crashed _pq_sublen's dim assert with a
     # misleading 'dim=-1' mid-job, r11 review)
-    emb = emb.filter(F.col(vec_col).isNotNull())
+    emb = emb.filter(F.col("embedding").isNotNull())
     # NULL/NaN-element subvectors train nothing — unfiltered, the
     # NULL distance WINS the struct min with code 0 and the
     # subvector's real elements pollute code 0's refined mean
     # (r11 review).  Per-SIDE validity, like pq_encode; the seeded
     # codebook is screened once (refined means of finite inputs
     # stay finite).
-    subs = (_subvectors(emb, m, id_col, vec_col, "vec_id", "sv")
+    subs = (_subvectors(emb, m, "vec_id", "embedding", "vec_id", "sv")
             .filter(_finite_array(F.col("sv"))))
     cb = cb.filter(_finite_array(F.col("cv")))
     for _ in range(iters):

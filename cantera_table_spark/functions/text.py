@@ -36,17 +36,17 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(F.lower(col), "[^a-z]+"), lambda x: x != "")
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_text_stats(df: DataFrame) -> DataFrame:
     """Quality-scoring features per document."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_tok = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
     total_len = F.aggregate(toks, F.lit(0),
                             lambda acc, x: acc + F.length(x))
-    n_chars = F.length(F.col(text_col))
-    n_alpha = F.length(F.regexp_replace(F.col(text_col), "[^A-Za-z]", ""))
+    n_chars = F.length(F.col("text"))
+    n_alpha = F.length(F.regexp_replace(F.col("text"), "[^A-Za-z]", ""))
     n_punct = F.length(F.regexp_replace(
-        F.col(text_col), "[^.,;:!?'\"()\\[\\]-]", ""))
+        F.col("text"), "[^.,;:!?'\"()\\[\\]-]", ""))
     sw = F.array([F.lit(w) for w in STOPWORDS["en"]])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return (df
@@ -64,25 +64,25 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
                         F.round(n_stop / F.greatest(n_tok, F.lit(1)), 4)))
 
 
-def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_token_counts(df: DataFrame) -> DataFrame:
     """Token counting: whitespace words and a BPE-ish sub-word regex
     (letter runs, digit runs, single punctuation — an approximation of
     byte-pair pre-tokenization)."""
-    ws = F.size(F.filter(F.split(F.col(text_col), "\\s+"),
+    ws = F.size(F.filter(F.split(F.col("text"), "\\s+"),
                          lambda x: x != ""))
     bpe = F.size(F.regexp_extract_all(
-        F.col(text_col), F.lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), 0))
+        F.col("text"), F.lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), 0))
     return (df.withColumn("n_words", ws)
             .withColumn("n_bpe_tokens", bpe))
 
 
-def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_lang_id(df: DataFrame) -> DataFrame:
     """Stopword-overlap language ID: ratio of tokens in each language's
     stopword list; argmax wins, 'und' (undetermined) when all ratios are
     zero.  Deterministic tie-break: the lexicographically GREATEST
     language name wins (struct array_max ordering; the gate oracle
     mirrors it with ORDER BY ratio DESC, lang DESC)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_tok = F.greatest(F.size(toks), F.lit(1))
     ratios = []
     for lang in sorted(STOPWORDS):
@@ -100,13 +100,13 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
                         .otherwise(F.lit("und"))))
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_fingerprint(df: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprint over token lengths — a cheap
     shift-resistant signature (polynomial accumulate mod 1e9+7).
     DuckDB equivalent: list_reduce over the same token array.
     NULL text yields a NULL fingerprint (unknown, distinct from the
     empty string's 0) — the oracle carries the same CASE."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     fp = F.aggregate(
         toks, F.lit(0).cast("long"),
         lambda acc, x: (acc * 31 + F.length(x)) % FINGERPRINT_MOD)
@@ -133,8 +133,7 @@ def _max_run(sorted_arr: Column) -> Column:
         lambda acc: acc["mx"])
 
 
-def with_repetition_stats(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
+def with_repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021, table A1):
     per document, the duplicate-token fraction and the fraction of all
     n-grams claimed by the single most frequent n-gram (n = 2, 3).
@@ -165,7 +164,6 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text",
     Returns the input columns plus dup_token_frac / top_bigram_frac /
     top_trigram_frac (0.0 for documents too short to form the gram).
     """
-    del id_col   # retained for API compatibility; the rewrite is per-row
     cols = df.columns
     # the three output names clash too: the r11 withColumn replaced an
     # existing column of the same name, the r12 select would duplicate
@@ -177,7 +175,7 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text",
         raise ValueError(
             f"input columns collide with repetition internals or "
             f"outputs: {clash}")
-    base = df.select("*", F.explode(F.array(tokens(F.col(text_col))))
+    base = df.select("*", F.explode(F.array(tokens(F.col("text"))))
                      .alias("__toks"))
 
     def grams(k: int) -> Column:
@@ -217,45 +215,40 @@ PII_PATTERNS = {
 PII_REPLACEMENTS = {"email": "<EMAIL>", "ipv4": "<IP>", "phone": "<PHONE>"}
 
 
-def with_pii_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_pii_stats(df: DataFrame) -> DataFrame:
     """Per-document PII match counts (n_email, n_ipv4, n_phone)."""
     out = df
     for name, pat in PII_PATTERNS.items():
         out = out.withColumn(
             f"n_{name}",
-            F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), 0)))
+            F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), 0)))
     return out
 
 
-def scrub_pii(df: DataFrame, text_col: str = "text",
-              out_col: str = "text_clean") -> DataFrame:
+def scrub_pii(df: DataFrame) -> DataFrame:
     """Redact PII spans with typed placeholder tokens.  Replacement
     order is fixed (email, ipv4, phone) so placeholder text can never
     be re-matched by a later pattern."""
-    col = F.col(text_col)
+    col = F.col("text")
     for name, pat in PII_PATTERNS.items():
         col = F.regexp_replace(col, pat, PII_REPLACEMENTS[name])
-    return df.withColumn(out_col, col)
+    return df.withColumn("text_clean", col)
 
 
-def quality_filter(df: DataFrame, text_col: str = "text",
-                   min_tokens: int = 10, max_punct_ratio: float = 0.2,
-                   min_alpha_ratio: float = 0.6,
-                   min_type_token_ratio: float = 0.1) -> DataFrame:
+def quality_filter(df: DataFrame, min_tokens: int = 10) -> DataFrame:
     """Training-corpus quality gate: keep documents passing all
     heuristic thresholds (the filter stage a pretraining pipeline runs
     after dedup).  Pure column predicates over with_text_stats — one
     scan, no shuffle."""
-    stats = with_text_stats(df, text_col)
+    stats = with_text_stats(df)
     return (stats.filter(
         (F.col("n_tokens") >= min_tokens) &
-        (F.col("punct_ratio") <= max_punct_ratio) &
-        (F.col("alpha_ratio") >= min_alpha_ratio) &
-        (F.col("type_token_ratio") >= min_type_token_ratio)))
+        (F.col("punct_ratio") <= 0.2) &
+        (F.col("alpha_ratio") >= 0.6) &
+        (F.col("type_token_ratio") >= 0.1)))
 
 
-def dedup_lines(df: DataFrame, text_col: str = "text",
-                out_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_lines(df: DataFrame) -> DataFrame:
     """Corpus-wide line-level deduplication (the C4 / RefinedWeb "remove
     repeated lines" stage): across the WHOLE corpus, every non-blank
     line (matched on its trimmed form) is kept only at its first
@@ -275,27 +268,27 @@ def dedup_lines(df: DataFrame, text_col: str = "text",
     (the earlier totals/kept two-branch form re-scanned and
     re-exploded the corpus — r10 review finding).
 
-    Returns one row per input document: ``id_col``, n_lines,
-    n_removed, and ``out_col`` (the deduplicated text; empty string
-    when every line was removed).  NULL-text documents are preserved
-    with n_lines 0 and a NULL ``out_col`` (the NULL-stats convention —
+    Returns one row per input document: doc_id, n_lines, n_removed,
+    and text (the deduplicated text; empty string when every line was
+    removed).  NULL-text documents are preserved with n_lines 0 and a
+    NULL text (the NULL-stats convention —
     previously they were silently dropped, r10 review finding).
     """
     lines = df.select(
-        id_col,
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"))
+        "doc_id",
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"))
     keyed = lines.withColumn("key", F.trim("line"))
     winners = (keyed.filter(F.col("key") != "")
                .groupBy("key")
-               .agg(F.min(F.struct(F.col(id_col).alias("d"),
+               .agg(F.min(F.struct(F.col("doc_id").alias("d"),
                                    F.col("pos").alias("p"))).alias("w")))
     keep_flag = ((F.col("key") == "") |
-                 ((F.col("w.d") == F.col(id_col)) &
+                 ((F.col("w.d") == F.col("doc_id")) &
                   (F.col("w.p") == F.col("pos"))))
     # collect_list skips NULL entries, so the conditional struct keeps
     # only surviving lines while count(*) still sees every line
     kept = (keyed.join(winners, "key", "left")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count("*").alias("n_lines"),
                  F.count(F.when(keep_flag, 1)).alias("__n_kept"),
                  F.array_join(
@@ -305,17 +298,16 @@ def dedup_lines(df: DataFrame, text_col: str = "text",
                                     F.struct("pos", "line")))),
                          lambda s: s["line"]),
                      "\n").alias("__text")))
-    return (df.select(id_col)
-            .join(kept, id_col, "left")
-            .select(id_col,
+    return (df.select("doc_id")
+            .join(kept, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
                     (F.coalesce("n_lines", F.lit(0)) -
                      F.coalesce("__n_kept", F.lit(0))).alias("n_removed"),
-                    F.col("__text").alias(out_col)))
+                    F.col("__text").alias("text")))
 
 
-def lm_quality_score(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def lm_quality_score(df: DataFrame) -> DataFrame:
     """Bigram language-model quality score (the CCNet / KenLM-shaped
     perplexity filter): train add-one-smoothed bigram statistics on the
     corpus itself, then score every document by its average negative
@@ -341,17 +333,17 @@ def lm_quality_score(df: DataFrame, text_col: str = "text",
     Documents with fewer than two tokens have no bigrams: n_bigrams=0,
     avg_nll/ppl NULL.
     """
-    toks = tokens(F.col(text_col))
-    base = df.select(id_col, toks.alias("__toks"))
+    toks = tokens(F.col("text"))
+    base = df.select("doc_id", toks.alias("__toks"))
     big = (base.filter(F.size("__toks") >= 2)
-           .select(id_col,
+           .select("doc_id",
                    F.explode(F.transform(
                        F.sequence(F.lit(1), F.size("__toks") - 1),
                        lambda i: F.struct(
                            F.get(F.col("__toks"), i - 1).alias("w1"),
                            F.get(F.col("__toks"), i).alias("w2"))))
                    .alias("b"))
-           .select(id_col, "b.w1", "b.w2"))
+           .select("doc_id", "b.w1", "b.w2"))
     uni = (base.select(F.explode("__toks").alias("w1"))
            .groupBy("w1").agg(F.count("*").alias("c1")))
     # vocabulary size as a broadcast one-row aggregate, not a driver
@@ -367,7 +359,7 @@ def lm_quality_score(df: DataFrame, text_col: str = "text",
     # tables, but a 100 TB vocabulary does not fit an executor).  The
     # per-doc mean becomes the count-weighted mean over distinct
     # bigrams — algebraically identical.
-    db = big.groupBy(id_col, "w1", "w2").agg(F.count("*").alias("__n"))
+    db = big.groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("__n"))
     c12 = db.groupBy("w1", "w2").agg(F.sum("__n").alias("c12"))
     bscore = (c12
               .join(uni, "w1")
@@ -378,15 +370,15 @@ def lm_quality_score(df: DataFrame, text_col: str = "text",
                       .alias("logp")))
     mean_logp = F.sum(F.col("__n") * F.col("logp")) / F.sum("__n")
     agg = (db.join(bscore, ["w1", "w2"])
-           .groupBy(id_col)
+           .groupBy("doc_id")
            .agg(F.sum("__n").alias("n_bigrams"),
                 F.round(-mean_logp, 6).alias("avg_nll"),
                 F.round(F.exp(-mean_logp), 4).alias("ppl")))
-    return (df.select(id_col).join(agg, id_col, "left")
+    return (df.select("doc_id").join(agg, "doc_id", "left")
             .withColumn("n_bigrams", F.coalesce("n_bigrams", F.lit(0))))
 
 
-def corpus_token_stats(df: DataFrame, text_col: str = "text", *,
+def corpus_token_stats(df: DataFrame, *,
                        caches: CacheScope) -> DataFrame:
     """Corpus-level vocabulary statistics: per token, document frequency
     and total term frequency with a unique frequency rank (ties broken
@@ -400,7 +392,7 @@ def corpus_token_stats(df: DataFrame, text_col: str = "text", *,
     single-task memory.  The numbering input is local-checkpointed in
     ``caches`` for the caller to release once the result is consumed."""
     tok = df.select(F.col("doc_id"),
-                    F.explode(tokens(F.col(text_col))).alias("tok"))
+                    F.explode(tokens(F.col("text"))).alias("tok"))
     agg = (tok.groupBy("tok")
            .agg(F.countDistinct("doc_id").alias("doc_freq"),
                 F.count("*").alias("term_freq")))
@@ -414,7 +406,7 @@ def corpus_token_stats(df: DataFrame, text_col: str = "text", *,
                               caches=caches))
 
 
-def bpe_pair_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def bpe_pair_stats(df: DataFrame) -> DataFrame:
     """The core aggregation of byte-pair-encoding tokenizer training:
     corpus-weighted adjacent-symbol pair frequencies at the character
     level.  One training round picks the argmax pair and merges it;
@@ -430,7 +422,7 @@ def bpe_pair_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Returns (pair, pair_count) — weight = total corpus occurrences.
     """
-    words = (df.select(F.explode(tokens(F.col(text_col))).alias("w"))
+    words = (df.select(F.explode(tokens(F.col("text"))).alias("w"))
              .groupBy("w").agg(F.count("*").alias("freq")))
     chars = F.split(F.col("w"), "")
     pairs = (words
@@ -446,15 +438,14 @@ def bpe_pair_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def chunk_documents(df: DataFrame, chunk_tokens: int = 256,
-                    overlap: int = 32, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+                    overlap: int = 32) -> DataFrame:
     """Split documents into overlapping token-window chunks — the
     embedding/RAG-side complement of sequence packing (long documents
     become multiple fixed-budget chunks; stride = chunk - overlap).
 
     Chunk starts are 1, 1+stride, 1+2*stride, ... while start <=
     n_tokens (so every token lands in at least one chunk; a final
-    short tail chunk is kept).  Output: (id_col, chunk_id, chunk_start,
+    short tail chunk is kept).  Output: (doc_id, chunk_id, chunk_start,
     n_chunk_tokens, chunk_text) with chunk_id 0-based in order.
 
     One explode, no shuffle at all — chunking is per-row work inside
@@ -463,27 +454,25 @@ def chunk_documents(df: DataFrame, chunk_tokens: int = 256,
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
     stride = chunk_tokens - overlap
-    toks = tokens(F.col(text_col))
-    base = (df.select(F.col(id_col), toks.alias("__toks"))
+    toks = tokens(F.col("text"))
+    base = (df.select(F.col("doc_id"), toks.alias("__toks"))
             .filter(F.size("__toks") > 0))
     starts = F.sequence(F.lit(1), F.size("__toks"), F.lit(stride))
     return (base.select(
-        id_col,
+        "doc_id",
         F.posexplode(F.transform(
             starts,
             lambda s: F.struct(
                 s.alias("start"),
                 F.slice(F.col("__toks"), s, chunk_tokens).alias("c"))))
         .alias("chunk_id", "w"))
-        .select(id_col, "chunk_id",
+        .select("doc_id", "chunk_id",
                 F.col("w.start").alias("chunk_start"),
                 F.size("w.c").alias("n_chunk_tokens"),
                 F.array_join("w.c", " ").alias("chunk_text")))
 
 
-def ppl_buckets(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id",
-                caches: CacheScope | None = None) -> DataFrame:
+def ppl_buckets(df: DataFrame, caches: CacheScope | None = None) -> DataFrame:
     """CCNet-style perplexity bucketing: score the corpus with
     :func:`lm_quality_score`, then split into head / middle / tail by
     the corpus's own avg_nll terciles (head = most fluent third, the
@@ -497,7 +486,7 @@ def ppl_buckets(df: DataFrame, text_col: str = "text",
     (a CacheScope) to persist the per-doc score table in it for the
     caller to release; without one the table is not cached.
     """
-    sc = lm_quality_score(df, text_col=text_col, id_col=id_col)
+    sc = lm_quality_score(df)
     if caches is not None:
         # the cutoff aggregate AND the bucketing both read the scored
         # table; uncached, the whole LM pipeline (corpus tokenize +
@@ -515,26 +504,31 @@ def ppl_buckets(df: DataFrame, text_col: str = "text",
                 .when(F.col("avg_nll") <= F.col("__q1"), F.lit("head"))
                 .when(F.col("avg_nll") <= F.col("__q2"), F.lit("middle"))
                 .otherwise(F.lit("tail")))
-            .select(id_col, "avg_nll", "ppl_bucket"))
+            .select("doc_id", "avg_nll", "ppl_bucket"))
 
 
-def wordpiece_vocab_file(docs: DataFrame, path: str,
-                         text_col: str = "text", min_count: int = 20,
-                         max_piece_len: int = 8) -> str:
+# the tokenizer vocab's whole words: seen at least VOCAB_MIN_COUNT
+# times and at most VOCAB_MAX_PIECE_LEN letters long
+VOCAB_MIN_COUNT = 20
+VOCAB_MAX_PIECE_LEN = 8
+
+
+def wordpiece_vocab_file(docs: DataFrame, path: str) -> str:
     """Derive and PERSIST the tokenizer vocab — the "tokenizer file"
     artifact every production tokenizer ships: frequent whole words
-    (``count >= min_count``, ``len <= max_piece_len``) plus the 26
-    single characters, written as a one-column parquet table
+    (``count >= VOCAB_MIN_COUNT``, ``len <= VOCAB_MAX_PIECE_LEN``) plus
+    the 26 single characters, written as a one-column parquet table
     (``piece string``).  One map-side-combinable count aggregation and
     one write job, NO driver collect — the vocab never rides the
     driver.  Idempotent: if ``path`` already holds a completed write
     (``_SUCCESS`` marker) it is reused, so repeated gate runs derive
     once and read thereafter.  A ``_params`` sidecar records
     (min_count, max_piece_len); reusing an artifact built with
-    DIFFERENT parameters raises instead of silently encoding with the
-    wrong vocabulary (r10 review finding).  Path identity IS artifact
-    identity for the corpus (the tokenizer-file convention: you
-    version the file, it is not re-derived when the corpus grows).
+    values other than the constants raises instead of silently
+    encoding with the wrong vocabulary (r10 review finding).  Path
+    identity IS artifact identity for the corpus (the tokenizer-file
+    convention: you version the file, it is not re-derived when the
+    corpus grows).
     Returns ``path``.
     """
     import os
@@ -558,11 +552,11 @@ def wordpiece_vocab_file(docs: DataFrame, path: str,
     spark = docs.sparkSession
     pdir = os.path.join(path, "_params")
     if not _completed(os.path.join(path, "_SUCCESS")):
-        vdf = (docs.select(F.explode(tokens(F.col(text_col)))
+        vdf = (docs.select(F.explode(tokens(F.col("text")))
                            .alias("piece"))
                .groupBy("piece").agg(F.count("*").alias("c"))
-               .filter((F.col("c") >= min_count) &
-                       (F.length("piece") <= max_piece_len))
+               .filter((F.col("c") >= VOCAB_MIN_COUNT) &
+                       (F.length("piece") <= VOCAB_MAX_PIECE_LEN))
                .select("piece"))
         chars = spark.createDataFrame(
             [(c,) for c in string.ascii_lowercase], "piece string")
@@ -572,15 +566,15 @@ def wordpiece_vocab_file(docs: DataFrame, path: str,
         # {path}/*.parquet, so the params table cannot be mistaken
         # for vocab parts
         (spark.createDataFrame(
-            [(int(min_count), int(max_piece_len))],
+            [(VOCAB_MIN_COUNT, VOCAB_MAX_PIECE_LEN)],
             "min_count int, max_piece_len int")
          .coalesce(1).write.mode("overwrite").parquet(pdir))
     elif _completed(os.path.join(pdir, "_SUCCESS")):
         # memoize successful verifications per process: the sidecar
         # read is a small Spark job, and re-running it on EVERY reuse
         # showed up as a measured +0.35 s on the tx17 bench phase
-        # (r11 medians).  Keyed by requested params — a different
-        # request against the same path must re-check and raise — and
+        # (r11 medians).  Keyed by the constants — a different value
+        # against the same path must re-check and raise — and
         # guarded by the sidecar's file-listing fingerprint: if
         # another process re-derives the artifact at the same path
         # with different params mid-run, the fingerprint changes and
@@ -590,15 +584,15 @@ def wordpiece_vocab_file(docs: DataFrame, path: str,
         # (not set membership) so a churning fingerprint overwrites
         # its slot instead of accumulating dead entries.
         sidecar = _sidecar_fingerprint(spark, pdir)
-        memo_key = (path, int(min_count), int(max_piece_len))
+        memo_key = (path, VOCAB_MIN_COUNT, VOCAB_MAX_PIECE_LEN)
         if _VOCAB_PARAMS_OK.get(memo_key) != sidecar:
             row = spark.read.parquet(pdir).first()
             got = (row["min_count"], row["max_piece_len"])
-            if got != (int(min_count), int(max_piece_len)):
+            if got != (VOCAB_MIN_COUNT, VOCAB_MAX_PIECE_LEN):
                 raise ValueError(
                     f"vocab artifact at {path!r} was built with "
                     f"(min_count, max_piece_len)={got}, requested "
-                    f"{(int(min_count), int(max_piece_len))} — use a "
+                    f"{(VOCAB_MIN_COUNT, VOCAB_MAX_PIECE_LEN)} — use a "
                     "different path to derive a new vocabulary")
             _VOCAB_PARAMS_OK[memo_key] = sidecar
     else:
@@ -608,14 +602,14 @@ def wordpiece_vocab_file(docs: DataFrame, path: str,
         # overwrite wipes ``path`` including ``_params``): either way
         # the mismatch guard above cannot fire, which is exactly the
         # silent-wrong-vocabulary failure it targets (r10 advisory).
-        # Backfilling the REQUESTED params would launder an unverified
+        # Backfilling the current constants would launder an unverified
         # assumption into a permanent record, so warn instead.
         import warnings
         warnings.warn(
             f"vocab artifact at {path!r} has no _params sidecar "
             "(written by an older version): cannot verify it was "
             f"built with (min_count, max_piece_len)="
-            f"{(int(min_count), int(max_piece_len))} — re-derive at a "
+            f"{(VOCAB_MIN_COUNT, VOCAB_MAX_PIECE_LEN)} — re-derive at a "
             "fresh path to restore the parameter-mismatch guard",
             stacklevel=2)
     return path
@@ -709,14 +703,12 @@ def _load_vocab_set(vocab_path: str) -> tuple:
     return vset, max_len
 
 
-def wordpiece_encode_words(words: DataFrame, vocab: list | str,
-                           word_col: str = "tok",
-                           unk: str = "[UNK]") -> DataFrame:
+def wordpiece_encode_words(words: DataFrame, vocab: list | str) -> DataFrame:
     """Greedy longest-match subword encoding of a word table (the
     application side of tokenizer training — simplified wordpiece
     without the ## continuation convention): at each position take the
     longest vocab piece matching the remaining word (ties impossible —
-    lengths differ); if none matches, emit ``unk`` and advance one
+    lengths differ); if none matches, emit ``[UNK]`` and advance one
     character.
 
     The 100 TB trick is the INPUT, not the kernel: encode the DISTINCT
@@ -730,7 +722,7 @@ def wordpiece_encode_words(words: DataFrame, vocab: list | str,
     artifacts — 30-250k pieces — exactly what production tokenizers
     ship as files).
 
-    Returns (word_col, pieces array<string>, n_pieces, n_unk).
+    Returns (tok, pieces array<string>, n_pieces, n_unk).
     """
     import pandas as pd
 
@@ -747,7 +739,7 @@ def wordpiece_encode_words(words: DataFrame, vocab: list | str,
             _vset, _max_len = vset, max_len
         for pdf in batches:
             out_p, out_n, out_u = [], [], []
-            for w in pdf[word_col]:
+            for w in pdf["tok"]:
                 # a NULL word cannot be encoded: NULL stats (the
                 # NULL-text convention — NULL, not 0), never a kernel
                 # TypeError that kills the whole encode job (r10
@@ -769,23 +761,21 @@ def wordpiece_encode_words(words: DataFrame, vocab: list | str,
                             pos += l
                             break
                     else:
-                        pieces.append(unk)
+                        pieces.append("[UNK]")
                         n_unk += 1
                         pos += 1
                 out_p.append(pieces)
                 out_n.append(len(pieces))
                 out_u.append(n_unk)
-            yield pd.DataFrame({word_col: pdf[word_col], "pieces": out_p,
+            yield pd.DataFrame({"tok": pdf["tok"], "pieces": out_p,
                                 "n_pieces": out_n, "n_unk": out_u})
 
     return words.mapInPandas(
-        encode, f"{word_col} string, pieces array<string>, "
+        encode, "tok string, pieces array<string>, "
                 "n_pieces int, n_unk int")
 
 
-def wordpiece_doc_stats(df: DataFrame, vocab: list | str,
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def wordpiece_doc_stats(df: DataFrame, vocab: list | str) -> DataFrame:
     """Per-document subword statistics under a fixed tokenizer vocab
     (an in-memory piece list, or the path of a persisted tokenizer
     file — see :func:`wordpiece_encode_words`): total piece count and
@@ -796,12 +786,10 @@ def wordpiece_doc_stats(df: DataFrame, vocab: list | str,
     One corpus shuffle builds the per-(doc, word) counts; the greedy
     encoder runs over DISTINCT words only; the final join multiplies
     encodes by occurrence counts.  Documents with no tokens (or NULL
-    text) report zeros.  The caller's ``id_col`` name is preserved in
-    the output (previously silently renamed to ``doc_id`` — r10
-    review finding).
+    text) report zeros.  Output: (doc_id, n_pieces, n_unk).
     """
-    toks = tokens(F.col(text_col))
-    wcnt = (df.select(F.col(id_col).alias("__id"),
+    toks = tokens(F.col("text"))
+    wcnt = (df.select(F.col("doc_id").alias("__id"),
                       F.explode(toks).alias("tok"))
             .groupBy("__id", "tok").agg(F.count("*").alias("cnt")))
     words = wcnt.select("tok").distinct()
@@ -811,8 +799,8 @@ def wordpiece_doc_stats(df: DataFrame, vocab: list | str,
                .agg(F.sum(F.col("cnt") * F.col("n_pieces"))
                     .alias("n_pieces"),
                     F.sum(F.col("cnt") * F.col("n_unk")).alias("n_unk")))
-    return (df.select(F.col(id_col).alias("__id"))
+    return (df.select(F.col("doc_id").alias("__id"))
             .join(per_doc, "__id", "left")
-            .select(F.col("__id").alias(id_col),
+            .select(F.col("__id").alias("doc_id"),
                     F.coalesce("n_pieces", F.lit(0)).alias("n_pieces"),
                     F.coalesce("n_unk", F.lit(0)).alias("n_unk")))

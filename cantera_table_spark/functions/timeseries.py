@@ -17,8 +17,7 @@ _BAND_PCTS = (0.05, 0.25, 0.75, 0.95)
 _BAND_NAMES = ("pct5", "pct25", "pct75", "pct95")
 
 
-def prediction_bands(ts: DataFrame, key_col: str = "key",
-                     value_col: str = "value") -> DataFrame:
+def prediction_bands(ts: DataFrame) -> DataFrame:
     """Per-series percentile bands (pct5/25/75/95) from history —
     exact linear-interpolation percentiles (matches DuckDB
     quantile_cont).
@@ -27,18 +26,17 @@ def prediction_bands(ts: DataFrame, key_col: str = "key",
     independent percentile aggregates each buffer + sort the group's
     values, quadrupling the per-group memory (r11 review); the array
     form computes all four bands from one buffer, identical values."""
-    v = F.col(value_col)
+    v = F.col("value")
     bands = F.percentile(
         v, F.array(*[F.lit(p) for p in _BAND_PCTS]))
-    return (ts.groupBy(key_col)
+    return (ts.groupBy("key")
             .agg(bands.alias("__bands"))
-            .select(key_col,
+            .select("key",
                     *[F.round(F.col("__bands")[i], 4).alias(n)
                       for i, n in enumerate(_BAND_NAMES)]))
 
 
-def with_bands(ts: DataFrame, key_col: str = "key",
-               value_col: str = "value") -> DataFrame:
+def with_bands(ts: DataFrame) -> DataFrame:
     """Attach the series-level bands to every posting — the shape the
     reference stores (nullable band columns per row) and dumps
     (ca-dump.cc:148-216).
@@ -60,12 +58,12 @@ def with_bands(ts: DataFrame, key_col: str = "key",
     non-matches, and a window would otherwise lump them into one
     meaningless NULL group)."""
     from pyspark.sql import Window
-    ts = ts.filter(F.col(key_col).isNotNull())
+    ts = ts.filter(F.col("key").isNotNull())
     if "__bands" in ts.columns:
         raise ValueError("input columns collide with with_bands "
                          "internals: ['__bands']")
-    w = Window.partitionBy(key_col)
-    v = F.col(value_col)
+    w = Window.partitionBy("key")
+    v = F.col("value")
     # ONE array-argument percentile window, not four: each scalar
     # percentile buffers + sorts the partition's values independently,
     # quadrupling the per-group memory (r11 review); values are
@@ -78,12 +76,11 @@ def with_bands(ts: DataFrame, key_col: str = "key",
             .drop("__bands"))
 
 
-def band_outliers(ts: DataFrame, key_col: str = "key",
-                  value_col: str = "value") -> DataFrame:
+def band_outliers(ts: DataFrame) -> DataFrame:
     """Values outside their series' 5-95 band — the monitoring query the
     bands exist for."""
-    banded = with_bands(ts, key_col, value_col)
-    v = F.col(value_col)
+    banded = with_bands(ts)
+    v = F.col("value")
     return (banded
             .filter((v < F.col("pct5")) | (v > F.col("pct95")))
             .withColumn("direction",
@@ -91,8 +88,7 @@ def band_outliers(ts: DataFrame, key_col: str = "key",
                         .otherwise(F.lit("high"))))
 
 
-def asof_prior(events: DataFrame, anchor_filter,
-               key_col: str = "user_id", ts_col: str = "ts") -> DataFrame:
+def asof_prior(events: DataFrame, anchor_filter) -> DataFrame:
     """A11 as-of filter (correlate.cc:360-462 semantics family): keep
     rows strictly older than their key's earliest anchor row, and attach
     that anchor timestamp as ``p_ts``.
@@ -111,16 +107,14 @@ def asof_prior(events: DataFrame, anchor_filter,
     would lump them into one group and anchor unrelated rows.
     """
     from pyspark.sql import Window
-    events = events.filter(F.col(key_col).isNotNull())
-    w = Window.partitionBy(key_col)
-    p_ts = F.min(F.when(anchor_filter, F.col(ts_col))).over(w)
+    events = events.filter(F.col("user_id").isNotNull())
+    w = Window.partitionBy("user_id")
+    p_ts = F.min(F.when(anchor_filter, F.col("ts"))).over(w)
     return (events.withColumn("p_ts", p_ts)
-            .filter(F.col(ts_col) < F.col("p_ts")))
+            .filter(F.col("ts") < F.col("p_ts")))
 
 
-def funnel(events: DataFrame, stages: list[str],
-           key_col: str = "user_id", type_col: str = "event_type",
-           ts_col: str = "ts") -> DataFrame:
+def funnel(events: DataFrame, stages: list[str]) -> DataFrame:
     """Ordered funnel analysis: for each key, how far through the
     ``stages`` sequence it progressed, where stage k counts only if it
     happened strictly AFTER the key's qualifying stage k-1 time.
@@ -150,19 +144,19 @@ def funnel(events: DataFrame, stages: list[str],
         # silently never fill and every depth past them reads wrong
         raise ValueError(f"duplicate stage names unsupported: {stages}")
     n = len(stages)
-    ts_type = events.schema[ts_col].dataType.simpleString()
-    idx = F.when(F.col(type_col) == stages[0], F.lit(0))
+    ts_type = events.schema["ts"].dataType.simpleString()
+    idx = F.when(F.col("event_type") == stages[0], F.lit(0))
     for k, s in enumerate(stages[1:], start=1):
-        idx = idx.when(F.col(type_col) == s, F.lit(k))
+        idx = idx.when(F.col("event_type") == s, F.lit(k))
     # funnel is an event-time operator over per-key journeys: rows
     # with no event time or no key cannot advance any user's funnel
     # (a NULL key would otherwise fold into one meaningless group)
     ev = (events
-          .select(F.col(key_col), F.col(ts_col).alias("_ts"),
+          .select(F.col("user_id"), F.col("ts").alias("_ts"),
                   idx.alias("_s"))
           .filter(F.col("_s").isNotNull() & F.col("_ts").isNotNull() &
-                  F.col(key_col).isNotNull()))
-    grouped = ev.groupBy(key_col).agg(
+                  F.col("user_id").isNotNull()))
+    grouped = ev.groupBy("user_id").agg(
         F.sort_array(F.collect_list(F.struct("_ts", "_s"))).alias("_evs"))
     init = F.array(*[F.lit(None).cast(ts_type) for _ in range(n)])
 
@@ -177,9 +171,9 @@ def funnel(events: DataFrame, stages: list[str],
         return F.array(*slots)
 
     folded = grouped.select(
-        key_col, F.aggregate("_evs", init, _step).alias("_t"))
+        "user_id", F.aggregate("_evs", init, _step).alias("_t"))
     out = (folded
-           .select(key_col, *[F.col("_t")[k].alias(f"stage_{k}_ts")
+           .select("user_id", *[F.col("_t")[k].alias(f"stage_{k}_ts")
                               for k in range(n)])
            .filter(F.col("stage_0_ts").isNotNull()))
     depth = None
@@ -189,9 +183,7 @@ def funnel(events: DataFrame, stages: list[str],
     return out.withColumn("funnel_depth", F.coalesce(depth, F.lit(0)))
 
 
-def retention_cohorts(events: DataFrame, key_col: str = "user_id",
-                      ts_col: str = "ts",
-                      period_days: int = 7) -> DataFrame:
+def retention_cohorts(events: DataFrame, period_days: int = 7) -> DataFrame:
     """Cohort retention: keys are cohorted by their first-activity
     period; for each (cohort, periods-since-cohort) cell, the count of
     distinct active keys.  The standard activation/retention matrix.
@@ -207,12 +199,12 @@ def retention_cohorts(events: DataFrame, key_col: str = "user_id",
     floor(epoch_days / period_days).  NULL-timestamp events contribute
     no activity (collect_set skips NULL; the oracle filters the same).
     """
-    per = (F.floor(F.unix_micros(F.col(ts_col)) /
+    per = (F.floor(F.unix_micros(F.col("ts")) /
                    F.lit(86_400_000_000 * period_days))).cast("long")
     # NULL keys are no user — drop them (collect_set already skips
     # NULL periods; a NULL key would otherwise form its own cohort)
-    per_key = (events.filter(F.col(key_col).isNotNull())
-               .select(F.col(key_col).alias("k"), per.alias("p"))
+    per_key = (events.filter(F.col("user_id").isNotNull())
+               .select(F.col("user_id").alias("k"), per.alias("p"))
                .groupBy("k").agg(F.collect_set("p").alias("__ps")))
     # rows after the explode are unique (k, p) pairs by construction,
     # so count(*) per cell IS the distinct-key count
@@ -228,17 +220,15 @@ def retention_cohorts(events: DataFrame, key_col: str = "user_id",
 def asof_join(left: DataFrame, right: DataFrame,
               key_col: str = "user_id", ts_col: str = "ts",
               value_cols: tuple[str, ...] = ("value",),
-              direction: str = "backward", strict: bool = False,
-              tolerance_us: int | None = None,
-              prefix: str = "r_") -> DataFrame:
+              direction: str = "backward",
+              tolerance_us: int | None = None) -> DataFrame:
     """General as-of join (pandas ``merge_asof`` semantics family): for
     every LEFT row, attach the temporally nearest RIGHT row of the same
     key — backward (latest right ts <= left ts), forward (earliest
-    right ts >= left ts), ``strict`` makes the comparison < / >, and
-    ``tolerance_us`` nulls out matches farther than that many
-    microseconds.  Generalizes :func:`asof_prior` (A11 family,
-    correlate.cc:360-462) from "filter by one anchor" to "attach
-    payload columns from any right table".
+    right ts >= left ts), and ``tolerance_us`` nulls out matches
+    farther than that many microseconds.  Generalizes
+    :func:`asof_prior` (A11 family, correlate.cc:360-462) from "filter
+    by one anchor" to "attach payload columns from any right table".
 
     Formulated as UNION + ONE WINDOW, not a join: left and right rows
     interleave in one shuffle partitioned by ``key_col``, ordered by
@@ -266,9 +256,9 @@ def asof_join(left: DataFrame, right: DataFrame,
     them); right rows with NULL ts are dropped; left rows with NULL ts
     survive with NULL match columns.
 
-    Returns the left rows + ``<prefix><ts_col>`` (matched right ts) +
-    ``<prefix><col>`` for each of ``value_cols`` (NULL when no match
-    within tolerance).
+    Returns the left rows + ``r_<ts_col>`` (matched right ts) +
+    ``r_<col>`` for each of ``value_cols`` (NULL when no match within
+    tolerance).
     """
     from pyspark.sql import Window
     if direction not in ("backward", "forward"):
@@ -281,7 +271,7 @@ def asof_join(left: DataFrame, right: DataFrame,
     # result (AMBIGUOUS_REFERENCE downstream)
     internal = {"__k", "__ts", "__side", "__m"} | {f"__r_{c}" for c in rv}
     clash = [c for c in lp
-             if c in [f"{prefix}{ts_col}"] + [f"{prefix}{v}" for v in rv]
+             if c in [f"r_{ts_col}"] + [f"r_{v}" for v in rv]
              or c in internal]
     if clash:
         # internal names too (r11 review): a left payload '__side'
@@ -312,10 +302,9 @@ def asof_join(left: DataFrame, right: DataFrame,
     # right rows -> NULL match); desc's default is NULLS LAST
     ts_ord = (F.col("__ts").asc_nulls_first() if backward
               else F.col("__ts").desc_nulls_first())
-    # at equal ts the right row is visible to the left row iff the
-    # comparison is non-strict -> right sorts before left
-    side_ord = F.col("__side").desc() if strict else F.col("__side").asc()
-    w = (Window.partitionBy("__k").orderBy(ts_ord, side_ord)
+    # at equal ts the right row is visible to the left row, so right
+    # sorts before left
+    w = (Window.partitionBy("__k").orderBy(ts_ord, F.col("__side").asc())
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     rfields = [F.col("__ts").alias("__rts")]
     if not backward:
@@ -341,8 +330,8 @@ def asof_join(left: DataFrame, right: DataFrame,
             "__m", F.when(diff <= F.lit(int(tolerance_us)), F.col("__m")))
     return out.select(
         F.col("__k").alias(key_col), F.col("__ts").alias(ts_col), *lp,
-        F.col("__m.__rts").alias(f"{prefix}{ts_col}"),
-        *[F.col(f"__m.{c}").alias(f"{prefix}{c}") for c in rv])
+        F.col("__m.__rts").alias(f"r_{ts_col}"),
+        *[F.col(f"__m.{c}").alias(f"r_{c}") for c in rv])
 
 
 def interval_join(points: DataFrame, intervals: DataFrame,

@@ -167,15 +167,18 @@ def dedup(df: DataFrame, use_max: bool = True) -> DataFrame:
     return df.groupBy(_DOC).agg(agg.alias(_SCORE))
 
 
-def sample(df: DataFrame, n: int, seed: int = 1234) -> DataFrame:
+SAMPLE_SEED = 1234
+
+
+def sample(df: DataFrame, n: int) -> DataFrame:
     """RANDOM_SAMPLE(q, n) (query.cc:549-568).
 
     The reference uses a fixed-seed mt19937_64 reservoir over its vector;
     a distributed engine has no stable element order, so we take the n
     smallest values of a deterministic per-doc hash (Knuth
-    multiplicative, seeded).  Deterministic and seedable, but a
-    *different* sample than the reference — documented divergence
-    (SURVEY.md §2.5 T3).
+    multiplicative, seeded with SAMPLE_SEED, the reference's fixed
+    seed).  Deterministic, but a *different* sample than the reference
+    — documented divergence (SURVEY.md §2.5 T3).
     """
     # (doc_id * K + seed) mod 2^32, computed WITHOUT the int64 multiply
     # overflowing: a plain doc_id * K throws ARITHMETIC_OVERFLOW under
@@ -190,7 +193,7 @@ def sample(df: DataFrame, n: int, seed: int = 1234) -> DataFrame:
     lo16 = F.col(_DOC).bitwiseAND(F.lit(65535))
     hi16 = F.shiftright(F.col(_DOC), 16).bitwiseAND(F.lit(65535))
     rank = F.pmod(lo16 * k + F.pmod(hi16 * k, F.lit(65536)) * F.lit(65536)
-                  + F.lit(seed), F.lit(4294967296))
+                  + F.lit(SAMPLE_SEED), F.lit(4294967296))
     # score joins the tiebreak so duplicate rows of one doc at the limit
     # boundary cut deterministically too
     return (df.orderBy(rank.asc(), F.col(_DOC).asc(),

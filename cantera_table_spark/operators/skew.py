@@ -33,8 +33,7 @@ def _reject_salt_column(df: DataFrame) -> None:
 
 
 def salted_count_sum(df: DataFrame, keys: list[str], value_col: str,
-                     n_salts: int = 32,
-                     salt_cols: list[str] | None = None) -> DataFrame:
+                     n_salts: int = 32) -> DataFrame:
     """Two-phase count+sum aggregation: phase 1 on (keys..., salt),
     phase 2 combines the partials.  Algebraic aggregates only — exactly
     the ones the posting/timeseries rollups use.
@@ -42,16 +41,13 @@ def salted_count_sum(df: DataFrame, keys: list[str], value_col: str,
     The salt must be DETERMINISTIC per row (a random or row-position
     salt re-executes differently after a shuffle-fetch failure and
     silently corrupts the two-phase totals — the SPARK-23243 class of
-    bug), so it hashes row content: ``salt_cols`` (default: every
-    non-key column, maximizing spread).  Degenerate case: a hot key
+    bug), so it hashes row content: every non-key column (the value
+    column when there is none), maximizing spread.  Degenerate case: a hot key
     whose entire rows are identical gains no spread — no deterministic
     salt can split indistinguishable rows; pre-aggregate upstream or
     add a distinguishing column."""
     _reject_salt_column(df)
-    if salt_cols is None:
-        salt_cols = [c for c in df.columns if c not in keys]
-        if not salt_cols:
-            salt_cols = [value_col]
+    salt_cols = [c for c in df.columns if c not in keys] or [value_col]
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]),
                   F.lit(n_salts)).alias("__salt")
     partial = (df.withColumn("__salt", salt)

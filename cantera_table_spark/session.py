@@ -19,19 +19,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def get_spark(app_name: str = "cantera-table-spark",
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "cantera-table-spark") -> SparkSession:
     """Build (or fetch) the session.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (driver contract).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism and the shuffle
+    partition count (driver contract).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -101,22 +101,22 @@ def format_correlate_rows(df, catalog=None,
     return out
 
 
-def run_script(engine: Engine, text: str, out=sys.stdout) -> None:
+def run_script(engine: Engine, text: str) -> None:
     from cantera_table_spark.dsl.parser import parse_script
     for stmt in parse_script(text):
         result = engine.execute(stmt)
         if isinstance(stmt, ast.QueryStmt):
             if stmt.keys_only:
                 for k in result:
-                    print(k, file=out)
+                    print(k)
             else:
                 # compact separators: the reference prints the envelope
                 # with no spaces (query.cc:933 '{"result-count":%zu,...')
                 print(json.dumps(result, ensure_ascii=False,
-                                 separators=(",", ":")), file=out)
+                                 separators=(",", ":")))
         elif isinstance(stmt, ast.SelectStmt):
             for line in format_select_rows(result, engine.output_format):
-                print(line, file=out)
+                print(line)
         elif isinstance(stmt, ast.CorrelateStmt):
             from cantera_table_spark.operators.correlate import \
                 primary_keyword
@@ -124,20 +124,20 @@ def run_script(engine: Engine, text: str, out=sys.stdout) -> None:
                 primary_keyword(stmt.query_a))
             for line in format_correlate_rows(result, engine.catalog,
                                               do_timestamps=a_ts):
-                print(line, file=out)
+                print(line)
             engine.release_caches()   # rows are materialized above
         elif isinstance(stmt, ast.ParseStmt):
-            print(result, file=out)
+            print(result)
         # SET -> no output (statement.cc:35-48)
 
 
-def main(argv=None) -> int:
+def main() -> int:
     ap = argparse.ArgumentParser(prog="cantera-table-spark shell")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01",
                     help="testdata directory backing the catalog")
     ap.add_argument("-c", "--command", default=None,
                     help="run this statement string instead of stdin")
-    args = ap.parse_args(argv)
+    args = ap.parse_args()
 
     spark = get_spark("cantera-shell")
     spark.sparkContext.setLogLevel("ERROR")

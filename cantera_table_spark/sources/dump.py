@@ -64,10 +64,7 @@ def dump_timeseries(timeseries: DataFrame,
         "key", F.date_format("ts", time_format).alias("time"), "value")
 
 
-def dump_counts(catalog: Catalog, per_key: bool = True) -> DataFrame:
-    """A6: per-key posting counts or total row count
-    (ca-dump.cc:340-367)."""
-    idx = catalog.index()
-    if per_key:
-        return idx.groupBy("keyword").agg(F.count("*").alias("n_postings"))
-    return idx.agg(F.count("*").alias("n_rows"))
+def dump_counts(catalog: Catalog) -> DataFrame:
+    """A6: per-key posting counts (ca-dump.cc:340-367)."""
+    return (catalog.index().groupBy("keyword")
+            .agg(F.count("*").alias("n_postings")))

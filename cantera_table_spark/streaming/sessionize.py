@@ -5,7 +5,7 @@ north-star extension ("applyInPandasWithState for custom stateful
 operators", BASELINE.json).  Events per user collapse into sessions
 closed after ``gap_seconds`` of inactivity.
 
-Two implementations with identical semantics:
+Three implementations with identical gap-merge semantics:
 
 - ``sessionize_batch``: window-based, for batch frames and as the
   correctness oracle (a session starts where the time since the
@@ -13,6 +13,11 @@ Two implementations with identical semantics:
 - ``sessionize_stream``: ``applyInPandasWithState`` over a stream,
   holding per-user open-session state and emitting sessions when the
   gap passes or the event-time timeout fires.
+- ``sessionize_stream_native``: ``session_window`` over a stream,
+  state merged inside the JVM aggregation; a session emits once the
+  watermark passes its end.
+
+Both streaming forms hold back late events by ``SESSION_WATERMARK``.
 """
 
 from __future__ import annotations
@@ -53,10 +58,11 @@ ROCKSDB_STATE_STORE_PROVIDER = (
 
 _STATE_STORE_KEY = "spark.sql.streaming.stateStore.providerClass"
 
+SESSION_WATERMARK = "1 hour"
 
-def ensure_state_store_provider(spark, provider_class: str =
-                                ROCKSDB_STATE_STORE_PROVIDER) -> None:
-    """Set and VERIFY the streaming state-store provider on the
+
+def ensure_state_store_provider(spark) -> None:
+    """Set and VERIFY the RocksDB streaming state-store provider on the
     session.  Session-state-heavy operators (append-mode
     ``session_window``) retain every unemitted session in state; the
     default HDFS-backed provider keeps that state ON-HEAP, and the
@@ -72,32 +78,30 @@ def ensure_state_store_provider(spark, provider_class: str =
     (state formats are incompatible).  Two guards follow from that
     (r9 review finding): a provider the caller already set EXPLICITLY
     to something else raises a conflict instead of being silently
-    replaced — pass ``state_store=None`` at the call site (or align
-    the session conf) to resolve; and mixed-provider applications
+    replaced — align or unset the session conf to resolve; and
+    mixed-provider applications
     should give each pipeline its own ``spark.newSession()`` (child
     sessions have independent runtime conf).  Also raises
     ``RuntimeError`` when the conf cannot be applied (e.g. a cluster
     that pins it via a non-modifiable conf entry) rather than letting
     the query run into the on-heap OOM."""
+    provider = ROCKSDB_STATE_STORE_PROVIDER
     current = spark.conf.get(_STATE_STORE_KEY, None)
-    if current == provider_class:
+    if current == provider:
         return
     if current is not None:
         raise RuntimeError(
             f"{_STATE_STORE_KEY} is already set to {current!r}; "
-            f"refusing to replace it with {provider_class!r} behind "
+            f"refusing to replace it with {provider!r} behind "
             "your back — restarting an existing checkpointed query "
-            "under a different provider is unsupported.  Pass "
-            "state_store=None to keep your setting, or use a "
-            "separate spark.newSession() per provider")
-    spark.conf.set(_STATE_STORE_KEY, provider_class)
+            "under a different provider is unsupported.  Unset it, "
+            "or use a separate spark.newSession() per provider")
+    spark.conf.set(_STATE_STORE_KEY, provider)
     got = spark.conf.get(_STATE_STORE_KEY, None)
-    if got != provider_class:
+    if got != provider:
         raise RuntimeError(
-            f"could not apply {_STATE_STORE_KEY}={provider_class} "
-            f"(session reports {got!r}); set it in the cluster conf "
-            "or pass state_store=None to manage the state store "
-            "yourself")
+            f"could not apply {_STATE_STORE_KEY}={provider} "
+            f"(session reports {got!r}); set it in the cluster conf")
 
 
 def sessionize_batch(events: DataFrame, gap_seconds: int = 1800
@@ -125,9 +129,7 @@ def sessionize_batch(events: DataFrame, gap_seconds: int = 1800
             .drop("__sid"))
 
 
-def sessionize_stream_native(events: DataFrame, gap_seconds: int = 1800,
-                             watermark: str = "1 hour",
-                             state_store: str | None = "rocksdb"
+def sessionize_stream_native(events: DataFrame, gap_seconds: int = 1800
                              ) -> DataFrame:
     """JVM-native gap sessionization: ``F.session_window`` (Spark 3.2+)
     instead of the ``applyInPandasWithState`` fold — no Arrow boundary,
@@ -146,7 +148,7 @@ def sessionize_stream_native(events: DataFrame, gap_seconds: int = 1800,
     - native (append mode): a session emits only when the watermark
       passes its window end (last event + gap).  Gap-CLOSED sessions
       whose end is still inside the watermark horizon are held in
-      state — up to ``watermark`` of extra emission latency.
+      state — up to ``SESSION_WATERMARK`` of extra emission latency.
     - custom fold: a session closed by a later event of the same user
       emits in the batch that closes it, watermark notwithstanding;
       only trailing OPEN sessions wait for the event-time timeout.
@@ -158,23 +160,17 @@ def sessionize_stream_native(events: DataFrame, gap_seconds: int = 1800,
     JVM-side, the scale lever for the heaviest streaming path
     (SCALE.md records the measured speedup).
 
-    ``state_store`` (streaming inputs only; ignored for batch frames,
-    which involve no state store): append-mode session state holds
-    EVERY session the watermark has not passed, and on the default
-    HDFS-backed provider that state is ON-HEAP — the measured 1024x
-    replay OOMs a 32g heap there while RocksDB completes (SCALE.md).
-    The default ``"rocksdb"`` therefore applies
-    :func:`ensure_state_store_provider` to the frame's session before
-    building the plan (raising if the conf cannot take effect); pass a
-    fully-qualified provider class to use a different store, or
-    ``None`` to leave the session conf untouched and accept the
-    documented on-heap OOM risk at volume."""
-    if state_store is not None and events.isStreaming:
-        provider = (ROCKSDB_STATE_STORE_PROVIDER
-                    if state_store == "rocksdb" else state_store)
-        ensure_state_store_provider(events.sparkSession, provider)
+    State store (streaming inputs only; batch frames involve none):
+    append-mode session state holds EVERY session the watermark has
+    not passed, and on the default HDFS-backed provider that state is
+    ON-HEAP — the measured 1024x replay OOMs a 32g heap there while
+    RocksDB completes (SCALE.md).  A streaming frame therefore gets
+    :func:`ensure_state_store_provider` applied to its session before
+    the plan is built (raising if the conf cannot take effect)."""
+    if events.isStreaming:
+        ensure_state_store_provider(events.sparkSession)
     return (events.filter(F.col("ts").isNotNull())
-            .withWatermark("ts", watermark)
+            .withWatermark("ts", SESSION_WATERMARK)
             .groupBy("user_id",
                      F.session_window("ts", f"{gap_seconds} seconds"))
             .agg(F.min("ts").alias("session_start"),
@@ -185,8 +181,8 @@ def sessionize_stream_native(events: DataFrame, gap_seconds: int = 1800,
                     "n_events", "total_value"))
 
 
-def sessionize_stream(events: DataFrame, gap_seconds: int = 1800,
-                      watermark: str = "1 hour") -> DataFrame:
+def sessionize_stream(events: DataFrame, gap_seconds: int = 1800
+                      ) -> DataFrame:
     """Streaming sessionization with per-user state (the custom fold).
 
     RECOMMENDATION: this fold is the repo's one per-event Python-rate
@@ -197,7 +193,7 @@ def sessionize_stream(events: DataFrame, gap_seconds: int = 1800,
     session to emit once the watermark passes its end.  Use THIS fold
     only when the st04 eager-emission contract is required: a session
     closed by a later event of the same user must emit in the batch
-    that closes it, not ``watermark`` later.  A/B semantics (native
+    that closes it, not ``SESSION_WATERMARK`` later.  A/B semantics (native
     emits a value-identical subset on bounded replay) are pinned in
     tests/test_streaming_ab.py; numbers in SCALE.md.
 
@@ -308,7 +304,7 @@ def sessionize_stream(events: DataFrame, gap_seconds: int = 1800,
     # explicit null-event-time drop (the watermark would drop them
     # anyway; the filter keeps batch and stream forms identical)
     return (events.filter(F.col("ts").isNotNull())
-            .withWatermark("ts", watermark)
+            .withWatermark("ts", SESSION_WATERMARK)
             .groupBy("user_id")
             .applyInPandasWithState(
                 fold, SESSION_SCHEMA, STATE_SCHEMA, "append",

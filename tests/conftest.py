@@ -14,7 +14,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    s = get_spark("cantera-tests", shuffle_partitions=8)
+    s = get_spark("cantera-tests")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
     s.stop()
 

@@ -6,6 +6,9 @@ with the reference's 3-column index format (ca-load.cc:327-350), and
 the loud arg-validation errors.
 """
 
+import sys
+from unittest import mock
+
 import pytest
 
 from cantera_table_spark import cli_dump, cli_load
@@ -16,6 +19,12 @@ def _write(p, text):
         f.write(text)
 
 
+def _run(main, argv):
+    """Run a CLI main() as the command line ``prog *argv`` would."""
+    with mock.patch.object(sys, "argv", ["prog", *argv]):
+        return main()
+
+
 @pytest.mark.slow
 def test_cli_index_roundtrip_keeps_scores(spark, tmp_path):
     docs_tsv = tmp_path / "docs.tsv"
@@ -24,8 +33,8 @@ def test_cli_index_roundtrip_keeps_scores(spark, tmp_path):
                      'doc\\\\b\t{"title": "B"}\n'
                      'docc\t{"title": "C"}\n')
     sums = tmp_path / "sums.parquet"
-    assert cli_load.main(["--output-type=summaries",
-                          "--output", str(sums), str(docs_tsv)]) == 0
+    assert _run(cli_load.main, ["--output-type=summaries",
+                                "--output", str(sums), str(docs_tsv)]) == 0
     keys = {r.key for r in spark.read.parquet(str(sums)).collect()}
     assert keys == {"doc\ta", "doc\\b", "docc"}
 
@@ -34,11 +43,11 @@ def test_cli_index_roundtrip_keeps_scores(spark, tmp_path):
                      "kw1\tdoc\\\\b\t1.5\n"
                      "kw2\tdocc\t2.25\n")
     idx = tmp_path / "idx.parquet"
-    assert cli_load.main(["--output-type=index",
-                          "--output", str(idx),
-                          "--summaries", str(sums),
-                          "--buckets", "2",
-                          str(post_tsv)]) == 0
+    assert _run(cli_load.main, ["--output-type=index",
+                                "--output", str(idx),
+                                "--summaries", str(sums),
+                                "--buckets", "2",
+                                str(post_tsv)]) == 0
     got = spark.read.parquet(str(idx))
     # the scores survive the load: the previous 2-column schema
     # silently dropped the third column and loaded every score as 0.0
@@ -46,9 +55,9 @@ def test_cli_index_roundtrip_keeps_scores(spark, tmp_path):
         ("kw1", 0.5), ("kw1", 1.5), ("kw2", 2.25)]
 
     out = tmp_path / "dump"
-    assert cli_dump.main(["--format", "raw",
-                          "--postings", str(idx),
-                          "--output", str(out)]) == 0
+    assert _run(cli_dump.main, ["--format", "raw",
+                                "--postings", str(idx),
+                                "--output", str(out)]) == 0
     dumped = spark.read.option("sep", "\t") \
         .schema("keyword string, doc_id long, score double") \
         .csv(str(out))
@@ -61,24 +70,24 @@ def test_cli_load_index_no_score_flag(spark, tmp_path):
     docs_tsv = tmp_path / "docs.tsv"
     _write(docs_tsv, 'd1\t{}\nd2\t{}\n')
     sums = tmp_path / "sums.parquet"
-    cli_load.main(["--output-type=summaries",
-                   "--output", str(sums), str(docs_tsv)])
+    _run(cli_load.main, ["--output-type=summaries",
+                         "--output", str(sums), str(docs_tsv)])
     post_tsv = tmp_path / "post2.tsv"
     _write(post_tsv, "kw\td1\nkw\td2\n")
     idx = tmp_path / "idx2.parquet"
-    assert cli_load.main(["--output-type=index", "--no-score",
-                          "--output", str(idx),
-                          "--summaries", str(sums),
-                          str(post_tsv)]) == 0
+    assert _run(cli_load.main, ["--output-type=index", "--no-score",
+                                "--output", str(idx),
+                                "--summaries", str(sums),
+                                str(post_tsv)]) == 0
     got = spark.read.parquet(str(idx))
     assert [r.score for r in got.collect()] == [0.0, 0.0]
     # threshold composes loudly with --no-score (the synthesized 0.0
     # would silently empty or no-op the load)
     with pytest.raises(ValueError, match="score_col"):
-        cli_load.main(["--output-type=index", "--no-score",
-                       "--threshold", "0.5",
-                       "--output", str(idx),
-                       "--summaries", str(sums), str(post_tsv)])
+        _run(cli_load.main, ["--output-type=index", "--no-score",
+                             "--threshold", "0.5",
+                             "--output", str(idx),
+                             "--summaries", str(sums), str(post_tsv)])
 
 
 def test_cli_timeseries_roundtrip_stdout(spark, tmp_path, capsys):
@@ -87,14 +96,14 @@ def test_cli_timeseries_roundtrip_stdout(spark, tmp_path, capsys):
                    "cpu\t2024-01-02 00:00:00\t2.5\n"
                    "mem\t2024-01-01 12:00:00\t0.75\n")
     out = tmp_path / "ts.parquet"
-    assert cli_load.main(["--output-type=time-series",
-                          "--output", str(out), "--buckets", "2",
-                          str(ts_tsv)]) == 0
+    assert _run(cli_load.main, ["--output-type=time-series",
+                                "--output", str(out), "--buckets", "2",
+                                str(ts_tsv)]) == 0
     assert spark.read.parquet(str(out)).count() == 3
     capsys.readouterr()          # drain the load's "wrote ..." line
-    assert cli_dump.main(["--format", "time-series",
-                          "--timeseries", str(out),
-                          "--time-format", "yyyy-MM-dd"]) == 0
+    assert _run(cli_dump.main, ["--format", "time-series",
+                                "--timeseries", str(out),
+                                "--time-format", "yyyy-MM-dd"]) == 0
     lines = [ln for ln in capsys.readouterr().out.splitlines() if ln]
     assert sorted(lines) == ["cpu\t2024-01-01\t1.25",
                              "cpu\t2024-01-02\t2.5",
@@ -112,5 +121,5 @@ def test_cli_dump_missing_source_is_loud(tmp_path):
                  ["--format", "summaries"],
                  ["--format", "counts"]):
         with pytest.raises(SystemExit) as ei:
-            cli_dump.main(argv)
+            _run(cli_dump.main, argv)
         assert ei.value.code == 2

@@ -77,6 +77,15 @@ def test_max_min_sample():
     assert q == Binary("sample", Unary("max", Leaf("a")), value=5.0)
 
 
+def test_random_sample_negative_count_is_parse_error():
+    # Spark would only reject the count inside the collect
+    # (INVALID_LIMIT_LIKE_EXPRESSION.IS_NEGATIVE)
+    with pytest.raises(ParseError, match="must not be negative"):
+        parse_script("QUERY (RANDOM_SAMPLE(a, -3));")
+    assert parse_query("RANDOM_SAMPLE(a, 0)") == \
+        Binary("sample", Leaf("a"), value=0.0)
+
+
 def test_quoted_identifiers_and_keywords():
     q = parse_query('"query" AND x')
     assert q == Binary("and", Leaf("query"), Leaf("x"))

@@ -166,7 +166,8 @@ def test_hyperplane_lsh_recall_on_planted_neardups(spark):
     assert recall >= 0.8, f"LSH recall too low: {recall}"
 
 
-def test_duplicate_clusters_transitivity(spark):
+def test_duplicate_clusters_transitivity(spark, monkeypatch):
+    from cantera_table_spark.functions import dedup
     from cantera_table_spark.functions.dedup import duplicate_clusters
     ids = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
     # chain 1-3-5-7 (transitive), pair 2-6, singletons 0 and 4
@@ -182,10 +183,11 @@ def test_duplicate_clusters_transitivity(spark):
                                            caches=caches).collect()}
         assert out == want
         # distributed label-propagation path must produce the identical
-        # labeling (small_graph_edges=0 forces it)
+        # labeling (SMALL_GRAPH_EDGES=0 forces it)
+        monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
         out2 = {r.doc_id: r.canonical_id
-                for r in duplicate_clusters(ids, pairs, caches=caches,
-                                            small_graph_edges=0).collect()}
+                for r in duplicate_clusters(ids, pairs,
+                                            caches=caches).collect()}
         # the converged round alone is held, still cached
         assert len(caches) == 1 and caches._frames[0].is_cached
     assert out2 == want
@@ -342,11 +344,12 @@ def test_jaccard_stop_shingle_cap(spark):
 
 
 @pytest.mark.slow
-def test_lsh_hot_bucket_bound(spark):
+def test_lsh_hot_bucket_bound(spark, monkeypatch):
     """VERDICT r2 item 5: a degenerate band bucket (hundreds of
     identical documents — the boilerplate-page shape) must not pair
     quadratically when max_bucket is set, and clustering over the
     bounded pairs must still merge the whole duplicate group."""
+    from cantera_table_spark.functions import dedup
     from cantera_table_spark.functions.dedup import (
         duplicate_clusters, lsh_candidate_pairs_arrays, shingle_arrays)
     n_dup = 200
@@ -362,7 +365,7 @@ def test_lsh_hot_bucket_bound(spark):
     assert len(pairs) <= 4 * n_dup
     assert all(p.doc_a == 0 for p in pairs)   # hub = min doc_id
 
-    # default path: the star graph is under small_graph_edges, so the
+    # default path: the star graph is under SMALL_GRAPH_EDGES, so the
     # driver union-find runs and registers NO caches (nothing to free)
     with CacheScope() as held:
         clusters = duplicate_clusters(
@@ -372,27 +375,17 @@ def test_lsh_hot_bucket_bound(spark):
         assert labels[1000] == 1000 and labels[1001] == 1001
         assert not held
 
-    # distributed path (small_graph_edges=0): identical labels, and the
+    # distributed path (SMALL_GRAPH_EDGES=0): identical labels, and the
     # subgraph-label cache is surfaced through the caches contract
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
     with CacheScope() as held:
         clusters_d = duplicate_clusters(
-            docs.select("doc_id"), bounded, caches=held,
-            small_graph_edges=0)
+            docs.select("doc_id"), bounded, caches=held)
         labels_d = {r.doc_id: r.canonical_id
                     for r in clusters_d.collect()}
         assert labels_d == labels
         # only the converged round stays in the scope, and it is cached
         assert len(held) == 1 and held._frames[0].is_cached
-
-    # embedding variant: identical vectors flood one bucket the same way
-    from cantera_table_spark.functions.similarity import lsh_near_dup_pairs
-    vec = [1.0, 0.5, -0.25, 0.125]
-    emb = spark.createDataFrame(
-        [(i, vec) for i in range(n_dup)] + [(1000, [-1.0, 2.0, 0.5, -3.0])],
-        "vec_id long, embedding array<double>")
-    out = lsh_near_dup_pairs(emb, threshold=0.99, max_bucket=20).collect()
-    assert 0 < len(out) <= 4 * n_dup
-    assert all(r.id_a == 0 and r.cos == 1.0 for r in out)
 
 
 @pytest.mark.slow
@@ -839,7 +832,7 @@ def test_wav_codec_roundtrip(spark):
     from cantera_table_spark.functions.multimodal import (
         decode_audio, decode_wav, encode_wav)
     samples = [0, 1000, -1000, 32767, -32768, 5]
-    d = decode_wav(encode_wav(samples, 8000))
+    d = decode_wav(encode_wav(samples))
     assert d == {"n_channels": 1, "sample_rate": 8000, "n_frames": 6,
                  "mean_abs": float(np.abs(np.array(samples,
                                                    dtype=np.int64)).mean())}
@@ -1148,12 +1141,11 @@ def test_gif_patch_frame_and_every_n_guards(spark):
 
 
 @pytest.mark.slow
-def test_fourth_sweep_null_and_identity_contracts(spark):
+def test_fourth_sweep_null_and_identity_contracts(spark, monkeypatch):
     """r10 fourth-sweep findings, pinned: (a) dedup_lines preserves
     NULL-text docs (NULL out, zero counts) instead of dropping them;
     (b) the wordpiece encode kernel reports NULL stats for a NULL word
-    instead of a job-killing TypeError; (c) wordpiece_doc_stats keeps
-    the caller's id column name; (d) kmv_distinct keeps exact group
+    instead of a job-killing TypeError; (d) kmv_distinct keeps exact group
     identity for nullable int64 group keys >= 2^53 (the Arrow->pandas
     float64 coercion rounded them) and for NaN double groups; (e) the
     logreg gradient divides by the TRAINABLE row count, so NULL-feature
@@ -1165,7 +1157,7 @@ def test_fourth_sweep_null_and_identity_contracts(spark):
     from cantera_table_spark.functions.ml import logreg_train_score
     from cantera_table_spark.functions.sketches import kmv_distinct
     from cantera_table_spark.functions.text import (
-        dedup_lines, wordpiece_doc_stats, wordpiece_encode_words)
+        dedup_lines, wordpiece_encode_words)
 
     # (a) NULL-text doc preserved
     d = spark.createDataFrame(
@@ -1183,12 +1175,6 @@ def test_fourth_sweep_null_and_identity_contracts(spark):
            wordpiece_encode_words(words, ["a", "b"]).collect()}
     assert enc["ab"].n_pieces == 2
     assert enc[None].n_pieces is None and enc[None].pieces is None
-
-    # (c) id column name preserved
-    st = wordpiece_doc_stats(
-        spark.createDataFrame([(7, "a b")], "k long, text string"),
-        ["a", "b"], id_col="k")
-    assert st.columns == ["k", "n_pieces", "n_unk"]
 
     # (d) big-int and NaN group identity through the kmv kernel
     big = (1 << 60) + 1
@@ -1217,14 +1203,17 @@ def test_fourth_sweep_null_and_identity_contracts(spark):
 
     # (f) artifact param mismatch raises
     import tempfile, os
+    from cantera_table_spark.functions import text
     from cantera_table_spark.functions.text import wordpiece_vocab_file
     docs = spark.createDataFrame([(1, "aa bb aa")],
                                  "doc_id long, text string")
     p = os.path.join(tempfile.mkdtemp(), "vocab")
-    wordpiece_vocab_file(docs, p, min_count=1)
-    wordpiece_vocab_file(docs, p, min_count=1)      # same params: reuse
+    monkeypatch.setattr(text, "VOCAB_MIN_COUNT", 1)
+    wordpiece_vocab_file(docs, p)
+    wordpiece_vocab_file(docs, p)      # same params: reuse
+    monkeypatch.setattr(text, "VOCAB_MIN_COUNT", 2)
     with pytest.raises(ValueError, match="different path"):
-        wordpiece_vocab_file(docs, p, min_count=2)
+        wordpiece_vocab_file(docs, p)
 
 
 def test_degenerate_config_guards(spark):
@@ -1242,7 +1231,7 @@ def test_degenerate_config_guards(spark):
     with pytest.raises(ValueError, match="quota dict is empty"):
         stratified_sample(d, "lang", quota={})
     with pytest.raises(ValueError, match="positive sum"):
-        mixture_sample(d, {"en": 0.0}, total_tokens=10, strata_col="lang")
+        mixture_sample(d, {"en": 0.0}, total_tokens=10)
     with pytest.raises(ValueError, match="positive sum"):
         hash_split(d, {})
     ev = spark.createDataFrame(
@@ -1250,8 +1239,7 @@ def test_degenerate_config_guards(spark):
         "user_id long, event_type string, ts string").withColumn(
         "ts", F.col("ts").cast("timestamp"))
     with pytest.raises(ValueError, match="duplicate stage"):
-        funnel(ev, ["view", "view", "buy"], key_col="user_id",
-               type_col="event_type")
+        funnel(ev, ["view", "view", "buy"])
     left = spark.createDataFrame(
         [(1, "2024-01-01 00:00:00", 9.9)],
         "key string, ts string, r_value double").withColumn(
@@ -1265,19 +1253,17 @@ def test_degenerate_config_guards(spark):
                   value_cols=("value",))
 
 
-def test_pack_assemble_composes_with_custom_id_col(spark):
-    """pack_sequences always emits 'doc_id' (PACK_SCHEMA); the
-    documented assemble pairing must still compose when the caller
-    packed with a different id column name (r10 third-sweep finding:
-    it raised UNRESOLVED_COLUMN)."""
+def test_pack_assemble_composes(spark):
+    """assemble_packed_text reads pack_sequences' output as it is:
+    every packed document lands in exactly one assembled sequence and
+    no sequence exceeds the capacity."""
     from cantera_table_spark.functions.packing import (
         assemble_packed_text, pack_sequences)
     docs = spark.createDataFrame(
         [(1, "a b c"), (2, "d e"), (3, "f")],
-        "event_id long, text string")
-    packed = pack_sequences(docs, capacity=4, n_shards=1,
-                            id_col="event_id")
-    out = assemble_packed_text(docs, packed, id_col="event_id").collect()
+        "doc_id long, text string")
+    packed = pack_sequences(docs, capacity=4, n_shards=1)
+    out = assemble_packed_text(docs, packed).collect()
     assert sum(r.n_docs for r in out) == 3
     assert all(r.n_tokens <= 4 for r in out)
 
@@ -1547,12 +1533,13 @@ def test_incremental_dedup_laws(spark):
 
 def test_mixture_sample_coarse_equals_naive(spark):
     from cantera_table_spark.functions.sampling import mixture_sample
+    from tests.mixture_ref import naive_mixture_sample
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     w = {"src0": 2.0, "src1": 1.0, "src3": 5.0}
     a = sorted(tuple(r) for r in mixture_sample(
-        docs, w, total_tokens=900, coarse=True).collect())
-    b = sorted(tuple(r) for r in mixture_sample(
-        docs, w, total_tokens=900, coarse=False).collect())
+        docs, w, total_tokens=900).collect())
+    b = sorted(tuple(r) for r in naive_mixture_sample(
+        docs, w, total_tokens=900).collect())
     assert a == b and len(a) > 0
     # budget larger than the whole stratum admits everything in it
     big = sorted(tuple(r) for r in mixture_sample(
@@ -1815,7 +1802,7 @@ def test_wordpiece_vocab_file_artifact(spark, tmpdir):
         [(100, "zzq unseen")],
         "doc_id long, text string")
     path = os.path.join(tmpdir, "vocab")
-    got = wordpiece_vocab_file(docs, path, min_count=20, max_piece_len=8)
+    got = wordpiece_vocab_file(docs, path)
     assert got == path and os.path.exists(os.path.join(path, "_SUCCESS"))
     pieces = sorted(r.piece for r in spark.read.parquet(path).collect())
     # frequent words (>= 20 occurrences) + the 26 single chars
@@ -1849,7 +1836,7 @@ def test_vocab_load_fails_fast_and_memoizes(spark, tmpdir):
         [(i, "aa bb " * 30) for i in range(25)],
         "doc_id long, text string")
     path = os.path.join(tmpdir, "v1")
-    wordpiece_vocab_file(docs, path, min_count=20)
+    wordpiece_vocab_file(docs, path)
     p1 = _load_vocab_pieces(path)
     assert _load_vocab_pieces(path) is p1            # memo hit
     vset, max_len = _load_vocab_set(path)
@@ -1861,7 +1848,7 @@ def test_vocab_load_fails_fast_and_memoizes(spark, tmpdir):
     docs2 = spark.createDataFrame(
         [(i, "cc dd " * 30) for i in range(25)],
         "doc_id long, text string")
-    wordpiece_vocab_file(docs2, path, min_count=20)
+    wordpiece_vocab_file(docs2, path)
     p2 = _load_vocab_pieces(path)
     assert p2 is not p1 and "cc" in p2 and "aa" not in p2
     assert "cc" in _load_vocab_set(path)[0]
@@ -2004,15 +1991,16 @@ def test_review_fix_regressions(spark):
                for r in top.collect())
 
     from cantera_table_spark.functions.sampling import mixture_sample
+    from tests.mixture_ref import naive_mixture_sample
     # zero-token docs at a quota-exact boundary: coarse == naive
     zt = spark.createDataFrame(
-        [(i, "s", 5 if i < 4 else 0) for i in range(40)],
-        "doc_id long, source string, nt long")
+        [(i, "s", "w w w w w" if i < 4 else "") for i in range(40)],
+        "doc_id long, source string, text string")
     for budget in (0, 10, 20):
         a = sorted(r["doc_id"] for r in mixture_sample(
-            zt, {"s": 1.0}, budget, token_col="nt", coarse=True).collect())
-        b = sorted(r["doc_id"] for r in mixture_sample(
-            zt, {"s": 1.0}, budget, token_col="nt", coarse=False).collect())
+            zt, {"s": 1.0}, budget).collect())
+        b = sorted(r["doc_id"] for r in naive_mixture_sample(
+            zt, {"s": 1.0}, budget).collect())
         assert a == b, (budget, a[:5], b[:5])
 
     from cantera_table_spark.functions.timeseries import interval_join
@@ -2030,13 +2018,10 @@ def test_r9_review_similarity_dedup_guards(spark):
     """r9 review findings, fixed in one sweep: (a) a zero-norm centroid
     must not capture every vector in ivf_assign (NULL cosine loses the
     min instead of winning it); (b) brute_force_topk skips
-    NULL/wrong-dimension embedding rows; (c) quantize codes clamp at BOTH ends under external
-    stats; (d) apply_dedup works with a non-default id column."""
+    NULL/wrong-dimension embedding rows."""
     from pyspark.sql import functions as F
     from cantera_table_spark.functions.similarity import (
-        brute_force_topk, ivf_assign, quantization_stats,
-        quantize_embeddings)
-    from cantera_table_spark.functions.dedup import apply_dedup
+        brute_force_topk, ivf_assign)
 
     # (a) centroid 0 is all-zero (degenerate), centroid 1 is real
     emb = spark.createDataFrame(
@@ -2062,24 +2047,6 @@ def test_r9_review_similarity_dedup_guards(spark):
     got = {(r.neighbor_id, r.cos)
            for r in brute_force_topk(dirty, q, k=2).collect()}
     assert got == jvm and len(got) == 2
-
-    # (c) external stats narrower than the data: codes clamp to
-    # [0, levels], never negative
-    stats = quantization_stats(
-        emb.filter(F.col("vec_id") == 2))        # mins/maxs = vec 2
-    codes = quantize_embeddings(emb, stats=stats, levels=255)
-    mins = codes.select(
-        F.array_min(F.col("qcode")).alias("m")).collect()
-    assert all(r.m >= 0 for r in mins)
-
-    # (d) non-default id column
-    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")],
-                               "vec_id long, payload string")
-    clusters = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 3)], "doc_id long, canonical_id long")
-    out = {r.vec_id: r.n_duplicates_removed
-           for r in apply_dedup(df, clusters, id_col="vec_id").collect()}
-    assert out == {1: 1, 3: 0}
 
 
 def test_r10_advisory_fixes(spark):
@@ -2141,10 +2108,10 @@ def test_r10_advisory_fixes(spark):
     docs = spark.createDataFrame([(1, "aa bb aa")],
                                  "doc_id long, text string")
     p = os.path.join(tempfile.mkdtemp(), "vocab")
-    wordpiece_vocab_file(docs, p, min_count=1)
+    wordpiece_vocab_file(docs, p)
     shutil.rmtree(os.path.join(p, "_params"))
     with pytest.warns(UserWarning, match="_params sidecar"):
-        wordpiece_vocab_file(docs, p, min_count=1)
+        wordpiece_vocab_file(docs, p)
 
 
 def test_r11_keywords_fallback_and_tz_warning(spark):
@@ -2313,13 +2280,12 @@ def test_r11_streaming_sampling_review_fixes(spark):
     # (c) NULL ids never sample/split/shuffle
     docs = spark.createDataFrame(
         [(None, "en", "t t t"), (1, "en", "a b"), (2, "en", "c d")],
-        "doc_id long, lang string, text string")
-    s = stratified_sample(docs, "lang", quota=2)
+        "doc_id long, source string, text string")
+    s = stratified_sample(docs, "source", quota=2)
     assert {r.doc_id for r in s.collect()} == {1, 2}
     sp = hash_split(docs.select("doc_id"), {"train": 0.5, "test": 0.5})
     assert None not in {r.doc_id for r in sp.collect()}
-    mx = mixture_sample(docs, {"en": 1.0}, total_tokens=100,
-                        strata_col="lang")
+    mx = mixture_sample(docs, {"en": 1.0}, total_tokens=100)
     assert None not in {r.doc_id for r in mx.collect()}
     sh = shuffle_shards(docs.select("doc_id"), n_shards=2)
     assert None not in {r.doc_id for r in sh.collect()}
@@ -2385,7 +2351,7 @@ def test_r12_dedup_hash_injective_encoding(spark):
 
 
 @pytest.mark.slow
-def test_r12_vocab_memo_fingerprints_artifact(spark):
+def test_r12_vocab_memo_fingerprints_artifact(spark, monkeypatch):
     """r12 advisory fix, pinned: the _VOCAB_PARAMS_OK memo includes a
     fingerprint of the _params sidecar (file listing + mtimes), so an
     artifact re-derived AT THE SAME PATH by another process with
@@ -2397,13 +2363,15 @@ def test_r12_vocab_memo_fingerprints_artifact(spark):
 
     import pytest
 
+    from cantera_table_spark.functions import text
     from cantera_table_spark.functions.text import wordpiece_vocab_file
 
+    monkeypatch.setattr(text, "VOCAB_MIN_COUNT", 1)
     docs = spark.createDataFrame([(1, "aa bb aa cc")],
                                  "doc_id long, text string")
     p = os.path.join(tempfile.mkdtemp(), "vocab")
-    wordpiece_vocab_file(docs, p, min_count=1)
-    wordpiece_vocab_file(docs, p, min_count=1)   # verifies + memoizes
+    wordpiece_vocab_file(docs, p)
+    wordpiece_vocab_file(docs, p)   # verifies + memoizes
 
     # simulate a concurrent process re-deriving the artifact in place
     # with different params (exactly the write the build branch does)
@@ -2415,7 +2383,7 @@ def test_r12_vocab_memo_fingerprints_artifact(spark):
     # the memoized (path, params) would have silently passed before;
     # the fingerprint change must force a re-read that raises
     with pytest.raises(ValueError, match="different path"):
-        wordpiece_vocab_file(docs, p, min_count=1)
+        wordpiece_vocab_file(docs, p)
 
     # r12 review: the memo is a dict keyed by (path, params) — a
     # churning sidecar OVERWRITES its slot rather than accumulating a
@@ -2427,7 +2395,7 @@ def test_r12_vocab_memo_fingerprints_artifact(spark):
                                "min_count int, max_piece_len int")
          .coalesce(1).write.mode("overwrite")
          .parquet(os.path.join(p, "_params")))
-        wordpiece_vocab_file(docs, p, min_count=1)   # re-verifies ok
+        wordpiece_vocab_file(docs, p)   # re-verifies ok
     assert len([k for k in _VOCAB_PARAMS_OK if k[0] == p]) == 1
 
 

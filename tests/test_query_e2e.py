@@ -258,18 +258,6 @@ def test_golden_envelope_pagination(spark, catalog):
         '"title": "ONE-PATCHED"}], "result-count": 3}')
 
 
-def test_register_views_sql_surface(spark, catalog):
-    eng = Engine(catalog, unique_postings=True)
-    eng.register_views()
-    out = spark.sql(
-        "SELECT p.keyword, count(*) AS n, d.key "
-        "FROM postings p JOIN documents d USING (doc_id) "
-        "WHERE p.keyword = 'alpha' GROUP BY p.keyword, d.key "
-        "ORDER BY d.key").collect()
-    assert [(r.key, r.n) for r in out] == [("d0", 1), ("d1", 1), ("d2", 1)]
-    assert spark.sql("SELECT count(*) FROM overrides").collect()[0][0] == 1
-
-
 def test_export_results_distributed_json(spark, catalog):
     """Distributed full-result export must agree with the collected
     envelope objects (same keys, same merged fields) without any

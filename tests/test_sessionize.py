@@ -81,7 +81,7 @@ def test_stream_late_event_beyond_gap_becomes_own_session(spark):
         sessionize_batch, sessionize_stream)
     from pyspark.sql import functions as F
     events = [(1, "2024-01-01 10:00:00", 1.0),
-              (1, "2024-01-01 09:00:00", 7.0)]   # 1h earlier, gap 600s
+              (1, "2024-01-01 09:30:00", 7.0)]   # 30 min earlier, gap 600s
     with tempfile.TemporaryDirectory() as d:
         src = os.path.join(d, "src")
         os.makedirs(src)
@@ -89,13 +89,13 @@ def test_stream_late_event_beyond_gap_becomes_own_session(spark):
         with open(os.path.join(src, "a_1.csv"), "w") as f:
             f.write("1,2024-01-01 10:00:00,1.0\n")
         with open(os.path.join(src, "b_2.csv"), "w") as f:
-            f.write("1,2024-01-01 09:00:00,7.0\n")
+            f.write("1,2024-01-01 09:30:00,7.0\n")
         stream = (spark.readStream.option("maxFilesPerTrigger", 1)
                   .schema("user_id long, ts_s string, value double")
                   .csv(src)
                   .select("user_id", F.to_timestamp("ts_s").alias("ts"),
                           "value"))
-        q = (sessionize_stream(stream, gap_seconds=600, watermark="4 hours")
+        q = (sessionize_stream(stream, gap_seconds=600)
              .writeStream.format("memory").queryName("late_out")
              .outputMode("append").trigger(availableNow=True).start())
         q.awaitTermination(120)
@@ -108,7 +108,7 @@ def test_stream_late_event_beyond_gap_becomes_own_session(spark):
         gap_seconds=600)
     batch_rows = sorted((r.user_id, str(r.session_start), r.n_events,
                          r.total_value) for r in batch.collect())
-    # the late 09:00 event closed as its own session; batch agrees it is
+    # the late 09:30 event closed as its own session; batch agrees it is
     # a separate session
-    assert (1, "2024-01-01 09:00:00", 1, 7.0) in got
-    assert (1, "2024-01-01 09:00:00", 1, 7.0) in batch_rows
+    assert (1, "2024-01-01 09:30:00", 1, 7.0) in got
+    assert (1, "2024-01-01 09:30:00", 1, 7.0) in batch_rows

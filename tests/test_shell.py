@@ -1,6 +1,7 @@
 """CLI formatting tests (S17, ca-shell.cc/output.cc surface): the
 statement runner's stdout shapes, driven through run_script."""
 
+import contextlib
 import io
 import json
 
@@ -27,7 +28,8 @@ def catalog(spark):
 
 def lines_of(engine, script):
     buf = io.StringIO()
-    run_script(engine, script, out=buf)
+    with contextlib.redirect_stdout(buf):
+        run_script(engine, script)
     return buf.getvalue().splitlines()
 
 

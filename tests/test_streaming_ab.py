@@ -161,26 +161,22 @@ def test_native_merges_session_across_micro_batches(spark):
 def test_native_state_store_default_applies_rocksdb(spark):
     """r8 verdict item 2: the RocksDB selection lives in the LIBRARY —
     building the native plan over a streaming frame applies (and
-    verifies) the provider conf; state_store=None leaves the session
-    untouched; batch frames never touch it (no state store involved)."""
+    verifies) the provider conf; batch frames never touch it (no state
+    store involved)."""
     from cantera_table_spark.streaming.sessionize import (
         _STATE_STORE_KEY, ROCKSDB_STATE_STORE_PROVIDER,
         ensure_state_store_provider, sessionize_stream_native)
     prev = spark.conf.get(_STATE_STORE_KEY, None)
     try:
         spark.conf.unset(_STATE_STORE_KEY)
-        # batch frame: default state_store must not set the conf
+        # batch frame: the conf stays unset
         sessionize_stream_native(events_df(spark), gap_seconds=600)
         assert spark.conf.get(_STATE_STORE_KEY, None) is None
         stream = (spark.readStream.format("rate").load()
                   .select(F.col("value").alias("user_id"),
                           F.col("timestamp").alias("ts"),
                           F.lit(1.0).alias("value")))
-        # None: caller manages the store, conf untouched
-        sessionize_stream_native(stream, gap_seconds=600,
-                                 state_store=None)
-        assert spark.conf.get(_STATE_STORE_KEY, None) is None
-        # default: conf applied and verified at plan-build time
+        # streaming frame: conf applied and verified at plan-build time
         sessionize_stream_native(stream, gap_seconds=600)
         assert spark.conf.get(_STATE_STORE_KEY) == \
             ROCKSDB_STATE_STORE_PROVIDER

@@ -34,7 +34,7 @@ def _mk(spark):
     return left, right
 
 
-def _naive(left_rows, right_rows, direction, strict, tol_us=None):
+def _naive(left_rows, right_rows, direction, tol_us=None):
     out = {}
     for (k, ts, eid) in left_rows:
         if k is None:
@@ -44,10 +44,7 @@ def _naive(left_rows, right_rows, direction, strict, tol_us=None):
             for (rk, rts, rv) in right_rows:
                 if rk != k or rts is None:
                     continue
-                if direction == "backward":
-                    ok = rts < ts if strict else rts <= ts
-                else:
-                    ok = rts > ts if strict else rts >= ts
+                ok = rts <= ts if direction == "backward" else rts >= ts
                 if not ok:
                     continue
                 cand = (rts, rv)
@@ -68,14 +65,14 @@ def _naive(left_rows, right_rows, direction, strict, tol_us=None):
     return out
 
 
-def _check(spark, direction, strict, tol_us=None):
+def _check(spark, direction, tol_us=None):
     left, right = _mk(spark)
     got = asof_join(left, right, key_col="user_id", ts_col="ts",
                     value_cols=("value",), direction=direction,
-                    strict=strict, tolerance_us=tol_us).collect()
+                    tolerance_us=tol_us).collect()
     want = _naive([tuple(r) for r in left.collect()],
                   [tuple(r) for r in right.collect()],
-                  direction, strict, tol_us)
+                  direction, tol_us)
     got_ids = {r["event_id"] for r in got}
     assert got_ids == set(want)
     for r in got:
@@ -87,19 +84,11 @@ def _check(spark, direction, strict, tol_us=None):
 
 
 def test_asof_backward(spark):
-    _check(spark, "backward", strict=False)
-
-
-def test_asof_backward_strict(spark):
-    _check(spark, "backward", strict=True)
+    _check(spark, "backward")
 
 
 def test_asof_forward(spark):
-    _check(spark, "forward", strict=False)
-
-
-def test_asof_forward_strict(spark):
-    _check(spark, "forward", strict=True)
+    _check(spark, "forward")
 
 
 def test_asof_null_payload_at_tied_ts(spark):
@@ -129,7 +118,7 @@ def test_asof_null_payload_at_tied_ts(spark):
 def test_asof_tolerance(spark):
     # 30 min tolerance: left@12:00 matched right@11:30 stays, left@23:00
     # matched right@10:00 nulls out
-    _check(spark, "backward", strict=False, tol_us=30 * 60 * 1_000_000)
+    _check(spark, "backward", tol_us=30 * 60 * 1_000_000)
 
 
 def test_interval_join_matches_nested_loop(spark):

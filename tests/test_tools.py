@@ -266,33 +266,112 @@ def _names_used(node):
             yield n.name.rsplit(".", 1)[-1]
 
 
-def test_every_package_def_is_reached_outside_tests():
-    """Each top-level def or class in the package (gate.py aside: its
-    registry is the gates' entry point) is reached from non-test code:
-    the package's module-level statements, gate.py, bench.py,
-    perfbench/, tools/ or __spark_entry__.py, directly or through other
-    reached defs, and never only through its own body. A name that only
-    tests reach is dead surface."""
+def _parts(stmt):
+    """A top-level statement as (label, name, names it uses) triples. A
+    class gives one for itself and one per method; dunder methods stay
+    with the class, since Python calls them on its own."""
+    if not isinstance(stmt, ast.ClassDef):
+        name = getattr(stmt, "name", None)
+        return [(name, name, set(_names_used(stmt)))]
+    methods = [s for s in stmt.body
+               if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef))
+               and not s.name.startswith("__")]
+    rest = [s for s in stmt.body if s not in methods]
+    rest += stmt.bases + stmt.keywords + stmt.decorator_list
+    return [(stmt.name, stmt.name, {u for n in rest for u in _names_used(n)})
+            ] + [(f"{stmt.name}.{m.name}", m.name, set(_names_used(m)))
+                 for m in methods]
+
+
+def _in_package(path):
+    """True for the package's files, gate.py aside: its registry is the
+    gates' entry point."""
     pkg = os.path.join(ROOT, "cantera_table_spark") + os.sep
+    return path.startswith(pkg) and not path.endswith(os.sep + "gate.py")
+
+
+def test_every_package_def_is_reached_outside_tests():
+    """Each top-level def, class or class method in the package (gate.py
+    aside) is reached from non-test code: the package's module-level
+    statements, gate.py, bench.py, perfbench/, tools/ or
+    __spark_entry__.py, directly or through other reached defs, and never
+    only through its own body. A name that only tests reach is dead
+    surface."""
     used, defs = set(), []
     for path in _source_files():
         with open(path) as fh:
             tree = ast.parse(fh.read(), path)
-        in_pkg = path.startswith(pkg) and not path.endswith(os.sep + "gate.py")
         for stmt in tree.body:
-            name = getattr(stmt, "name", None)
-            names = {n for n in _names_used(stmt) if n != name}
-            if in_pkg and name:
-                defs.append((os.path.relpath(path, ROOT), name, names))
-            else:
-                used |= names
+            for label, name, names in _parts(stmt):
+                names.discard(name)
+                if _in_package(path) and name:
+                    defs.append((os.path.relpath(path, ROOT), label, name,
+                                 names))
+                else:
+                    used |= names
     grown = True
     while grown:
         grown = False
-        for _, name, names in defs:
+        for _, _, name, names in defs:
             if name in used and not names <= used:
                 used |= names
                 grown = True
-    unreached = [f"{path}::{name}" for path, name, _ in sorted(defs)
+    unreached = [f"{path}::{label}" for path, label, name, _ in sorted(defs)
                  if name not in used]
     assert not unreached, "\n".join(unreached)
+
+
+def _options(fn, cls):
+    """A def's parameters with defaults, as (name, position) pairs; the
+    position counts the arguments a call passes (self aside), and is
+    None for a keyword-only parameter."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    bound = cls is not None and not any(
+        isinstance(d, ast.Name) and d.id == "staticmethod"
+        for d in fn.decorator_list)
+    first = len(pos) - len(a.defaults)
+    out = [(arg.arg, i - bound) for i, arg in enumerate(pos) if i >= first]
+    out += [(arg.arg, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None]
+    return out
+
+
+def test_every_package_option_is_set_outside_tests():
+    """Each parameter with a default of a top-level def or class method
+    in the package (gate.py aside) is passed, by keyword or by position,
+    in some non-test call of that name; a class's __init__ is called by
+    the class's name, and a call that unpacks * or ** passes every
+    parameter. An option that no caller sets has one value in use, so it
+    belongs in a constant."""
+    calls, options = {}, []
+    for path in _source_files():
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                name = getattr(n.func, "id", getattr(n.func, "attr", None))
+                calls.setdefault(name, []).append(n)
+        if not _in_package(path):
+            continue
+        for stmt in tree.body:
+            fns = [(stmt, None)] if isinstance(stmt, ast.FunctionDef) else []
+            if isinstance(stmt, ast.ClassDef):
+                fns = [(s, stmt.name) for s in stmt.body
+                       if isinstance(s, ast.FunctionDef)]
+            for fn, cls in fns:
+                name = cls if fn.name == "__init__" else fn.name
+                label = f"{cls}.{fn.name}" if cls else fn.name
+                options += [(os.path.relpath(path, ROOT), label, name, opt)
+                            for opt in _options(fn, cls)]
+
+    def passes(call, param, position):
+        return (any(isinstance(a, ast.Starred) for a in call.args)
+                or any(k.arg in (None, param) for k in call.keywords)
+                or (position is not None and len(call.args) > position))
+
+    unset = [f"{path}::{label}({param})"
+             for path, label, name, (param, position) in options
+             if not any(passes(c, param, position)
+                        for c in calls.get(name, []))]
+    assert not unset, f"{len(unset)} options:\n" + "\n".join(unset)

@@ -398,15 +398,14 @@ def main():
         # fold (state = one open session per user, gap-closed sessions
         # emitted eagerly) completes.  RocksDB is the state store that
         # session-window class of state runs on in production (native
-        # memory + disk, not heap) — applied by the operator's own
-        # state_store="rocksdb" default (sessionize.py).
+        # memory + disk, not heap) — applied by the operator itself on
+        # a streaming frame (sessionize.py).
         from cantera_table_spark.streaming.sessionize import (
             _STATE_STORE_KEY, sessionize_stream_native)
         src = _restream(e).select("user_id", "ts", "value")
-        # the operator's default state_store="rocksdb" now applies the
-        # provider itself (r9, lifted out of this harness); the harness
-        # only restores the previous conf so later measures see the
-        # session they started with
+        # the operator applies the RocksDB provider itself (r9, lifted
+        # out of this harness); the harness only restores the previous
+        # conf so later measures see the session they started with
         prev = spark.conf.get(_STATE_STORE_KEY, None)
         try:
             _run_stream(sessionize_stream_native(src, gap_seconds=1800),
