@@ -1198,11 +1198,11 @@ def decode_avi_mjpeg(data: bytes) -> dict:
 
 
 def avi_frame_stats(media: DataFrame) -> DataFrame:
-    """Decode Motion-JPEG AVI payloads and emit one row per frame
-    with per-channel means — real
-    video-container frame sampling, the gif_frame_stats sibling for
-    the compressed-frame path.  Arrow-batched; undecodable payloads
-    quarantine to a single NULL row."""
+    """Decode Motion-JPEG AVI payloads and emit one row per frame with
+    per-channel means — real video-container frame decoding, the
+    gif_frame_stats sibling for the compressed-frame path.
+    Arrow-batched; undecodable payloads quarantine to a single NULL
+    row."""
     return _frame_stats_map(
         media, decode_avi_mjpeg, T.StructType(_FRAME_STATS_FIELDS),
         lambda mid, fi, d, m: (mid, fi, d["width"], d["height"],

@@ -371,9 +371,8 @@ def quantize_embeddings(emb: DataFrame) -> DataFrame:
         mn = F.element_at(F.col("mins"), i)
         mx = F.element_at(F.col("maxs"), i)
         return F.when(mx == mn, F.lit(0).cast("long")).otherwise(
-            # clamp BOTH ends: the codes stay smallint-ranged whatever
-            # the floating-point rounding at mn and mx (r9 review
-            # finding)
+            # clamp BOTH ends so every code stays in [0, QUANT_LEVELS],
+            # the smallint-ranged code contract (r9 review finding)
             F.greatest(F.lit(0).cast("long"),
                        F.least(F.floor(((x - mn) * lv) / (mx - mn)),
                                F.lit(QUANT_LEVELS).cast("long"))))

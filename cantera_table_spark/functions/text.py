@@ -789,18 +789,17 @@ def wordpiece_doc_stats(df: DataFrame, vocab: list | str) -> DataFrame:
     text) report zeros.  Output: (doc_id, n_pieces, n_unk).
     """
     toks = tokens(F.col("text"))
-    wcnt = (df.select(F.col("doc_id").alias("__id"),
-                      F.explode(toks).alias("tok"))
-            .groupBy("__id", "tok").agg(F.count("*").alias("cnt")))
+    wcnt = (df.select("doc_id", F.explode(toks).alias("tok"))
+            .groupBy("doc_id", "tok").agg(F.count("*").alias("cnt")))
     words = wcnt.select("tok").distinct()
     enc = wordpiece_encode_words(words, vocab)
     per_doc = (wcnt.join(enc, "tok")
-               .groupBy("__id")
+               .groupBy("doc_id")
                .agg(F.sum(F.col("cnt") * F.col("n_pieces"))
                     .alias("n_pieces"),
                     F.sum(F.col("cnt") * F.col("n_unk")).alias("n_unk")))
-    return (df.select(F.col("doc_id").alias("__id"))
-            .join(per_doc, "__id", "left")
-            .select(F.col("__id").alias("doc_id"),
+    return (df.select("doc_id")
+            .join(per_doc, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_pieces", F.lit(0)).alias("n_pieces"),
                     F.coalesce("n_unk", F.lit(0)).alias("n_unk")))

@@ -42,10 +42,10 @@ def salted_count_sum(df: DataFrame, keys: list[str], value_col: str,
     salt re-executes differently after a shuffle-fetch failure and
     silently corrupts the two-phase totals — the SPARK-23243 class of
     bug), so it hashes row content: every non-key column (the value
-    column when there is none), maximizing spread.  Degenerate case: a hot key
-    whose entire rows are identical gains no spread — no deterministic
-    salt can split indistinguishable rows; pre-aggregate upstream or
-    add a distinguishing column."""
+    column when there is none), maximizing spread.  Degenerate case: a
+    hot key whose entire rows are identical gains no spread — no
+    deterministic salt can split indistinguishable rows; pre-aggregate
+    upstream or add a distinguishing column."""
     _reject_salt_column(df)
     salt_cols = [c for c in df.columns if c not in keys] or [value_col]
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]),
